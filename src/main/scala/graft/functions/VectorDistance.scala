@@ -9,6 +9,56 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types._
 
+/** The interpreted pair numerics, one copy: the kernels'
+  * `nullSafeEval` and the fused request-batch scorer
+  * ([[graft.operators.RequestTopK]]) both call these. Vectors are
+  * first widened to double (`elemGet`'s rule, exact for float); the
+  * sums then run strictly left to right over plain arrays — the same
+  * operations, in the same order, as the generated loops below, so
+  * every path scores a pair bit-identically. Callers check equal
+  * dimensions first and pass it as `n`.
+  */
+private[graft] object PairNumerics {
+  def isFloatArray(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) => true
+    case _                       => false
+  }
+
+  /** `a` widened to double into `into` (length ≥ a's); returns `into`. */
+  def widen(a: ArrayData, isFloat: Boolean,
+            into: Array[Double]): Array[Double] = {
+    val n = a.numElements()
+    var i = 0
+    if (isFloat) while (i < n) { into(i) = a.getFloat(i); i += 1 }
+    else while (i < n) { into(i) = a.getDouble(i); i += 1 }
+    into
+  }
+
+  def widen(a: ArrayData, isFloat: Boolean): Array[Double] =
+    widen(a, isFloat, new Array[Double](a.numElements()))
+
+  def dot(x: Array[Double], y: Array[Double], n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += x(i) * y(i); i += 1 }
+    acc
+  }
+
+  def l2(x: Array[Double], y: Array[Double], n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) { val d = x(i) - y(i); acc += d * d; i += 1 }
+    math.sqrt(acc)
+  }
+
+  def l1(x: Array[Double], y: Array[Double], n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += math.abs(x(i) - y(i)); i += 1 }
+    acc
+  }
+}
+
 /** Native codegen'd distance kernels over `array<float|double>`.
   *
   * The composed `zip_with`+`aggregate` form (VectorFunctions) is
@@ -70,12 +120,14 @@ sealed abstract class VectorBinaryExpression extends BinaryExpression {
       case _                        => s"$arr.getDouble($i)"
     }
 
-  /** Interpreted-path element read widened to double. */
-  protected def elem(child: Expression, a: ArrayData, i: Int): Double =
-    child.dataType match {
-      case ArrayType(FloatType, _) => a.getFloat(i).toDouble
-      case _                       => a.getDouble(i)
-    }
+  @transient private lazy val leftFloat: Boolean =
+    PairNumerics.isFloatArray(left.dataType)
+  @transient private lazy val rightFloat: Boolean =
+    PairNumerics.isFloatArray(right.dataType)
+
+  /** Interpreted path: both inputs widened to double. */
+  protected def widened(a: ArrayData, b: ArrayData): (Array[Double], Array[Double]) =
+    (PairNumerics.widen(a, leftFloat), PairNumerics.widen(b, rightFloat))
 
   protected def pairLoop(ctx: CodegenContext, a: String, b: String,
                          body: (String, String) => String): (String, String) = {
@@ -103,13 +155,10 @@ case class VecDot(left: Expression, right: Expression)
 
   override def nullSafeEval(av: Any, bv: Any): Any = {
     val (a, b) = (av.asInstanceOf[ArrayData], bv.asInstanceOf[ArrayData])
-    val n = a.numElements()
-    if (n != b.numElements()) null
+    if (a.numElements() != b.numElements()) null
     else {
-      var acc = 0.0
-      var i = 0
-      while (i < n) { acc += elem(left, a, i) * elem(right, b, i); i += 1 }
-      acc
+      val (x, y) = widened(a, b)
+      PairNumerics.dot(x, y, x.length)
     }
   }
 
@@ -140,15 +189,10 @@ case class VecL2(left: Expression, right: Expression)
 
   override def nullSafeEval(av: Any, bv: Any): Any = {
     val (a, b) = (av.asInstanceOf[ArrayData], bv.asInstanceOf[ArrayData])
-    val n = a.numElements()
-    if (n != b.numElements()) null
+    if (a.numElements() != b.numElements()) null
     else {
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val d = elem(left, a, i) - elem(right, b, i); acc += d * d; i += 1
-      }
-      math.sqrt(acc)
+      val (x, y) = widened(a, b)
+      PairNumerics.l2(x, y, x.length)
     }
   }
 
@@ -182,15 +226,10 @@ case class VecL1(left: Expression, right: Expression)
 
   override def nullSafeEval(av: Any, bv: Any): Any = {
     val (a, b) = (av.asInstanceOf[ArrayData], bv.asInstanceOf[ArrayData])
-    val n = a.numElements()
-    if (n != b.numElements()) null
+    if (a.numElements() != b.numElements()) null
     else {
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        acc += math.abs(elem(left, a, i) - elem(right, b, i)); i += 1
-      }
-      acc
+      val (x, y) = widened(a, b)
+      PairNumerics.l1(x, y, x.length)
     }
   }
 
@@ -226,10 +265,11 @@ case class VecLinf(left: Expression, right: Expression)
     val n = a.numElements()
     if (n != b.numElements()) null
     else {
+      val (xs, ys) = widened(a, b)
       var acc = 0.0
       var i = 0
       while (i < n) {
-        val d = math.abs(elem(left, a, i) - elem(right, b, i))
+        val d = math.abs(xs(i) - ys(i))
         if (d > acc) acc = d
         i += 1
       }
@@ -270,10 +310,11 @@ case class VecCosine(left: Expression, right: Expression)
     val n = a.numElements()
     if (n != b.numElements()) null
     else {
+      val (xs, ys) = widened(a, b)
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
       while (i < n) {
-        val x = elem(left, a, i); val y = elem(right, b, i)
+        val x = xs(i); val y = ys(i)
         dot += x * y; na += x * x; nb += y * y; i += 1
       }
       val denom = math.sqrt(na) * math.sqrt(nb)

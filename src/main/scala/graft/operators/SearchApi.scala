@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.VectorDistance
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's `/search` REQUEST BATCH as one relational plan —
@@ -13,25 +12,54 @@ import org.apache.spark.sql.functions._
   * filter are DATA, different per request. The per-query operators
   * (Knn.topKFiltered &c.) cover the one-request case where the
   * filter compiles into the scan; here a heterogeneous batch runs as
-  * a single plan with the filter evaluated as a join predicate
-  * inside the scoring stage's codegen — the relational analog of the
-  * reference evaluating its roaring bitmap per request.
+  * a single plan with each request's filter evaluated per corpus row
+  * — the relational analog of the reference evaluating its roaring
+  * bitmap per request.
   *
-  * Scale: requests broadcast (request-sized), the corpus streams
-  * through ONE scan whatever the batch mixes, and the per-request
-  * heap keeps the shuffle at O(Q·k·partitions). A per-request filter
-  * cannot push into the scan (it is not known at plan time) — the
-  * cost of request heterogeneity is exactly one corpus pass, which
-  * is the same bound the reference pays per request, amortized over
-  * the whole batch.
+  * Scale: the exact batch is collected to the driver under a stated
+  * bound ([[SearchApi.MaxBatchRequests]]) and the corpus streams
+  * through ONE scan whatever the batch mixes, scored row by row
+  * against every request inside one aggregate: no Q×N intermediate
+  * exists, and the shuffle carries one heap set per partition,
+  * O(Q·k·partitions). A per-request filter cannot push into the scan
+  * (it is not known at plan time) — the cost of request
+  * heterogeneity is exactly one corpus pass, which is the same bound
+  * the reference pays per request, amortized over the whole batch.
   */
 object SearchApi {
 
+  /** Row bound on a request batch: `searchRequests` collects its
+    * batch to the driver, where the requests become constants of the
+    * corpus-side aggregate (and ride along with every scan task). A
+    * larger batch fails loudly instead of growing the driver and task
+    * footprint without limit; split it into several calls.
+    */
+  val MaxBatchRequests = 4096
+
   /** Execute a request batch. `k` is per-request data too (the
-    * reference payload carries it): the shared heap runs at the
-    * batch's max k and each request keeps its own prefix — heap
-    * state stays bounded by max-k while every request gets exactly
-    * what it asked for.
+    * reference payload carries it): each `(qid, metric, k)` group
+    * keeps a heap of `min(k, maxK)` and returns exactly the prefix it
+    * asked for.
+    *
+    * ONE FUSED CORPUS PASS — the form of the reference's FLAT search
+    * (`FaissIndex::search_vectors`, faiss_index.cc:40: one pass over
+    * the corpus for the whole query batch, a k-heap per query). The
+    * batch (at most [[MaxBatchRequests]] rows) is collected once; the
+    * corpus then runs through a single aggregate with no grouping key
+    * ([[RequestTopK]]) that scores each row against every request
+    * whose filter it passes and keeps one heap per group. Partitions
+    * exchange only their heaps, the one merge task emits the answer,
+    * and the final ordering needs no exchange (one partition). The
+    * filter's `label = fval` is Spark's own `=`, one aggregate input
+    * per distinct filter value.
+    *
+    * Semantics (pinned against the cross-join form by SearchApiSpec):
+    * metric 'L2' / 'L1' rank ascending, anything else (NULL included)
+    * ranks as IP, descending; fop NULL passes every row, '=' / '!='
+    * compare label with fval (a NULL on either side passes nothing),
+    * any other op matches nothing; a NULL or dimension-mismatched
+    * vector on either side scores nothing; NULL k returns nothing;
+    * requests sharing `(qid, metric, k)` share one heap.
     *
     * @param data (id, vec, label) corpus
     * @param reqs (qid, qvec, k, metric 'L2'|'L1'|'IP', fop
@@ -43,42 +71,32 @@ object SearchApi {
     */
   def searchRequests(data: DataFrame, reqs: DataFrame,
                      maxK: Int): DataFrame = {
+    val batch = reqs.select(col("qid"), col("qvec"),
+        col("k").cast("long"), col("metric").cast("string"),
+        col("fop").cast("string"), col("fval"))
+      .limit(MaxBatchRequests + 1).collect()
+    require(batch.length <= MaxBatchRequests,
+      s"request batch exceeds SearchApi.MaxBatchRequests=" +
+        s"$MaxBatchRequests rows; split it into smaller calls")
     // A request with k > maxK would silently get a truncated result
-    // (the heap never holds more than maxK) — misuse must fail loudly
-    // instead. The validation action runs on the request-sized frame
-    // (the side we broadcast anyway), never the corpus. Cast before
-    // reading (callers may pass int k) and skip on an empty batch
-    // (max is null and there is nothing to truncate).
-    val kMaxRow = reqs.agg(max(col("k").cast("long"))).collect().head
-    if (!kMaxRow.isNullAt(0)) {
-      val kMax = kMaxRow.getLong(0)
-      require(maxK >= kMax,
+    // (the heap never holds more than maxK) — misuse must fail loudly.
+    batch.filterNot(_.isNullAt(2)).map(_.getLong(2)).maxOption.foreach {
+      kMax => require(maxK >= kMax,
         s"maxK=$maxK is smaller than the batch's largest request k=$kMax")
     }
-    val pass = col("fop").isNull ||
-      (col("fop") === "=" && col("label") === col("fval")) ||
-      (col("fop") === "!=" && col("label") =!= col("fval"))
-    // lower-is-better key for the shared heap: L2/L1 as-is, IP negated
-    val key = when(col("metric") === "L2",
-        VectorDistance.l2(col("vec"), col("qvec")))
-      .when(col("metric") === "L1",
-        VectorDistance.l1(col("vec"), col("qvec")))
-      .otherwise(-VectorDistance.dot(col("vec"), col("qvec")))
-    val scored = data.crossJoin(broadcast(reqs))
-      .where(pass)
-      .select(col("qid"), col("metric"), col("k"), key.as("key"), col("id"))
-      .where(col("key").isNotNull)
-    val agg = TopKAgg.topK(maxK)
-    scored.groupBy("qid", "metric", "k")
-      .agg(agg(col("key"), col("id")).as("top"))
-      .select(col("qid"), col("metric"), col("k"),
-        posexplode(col("top.items")))
-      .select(col("qid"), (col("pos") + 1).as("rk"),
-        col("col.id").as("nn_id"),
-        round(when(col("metric") === "L2" || col("metric") === "L1",
-          col("col.key"))
-          .otherwise(-col("col.key")), 4).as("score"))
-      .where(col("rk") <= col("k"))
+    val agg = RequestTopK.forBatch(batch.toSeq, reqs.schema("qid").dataType,
+      reqs.schema("fval").dataType, maxK)
+    // a batch where no request can score plans no scan at all (limit 0
+    // folds to an empty relation)
+    (if (agg.requests.isEmpty) data.limit(0) else data)
+      .agg(GraftColumnBridge.column(agg.toAggregateExpression()).as("top"))
+      .select(explode(col("top")).as("c"))
+      .where(col("c.rk") <= col("c.k"))
+      .select(col("c.qid").as("qid"), col("c.rk").as("rk"),
+        col("c.nn_id").as("nn_id"),
+        round(when(col("c.metric") === "L2" || col("c.metric") === "L1",
+          col("c.key"))
+          .otherwise(-col("c.key")), 4).as("score"))
       .orderBy("qid", "rk")
   }
 
@@ -208,9 +226,10 @@ object SearchApi {
     * points match this filter?) every production store exposes beside
     * search: the reference's filter payload ({fieldName, fieldValue,
     * op}) applied as a COUNT, per request, heterogeneous filters in
-    * ONE corpus pass. Same anatomy as [[searchRequests]] minus the
-    * vector math: requests broadcast, the filter evaluates as a
-    * codegen join predicate, and the aggregate is a qid-keyed count
+    * ONE corpus pass. Unlike [[searchRequests]] it keeps the join
+    * form — there is no per-request heap to fuse: requests broadcast,
+    * the filter evaluates as a codegen join predicate, and the
+    * aggregate is a qid-keyed count
     * with map-side partial aggregation — the shuffle carries
     * O(requests × partitions) rows whatever the corpus size. An
     * unfiltered request (fop NULL) counts the corpus; a request

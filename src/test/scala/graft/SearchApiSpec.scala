@@ -1,7 +1,11 @@
 package graft
 
-import graft.operators.{Knn, SearchApi}
+import graft.functions.VectorDistance
+import graft.operators.{Knn, SearchApi, TopKAgg}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class SearchApiSpec extends SparkSuite {
 
@@ -10,6 +14,53 @@ class SearchApiSpec extends SparkSuite {
       col("label"))
   private def qs = Tables.embeddings(spark, sf).where(col("vec_id") < 5)
     .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+
+  /** The request batch as the cross join it replaced: every (corpus
+    * row, request) pair scored by the codegen kernels, then a
+    * `TopKAgg` group-by on (qid, metric, k). Test-side reference only.
+    */
+  private def crossJoinReference(data: DataFrame, reqs: DataFrame,
+                                 maxK: Int): DataFrame = {
+    val pass = col("fop").isNull ||
+      (col("fop") === "=" && col("label") === col("fval")) ||
+      (col("fop") === "!=" && col("label") =!= col("fval"))
+    val key = when(col("metric") === "L2",
+        VectorDistance.l2(col("vec"), col("qvec")))
+      .when(col("metric") === "L1",
+        VectorDistance.l1(col("vec"), col("qvec")))
+      .otherwise(-VectorDistance.dot(col("vec"), col("qvec")))
+    val agg = TopKAgg.topK(maxK)
+    data.crossJoin(broadcast(reqs))
+      .where(pass)
+      .select(col("qid"), col("metric"), col("k"), key.as("key"), col("id"))
+      .where(col("key").isNotNull)
+      .groupBy("qid", "metric", "k")
+      .agg(agg(col("key"), col("id")).as("top"))
+      .select(col("qid"), col("metric"), col("k"),
+        posexplode(col("top.items")))
+      .select(col("qid"), (col("pos") + 1).as("rk"),
+        col("col.id").as("nn_id"),
+        round(when(col("metric") === "L2" || col("metric") === "L1",
+          col("col.key"))
+          .otherwise(-col("col.key")), 4).as("score"))
+      .where(col("rk") <= col("k"))
+  }
+
+  private def rowsOf(df: DataFrame): Seq[(Long, Int, Long, Double)] =
+    df.collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .sorted
+
+  private val batchSchema = StructType(Seq(
+    StructField("qid", LongType), StructField("qvec", ArrayType(FloatType)),
+    StructField("k", LongType), StructField("metric", StringType),
+    StructField("fop", StringType), StructField("fval", LongType)))
+
+  private def batch(rows: Seq[Row]): DataFrame = {
+    val list = new java.util.ArrayList[Row]()
+    rows.foreach(list.add)
+    spark.createDataFrame(list, batchSchema)
+  }
 
   test("homogeneous batches collapse to the per-query operators") {
     // all-L2 with '=5' filter ≡ Knn.topKFiltered(label === 5)
@@ -207,5 +258,103 @@ class SearchApiSpec extends SparkSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("partial_count") || plan.contains("partial"),
       s"no map-side partial aggregation in:\n$plan")
+  }
+
+  test("fused pass equals the cross-join form on every metric, filter " +
+    "and NULL edge, float and double corpora") {
+    val v = Tables.embeddings(spark, sf).where(col("vec_id") < 16)
+      .select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    val reqs = batch(Seq(
+      Row(0L, v(0L), 10L, "L2", "=", 5L),
+      Row(1L, v(1L), 10L, "L1", "!=", 5L),
+      Row(2L, v(2L), 5L, "IP", null, 0L),
+      Row(3L, v(3L), 10L, null, "=", 3L),        // NULL metric ranks as IP
+      Row(4L, v(4L), 10L, "cosine", "!=", 2L),   // unknown metric: IP
+      Row(5L, v(5L), 10L, "L2", "<", 5L),        // unknown op: nothing
+      Row(6L, null, 10L, "L2", null, 0L),        // NULL qvec: dropped
+      Row(7L, v(7L).take(10), 10L, "L1", null, 0L), // dim mismatch
+      Row(8L, v(8L), null, "L2", null, 0L),      // NULL k: nothing
+      Row(9L, v(9L), 10L, "L2", "=", null),      // NULL fval: nothing
+      Row(0L, v(10L), 10L, "L2", "!=", 5L),      // qid 0 again, same group
+      Row(11L, v(11L), 3L, "IP", "=", 1L),
+      Row(12L, v(12L), 10L, "L1", null, 0L),
+      Row(13L, v(13L), 10L, "IP", "!=", 4L)))
+    // corpus rows with a NULL label or a NULL vector
+    val holed = data
+      .withColumn("label", when(col("id") % 7 === 3, lit(null))
+        .otherwise(col("label")))
+      .withColumn("vec", when(col("id") % 11 === 4, lit(null))
+        .otherwise(col("vec")))
+    val asDouble = holed.withColumn("vec", col("vec").cast("array<double>"))
+    val doubleReqs = reqs.withColumn("qvec", col("qvec").cast("array<double>"))
+    for ((corpus, b) <- Seq(holed -> reqs, asDouble -> reqs,
+                            asDouble -> doubleReqs)) {
+      val fused = rowsOf(SearchApi.searchRequests(corpus, b, 10))
+      val want = rowsOf(crossJoinReference(corpus, b, 10))
+      assert(fused == want)
+      assert(fused.map(_._1).toSet == Set(0L, 1L, 2L, 3L, 4L, 11L, 12L, 13L))
+      assert(fused.count(_._1 == 0L) == 10 && fused.count(_._1 == 2L) == 5 &&
+        fused.count(_._1 == 11L) == 3)
+    }
+    assert(SearchApi.searchRequests(holed, batch(Nil), 10).collect().isEmpty)
+    assert(crossJoinReference(holed, batch(Nil), 10).collect().isEmpty)
+  }
+
+  test("one fused pass: a single corpus scan, no Q×N join or range " +
+    "exchange, at most 3 jobs per batch") {
+    val plan = SearchApi.searchRequestsQuery(spark, sf)
+      .queryExecution.executedPlan.toString
+    assert("FileScan parquet".r.findAllMatchIn(plan).length == 1, plan)
+    assert(!plan.contains("BroadcastNestedLoopJoin") &&
+      !plan.contains("CartesianProduct"), plan)
+    assert(!plan.contains("rangepartitioning"), plan)
+
+    val raw = spark.read.parquet(s"$sf/embeddings.parquet")
+    val corpus = raw.select(col("vec_id").as("id"),
+      col("embedding").as("vec"), col("label"))
+    val reqs = raw.where(col("vec_id") < 6)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
+        lit(10L).as("k"), lit("L2").as("metric"), lit("!=").as("fop"),
+        lit(5L).as("fval"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(jobs.add)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("searchapi-batch", "one batch, build and action")
+      val n = try SearchApi.searchRequests(corpus, reqs, 10).collect().length
+        finally sc.clearJobGroup()
+      assert(n == 60)
+      // listener delivery is async and in order: once a later marker
+      // job's start arrives, every job of the batch has been seen
+      sc.setJobGroup("searchapi-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      while (!jobs.contains("searchapi-marker") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(jobs.contains("searchapi-marker"), "marker job never observed")
+      val batchJobs = jobs.toArray.count(_ == "searchapi-batch")
+      assert(batchJobs >= 1 && batchJobs <= 3, s"$batchJobs jobs for one batch")
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a batch above MaxBatchRequests fails loudly, naming the limit") {
+    def reqs(n: Int) = spark.range(n).select(col("id").as("qid"),
+      array_repeat(lit(0.1f), 64).as("qvec"), lit(10L).as("k"),
+      lit("L2").as("metric"), lit(null).cast("string").as("fop"),
+      lit(0L).as("fval"))
+    val e = intercept[IllegalArgumentException] {
+      SearchApi.searchRequests(data, reqs(SearchApi.MaxBatchRequests + 1), 10)
+    }
+    assert(e.getMessage.contains(
+      s"MaxBatchRequests=${SearchApi.MaxBatchRequests}"), e.getMessage)
+    // exactly at the bound the batch runs
+    assert(SearchApi.searchRequests(data, reqs(SearchApi.MaxBatchRequests), 10)
+      .select("qid").distinct().count() == SearchApi.MaxBatchRequests)
   }
 }
