@@ -4,6 +4,7 @@ import graft.Tables
 import graft.functions.VectorDistance
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Approximate nearest-neighbor search — the Spark-scale
   * re-expression of the reference's HNSW path
@@ -524,10 +525,11 @@ object Ann {
     */
   private[operators] def cachedCentroids(
       s: SparkSession, dir: String): Array[(Long, Array[Float])] = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    // the corpus is opened only on a miss: opening it runs a
+    // schema-inference job
+    centCache.computeIfAbsent((dir, 200L), _ => collectCentroids(kmeansCentroids(
+      Tables.embeddings(s, dir)
+        .select(col("vec_id").as("id"), col("embedding").as("vec")), 200)))
   }
 
   def ivfQuery(s: SparkSession, dir: String): DataFrame = {
@@ -725,24 +727,19 @@ object Ann {
       knnGraphUncached(s, dir, k, nprobe).localCheckpoint(true)
     }
 
-  /** Warm the kNN-graph memos two concurrent graph legs share (the
-    * routed batch builds its NSW and HIER legs from a thread pool —
-    * graft.Par — and ByproductCache tolerates a racing double-build,
-    * which for the corpus-scale graph would mean paying the build
-    * twice; touching the memos once before forking makes the race a
-    * cache hit).
+  /** The symmetric base-graph edges (src, dst) every NSW and in-memory
+    * HNSW descent walks: [[knnGraph]] plus its reverse, distinct,
+    * memoized per (dir, graphK).
     */
-  private[graft] def warmGraphMemos(s: SparkSession, dir: String,
-                                    graphK: Int): Unit = {
-    val g = knnGraph(s, dir, graphK)
-      .select(col("qid").as("src"), col("nn_id").as("dst"))
+  private[graft] def nswEdges(s: SparkSession, dir: String,
+                              graphK: Int): DataFrame =
     graft.ByproductCache.getOrCompute(
       s.sparkContext.applicationId, s"nswedges|$dir|$graphK") {
+      val g = knnGraph(s, dir, graphK)
+        .select(col("qid").as("src"), col("nn_id").as("dst"))
       g.union(g.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().localCheckpoint(true)
     }
-    ()
-  }
 
   private def knnGraphUncached(s: SparkSession, dir: String, k: Int,
                                nprobe: Int): DataFrame = {
@@ -1685,28 +1682,75 @@ object Ann {
     fs.delete(intentPath, true)
   }
 
-  /** GRAPH-BASED ANN (NSW beam search) — the closest relational
-    * analog of the reference's hnswlib search loop
-    * (hnswlib_index.cc:46 searchKnn): greedy best-first expansion
-    * over a neighbor graph. The pointer-chasing loop becomes a
-    * FIXED-ROUND BEAM ITERATION (a bounded-depth Pregel shape): the
-    * graph is the symmetrized [[knnGraph]] edge table; each round
-    * expands the per-query frontier by one hop (equi-join on src),
-    * unions the frontier, and keeps the `beam` best by exact cosine;
-    * after `rounds` hops the top-k of the final beam is the answer.
-    * State per round is Q×beam rows — query-sized, never
-    * corpus-sized — and each hop is one shuffle on the graph's edge
-    * key, so depth (not corpus size) bounds the job chain. Entry
-    * points come from a COARSE-TO-FINE DESCENT through the cached
-    * IVF centroids (hnswlib's upper layers, hnswlib_index.cc:21-24,
-    * serve exactly this role: route to a good neighborhood before
-    * the fine-grained walk), so search needs no RNG and replays
-    * bit-identically.
+  /** GRAPH-BASED ANN (NSW beam search) — the relational analog of the
+    * reference's hnswlib search loop (hnswlib_index.cc:46 searchKnn):
+    * greedy best-first expansion over the symmetrized [[knnGraph]]
+    * ([[nswEdges]]). Each round expands every query's beam by one hop,
+    * unions the beam in and keeps the `beam` best by exact cosine;
+    * after at most `rounds` hops the top-k of the final beam is the
+    * answer. The walk's state is Q×beam ids per round — request-sized,
+    * never corpus-sized — so [[Descent]] holds it on the driver and
+    * runs each round as two narrow jobs (neighbour lookup, scoring of
+    * the new pairs). Entry points come from a COARSE-TO-FINE DESCENT
+    * through the cached IVF centroids (hnswlib's upper layers,
+    * hnswlib_index.cc:21-24, serve exactly this role: route to a good
+    * neighborhood before the fine-grained walk), so search needs no
+    * RNG and replays bit-identically.
     */
-  /** Shared beam traversal: returns (final frontier, visited set),
-    * both per-query-scored frames. See [[nswSearch]] for the
-    * iteration contract.
+  def nswSearch(s: SparkSession, dir: String, queries: DataFrame,
+                k: Int = 10, beam: Int = 16, rounds: Int = 3,
+                graphK: Int = 8): DataFrame =
+    nswWalk(s, dir, queries, beam, rounds, graphK, new DescentStats).ranked(k)
+
+  /** Counters a [[Descent]] fills in: the rounds its base loop ran, the
+    * pairs its scoring jobs returned, and the most rows one of its jobs
+    * returned to the driver (what [[MaxDescentRows]] bounds). A pair is
+    * scored at most once, so `pairsScored` ≤ entry pairs + visited
+    * pairs.
     */
+  private[graft] final class DescentStats {
+    @volatile var roundsRun: Int = 0
+    @volatile var pairsScored: Long = 0L
+    @volatile var peakRows: Int = 0
+  }
+
+  /** Row bound on a descent's request batch: the batch is collected to
+    * the driver, where its vectors become plan literals of every
+    * scoring job. A larger batch fails loudly; split it into several
+    * calls.
+    */
+  val MaxDescentQueries = 4096
+
+  /** Row bound on any one collect of a descent (an entry set, a round's
+    * neighbour lookup or scoring). At [[MaxDescentQueries]] queries a
+    * round holds about Q·beam·degree ≈ 1M pairs and the IVF entry set
+    * Q·2·stride ≈ 1.6M, so only a graph with runaway hub degree or a
+    * degenerate cell gets near it.
+    */
+  val MaxDescentRows = 1 << 22
+
+  /** The plain corpus scan scoring jobs read (no hash spread: a
+    * request-sized id lookup gains nothing from it).
+    */
+  private def corpusOf(s: SparkSession, dir: String): DataFrame =
+    Tables.table(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+
+  /** Collect the batch (qid, qvec, cells, `extra`…) with each query's
+    * `nprobe` nearest IVF cells, and score the members of those cells
+    * in one job. Returns the descent and each query's entry set.
+    */
+  private def nswStart(s: SparkSession, dir: String, queries: DataFrame,
+                       extra: Seq[org.apache.spark.sql.Column],
+                       stats: DescentStats, nprobe: Int = 2)
+      : (Descent, Array[Seq[Long]]) = {
+    val cents = cachedCentroids(s, dir)
+    val d = new Descent(corpusOf(s, dir), queries.select(Seq(col("qid"),
+      col("qvec"), centroidTopM(col("qvec"), cents, nprobe).getField("cell")) ++
+      extra: _*), stats)
+    (d, d.scoreCells(d.rows(_).getSeq[Long](2), cents))
+  }
+
   /** Beam ENTRY SET: per query, the members of its `nprobe` nearest
     * IVF cells under the cached centroids. Per-query entry work is
     * ≈ nprobe·stride rows — bounded by CELL SIZE, not corpus size
@@ -1716,128 +1760,34 @@ object Ann {
   private[graft] def nswEntry(s: SparkSession, dir: String,
                               queries: DataFrame,
                               nprobe: Int = 2): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
-    val assigned = assignTo(e, cents).select(col("id"), col("cell"))
-    queries.select(col("qid"),
-        explode(centroidTopM(col("qvec"), cents, nprobe)).as("p"))
-      .select(col("qid"), col("p.cell").as("cell"))
-      .join(assigned, "cell")
-      .select("qid", "id")
+    val (d, entry) = nswStart(s, dir, queries, Nil, new DescentStats, nprobe)
+    d.frame(Seq(StructField("id", LongType, nullable = false)))(
+      entry(_).iterator.map(Seq(_)))
   }
 
-  /** Observability hook for the adaptive base-beam loop: the spec
-    * pins that an easy query set stops before the round cap.
+  /** The NSW walk; `budget`, when given, is each request's round
+    * budget, a column collected with the batch.
     */
-  private[graft] final class DescentStats { @volatile var roundsRun: Int = 0 }
-
-  /** BASE-BEAM LOOP with ADAPTIVE TERMINATION — the relational form
-    * of hnswlib's ef-queue stop (hnswlib_index.cc:46 `searchKnn`
-    * iterates while the candidate queue can still improve the result
-    * set). Exact variant: `expand` is a pure function of the frontier
-    * and scores are deterministic, so a round whose cut beam equals
-    * the previous round's is a FIXPOINT — every remaining round would
-    * recompute the identical (frontier, visited) bit-for-bit, and
-    * skipping them changes nothing. That exactness is why the
-    * unrolled SQL oracle needs no round-count column: the adaptive
-    * run and the fixed-`rounds` run agree by construction. The
-    * convergence probe costs two tiny jobs over the Q×beam
-    * checkpointed frontier and only runs while more rounds remain —
-    * a converged query set stops paying beam·graphK expansions it
-    * cannot use (the r10 verdict's "most-likely user hit").
-    */
-  private def baseBeamLoop(frontier0: DataFrame, visited0: DataFrame,
-                           edges: DataFrame,
-                           scoreIds: DataFrame => DataFrame,
-                           topBeam: (DataFrame, Int) => DataFrame,
-                           beam: Int, rounds: Int,
-                           stats: DescentStats): (DataFrame, DataFrame) = {
-    var frontier = frontier0
-    var visited = visited0
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      val expand = frontier.join(edges, col("id") === col("src"))
-        .select(col("qid"), col("dst").as("id"))
-        .union(frontier.select("qid", "id"))
-        .distinct()
-      visited = visited.union(expand).distinct()
-      val next = topBeam(scoreIds(expand), beam).localCheckpoint(true)
-      r += 1
-      // ONE action, not three (r16): multiset equality via the empty
-      // symmetric difference — algebraically identical to the old
-      // count()==count() && exceptAll.isEmpty (equal counts plus
-      // one-sided inclusion ⟺ equal multisets ⟺ both exceptAlls
-      // empty), but it costs a single tiny job on the two
-      // checkpointed ≤Q×beam-row frames where the old form ran up to
-      // three driver actions per round across the whole nsw/hnsw
-      // family.
-      if (r < rounds)
-        converged = next.select("qid", "id")
-          .exceptAll(frontier.select("qid", "id"))
-          .union(frontier.select("qid", "id")
-            .exceptAll(next.select("qid", "id")))
-          .isEmpty
-      frontier = next
-    }
-    if (stats != null) stats.roundsRun = r
-    (frontier, visited)
+  private def nswWalk(s: SparkSession, dir: String, queries: DataFrame,
+                      beam: Int, rounds: Int, graphK: Int,
+                      stats: DescentStats,
+                      budget: Option[org.apache.spark.sql.Column] = None): Descent = {
+    val (d, entry) = nswStart(s, dir, queries, budget.toSeq, stats)
+    d.enter(entry(_), beam)
+    d.descend(nswEdges(s, dir, graphK), beam, rounds,
+      if (budget.isEmpty) _ => rounds else d.rows(_).getInt(3))
+    d
   }
 
+  /** (final beam (qid, id, s), scored visited set (qid, id, s)). */
   private[graft] def nswTraverse(s: SparkSession, dir: String,
-                          queries: DataFrame,
-                          beam: Int, rounds: Int,
-                          graphK: Int,
-                          stats: DescentStats = null): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = knnGraph(s, dir, graphK)
-      .select(col("qid").as("src"), col("nn_id").as("dst"))
-    val edges = graft.ByproductCache.getOrCompute(
-      s.sparkContext.applicationId, s"nswedges|$dir|$graphK") {
-      g.union(g.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint(true)
-    }
-    val q = queries.select(col("qid"), col("qvec"))
-    def scoreIds(ids: DataFrame): DataFrame =
-      ids.join(e, "id").join(broadcast(q), "qid")
-        .select(col("qid"), col("id"),
-          VectorDistance.cosine(col("vec"), col("qvec")).as("s"))
-        .where(col("s").isNotNull)
-    val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    def topBeam(scored: DataFrame, n: Int): DataFrame =
-      scored.withColumn("rk", row_number().over(byQ))
-        .where(col("rk") <= n).select("qid", "id", "s")
-    // COARSE LAYER: the stride-skeleton crossJoin this replaces
-    // scored Q×(N/200) seeds in round 0 — linear in corpus size. The
-    // descent instead routes each query through the SAME cached
-    // centroids ann_ivf trains (a broadcast codegen projection, the
-    // identical cost the blessed IVF probe pays) and seeds the beam
-    // with the MEMBERS of its 2 nearest cells: per-query entry work
-    // ≈ nprobe·stride rows, independent of corpus size — cell COUNT
-    // grows with the corpus, cell SIZE stays ~stride.
-    val entry = nswEntry(s, dir, q)
-    val frontier0 = topBeam(scoreIds(entry), beam).localCheckpoint(true)
-    val (frontier, visited) = baseBeamLoop(frontier0,
-      frontier0.select("qid", "id"), edges, scoreIds, topBeam,
-      beam, rounds, stats)
-    (frontier, scoreIds(visited.distinct()))
-  }
-
-  def nswSearch(s: SparkSession, dir: String, queries: DataFrame,
-                k: Int = 10, beam: Int = 16, rounds: Int = 3,
-                graphK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    val (frontier, _) = nswTraverse(s, dir, queries, beam, rounds, graphK)
-    frontier.withColumn("rk", row_number().over(byQ))
-      .where(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("id").as("nn_id"),
-        round(col("s"), 4).as("score"))
-      .orderBy("qid", "rk")
+                                 queries: DataFrame,
+                                 beam: Int, rounds: Int,
+                                 graphK: Int,
+                                 stats: DescentStats = new DescentStats)
+      : (DataFrame, DataFrame) = {
+    val d = nswWalk(s, dir, queries, beam, rounds, graphK, stats)
+    (d.frontierFrame(), d.visitedFrame(scoredOnly = true))
   }
 
   /** PER-REQUEST SEARCH EFFORT — the reference API's `ef_search`
@@ -1848,83 +1798,45 @@ object Ann {
     * rounds_q = min(maxRounds, max(1, ⌈ef / beam⌉)) — since each
     * round evaluates at most `beam` fresh frontier members, ef/beam
     * rounds is exactly "expand until ~ef candidates were considered",
-    * hnswlib's ef-queue semantic in fixed-point relational form. A
-    * query whose budget is spent FREEZES: its frontier is carried
-    * untouched through later rounds (the identity step), so a batch
-    * of mixed-effort requests runs as ONE loop at the max budget with
-    * per-query gating joins against the request-sized budget table —
-    * never a separate job per effort class. Monotone by construction:
-    * per-query trajectories are qid-partitioned and deterministic, so
-    * a smaller ef's visited set is a strict PREFIX (round-wise) of a
-    * larger ef's — a smaller ef can never expand more nodes (AnnSpec
-    * pins this).
+    * hnswlib's ef-queue semantic in fixed-point relational form. The
+    * budget is that Spark expression, collected with the batch; a
+    * query whose budget is spent FREEZES with its beam as it stands,
+    * so a batch of mixed-effort requests runs as ONE loop, never a
+    * loop per effort class. Monotone by construction: per-query
+    * trajectories are independent and deterministic, so a smaller
+    * ef's visited set is a strict PREFIX (round-wise) of a larger
+    * ef's — a smaller ef can never expand more nodes (AnnSpec pins
+    * this).
     *
     * @param reqs (qid, qvec, ef) — ef per request
     * @return (qid, rk, nn_id, score, rounds_used) — rounds_used is
     *         the budget the request ran, emitted as DATA so the
     *         oracle mirrors it from the same ⌈ef/beam⌉ expression
     */
-  private[graft] def nswTraverseEf(s: SparkSession, dir: String,
-                                   reqs: DataFrame, beam: Int,
-                                   maxRounds: Int, graphK: Int)
-      : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = knnGraph(s, dir, graphK)
-      .select(col("qid").as("src"), col("nn_id").as("dst"))
-    val edges = graft.ByproductCache.getOrCompute(
-      s.sparkContext.applicationId, s"nswedges|$dir|$graphK") {
-      g.union(g.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint(true)
-    }
-    val q = reqs.select(col("qid"), col("qvec"))
-    val budgets = reqs.select(col("qid"),
-        least(lit(maxRounds), greatest(lit(1),
-          ceil(col("ef").cast("double") / lit(beam)).cast("int"))).as("rq"))
-      .localCheckpoint(true)
-    def scoreIds(ids: DataFrame): DataFrame =
-      ids.join(e, "id").join(broadcast(q), "qid")
-        .select(col("qid"), col("id"),
-          VectorDistance.cosine(col("vec"), col("qvec")).as("s"))
-        .where(col("s").isNotNull)
-    val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    def topBeam(scored: DataFrame): DataFrame =
-      scored.withColumn("rk", row_number().over(byQ))
-        .where(col("rk") <= beam).select("qid", "id", "s")
-    val entry = nswEntry(s, dir, q)
-    var frontier = topBeam(scoreIds(entry)).localCheckpoint(true)
-    var visited = frontier.select("qid", "id")
-    for (r <- 1 to maxRounds) {
-      // gate on the request-sized budget table: spent queries take
-      // the identity step, active ones expand one hop
-      val act = frontier.join(
-        broadcast(budgets.where(col("rq") >= r).select("qid")), "qid")
-      val frozen = frontier.join(
-        broadcast(budgets.where(col("rq") < r).select("qid")), "qid")
-      val expand = act.join(edges, col("id") === col("src"))
-        .select(col("qid"), col("dst").as("id"))
-        .union(act.select("qid", "id"))
-        .distinct()
-      visited = visited.union(expand).distinct()
-      frontier = topBeam(scoreIds(expand)).unionByName(frozen)
-        .localCheckpoint(true)
-    }
-    (frontier.join(broadcast(budgets), "qid"), visited)
-  }
-
   def nswSearchEf(s: SparkSession, dir: String, reqs: DataFrame,
                   k: Int = 10, beam: Int = 16, maxRounds: Int = 3,
                   graphK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    val (frontier, _) = nswTraverseEf(s, dir, reqs, beam, maxRounds, graphK)
-    frontier.withColumn("rk", row_number().over(byQ))
-      .where(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("id").as("nn_id"),
-        round(col("s"), 4).as("score"),
-        col("rq").cast("long").as("rounds_used"))
-      .orderBy("qid", "rk")
+    val d = nswWalkEf(s, dir, reqs, beam, maxRounds, graphK, new DescentStats)
+    d.ranked(k, (StructField("rounds_used", LongType, nullable = false),
+      d.rows(_).getInt(3).toLong))
+  }
+
+  private def nswWalkEf(s: SparkSession, dir: String, reqs: DataFrame,
+                        beam: Int, maxRounds: Int, graphK: Int,
+                        stats: DescentStats): Descent =
+    nswWalk(s, dir, reqs, beam, maxRounds, graphK, stats, Some(least(lit(maxRounds),
+      greatest(lit(1), ceil(col("ef").cast("double") / lit(beam)).cast("int")))))
+
+  /** (final beam (qid, id, s, rq), visited set (qid, id)). */
+  private[graft] def nswTraverseEf(s: SparkSession, dir: String,
+                                   reqs: DataFrame, beam: Int,
+                                   maxRounds: Int, graphK: Int,
+                                   stats: DescentStats = new DescentStats)
+      : (DataFrame, DataFrame) = {
+    val d = nswWalkEf(s, dir, reqs, beam, maxRounds, graphK, stats)
+    (d.frontierFrame((StructField("rq", IntegerType, nullable = false),
+        d.rows(_).getInt(3))),
+      d.visitedFrame(scoredOnly = false).select("qid", "id"))
   }
 
   /** FILTERED graph search — the reference's HNSW path takes the
@@ -2033,12 +1945,11 @@ object Ann {
         .where(col("rk") <= k).select(col("qid").as("src"), col("id").as("dst"))
       val sym = g.union(g.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().localCheckpoint(true)
-      // an empty layer memoizes as a LocalRelation: the traversal's
-      // per-query emptiness probe then resolves on the driver with no
-      // job at all (the sparsest top layers are empty at every small
-      // SF, and the probe used to cost a task per layer per query)
+      // an empty layer memoizes as a LocalRelation: the descent's
+      // neighbour lookup then resolves on the driver with no job at
+      // all (the sparsest top layers are empty at every small SF)
       if (sym.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           sym.schema)
       else sym
     }
@@ -2050,106 +1961,59 @@ object Ann {
     * layer-1 frontier. Round-0 work is Q×1 — entry cost is CONSTANT
     * in corpus size, the contract the r8 verdict asked the NSW family
     * to meet; the upper-layer rounds are each ≤ Q×beam×k edge
-    * expansions. Returns (final frontier, scored visited set).
+    * expansions. An edge-less layer (the sparsest top layers of a
+    * small corpus) finds no neighbours and scores nothing, which is
+    * the identity step the SQL mirror's blocks reduce to. Shared by
+    * the in-memory and persisted-index variants: same descent, corpus
+    * and edges supplied by the caller.
+    *
+    * @param ent the enterpoint, None for an empty corpus
     */
-  /** Traversal core shared by the in-memory and persisted-index
-    * variants: same descent, edges supplied by the caller.
-    */
-  private def hnswTraverseEdges(e: DataFrame, queries: DataFrame,
-                                layerEdges: Int => DataFrame,
-                                edges0: DataFrame,
-                                beamU: Int, beam: Int,
-                                rounds: Int,
-                                stats: DescentStats = null,
-                                entMemoKey: Option[String] = None)
-      : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col("qid"), col("qvec"))
-    def scoreIds(ids: DataFrame): DataFrame =
-      ids.join(e, "id").join(broadcast(q), "qid")
-        .select(col("qid"), col("id"),
-          VectorDistance.cosine(col("vec"), col("qvec")).as("s"))
-        .where(col("s").isNotNull)
-    val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    def topBeam(scored: DataFrame, n: Int): DataFrame =
-      scored.withColumn("rk", row_number().over(byQ))
-        .where(col("rk") <= n).select("qid", "id", "s")
-    // The enterpoint (max level, then min id — hnswlib's
-    // enterpoint_node_) is a deterministic function of the node-id
-    // SET, but finding it is a full pass over `e`; every descent used
-    // to pay that pass inside its round-0 checkpoint. Callers whose
-    // node set is immutable for the session (the in-memory variant:
-    // Tables.embeddings of a fixed dir) pass a memo key so the pass
-    // runs once per dir — index metadata, exactly what hnswlib keeps
-    // in its index header. The persisted-index variant does NOT
-    // memoize: maintenance (hnswUpsert/Delete) mutates its node set
-    // mid-session and a stale enterpoint could change results.
-    def entOf: DataFrame = e.select(col("id"), hnswLevel(col("id")).as("lvl"))
-      .orderBy(col("lvl").desc, col("id").asc).limit(1).select("id")
-    val ent = entMemoKey match {
-      case Some(k) => graft.ByproductCache.getOrCompute(
-        e.sparkSession.sparkContext.applicationId, k) {
-        entOf.localCheckpoint(true)
-      }
-      case None => entOf
-    }
-    var frontier = topBeam(
-      scoreIds(q.select("qid").crossJoin(broadcast(ent))), beamU)
-      .localCheckpoint(true)
-    var visited = frontier.select("qid", "id")
-    for (l <- 4 to 1 by -1) {
-      val edges = layerEdges(l)
-      // an EMPTY layer's step is the identity: expand = frontier,
-      // and rescoring + re-cutting an already-beamU-cut frontier
-      // reproduces it bit-for-bit (deterministic scores), while
-      // frontier ⊆ visited already holds — so skip the four jobs.
-      // The sparsest top layers of a small corpus hit this on every
-      // query; the SQL mirror's equivalent blocks reduce to the same
-      // carry-through algebraically.
-      if (!edges.isEmpty) {
-        val expand = frontier.join(edges, col("id") === col("src"))
-          .select(col("qid"), col("dst").as("id"))
-          .union(frontier.select("qid", "id"))
-          .distinct()
-        visited = visited.union(expand).distinct()
-        frontier = topBeam(scoreIds(expand), beamU).localCheckpoint(true)
-      }
-    }
-    val (fr, vis) = baseBeamLoop(frontier, visited, edges0, scoreIds,
-      topBeam, beam, rounds, stats)
-    (fr, scoreIds(vis.distinct()))
+  private def hnswWalk(corpus: DataFrame, queries: DataFrame,
+                       ent: Option[Long],
+                       layerEdges: Int => DataFrame, edges0: DataFrame,
+                       beamU: Int, beam: Int, rounds: Int,
+                       stats: DescentStats): Descent = {
+    val d = new Descent(corpus, queries.select("qid", "qvec"), stats)
+    d.enter(_ => ent.toSeq, beamU)
+    for (l <- 4 to 1 by -1) d.hop(layerEdges(l), d.rows.indices, beamU)
+    d.descend(edges0, beam, rounds)
+    d
   }
 
-  private def hnswTraverse(s: SparkSession, dir: String, queries: DataFrame,
-                           beamU: Int, beam: Int, rounds: Int,
-                           graphK: Int): (DataFrame, DataFrame) = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val g = knnGraph(s, dir, graphK)
-      .select(col("qid").as("src"), col("nn_id").as("dst"))
-    val edges0 = graft.ByproductCache.getOrCompute(
-      s.sparkContext.applicationId, s"nswedges|$dir|$graphK") {
-      g.union(g.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint(true)
-    }
-    hnswTraverseEdges(e, queries, l => hnswLayerEdges(s, dir, l, graphK),
-      edges0, beamU, beam, rounds,
-      entMemoKey = Some(s"hnswent|mem|$dir"))
+  /** The enterpoint (max level, then min id — hnswlib's
+    * enterpoint_node_): a deterministic function of the node-id set,
+    * found by one pass over `nodes`.
+    */
+  private def hnswEnterpoint(nodes: DataFrame): DataFrame =
+    nodes.select(col("id"), hnswLevel(col("id")).as("lvl"))
+      .orderBy(col("lvl").desc, col("id").asc).limit(1).select("id")
+
+  private[operators] def hnswTraverse(s: SparkSession, dir: String,
+                                      queries: DataFrame, beamU: Int,
+                                      beam: Int, rounds: Int, graphK: Int,
+                                      stats: DescentStats = new DescentStats)
+      : Descent = {
+    val e = corpusOf(s, dir)
+    // the in-memory node set is fixed for the session, so its
+    // enterpoint is index metadata (what hnswlib keeps in its index
+    // header): found once per dir and memoized as a LocalRelation,
+    // which later descents read with no job. The persisted variant
+    // does NOT memoize: maintenance (hnswUpsert/Delete) mutates its
+    // node set mid-session.
+    val ent = graft.ByproductCache.getOrCompute(
+      s.sparkContext.applicationId, s"hnswent|mem|$dir") {
+      val top = hnswEnterpoint(e)
+      s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
+    }.collect().headOption.map(_.getLong(0))
+    hnswWalk(e, queries, ent, l => hnswLayerEdges(s, dir, l, graphK),
+      nswEdges(s, dir, graphK), beamU, beam, rounds, stats)
   }
 
   def hnswSearch(s: SparkSession, dir: String, queries: DataFrame,
                  k: Int = 10, beamU: Int = 8, beam: Int = 16,
-                 rounds: Int = 3, graphK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    val (frontier, _) =
-      hnswTraverse(s, dir, queries, beamU, beam, rounds, graphK)
-    frontier.withColumn("rk", row_number().over(byQ))
-      .where(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("id").as("nn_id"),
-        round(col("s"), 4).as("score"))
-      .orderBy("qid", "rk")
-  }
+                 rounds: Int = 3, graphK: Int = 8): DataFrame =
+    hnswTraverse(s, dir, queries, beamU, beam, rounds, graphK).ranked(k)
 
   /** Filtered hierarchical search — same selector semantics as
     * [[nswSearchFiltered]] (hnswlib_index.cc:28-37: traverse the full
@@ -2162,8 +2026,8 @@ object Ann {
                          graphK: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    val (_, visitedScored) =
-      hnswTraverse(s, dir, queries, beamU, beam, rounds, graphK)
+    val visitedScored = hnswTraverse(s, dir, queries, beamU, beam, rounds,
+      graphK).visitedFrame(scoredOnly = true)
     val allowed = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("label")).where(filter)
     visitedScored
@@ -2410,40 +2274,32 @@ object Ann {
     */
   def hnswSearchIndexed(s: SparkSession, indexPath: String, hnswPath: String,
                         queries: DataFrame, k: Int = 10, beamU: Int = 8,
-                        beam: Int = 16, rounds: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                        beam: Int = 16, rounds: Int = 3): DataFrame =
+    hnswWalkIndexed(s, indexPath, hnswPath, queries, beamU, beam, rounds,
+      new DescentStats).ranked(k)
+
+  private[operators] def hnswWalkIndexed(s: SparkSession, indexPath: String,
+                                         hnswPath: String, queries: DataFrame,
+                                         beamU: Int, beam: Int, rounds: Int,
+                                         stats: DescentStats): Descent = {
     val e = graphNodes(s, indexPath).select(col("id"), col("vec"))
     val all = hnswRead(s, hnswPath)
     val root = new org.apache.hadoop.fs.Path(hnswPath)
     val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+    // both directions of each stored edge; an absent layer directory
+    // is an edge-less layer, an empty LocalRelation that the lookup
+    // reads with no job. The descent dedups each expansion itself.
     def sym(layer: Int): DataFrame =
-      // an absent layer directory means the layer has no edges — an
-      // empty LocalRelation lets the traversal skip the step with no
-      // job at all (not even an isEmpty probe)
       if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"layer=$layer")))
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("src",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("dst",
-              org.apache.spark.sql.types.LongType))))
+        s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          StructType(Seq(StructField("src", LongType), StructField("dst", LongType))))
       else {
         val g = all.where(col("layer") === layer)
           .select(col("qid").as("src"), col("nn_id").as("dst"))
         g.union(g.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct()
       }
-    // the base edges feed every beam round — materialize once
-    // instead of re-scanning the layer-0 partitions per round
-    val edges0 = sym(0).localCheckpoint(true)
-    val (frontier, _) = hnswTraverseEdges(e, queries, sym, edges0,
-      beamU, beam, rounds)
-    val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    frontier.withColumn("rk", row_number().over(byQ))
-      .where(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("id").as("nn_id"),
-        round(col("s"), 4).as("score"))
-      .orderBy("qid", "rk")
+    hnswWalk(e, queries, hnswEnterpoint(e).collect().headOption.map(_.getLong(0)),
+      sym, sym(0), beamU, beam, rounds, stats)
   }
 
   /** Persisted-hierarchy twin of [[hnswQuery]]: index + hierarchy

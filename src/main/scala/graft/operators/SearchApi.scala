@@ -71,13 +71,10 @@ object SearchApi {
     */
   def searchRequests(data: DataFrame, reqs: DataFrame,
                      maxK: Int): DataFrame = {
-    val batch = reqs.select(col("qid"), col("qvec"),
+    val batch = graft.Cut.request(reqs.select(col("qid"), col("qvec"),
         col("k").cast("long"), col("metric").cast("string"),
-        col("fop").cast("string"), col("fval"))
-      .limit(MaxBatchRequests + 1).collect()
-    require(batch.length <= MaxBatchRequests,
-      s"request batch exceeds SearchApi.MaxBatchRequests=" +
-        s"$MaxBatchRequests rows; split it into smaller calls")
+        col("fop").cast("string"), col("fval")),
+      MaxBatchRequests, "SearchApi.MaxBatchRequests")
     // A request with k > maxK would silently get a truncated result
     // (the heap never holds more than maxK) — misuse must fail loudly.
     batch.filterNot(_.isNullAt(2)).map(_.getLong(2)).maxOption.foreach {
@@ -158,16 +155,19 @@ object SearchApi {
         .toDF("qid", "rk", "nn_id", "score")
     }
     // CONCURRENT LEG CONSTRUCTION (r16, guide §2.6): the graph legs'
-    // beam descents run eager per-round jobs during CONSTRUCTION, so
-    // building the legs one after another serialized ~15 tiny jobs on
-    // an idle 32-core scheduler. The legs are independent plans over
+    // beam descents run their jobs during CONSTRUCTION — the entry
+    // scoring and two narrow jobs per round (Ann's Descent), 11 build
+    // jobs per 8-request HNSW batch and 15 per HNSW_HIER batch in the
+    // traced ann_search benchmark (45 and 65 with the relational
+    // loops) — so building the legs one after another serialized tiny
+    // jobs on an idle scheduler. The legs are independent plans over
     // disjoint sub-batches — build them from a thread pool and union
     // in the original order (result-identical; only the eager build's
     // wall-clock changes). The one expensive memo two legs share (the
     // kNN graph) is warmed before the fork so the ByproductCache race
     // can never double-build it.
     if (types("HNSW") && types("HIER"))
-      graft.operators.Ann.warmGraphMemos(s, dir, graphK = 8)
+      graft.operators.Ann.nswEdges(s, dir, graphK = 8)
     val legThunks = Seq.newBuilder[() => DataFrame]
     if (types("FLAT"))
       legThunks += (() => searchRequests(data,
