@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -11,8 +12,18 @@ import org.apache.spark.sql.functions._
   * point lookups and scans without a secondary index.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Open `dir/name.parquet` with the schema Spark would infer, read
+    * on the driver: the footer of the one file Spark's inference picks
+    * with `mergeSchema` off (the session never turns it on). Spark's
+    * own inference reads that footer in a one-task job, which a
+    * request-sized query paid on every open. A path with no readable
+    * footer opens through Spark's inference, which reports why.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    GraftParquetBridge.inferSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   /** The driver's test files are single-row-group parquet, so a bare
     * scan is ONE task and every per-row expression runs on one core.

@@ -524,21 +524,17 @@ object Ann {
     * comparable with the index paths.
     */
   private[operators] def cachedCentroids(
-      s: SparkSession, dir: String): Array[(Long, Array[Float])] = {
-    // the corpus is opened only on a miss: opening it runs a
-    // schema-inference job
+      s: SparkSession, dir: String): Array[(Long, Array[Float])] =
     centCache.computeIfAbsent((dir, 200L), _ => collectCentroids(kmeansCentroids(
       Tables.embeddings(s, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec")), 200)))
-  }
 
   def ivfQuery(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val q = Tables.embeddings(s, dir).where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     ivfSearchWith(e, q, k = 10, nprobe = 2, cents)
   }
 
@@ -570,8 +566,7 @@ object Ann {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val q = Tables.embeddings(s, dir).where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     spillSearchWith(e, q, 10, cents, SpillTau)
   }
 
@@ -648,8 +643,7 @@ object Ann {
     val q = Tables.embeddings(s, dir).where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val nq = q.count()
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     val exact = Knn.topK(e, q, 10, Knn.Metric.Cosine)
       .select(col("qid"), col("nn_id")).localCheckpoint(true)
     val legs = Seq(
@@ -689,19 +683,23 @@ object Ann {
   }
 
   /** IVF leg for callers that bring their OWN query frame (e.g. the
-    * request-routing batch API, [[SearchApi]]): same cached centroids
-    * and probe plan as [[ivfQuery]], so a routed request returns
-    * exactly what a direct `ann_ivf` call would.
+    * request-routing batch API, [[SearchApi]]): same cached centroids,
+    * probed cells and ranking as [[ivfQuery]], so a routed request
+    * returns exactly what a direct `ann_ivf` call would. The probe is
+    * request-sized, so it runs as the descent's IVF-cell entry: the
+    * batch is collected (no job for a `LocalRelation`), the members of
+    * each query's probed cells are scored in ONE narrow job over the
+    * plain corpus scan, and the rank-k cut runs on the driver
+    * ([[Descent.pooled]]: a repeated qid pools its requests in one heap,
+    * as the relational `groupBy(qid)` did). The answer is a
+    * `LocalRelation`; a NULL qid returns nothing.
     *
     * @param queries (qid, qvec)
     */
   def ivfSearchCached(s: SparkSession, dir: String, queries: DataFrame,
                       k: Int, nprobe: Int = 2): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
-    ivfSearchWith(e, queries, k, nprobe, cents)
+    val (d, scored) = nswStart(s, dir, queries, Nil, new DescentStats, nprobe)
+    d.pooled(scored, k)
   }
 
   /** CORPUS-WIDE kNN GRAPH — every vector's k nearest neighbors
@@ -745,8 +743,7 @@ object Ann {
                                nprobe: Int): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     val assigned = assignTo(e, cents)
     val probes = Tables.embeddings(s, dir)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
@@ -781,8 +778,7 @@ object Ann {
                       k: Int, maxNprobe: Int = 4): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     val assigned = assignTo(e, cents)
     val probes = reqs.select(col("qid"), col("qvec"),
         least(greatest(col("nprobe").cast("int"), lit(1)),
@@ -1738,12 +1734,13 @@ object Ann {
 
   /** Collect the batch (qid, qvec, cells, `extra`…) with each query's
     * `nprobe` nearest IVF cells, and score the members of those cells
-    * in one job. Returns the descent and each query's entry set.
+    * in one job. Returns the descent and the scored entry rows
+    * (query index, id, s).
     */
   private def nswStart(s: SparkSession, dir: String, queries: DataFrame,
                        extra: Seq[org.apache.spark.sql.Column],
                        stats: DescentStats, nprobe: Int = 2)
-      : (Descent, Array[Seq[Long]]) = {
+      : (Descent, Array[org.apache.spark.sql.Row]) = {
     val cents = cachedCentroids(s, dir)
     val d = new Descent(corpusOf(s, dir), queries.select(Seq(col("qid"),
       col("qvec"), centroidTopM(col("qvec"), cents, nprobe).getField("cell")) ++
@@ -1760,7 +1757,8 @@ object Ann {
   private[graft] def nswEntry(s: SparkSession, dir: String,
                               queries: DataFrame,
                               nprobe: Int = 2): DataFrame = {
-    val (d, entry) = nswStart(s, dir, queries, Nil, new DescentStats, nprobe)
+    val (d, scored) = nswStart(s, dir, queries, Nil, new DescentStats, nprobe)
+    val entry = d.idsByQuery(scored)
     d.frame(Seq(StructField("id", LongType, nullable = false)))(
       entry(_).iterator.map(Seq(_)))
   }
@@ -1772,7 +1770,8 @@ object Ann {
                       beam: Int, rounds: Int, graphK: Int,
                       stats: DescentStats,
                       budget: Option[org.apache.spark.sql.Column] = None): Descent = {
-    val (d, entry) = nswStart(s, dir, queries, budget.toSeq, stats)
+    val (d, scored) = nswStart(s, dir, queries, budget.toSeq, stats)
+    val entry = d.idsByQuery(scored)
     d.enter(entry(_), beam)
     d.descend(nswEdges(s, dir, graphK), beam, rounds,
       if (budget.isEmpty) _ => rounds else d.rows(_).getInt(3))
@@ -1925,8 +1924,7 @@ object Ann {
       import org.apache.spark.sql.expressions.Window
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val cents = centCache.computeIfAbsent((dir, 200L),
-        _ => collectCentroids(kmeansCentroids(e, 200)))
+      val cents = cachedCentroids(s, dir)
       val nprobeL = math.min(2 * math.pow(8, layer).toInt, cents.length)
       val nodes = e.where(hnswLevel(col("id")) >= layer)
       val probes = nodes.select(col("id").as("qid"), col("vec").as("qv"),
@@ -2385,9 +2383,7 @@ object Ann {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("label").cast("long").as("label"),
         col("embedding").as("vec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(
-        e.select(col("id"), col("vec")), 200)))
+    val cents = cachedCentroids(s, dir)
     val centsDf = cents.toSeq.toDF("cell", "cvec")
     val base = assignTo(e, cents)
       .join(broadcast(centsDf), "cell")
@@ -2426,8 +2422,7 @@ object Ann {
     import s.implicits._
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     val centsDf = cents.toSeq.toDF("cell", "cvec")
     val mem = assignTo(e, cents)
       .join(broadcast(centsDf), "cell")
@@ -3177,8 +3172,7 @@ object Ann {
   def embedDriftPsi(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     val cells = assignTo(e, cents)
       .select(col("cell"), (col("id") % 2 === 0).as("ha"))
       .groupBy("cell")
@@ -3225,8 +3219,7 @@ object Ann {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val q = Tables.embeddings(s, dir).where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     val exact = Knn.topK(e, q, k, Knn.Metric.Cosine)
       .select(col("qid"), col("nn_id"))
     val legs = nprobes.map { np =>
@@ -3268,8 +3261,7 @@ object Ann {
     val q = Tables.embeddings(s, dir).where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val nq = q.count()
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     val csize = broadcast(assignTo(e, cents)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("csz")))
@@ -3351,8 +3343,7 @@ object Ann {
     val q = Tables.embeddings(s, dir).where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val nq = q.count()
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     val kmax = ks.max
     val approx = ivfSearchWith(e, q, kmax, 2, cents)
       .select(col("qid"), col("rk"), col("nn_id"))
@@ -3509,8 +3500,7 @@ object Ann {
     import s.implicits._
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = centCache.computeIfAbsent((dir, 200L),
-      _ => collectCentroids(kmeansCentroids(e, 200)))
+    val cents = cachedCentroids(s, dir)
     val centsDf = cents.toSeq.toDF("cell", "cvec")
     val base = assignTo(e, cents)
       .join(broadcast(centsDf), "cell")

@@ -97,15 +97,19 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
       .sorted(beamOrder).take(width).map(_._1)
 
   /** IVF-cell entry: score every member of each query's probed cells
-    * in one job over the cell-assigned corpus; returns each query's
-    * members.
+    * in one job over the cell-assigned corpus. Returns the scored rows
+    * (query index, id, s), s NULL where the kernel gives none, in the
+    * order the job returned them.
     */
   def scoreCells(cells: Int => Seq[Long],
-                 cents: Array[(Long, Array[Float])]): Array[Seq[Long]] = {
-    val members = Array.fill(rows.length)(mutable.ArrayBuffer.empty[Long])
+                 cents: Array[(Long, Array[Float])]): Array[Row] =
     scoreJob(Ann.assignTo(corpus, cents), "cell", for (q <- all; c <- cells(q)) yield c -> q)
-      .foreach(r => members(r.getInt(0)) += r.getLong(1))
-    members.map(_.toSeq)
+
+  /** Each query's ids among scored rows (query index, id, s). */
+  def idsByQuery(scored: Array[Row]): Array[Seq[Long]] = {
+    val ids = Array.fill(rows.length)(mutable.ArrayBuffer.empty[Long])
+    scored.foreach(r => ids(r.getInt(0)) += r.getLong(1))
+    ids.map(_.toSeq)
   }
 
   /** Seed each query's beam with the `width` best of `ids(q)`. */
@@ -193,11 +197,7 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
     * its rows in (qid, rk) order under Spark's ordering of the qid
     * type, so no sort job runs.
     */
-  def ranked(k: Int, tail: Tail*): DataFrame = {
-    val qidOrder = TypeUtils.getInterpretedOrdering(reqs.schema("qid").dataType)
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(
-      reqs.schema("qid").dataType)
-    val byQid = all.sortBy(q => toCatalyst(rows(q).get(0)))(qidOrder)
+  def ranked(k: Int, tail: Tail*): DataFrame =
     frame(Seq(StructField("rk", IntegerType, nullable = false),
         StructField("nn_id", LongType, nullable = false),
         StructField("s", DoubleType, nullable = false)) ++ tail.map(_._1), byQid) { q =>
@@ -205,6 +205,36 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
         Seq[Any](i + 1, id, scores(q)(id).get) ++ tail.map(_._2(q)) }
     }.select(Seq(col("qid"), col("rk"), col("nn_id"), round(col("s"), 4).as("score")) ++
       tail.map(t => col(t._1.name)): _*)
+
+  /** The rank-k cut of scored rows (query index, id, s) POOLED PER QID,
+    * as a `groupBy(qid)` with [[TopKAgg]] ranks them: one [[TopKHeap]]
+    * per qid keyed (−s, id), fed in row order, so ties, duplicate ids
+    * and repeated-qid requests rank as that aggregate ranks them. NULL
+    * scores drop. Returns (qid, rk, nn_id, score 4dp) in (qid, rk)
+    * order; nn_id and score are declared nullable, as the aggregate's
+    * output declares them.
+    */
+  def pooled(scored: Array[Row], k: Int): DataFrame = {
+    val heaps = mutable.HashMap.empty[Any, TopKHeap]
+    for (r <- scored if !r.isNullAt(2))
+      heaps.getOrElseUpdate(rows(r.getInt(0)).get(0), new TopKHeap(k))
+        .insert(-r.getDouble(2), r.getLong(1))
+    frame(Seq(StructField("rk", IntegerType, nullable = false),
+        StructField("nn_id", LongType, nullable = true),
+        StructField("s", DoubleType, nullable = true)),
+      byQid.filter(q => heaps.contains(rows(q).get(0))).distinctBy(rows(_).get(0))) { q =>
+      heaps(rows(q).get(0)).sorted.iterator.zipWithIndex.map { case (c, i) =>
+        Seq[Any](i + 1, c.id, -c.key) }
+    }.select(col("qid"), col("rk"), col("nn_id"), round(col("s"), 4).as("score"))
+  }
+
+  /** Query indices in the order of their qids under Spark's ordering of
+    * the qid type (stable, so a repeated qid keeps batch order).
+    */
+  private lazy val byQid: Seq[Int] = {
+    val qidType = reqs.schema("qid").dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(qidType)
+    all.sortBy(q => toCatalyst(rows(q).get(0)))(TypeUtils.getInterpretedOrdering(qidType))
   }
 }
 

@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's `/search` REQUEST BATCH as one relational plan —
   * the missing piece of the API mapping: a reference client posts
@@ -99,98 +102,125 @@ object SearchApi {
 
   /** Per-request INDEX ROUTING — the reference's request payload
     * carries `indexType` choosing FLAT (exact) vs HNSW (approximate)
-    * per request (http_server.cc:67-77, getIndexTypeFromRequest);
-    * here FLAT requests take the exact scoring leg above and
-    * approximate requests take the IVF probe leg
-    * ([[graft.operators.Ann.ivfSearchCached]] — same cached
-    * centroids as a direct `ann_ivf` call, so routing never changes
-    * a request's answer vs querying the index directly). The two
-    * legs are independent plans unioned at the end: the FLAT leg
-    * pays one corpus pass for its sub-batch, the IVF leg only reads
-    * probed cells — a batch of all-approximate requests never scans
-    * the full corpus.
+    * per request (http_server.cc:67-77, getIndexTypeFromRequest) and
+    * answers each request in process. FLAT requests take the exact leg
+    * above; HNSW, HNSW_HIER and any other type take the graph descent
+    * ([[graft.operators.Ann.nswSearch]]), the layered hierarchy
+    * ([[graft.operators.Ann.hnswSearch]]) or the IVF probe
+    * ([[graft.operators.Ann.ivfSearchCached]]), each over the same
+    * cached structures as a direct call, so routing never changes an
+    * answer.
+    *
+    * ROUTE ON THE DRIVER, BUILD ONLY THE LEGS THE BATCH USES: the batch
+    * is collected once (no job for a `LocalRelation`) and split into
+    * `LocalRelation` sub-batches; a leg with no requests is never built
+    * (an all-FLAT batch builds no kNN graph, an all-approximate batch
+    * scans no whole corpus; SearchApiSpec pins both). `k ≤ maxK` is
+    * checked over the WHOLE batch, since a leg's k = maxK heap would
+    * silently truncate a larger k. A NULL index_type reaches no leg
+    * (IVF still counts as present, so the answer keeps that leg's
+    * schema); a NULL k or qid returns nothing.
+    *
+    * The approximate legs run all their jobs while built, concurrently
+    * (`Par.seq`; their shared kNN graph is warmed first): for 8
+    * requests over warm memos, IVF one scoring job, HNSW 7 and
+    * HNSW_HIER 11 (entry scoring, two narrow jobs per beam round) in
+    * the traced ann_search benchmark. Each returns a `LocalRelation`;
+    * the per-request `rk ≤ k` cut and the (qid, rk) order are driver
+    * code, so an approximate-only answer is one `LocalRelation` whose
+    * action runs no job. Only FLAT requests add a lazy leg, unioned
+    * and ordered.
     *
     * @param reqs (qid, qvec, index_type
     *             'FLAT'|'HNSW'|'HNSW_HIER'|'IVF', k, metric, fop,
     *             fval) — metric/filter apply to the FLAT leg (the
     *             reference's filter index lives on the exact path);
-    *             HNSW requests take the graph beam-search leg
-    *             ([[graft.operators.Ann.nswSearch]], the hnswlib
-    *             analog), HNSW_HIER the true layered descent
-    *             ([[graft.operators.Ann.hnswSearch]]), any other
-    *             approximate tag the IVF leg; all approximate legs
-    *             score cosine, unfiltered
+    *             all approximate legs score cosine, unfiltered
     */
   def searchRouted(s: SparkSession, dir: String, data: DataFrame,
                    reqs: DataFrame, maxK: Int): DataFrame = {
-    def perK(leg: DataFrame, sub: DataFrame): DataFrame =
-      leg.join(broadcast(sub.select(col("qid"), col("k"))), "qid")
-        .where(col("rk") <= col("k"))
-        .select(col("qid"), col("rk"), col("nn_id"), col("score"))
-    // ROUTE FIRST, BUILD ONLY THE LEGS THE BATCH USES: the present
-    // index types come from one request-sized job, and a leg with no
-    // requests is never constructed — an all-FLAT batch must not pay
-    // the kNN-graph materialization the NSW leg triggers (nor carry
-    // its scans in the plan), and an all-approximate batch contains
-    // no exact-leg corpus pass (SearchApiSpec pins both). The same
-    // job carries max(k) so the k ≤ maxK loud-failure contract runs
-    // over the WHOLE batch (r13, ADVICE r12: searchRequests only
-    // validated its FLAT sub-batch, so an approximate request with
-    // k > maxK was silently truncated by the k=maxK legs).
-    val tk = reqs.agg(
-        collect_set(when(col("index_type") === "FLAT", "FLAT")
-          .when(col("index_type") === "HNSW", "HNSW")
-          .when(col("index_type") === "HNSW_HIER", "HIER")
-          .otherwise("IVF")).as("ts"),
-        max(col("k").cast("long")).as("kmax"))
-      .collect().head
-    val types = tk.getSeq[String](0).toSet
-    if (!tk.isNullAt(1))
-      require(maxK >= tk.getLong(1),
-        s"maxK=$maxK is smaller than the batch's largest request " +
-          s"k=${tk.getLong(1)}")
-    if (types.isEmpty) {
+    val t = col("index_type")
+    val batch = new Routed(reqs, maxK, when(t === "FLAT", "FLAT")
+      .when(t === "HNSW", "HNSW").when(t === "HNSW_HIER", "HIER")
+      .when(t.isNotNull, "IVF"), nullLeg = "IVF")
+    if (batch.legs.isEmpty) {
       import s.implicits._
       return Seq.empty[(Long, Int, Long, Double)]
         .toDF("qid", "rk", "nn_id", "score")
     }
-    // CONCURRENT LEG CONSTRUCTION (r16, guide §2.6): the graph legs'
-    // beam descents run their jobs during CONSTRUCTION — the entry
-    // scoring and two narrow jobs per round (Ann's Descent), 11 build
-    // jobs per 8-request HNSW batch and 15 per HNSW_HIER batch in the
-    // traced ann_search benchmark (45 and 65 with the relational
-    // loops) — so building the legs one after another serialized tiny
-    // jobs on an idle scheduler. The legs are independent plans over
-    // disjoint sub-batches — build them from a thread pool and union
-    // in the original order (result-identical; only the eager build's
-    // wall-clock changes). The one expensive memo two legs share (the
-    // kNN graph) is warmed before the fork so the ByproductCache race
-    // can never double-build it.
-    if (types("HNSW") && types("HIER"))
-      graft.operators.Ann.nswEdges(s, dir, graphK = 8)
-    val legThunks = Seq.newBuilder[() => DataFrame]
-    if (types("FLAT"))
-      legThunks += (() => searchRequests(data,
-        reqs.where(col("index_type") === "FLAT"), maxK)
-        .select(col("qid"), col("rk"), col("nn_id"), col("score")))
-    if (types("HNSW")) {
-      val hnswReqs = reqs.where(col("index_type") === "HNSW")
-      legThunks += (() => perK(graft.operators.Ann.nswSearch(s, dir,
-        hnswReqs.select(col("qid"), col("qvec")), k = maxK), hnswReqs))
+    if (batch.legs("HNSW") && batch.legs("HIER"))
+      Ann.nswEdges(s, dir, graphK = 8)
+    val approx: Seq[(String, () => DataFrame)] = Seq(
+      "HNSW" -> (() => Ann.nswSearch(s, dir, batch.sub("HNSW", "qid", "qvec"), k = maxK)),
+      "HIER" -> (() => Ann.hnswSearch(s, dir, batch.sub("HIER", "qid", "qvec"), k = maxK)),
+      "IVF" -> (() => Ann.ivfSearchCached(s, dir, batch.sub("IVF", "qid", "qvec"), maxK)))
+    batch.answer(approx, searchRequests(data, batch.sub("FLAT"), maxK)
+      .select(col("qid"), col("rk"), col("nn_id"), col("score")))
+  }
+
+  /** A request batch collected once (at most [[MaxBatchRequests]] rows)
+    * and split on the driver by `leg`, a Spark expression over the
+    * request (NULL: the request reaches no leg, but `nullLeg` counts
+    * as present).
+    */
+  private final class Routed(reqs: DataFrame, maxK: Int, leg: Column,
+                             nullLeg: String) {
+    private val n = reqs.schema.length
+    private val rows = graft.Cut.request(
+      reqs.select(col("*"), leg.as("_leg"), col("k").cast("long").as("_k")),
+      MaxBatchRequests, "SearchApi.MaxBatchRequests")
+    rows.filterNot(_.isNullAt(n + 1)).map(_.getLong(n + 1)).maxOption.foreach {
+      kMax => require(maxK >= kMax,
+        s"maxK=$maxK is smaller than the batch's largest request k=$kMax")
     }
-    if (types("HIER")) {
-      val hierReqs = reqs.where(col("index_type") === "HNSW_HIER")
-      legThunks += (() => perK(graft.operators.Ann.hnswSearch(s, dir,
-        hierReqs.select(col("qid"), col("qvec")), k = maxK), hierReqs))
+    private def legOf(r: Row): String = if (r.isNullAt(n)) null else r.getString(n)
+    val legs: Set[String] = rows.map(r => Option(legOf(r)).getOrElse(nullLeg)).toSet
+    private def of(l: String): Array[Row] = rows.filter(legOf(_) == l)
+
+    /** Leg `l`'s requests as a `LocalRelation` of `reqs`' columns (all
+      * of them when `cols` is empty), in batch order.
+      */
+    def sub(l: String, cols: String*): DataFrame = {
+      val keep = if (cols.isEmpty) reqs.columns.toSeq else cols
+      val at = keep.map(reqs.schema.fieldIndex)
+      reqs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(of(l).map(r => Row.fromSeq(at.map(r.get))): _*),
+        StructType(at.map(reqs.schema(_))))
     }
-    if (types("IVF")) {
-      val ivfReqs = reqs.where(col("index_type") =!= "FLAT" &&
-        col("index_type") =!= "HNSW" && col("index_type") =!= "HNSW_HIER")
-      legThunks += (() => perK(graft.operators.Ann.ivfSearchCached(s, dir,
-        ivfReqs.select(col("qid"), col("qvec")), maxK), ivfReqs))
+
+    /** The answer: each present approximate leg in `approx` is built
+      * (concurrently) and cut to its requests' k on the driver; `flat`
+      * is unioned in only when FLAT is present.
+      */
+    def answer(approx: Seq[(String, () => DataFrame)], flat: => DataFrame): DataFrame = {
+      val built = graft.Par.seq(approx.filter(a => legs(a._1)).map { case (l, build) =>
+        () => (l, build()) })
+      val local = if (built.isEmpty) None else {
+        val qidType = reqs.schema("qid").dataType
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(qidType)
+        val order = Ordering.Tuple2(TypeUtils.getInterpretedOrdering(qidType), Ordering.Int)
+        val out = built.flatMap { case (l, df) => cut(of(l), df.collect()) }
+          .sortBy(r => (toCatalyst(r.get(0)), r.getInt(1)))(order)
+        val schema = built.map(_._2.schema).reduce((a, b) => StructType(a.zip(b).map {
+          case (x, y) => x.copy(nullable = x.nullable || y.nullable) }))
+        Some(reqs.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema))
+      }
+      if (!legs("FLAT")) local.get
+      else (flat +: local.toSeq).reduce(_ unionByName _).orderBy("qid", "rk")
     }
-    graft.Par.seq(legThunks.result())
-      .reduce(_ unionByName _).orderBy("qid", "rk")
+
+    /** Each request's `rk ≤ k` prefix of the leg rows of its qid: a row
+      * comes back once per request of its qid, as an equi-join on qid
+      * returns it; a NULL k or qid matches nothing.
+      */
+    private def cut(requests: Array[Row], out: Array[Row]): Seq[Row] = {
+      val byQid = out.toSeq.groupBy(_.get(0))
+      val qidAt = reqs.schema.fieldIndex("qid")
+      for {
+        r <- requests.toSeq if !r.isNullAt(n + 1)
+        o <- byQid.getOrElse(r.get(qidAt), Nil) if o.getInt(1) <= r.getLong(n + 1)
+      } yield o
+    }
   }
 
   /** Routed surface query: even qids go FLAT (metric L2/IP, one `=`
@@ -214,11 +244,6 @@ object SearchApi {
           .when(col("vec_id") === 2, "!=")
           .otherwise(lit(null).cast("string")).as("fop"),
         lit(5L).as("fval"))
-      // CHECKPOINTED (r16): the 8-row request batch is referenced by
-      // the type-routing collect, every leg's sub-batch filter and
-      // every perK join — lazy, each reference re-scanned embeddings
-      // (7 scans in the final plan alone)
-      .localCheckpoint(true)
     searchRouted(s, dir, data, reqs, maxK = 10)
   }
 
@@ -276,48 +301,28 @@ object SearchApi {
     * the beam descent's round budget
     * ([[graft.operators.Ann.nswSearchEf]]). One plan, heterogeneous
     * effort: the HNSW sub-batch runs a single gated loop at the
-    * batch's max budget, never a job per effort class.
+    * batch's max budget, never a job per effort class. Routed and
+    * answered as [[searchRouted]] is; any index type but FLAT takes the
+    * HNSW leg, a NULL one no leg.
     *
     * @param reqs (qid, qvec, index_type 'FLAT'|'HNSW', k, metric,
     *             fop, fval, ef) — ef read only on the HNSW leg
     */
   def searchRoutedEf(s: SparkSession, dir: String, data: DataFrame,
                      reqs: DataFrame, maxK: Int): DataFrame = {
-    // Present legs + whole-batch max(k) in one request-sized job: the
-    // k ≤ maxK loud-failure contract covers the HNSW sub-batch too
-    // (r13, ADVICE r12 — nswSearchEf(k=maxK) + the rk ≤ k filter
-    // would otherwise silently truncate an HNSW request's k > maxK).
-    val tk = reqs.agg(
-        collect_set(when(col("index_type") === "FLAT", "FLAT")
-          .otherwise("HNSW")).as("ts"),
-        max(col("k").cast("long")).as("kmax"))
-      .collect().head
-    val types = tk.getSeq[String](0).toSet
-    if (!tk.isNullAt(1))
-      require(maxK >= tk.getLong(1),
-        s"maxK=$maxK is smaller than the batch's largest request " +
-          s"k=${tk.getLong(1)}")
-    if (types.isEmpty) {
+    val t = col("index_type")
+    val batch = new Routed(reqs, maxK,
+      when(t === "FLAT", "FLAT").when(t.isNotNull, "HNSW"), nullLeg = "HNSW")
+    if (batch.legs.isEmpty) {
       import s.implicits._
       return Seq.empty[(Long, Int, Long, Double, Long)]
         .toDF("qid", "rk", "nn_id", "score", "rounds_used")
     }
-    val legs = Seq.newBuilder[DataFrame]
-    if (types("FLAT"))
-      legs += searchRequests(data,
-        reqs.where(col("index_type") === "FLAT"), maxK)
+    batch.answer(Seq("HNSW" -> (() =>
+        Ann.nswSearchEf(s, dir, batch.sub("HNSW", "qid", "qvec", "ef"), k = maxK))),
+      searchRequests(data, batch.sub("FLAT"), maxK)
         .select(col("qid"), col("rk"), col("nn_id"), col("score"),
-          lit(0L).as("rounds_used"))
-    if (types("HNSW")) {
-      val h = reqs.where(col("index_type") =!= "FLAT")
-      legs += Ann.nswSearchEf(s, dir,
-          h.select(col("qid"), col("qvec"), col("ef")), k = maxK)
-        .join(broadcast(h.select(col("qid"), col("k"))), "qid")
-        .where(col("rk") <= col("k"))
-        .select(col("qid"), col("rk"), col("nn_id"), col("score"),
-          col("rounds_used"))
-    }
-    legs.result().reduce(_ unionByName _).orderBy("qid", "rk")
+          lit(0L).as("rounds_used")))
   }
 
   /** Heterogeneous-ef routed surface query: even qids FLAT (the
@@ -339,8 +344,6 @@ object SearchApi {
           .otherwise(lit(null).cast("string")).as("fop"),
         lit(5L).as("fval"),
         when(col("vec_id") % 4 === 1, 16L).otherwise(48L).as("ef"))
-      // CHECKPOINTED (r16): same rationale as searchRoutedQuery
-      .localCheckpoint(true)
     searchRoutedEf(s, dir, data, reqs, maxK = 10)
   }
 

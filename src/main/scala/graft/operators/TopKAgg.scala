@@ -24,19 +24,25 @@ case class TopKResult(items: Seq[ScoredId])
   * of it garbage — measurable GC pressure when the scored stream is
   * |corpus|×|queries| rows.
   *
-  * Total order (key ASC, id ASC): no ties, so the retained set is
-  * unique regardless of arrival or merge order (PropertySpec pins
-  * this distribution-invariance without Spark).
+  * Total order (key ASC, id ASC), keys compared as Spark compares
+  * doubles (-0.0 equals 0.0, NaN is greater than every number and
+  * equal to NaN): no ties, so the retained set is unique regardless of
+  * arrival or merge order (PropertySpec pins this
+  * distribution-invariance without Spark, NaN keys included).
   */
 final class TopKHeap(val k: Int) extends Serializable {
   val keys: Array[Double] = new Array[Double](k)
   val ids: Array[Long] = new Array[Long](k)
   var size: Int = 0
 
-  // strictly worse = greater (key, id)
+  // strictly worse = greater (key, id); the last branch is reached only
+  // when a key is NaN
   @inline private def worse(k1: Double, i1: Long,
                             k2: Double, i2: Long): Boolean =
-    k1 > k2 || (k1 == k2 && i1 > i2)
+    if (k1 > k2) true
+    else if (k1 < k2) false
+    else if (k1 == k2) i1 > i2
+    else k1.isNaN && (!k2.isNaN || i1 > i2)
 
   def insert(key: Double, id: Long): Unit = {
     if (size < k) {

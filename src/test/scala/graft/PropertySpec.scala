@@ -11,17 +11,22 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PropertySpec extends AnyFunSuite {
 
-  private def cases(seed: Long, n: Int): Seq[List[ScoredId]] = {
+  private def cases(seed: Long, n: Int, nanShare: Double = 0): Seq[List[ScoredId]] = {
     val rnd = new scala.util.Random(seed)
     (1 to n).map { _ =>
-      List.fill(rnd.nextInt(300))(
-        ScoredId(rnd.nextInt(2000) - 1000.0, rnd.nextInt(1000).toLong))
+      List.fill(rnd.nextInt(300))(ScoredId(
+        if (nanShare > 0 && rnd.nextDouble() < nanShare) Double.NaN
+        else rnd.nextInt(2000) - 1000.0, rnd.nextInt(1000).toLong))
     }
   }
 
+  /** Comparable form: NaN equals NaN. */
+  private def bits(xs: Seq[ScoredId]): Seq[(Long, Long)] =
+    xs.map(s => (java.lang.Double.doubleToLongBits(s.key), s.id))
+
   test("TopKAgg: any chunking + merge order equals global sort-take") {
     val agg = new TopKAgg(5)
-    for (xs <- cases(seed = 42, n = 60)) {
+    for (xs <- cases(seed = 42, n = 60) ++ cases(seed = 43, n = 60, nanShare = 0.3)) {
       val rnd = new scala.util.Random(xs.length)
       val nChunks = rnd.nextInt(6) + 1
       val chunks = xs.grouped(math.max(1, xs.length / nChunks)).toList
@@ -30,7 +35,7 @@ class PropertySpec extends AnyFunSuite {
       val merged = partials.foldLeft(agg.zero)(agg.merge)
       val got = agg.finish(merged).items.toList
       val expect = xs.sortBy(s => (s.key, s.id)).take(5)
-      assert(got == expect)
+      assert(bits(got) == bits(expect))
     }
   }
 

@@ -1,8 +1,7 @@
 package graft
 
 import graft.functions.VectorDistance
-import graft.operators.{Knn, SearchApi, TopKAgg}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.operators.{Ann, Knn, SearchApi, TopKAgg}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -317,30 +316,51 @@ class SearchApiSpec extends SparkSuite {
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
         lit(10L).as("k"), lit("L2").as("metric"), lit("!=").as("fop"),
         lit(5L).as("fval"))
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).foreach(jobs.add)
+    val (n, batchJobs, _) = JobWatch.observe(spark)(
+      SearchApi.searchRequests(corpus, reqs, 10).collect().length)
+    assert(n == 60)
+    assert(batchJobs >= 1 && batchJobs <= 3, s"$batchJobs jobs for one batch")
+  }
+
+  private lazy val vecs01 = Tables.table(spark, sf01, "embeddings").orderBy("vec_id").collect()
+
+  /** Eight jittered sf0.01 vectors as a `LocalRelation` routed batch,
+    * every request on leg `t` (HNSW_EF: HNSW at ef 16 or 48, through
+    * `searchRoutedEf`), and its answer.
+    */
+  private def routed(t: String): (DataFrame, () => DataFrame) = {
+    val list = new java.util.ArrayList[Row]()
+    (0 until 8).foreach { i =>
+      val r = new scala.util.Random(i)
+      list.add(Row(i.toLong, vecs01(i * 53 + 11).getSeq[Float](1)
+        .map(x => x + (r.nextGaussian() * 0.4).toFloat), t.stripSuffix("_EF"), 10L, "L2",
+        null, 0L, if (i % 2 == 0) 16L else 48L))
     }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup("searchapi-batch", "one batch, build and action")
-      val n = try SearchApi.searchRequests(corpus, reqs, 10).collect().length
-        finally sc.clearJobGroup()
-      assert(n == 60)
-      // listener delivery is async and in order: once a later marker
-      // job's start arrives, every job of the batch has been seen
-      sc.setJobGroup("searchapi-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      while (!jobs.contains("searchapi-marker") && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(jobs.contains("searchapi-marker"), "marker job never observed")
-      val batchJobs = jobs.toArray.count(_ == "searchapi-batch")
-      assert(batchJobs >= 1 && batchJobs <= 3, s"$batchJobs jobs for one batch")
-    } finally sc.removeSparkListener(l)
+    val b = spark.createDataFrame(list, StructType(batchSchema.fields.patch(2,
+      Seq(StructField("index_type", StringType)), 0) :+ StructField("ef", LongType)))
+    val d = Tables.embeddings(spark, sf01)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"), col("label"))
+    (b, () => if (t == "HNSW_EF") SearchApi.searchRoutedEf(spark, sf01, d, b, 10)
+      else SearchApi.searchRouted(spark, sf01, d, b, 10))
+  }
+
+  test("routed batches: an IVF batch runs one job, an HNSW batch no more " +
+    "than a direct nswSearch, and an approximate answer's action none") {
+    val legs = Seq("IVF", "HNSW", "HNSW_HIER", "HNSW_EF")
+    legs.foreach(routed(_)._2().collect())
+    val (_, ivf) = routed("IVF")
+    val (_, ivfJobs, _) = JobWatch.observe(spark)(ivf().collect())
+    assert(ivfJobs <= 1, s"all-IVF batch ran $ivfJobs jobs")
+    val (hnswBatch, hnsw) = routed("HNSW")
+    val (_, hnswJobs, _) = JobWatch.observe(spark)(hnsw().collect())
+    val (_, direct, _) = JobWatch.observe(spark)(Ann.nswSearch(spark, sf01,
+      hnswBatch.select("qid", "qvec"), k = 10).collect())
+    assert(hnswJobs <= direct, s"all-HNSW batch ran $hnswJobs jobs, nswSearch $direct")
+    legs.foreach { t =>
+      val answer = routed(t)._2()
+      val (_, action, _) = JobWatch.observe(spark)(answer.collect())
+      assert(action == 0, s"$t answer's action ran $action jobs")
+    }
   }
 
   test("a batch above MaxBatchRequests fails loudly, naming the limit") {

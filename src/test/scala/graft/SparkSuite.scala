@@ -9,4 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
   val sf = "/root/testdata/sf0.001"
+  /** The next scale factor, beside [[sf]]. */
+  val sf01: String = sf.stripSuffix("0.001") + "0.01"
 }
