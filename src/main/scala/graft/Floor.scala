@@ -1,35 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Substrate-floor profiler (r15, VERDICT r14 #1): decomposes the
   * per-query cost that BENCH_r14 showed dominating the suite (324
   * cheapest queries = 279.5s of 410.8s, 0.863 s/q mean). Times each
   * probe N times in one session and prints per-rep seconds, so the
   * shared substrate (scan, spread shuffle, AQE rounds, noop-sink job
-  * launch, plan analysis) separates from operator work. Diagnostic
-  * main, not part of the driver contract.
+  * launch, plan analysis) separates from operator work. Runs under
+  * the session defaults (`GraftSession`). Diagnostic main, not part
+  * of the driver contract.
   */
 object Floor {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // A/B knobs for the floor experiments — Floor only, never the
-    // driver surfaces
-    var b = GraftSession.builder(cpus)
-    sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
-      b = b.config("spark.sql.adaptive.enabled", v))
-    sys.env.get("SPARK_GRAFT_SHUFFLE").foreach(v =>
-      b = b.config("spark.sql.shuffle.partitions", v))
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      _.split(";;").filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => b = b.config(k, v)
-          case _ => sys.error(s"bad SPARK_GRAFT_CONF entry: '$kv' (want key=value)")
-        }
-      })
-    val spark = b.getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val reps = sys.env.getOrElse("SPARK_GRAFT_FLOOR_REPS", "4").toInt
 
@@ -48,62 +34,9 @@ object Floor {
       .getOrElse(Seq("vdb_collection_info", "q1_agg", "q6_filter_agg",
         "vdb_knn_flat_l2", "text_quality", "events_sessionize",
         "dedup_exact", "customer_rfm"))
-    def probeAll(): Unit = {
-      time("noop_empty")(spark.range(0).toDF("i"))
-      probes.foreach { n =>
-        SparkEntry.queries.get(n).foreach(fn => time(n)(fn(spark, dir)))
-      }
-    }
-    // runtime-settable config sweep in ONE JVM (same JIT state for
-    // every block — cross-block deltas are the config, not HotSpot)
-    val allSweeps: Seq[(String, Map[String, String])] = Seq(
-      "new" -> Map(),
-      "old" -> Map(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1m"),
-      "new2" -> Map(),
-      "old2" -> Map(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1m"),
-      // r16 join/scan floor candidates (guide §3.1 / §6): allow
-      // shuffled-hash where its size conditions fit, let AQE rewrite
-      // small sort-merge joins, and widen scan splits
-      "base" -> Map(),
-      "psmj" -> Map(
-        "spark.sql.join.preferSortMergeJoin" -> "false",
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m"),
-      "mpb512" -> Map(
-        "spark.sql.files.maxPartitionBytes" -> "512m"),
-      "both" -> Map(
-        "spark.sql.join.preferSortMergeJoin" -> "false",
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m",
-        "spark.sql.files.maxPartitionBytes" -> "512m"),
-      "base2" -> Map(),
-      "psmj2" -> Map(
-        "spark.sql.join.preferSortMergeJoin" -> "false",
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m"),
-      "mpb5122" -> Map(
-        "spark.sql.files.maxPartitionBytes" -> "512m"),
-      "both2" -> Map(
-        "spark.sql.join.preferSortMergeJoin" -> "false",
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m",
-        "spark.sql.files.maxPartitionBytes" -> "512m"))
-    // subset of sweep blocks by tag (e.g. SWEEPS=new for a single
-    // pass — the x64 probes cost minutes per rep, where the full
-    // 4-block A/B is for the cheap steady-state floor questions)
-    val sweeps = sys.env.get("SPARK_GRAFT_FLOOR_SWEEPS") match {
-      case Some(tags) =>
-        val keep = tags.split(",").map(_.trim).toSet
-        allSweeps.filter { case (t, _) => keep(t) }
-      case None => allSweeps
-    }
-    val defaults = sweeps.flatMap(_._2.keys).distinct
-      .map(k => k -> spark.conf.get(k)).toMap
-    sweeps.foreach { case (tag, conf) =>
-      defaults.foreach { case (k, v) => spark.conf.set(k, v) }
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      println(s"[floor] === $tag ===")
-      probeAll()
+    time("noop_empty")(spark.range(0).toDF("i"))
+    probes.foreach { n =>
+      SparkEntry.queries.get(n).foreach(fn => time(n)(fn(spark, dir)))
     }
     spark.stop()
   }

@@ -13,12 +13,11 @@ package graft
   * its leg's DataFrame, consumed in the caller's original order), only
   * the wall-clock of the eager build shrinks.
   *
-  * Shared memoized byproducts (ByproductCache frames, centCache
-  * centroids) stay correct under concurrency: centCache uses blocking
-  * computeIfAbsent, and ByproductCache tolerates a racing double-build
-  * (deterministic byproducts, first put wins). Callers that know two
-  * legs share an EXPENSIVE memo (the kNN graph) warm it once before
-  * forking, so the race never duplicates a corpus-scale build.
+  * Legs that share a memoized byproduct (the kNN graph, the IVF
+  * centroids) share ONE build: [[graft.ByproductCache]] builds each
+  * key once, and a leg asking for a key another leg is building waits
+  * for that build. A memo build must therefore never wait on a leg
+  * that asks for the build's own key.
   */
 object Par {
   def seq[T](thunks: Seq[() => T]): Seq[T] =

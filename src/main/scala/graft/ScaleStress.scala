@@ -347,8 +347,9 @@ object ScaleStress {
     try body finally s.conf.set(key, prev)
   }
 
-  /** Per-leg state release (r16): `ByproductCache.clear()` only
-    * drops the MAP — the checkpointed frames' RDD blocks stay in
+  /** Per-leg state release (r16): `ByproductCache.clear()` drops
+    * every memoized frame and trained constant, but only the
+    * REFERENCES — the checkpointed frames' RDD blocks stay in
     * the BlockManager until a driver GC enqueues them for the async
     * ContextCleaner, which on a 100-GB heap may simply never happen
     * mid-run. Measured with the ProbeOne bracket (x16 → x64 → x16,

@@ -189,7 +189,7 @@ object Ann {
 
   /** The search plan given already-trained centroids — shared by
     * [[ivfSearch]] (trains inline) and [[ivfQuery]] (trains once per
-    * (dir, stride) via [[centCache]]), so the two cannot drift.
+    * dir via [[graft.ByproductCache]]), so the two cannot drift.
     */
   private def ivfSearchWith(emb: DataFrame, queries: DataFrame, k: Int,
                             nprobe: Int,
@@ -505,29 +505,21 @@ object Ann {
 
   // --------------------------------------------------- query-map surface
 
-  /** Trained-centroid cache for the in-memory surface query. K-means
-    * training is the index BUILD step; retraining inside every search
-    * charged ~2 Lloyd corpus passes per invocation, so the bench
-    * entry priced training, not search (r4 verdict #8). One train per
-    * (dir, stride) — the same amortization the persisted-index path
-    * gets from its one-time build. Results are unchanged: training is
-    * deterministic (stride init, 6dp-rounded means), so the cached
-    * centroids equal what a fresh train would produce.
-    */
-  private val centCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Array[(Long, Array[Float])]]()
-
   /** The per-(dir, stride=200) trained centroid set, shared across
     * every operator that clusters this corpus (IVF search, spill
     * layout, SemDeDup) — one training run per dir, identical cells
     * everywhere, so cluster-blocked operators are directly
-    * comparable with the index paths.
+    * comparable with the index paths. K-means training is the index
+    * BUILD step and deterministic (stride init, 6dp-rounded means), so
+    * it is memoized in [[graft.ByproductCache]].
     */
   private[operators] def cachedCentroids(
       s: SparkSession, dir: String): Array[(Long, Array[Float])] =
-    centCache.computeIfAbsent((dir, 200L), _ => collectCentroids(kmeansCentroids(
-      Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec")), 200)))
+    graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
+      s"centroids|$dir|200") {
+      collectCentroids(kmeansCentroids(Tables.embeddings(s, dir)
+        .select(col("vec_id").as("id"), col("embedding").as("vec")), 200))
+    }
 
   def ivfQuery(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
@@ -1995,15 +1987,13 @@ object Ann {
     val e = corpusOf(s, dir)
     // the in-memory node set is fixed for the session, so its
     // enterpoint is index metadata (what hnswlib keeps in its index
-    // header): found once per dir and memoized as a LocalRelation,
-    // which later descents read with no job. The persisted variant
-    // does NOT memoize: maintenance (hnswUpsert/Delete) mutates its
-    // node set mid-session.
+    // header): found once per dir and memoized as the id itself. The
+    // persisted variant does NOT memoize: maintenance
+    // (hnswUpsert/Delete) mutates its node set mid-session.
     val ent = graft.ByproductCache.getOrCompute(
       s.sparkContext.applicationId, s"hnswent|mem|$dir") {
-      val top = hnswEnterpoint(e)
-      s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
-    }.collect().headOption.map(_.getLong(0))
+      hnswEnterpoint(e).collect().headOption.map(_.getLong(0))
+    }
     hnswWalk(e, queries, ent, l => hnswLayerEdges(s, dir, l, graphK),
       nswEdges(s, dir, graphK), beamU, beam, rounds, stats)
   }
@@ -2363,7 +2353,7 @@ object Ann {
     * per-cluster cohesion the recluster policy watches). This is the
     * topic-composition dashboard a curation pipeline reads before
     * reweighting domains, and it shares the EXACT trained centroids
-    * with the search path ([[centCache]]) so analysis and routing
+    * with the search path ([[cachedCentroids]]) so analysis and routing
     * cannot disagree.
     *
     * Plan: the zero-exchange assignment projection, a broadcast join

@@ -41,13 +41,12 @@ object BinQuant {
       .map(_._2)
 
   /** Per-dim means for the full corpus at `dir`, trained once per dir
-    * and shared by every consumer — the Pq.cbCache amortization.
+    * and shared by every consumer through [[graft.ByproductCache]].
     */
-  def cachedMeans(dir: String, emb: => DataFrame): Array[Double] =
-    muCache.computeIfAbsent(dir, _ => trainMeans(emb))
-
-  private val muCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
+  def cachedMeans(dir: String, emb: DataFrame): Array[Double] =
+    graft.ByproductCache.getOrCompute(
+      emb.sparkSession.sparkContext.applicationId,
+      s"bqmeans|$dir")(trainMeans(emb))
 
   /** Packed-code scan → Hamming shortlist of `rerank·k` per query →
     * exact float cosine rerank to k. Output shape matches

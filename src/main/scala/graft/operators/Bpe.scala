@@ -121,26 +121,10 @@ object Bpe {
     // symbol table are deterministic byproducts consumed by three
     // registry queries (bpe_learn, bpe_tokenize, and EwmaStreamSpec's
     // shared session) — training runs ONCE per session, not once per
-    // consumer (the knnGraph/ByproductCache discipline).
-    val appId = s.sparkContext.applicationId
-    val k = (appId, s"$dir|$rounds")
-    val words = graft.ByproductCache.getOrCompute(appId,
-      s"bpewords|$dir|$rounds") {
-      val (m, w) = learnUncached(s, dir, rounds)
-      mergeCache.put(k, m)
-      w
-    }
-    // merges land in mergeCache on the same compute; a purge race
-    // (new appId) would also have emptied ByproductCache, so a cached
-    // `words` implies the matching merge entry
-    (mergeCache.get(k), words)
+    // consumer.
+    graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
+      s"bpe|$dir|$rounds")(learnUncached(s, dir, rounds))
   }
-
-  /** Driver-side twin of [[graft.ByproductCache]] for the merge list
-    * (≤rounds tuples — constant-sized, the centroid-literal rule).
-    */
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[(Int, String, String, Long)]]()
 
   private def learnUncached(s: SparkSession, dir: String,
             rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) = {

@@ -33,21 +33,15 @@ object Pca {
   private val Dim = 64
   private val Iters = 3
 
-  /** Moment cache — the (S, M, n) statistics are a deterministic
-    * one-pass byproduct shared by the projection and the variance
-    * report (and paid twice per bench under the two-pass protocol);
-    * same amortization discipline as Ann's centroid cache.
-    */
-  private val momentCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Long], Array[Array[Long]], Long)]()
-
-  /** (S_j sums, M_jk Gram matrix, n) from one exact-integer pass.
-    * Shared with Pq.opqPerm (r13) — the OPQ dimension assignment
-    * derives its correlation table from the same cached statistics.
+  /** (S_j sums, M_jk Gram matrix, n) from one exact-integer pass,
+    * memoized in [[graft.ByproductCache]]: shared by the projection,
+    * the variance report and Pq.opqPerm (r13) — the OPQ dimension
+    * assignment derives its correlation table from the same statistics.
     */
   private[operators] def moments(s: SparkSession, dir: String)
       : (Array[Long], Array[Array[Long]], Long) =
-    momentCache.computeIfAbsent(dir, _ => momentsUncached(s, dir))
+    graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
+      s"pcamoments|$dir")(momentsUncached(s, dir))
 
   private def momentsUncached(s: SparkSession, dir: String)
       : (Array[Long], Array[Array[Long]], Long) = {

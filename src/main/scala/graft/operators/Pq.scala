@@ -125,18 +125,14 @@ object Pq {
                rerank: Int = 4): DataFrame =
     pqSearchWith(emb, queries, k, rerank, trainCodebook(emb))
 
-  /** Trained-codebook cache per (dir, stride) — training is the index
-    * build step, amortized exactly like Ann.centCache (r4 verdict #8).
-    */
-  private val cbCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Array[Double]]()
-
   /** Default-stride codebook for the full corpus at `dir`, trained
-    * once per (dir, stride) and shared by every consumer (pqQuery,
-    * quantErrorReport) — the Ann.centCache amortization.
+    * once per dir and shared by every consumer (pqQuery,
+    * quantErrorReport) through [[graft.ByproductCache]].
     */
-  def cachedCodebook(dir: String, emb: => DataFrame): Array[Double] =
-    cbCache.computeIfAbsent((dir, 25L), _ => trainCodebook(emb))
+  def cachedCodebook(dir: String, emb: DataFrame): Array[Double] =
+    graft.ByproductCache.getOrCompute(
+      emb.sparkSession.sparkContext.applicationId,
+      s"pqcodebook|$dir|25")(trainCodebook(emb))
 
   def pqQuery(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
@@ -407,7 +403,8 @@ object Pq {
     * documented micro-moment family caveat.)
     */
   def opqPerm(s: SparkSession, dir: String): Array[Int] =
-    opqCache.computeIfAbsent(dir, _ => {
+    graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
+      s"opqperm|$dir") {
       val (sArr, mArr, n) = Pca.moments(s, dir)
       val d = 64
       val nv = Array.tabulate(d)(j => n * mArr(j)(j) - sArr(j) * sArr(j))
@@ -428,10 +425,7 @@ object Pq {
         (seed +: buddies).foreach { j => perm(slot) = j; slot += 1 }
       }
       perm
-    })
-
-  private val opqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Int]]()
+    }
 
   /** Permutation as a scan projection: slot i reads original dim
     * perm(i) — free at any scale, exactly distance-preserving. The

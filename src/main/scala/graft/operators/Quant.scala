@@ -111,19 +111,12 @@ object Quant {
     * the per-dim mean. Training constants are driver-held (the IVF-
     * centroid pattern); all per-row work is one projection.
     */
-  /** Per-dir (mins, maxs) cache — the Pq.cbCache discipline. */
-  private val mmCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Double], Array[Double])]()
-
   def quantErrorReport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e0 = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    // Trained constants amortized per dir (r13): training is the
-    // quantizer's index-build step — one corpus pass each, cached
-    // exactly like Ann.centCache / Pq.cbCache so the report (and any
-    // other consumer in the session) pays it once, not per run.
-    val (mns, mxs) = mmCache.computeIfAbsent(dir, _ => trainMinMax(e0))
+    val (mns, mxs) = graft.ByproductCache.getOrCompute(
+      s.sparkContext.applicationId, s"sqminmax|$dir")(trainMinMax(e0))
     val mus = BinQuant.cachedMeans(dir, e0)
     val cb = Pq.cachedCodebook(dir, e0)
     val e = e0.withColumn("vd", col("vec").cast("array<double>"))

@@ -122,14 +122,14 @@ object SearchApi {
     * schema); a NULL k or qid returns nothing.
     *
     * The approximate legs run all their jobs while built, concurrently
-    * (`Par.seq`; their shared kNN graph is warmed first): for 8
-    * requests over warm memos, IVF one scoring job, HNSW 7 and
-    * HNSW_HIER 11 (entry scoring, two narrow jobs per beam round) in
-    * the traced ann_search benchmark. Each returns a `LocalRelation`;
-    * the per-request `rk ≤ k` cut and the (qid, rk) order are driver
-    * code, so an approximate-only answer is one `LocalRelation` whose
-    * action runs no job. Only FLAT requests add a lazy leg, unioned
-    * and ordered.
+    * (`Par.seq`; HNSW and HNSW_HIER share one build of the kNN graph,
+    * [[graft.ByproductCache]]): for 8 requests over warm memos, IVF
+    * one scoring job, HNSW 7 and HNSW_HIER 11 (entry scoring, two
+    * narrow jobs per beam round) in the traced ann_search benchmark.
+    * Each returns a `LocalRelation`; the per-request `rk ≤ k` cut and
+    * the (qid, rk) order are driver code, so an approximate-only
+    * answer is one `LocalRelation` whose action runs no job. Only FLAT
+    * requests add a lazy leg, unioned and ordered.
     *
     * @param reqs (qid, qvec, index_type
     *             'FLAT'|'HNSW'|'HNSW_HIER'|'IVF', k, metric, fop,
@@ -148,8 +148,6 @@ object SearchApi {
       return Seq.empty[(Long, Int, Long, Double)]
         .toDF("qid", "rk", "nn_id", "score")
     }
-    if (batch.legs("HNSW") && batch.legs("HIER"))
-      Ann.nswEdges(s, dir, graphK = 8)
     val approx: Seq[(String, () => DataFrame)] = Seq(
       "HNSW" -> (() => Ann.nswSearch(s, dir, batch.sub("HNSW", "qid", "qvec"), k = maxK)),
       "HIER" -> (() => Ann.hnswSearch(s, dir, batch.sub("HIER", "qid", "qvec"), k = maxK)),

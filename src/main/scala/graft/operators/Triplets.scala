@@ -36,10 +36,9 @@ object Triplets {
     * each mining call charged the full minhash-verify + simhash
     * pipelines (already benched as their own queries) to every
     * invocation (r5 bench: train_triplets_hard 4.4 s, ~85% upstream
-    * recompute). One localCheckpoint per (app, dir, params) — the
-    * same one-build amortization Ann.centCache gives k-means, and
+    * recompute). One localCheckpoint per (app, dir, params), and
     * results are unchanged because both pipelines are deterministic
-    * ([[graft.ByproductCache]] for the lock/lifetime discipline).
+    * ([[graft.ByproductCache]] for the reuse rule and lifetime).
     */
   private def verifiedPairs(s: SparkSession, dir: String,
                             minJaccard: Double): DataFrame =
