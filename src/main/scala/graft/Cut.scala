@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Driver collects of frames whose size the caller states: a request
   * batch, a beam round's lookups. Each collect names the constant that
@@ -11,18 +13,29 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 object Cut {
 
   /** Collect `df`, failing with a message that names `bound` when it
-    * holds more than `maxRows` rows. A frame the optimizer folds to a
-    * `LocalRelation` already sits on the driver and is read with no
-    * job. Any other frame runs as ONE job whose tasks each return at
-    * most `maxRows + 1` rows; a global `limit` would scan the
-    * partitions in growing waves, one job per wave.
+    * holds more than `maxRows` rows. The frame is analysed and
+    * optimized once: a frame the optimizer folds to a `LocalRelation`
+    * already sits on the driver and is read with no job; any other
+    * frame runs its own executed plan as ONE job, inside a SQL
+    * execution as `collect` would, whose tasks each return at most
+    * `maxRows + 1` rows. A global `limit` would scan the partitions in
+    * growing waves, one job per wave, and a `Limit` node's generated
+    * code is unique per plan, so it never reuses a compiled class.
     */
   def request(df: DataFrame, maxRows: Int, bound: String,
               what: String = "request batch"): Array[Row] = {
+    val qe = df.queryExecution
     val rows =
-      if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df.collect()
-      else df.mapPartitions((it: Iterator[Row]) => it.take(maxRows + 1))(
-        Encoders.row(df.schema)).collect()
+      if (qe.optimizedPlan.isInstanceOf[LocalRelation]) df.collect()
+      else {
+        val cap = maxRows + 1
+        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+        SQLExecution.withNewExecutionId(qe, Some("collect")) {
+          qe.executedPlan.execute()
+            .mapPartitions((it: Iterator[InternalRow]) => it.take(cap).map(_.copy()))
+            .collect()
+        }.map(toRow(_).asInstanceOf[Row])
+      }
     require(rows.length <= maxRows,
       s"$what exceeds $bound=$maxRows rows; split it into smaller calls")
     rows

@@ -27,6 +27,29 @@ object SparkEntry {
     Tables.embeddings(s, dir).where(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
 
+  /** `vdb_knn_flat_l2`, a frozen drift anchor: a timing anchor, not a
+    * product path. It keeps the form exact kNN had before it moved to
+    * `RequestTopK` — queries broadcast, cross-joined with the corpus
+    * through the fused `vec_l2` kernel, ranked by a `groupBy(qid)`
+    * [[TopKAgg]] — so its time stays comparable across changes;
+    * `Knn.topK(…, L2)` returns the same rows.
+    */
+  private def frozenFlatL2(data: DataFrame, queries: DataFrame): DataFrame = {
+    val agg = TopKAgg.topK(10)
+    data.select(col("id"), col("vec"))
+      .crossJoin(broadcast(queries.select(col("qid"), col("qvec"))))
+      .select(col("qid"),
+        graft.functions.VectorDistance.l2(col("vec"), col("qvec")).as("key"),
+        col("id"))
+      .where(col("key").isNotNull)
+      .groupBy("qid")
+      .agg(agg(col("key"), col("id")).as("top"))
+      .select(col("qid"), posexplode(col("top.items")))
+      .select(col("qid"), (col("pos") + 1).as("rk"), col("col.id").as("nn_id"),
+        round(col("col.key"), 4).as("score"))
+      .orderBy("qid", "rk")
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
@@ -35,8 +58,7 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "vdb_knn_flat_l2" -> ((s, d) =>
-      Knn.topK(emb(s, d), qset(s, d), 10, Knn.Metric.L2)),
+    "vdb_knn_flat_l2" -> ((s, d) => frozenFlatL2(emb(s, d), qset(s, d))),
     "vdb_knn_flat_ip" -> ((s, d) =>
       Knn.topK(emb(s, d), qset(s, d), 10, Knn.Metric.IP)),
     "vdb_knn_flat_l1" -> ((s, d) =>

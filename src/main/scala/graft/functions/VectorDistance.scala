@@ -57,6 +57,14 @@ private[graft] object PairNumerics {
     while (i < n) { acc += math.abs(x(i) - y(i)); i += 1 }
     acc
   }
+
+  /** max|xᵢ−yᵢ|; a NaN difference never replaces the running max. */
+  def linf(x: Array[Double], y: Array[Double], n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) { val d = math.abs(x(i) - y(i)); if (d > acc) acc = d; i += 1 }
+    acc
+  }
 }
 
 /** Native codegen'd distance kernels over `array<float|double>`.
@@ -262,18 +270,10 @@ case class VecLinf(left: Expression, right: Expression)
 
   override def nullSafeEval(av: Any, bv: Any): Any = {
     val (a, b) = (av.asInstanceOf[ArrayData], bv.asInstanceOf[ArrayData])
-    val n = a.numElements()
-    if (n != b.numElements()) null
+    if (a.numElements() != b.numElements()) null
     else {
-      val (xs, ys) = widened(a, b)
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val d = math.abs(xs(i) - ys(i))
-        if (d > acc) acc = d
-        i += 1
-      }
-      acc
+      val (x, y) = widened(a, b)
+      PairNumerics.linf(x, y, x.length)
     }
   }
 

@@ -49,8 +49,8 @@ object BinQuant {
       s"bqmeans|$dir")(trainMeans(emb))
 
   /** Packed-code scan → Hamming shortlist of `rerank·k` per query →
-    * exact float cosine rerank to k. Output shape matches
-    * [[Knn.topK]] with Metric.Cosine.
+    * exact float cosine rerank to k. Output shape, `(qid, rk, nn_id,
+    * score)`, is [[Knn.topK]]'s with Metric.Cosine.
     */
   def bqSearch(emb: DataFrame, queries: DataFrame, k: Int,
                rerank: Int = 4): DataFrame = {
@@ -75,13 +75,7 @@ object BinQuant {
         (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
         col("id"))
       .where(col("key").isNotNull)
-    val fin = TopKAgg.topK(k)
-    rescored.groupBy("qid")
-      .agg(fin(col("key"), col("id")).as("top"))
-      .select(col("qid"), posexplode(col("top.items")))
-      .select(col("qid"), (col("pos") + 1).as("rk"),
-        col("col.id").as("nn_id"), round(-col("col.key"), 4).as("score"))
-      .orderBy("qid", "rk")
+    Ann.topKPerQuery(rescored, k)
   }
 
   def bqQuery(s: SparkSession, dir: String): DataFrame = {

@@ -16,9 +16,10 @@ object Classify {
 
   /** kNN majority-vote classifier: each query's label is the
     * majority label among its k nearest labeled neighbors (cosine),
-    * ties broken toward the smaller label id. Queries broadcast, the
-    * labeled corpus streams through the TopKAgg heap exactly as in
-    * [[Knn.topK]]; the vote aggregate is (queries × k)-sized.
+    * ties broken toward the smaller label id. The neighbours are
+    * [[Knn.topK]]'s: the query set collected once, the labeled corpus
+    * streamed once through per-query heaps; the vote aggregate is
+    * (queries × k)-sized.
     *
     * @return (qid, true_label, pred_label, votes) — true_label kept
     *         so the output doubles as an eval table

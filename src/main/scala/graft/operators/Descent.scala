@@ -1,12 +1,12 @@
 package graft.operators
 
-import scala.collection.mutable
+import scala.collection.{immutable, mutable}
 
 import graft.Cut
 import graft.functions.VectorDistance
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, InSet, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.functions._
@@ -61,6 +61,16 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
     got
   }
 
+  /** `c ∈ ids` as an `InSet` over a `HashSet`, which the generated code
+    * reads as a reference of one class: an `In` of up to 10 literals
+    * (below Spark's InSet conversion threshold) is inlined, and a small
+    * Scala set's class (`Set1` … `Set4`) is named in the source, either
+    * way one new compiled class per distinct set.
+    */
+  private def among(c: String, ids: Seq[Long]): Column =
+    GraftColumnBridge.column(InSet(GraftColumnBridge.expression(col(c)),
+      immutable.HashSet.from[Any](ids)))
+
   /** Job (b): score the rows of `keyed` (id, vec, `key`) once for each
     * (key, query) pair in `wanted`; none when it is empty.
     */
@@ -68,7 +78,7 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
                        wanted: Seq[(Long, Int)]): Array[Row] = {
     if (wanted.isEmpty) return Array.empty
     val (keys, qs) = wanted.groupMap(_._1)(_._2).toSeq.unzip
-    val got = held(Cut.request(keyed.where(col(key).isin(keys: _*))
+    val got = held(Cut.request(keyed.where(among(key, keys))
         .select(col("id"), col("vec"), explode(GraftColumnBridge.column(
           Fanout(GraftColumnBridge.expression(col(key).cast("long")), keys, qs))).as("qi"))
         .select(col("qi"), col("id"),
@@ -127,7 +137,7 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
   def hop(edges: DataFrame, qs: Seq[Int], width: Int): Seq[Int] = {
     val from = qs.flatMap(frontier(_)).distinct
     val adj = if (from.isEmpty) Map.empty[Long, Seq[Long]]
-      else held(Cut.request(edges.where(col("src").isin(from: _*)).select("src", "dst"),
+      else held(Cut.request(edges.where(among("src", from)).select("src", "dst"),
         Ann.MaxDescentRows, "Ann.MaxDescentRows", "descent round"))
         .toSeq.groupMap(_.getLong(0))(_.getLong(1))
     val expand = qs.map { q =>

@@ -1,109 +1,68 @@
 package graft.operators
 
 import graft.functions.VectorDistance
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Exact (FLAT) k-NN search — Spark-native form of the reference's
   * `VectorDatabase::search` with `indexType=FLAT`
   * (reference vector_database.cc:150, faiss_index.cc:40).
   *
-  * Shape: broadcast the (small) query set, score every data row
-  * against every query inside one codegen stage, then reduce with the
-  * partial-aggregating [[TopKAgg]] heap. The optional scalar filter
-  * (reference FilterIndex `=`/`!=` roaring bitmaps,
-  * filter_index.cc:62) becomes a plain Catalyst predicate applied
-  * BEFORE scoring — it pushes down to the parquet scan
+  * Shape: the query set is collected once (at most
+  * [[SearchApi.MaxBatchRequests]] rows; a larger set fails loudly) and
+  * the corpus streams through ONE aggregate that scores every row
+  * against every query and keeps one bounded heap per qid
+  * ([[RequestTopK]], the engine behind `/search` batches): no Q×N
+  * intermediate, and the shuffle carries one heap set per partition.
+  * The optional scalar filter (reference FilterIndex `=`/`!=` roaring
+  * bitmaps, filter_index.cc:62) becomes a plain Catalyst predicate on
+  * the corpus BELOW the aggregate — it pushes down to the parquet scan
   * (`PushedFilters`), which strictly dominates a bitmap post-filter:
   * non-matching rows are never even read.
   */
 object Knn {
 
   /** Supported metrics, mirroring reference IndexFactory::MetricType
-    * (index_factory.cc) plus cosine.
+    * (index_factory.cc) plus cosine. Their ids are [[RequestTopK]]'s
+    * metric codes.
     */
   object Metric extends Enumeration { val L2, IP, Cosine, L1, Linf = Value }
 
   /** Top-k neighbors of each query vector.
     *
     * @param data    (id: long, vec: array<float>) corpus
-    * @param queries (qid: long, qvec: array<float>) — must be small
-    *                enough to broadcast (it is collected to every
-    *                executor exactly like FAISS holds the query batch)
+    * @param queries (qid, qvec: array<float|double>) — at most
+    *                [[SearchApi.MaxBatchRequests]] rows, collected to
+    *                the driver once, as FAISS holds the query batch;
+    *                rows sharing a qid share one heap
     * @return (qid, rk 1..k, nn_id, score) — score is the metric value
     *         rounded to 4dp; ranking on the unrounded value, ties on
-    *         ascending nn_id
+    *         ascending nn_id. A NULL or dimension-mismatched vector,
+    *         and a zero norm under cosine, scores nothing
     */
   def topK(data: DataFrame, queries: DataFrame, k: Int,
            metric: Metric.Value): DataFrame =
-    topKImpl(data, queries, k, metric, excludeSelf = false)
+    rank(data, queries, k, metric, Nil)
 
   /** Doc-centric similarity search: queries come from the corpus
-    * itself, so the trivial self-match (id == qid) is dropped before
-    * the heap — the usual "nearest neighbors of each document" form.
+    * itself, so the trivial self-match (id == qid) is never scored —
+    * the usual "nearest neighbors of each document" form.
     */
   def topKExcludingSelf(data: DataFrame, queries: DataFrame, k: Int,
                         metric: Metric.Value): DataFrame =
-    topKImpl(data, queries, k, metric, excludeSelf = true)
+    rank(data, queries, k, metric, Seq(col("qid")))
 
-  private def topKImpl(data: DataFrame, queries: DataFrame, k: Int,
-                       metric: Metric.Value, excludeSelf: Boolean): DataFrame = {
-    // Cosine pre-norms: ||v|| is computed ONCE per corpus row and
-    // once per query instead of inside every pair (the fused VecCosine
-    // kernel re-accumulated both norms per pair — Q× redundant work on
-    // the corpus side). score = dot/(n_a·n_b) runs the IDENTICAL float
-    // operations in the identical order as the fused kernel (the norm
-    // is the same left-to-right self-dot), so results are bit-equal —
-    // including the NULL-on-zero-norm/dim-mismatch contract, restored
-    // here via the zero-denominator guard and dot's null propagation.
-    val prenorm = metric == Metric.Cosine
-    val q = broadcast(
-      if (prenorm)
-        queries.select(col("qid"), col("qvec"),
-          sqrt(VectorDistance.dot(col("qvec"), col("qvec"))).as("_qn"))
-      else queries.select(col("qid"), col("qvec")))
-    val d =
-      if (prenorm)
-        data.select(col("id"), col("vec"),
-          sqrt(VectorDistance.dot(col("vec"), col("vec"))).as("_n"))
-      else data.select(col("id"), col("vec"))
-
-    // native fused kernels (VectorDistance) — same numerics as the
-    // composed zip_with/aggregate form, ~10x less per-pair overhead
-    val score = metric match {
-      case Metric.L2 => VectorDistance.l2(col("vec"), col("qvec"))
-      case Metric.L1 => VectorDistance.l1(col("vec"), col("qvec"))
-      case Metric.Linf => VectorDistance.linf(col("vec"), col("qvec"))
-      case Metric.IP => VectorDistance.dot(col("vec"), col("qvec"))
-      case Metric.Cosine =>
-        val denom = col("_n") * col("_qn")
-        when(denom === 0.0, lit(null).cast("double"))
-          .otherwise(VectorDistance.dot(col("vec"), col("qvec")) / denom)
-    }
-    // lower-is-better sort key; similarities rank descending
-    val distanceMetric =
-      metric == Metric.L2 || metric == Metric.L1 || metric == Metric.Linf
-    val key = if (distanceMetric) score else -score
-
-    val agg = TopKAgg.topK(k)
-    val pairs = d.crossJoin(q)
-    (if (excludeSelf) pairs.where(col("id") =!= col("qid")) else pairs)
-      .select(col("qid"), key.as("key"), col("id"))
-      // a NULL score (zero-norm vector under cosine, or a malformed
-      // embedding's dimension mismatch) is undefined order — drop it
-      // from top-k BEFORE the heap: TopKAgg's ScoredId.key is a
-      // primitive Double, so a null reaching the encoder would throw
-      .where(col("key").isNotNull)
-      .groupBy("qid")
-      .agg(agg(col("key"), col("id")).as("top"))
-      .select(col("qid"), posexplode(col("top.items")))
-      .select(
-        col("qid"),
-        (col("pos") + 1).as("rk"),
-        col("col.id").as("nn_id"),
-        round(if (distanceMetric) col("col.key") else -col("col.key"), 4)
-          .as("score"))
-      .orderBy("qid", "rk")
+  /** The exact engine: the query set (qid, qvec and the corpus ids each
+    * query excludes) collected under [[SearchApi.MaxBatchRequests]],
+    * then [[SearchApi.searchRequests]]' aggregate and answer tail.
+    */
+  private def rank(data: DataFrame, queries: DataFrame, k: Int,
+                   metric: Metric.Value, exclude: Seq[Column]): DataFrame = {
+    val rows = graft.Cut.request(queries.select(col("qid") +: col("qvec") +:
+        exclude.map(_.cast("long")): _*),
+      SearchApi.MaxBatchRequests, "SearchApi.MaxBatchRequests", "query set")
+    RequestTopK.answer(data, RequestTopK.forQueries(rows.toSeq,
+      queries.schema("qid"), k, metric.id))
   }
 
   /** search(+filter) — predicate applied pre-scan (see class doc). */
@@ -118,8 +77,8 @@ object Knn {
     * where the filter reads a property out of a JSON payload string
     * with `get_json_object` (codegen — schema-on-read costs one
     * per-row parse, no ETL step) and the extracted value feeds an
-    * ordinary typed predicate. The filter sits BELOW the query cross
-    * join exactly like the scalar family (topKFiltered's pre-scan
+    * ordinary typed predicate. The filter sits BELOW the top-k
+    * aggregate exactly like the scalar family (topKFiltered's pre-scan
     * contract), so non-matching payload rows never reach the distance
     * kernel — KnnSpec pins the plan shape. At 100 TB the payload
     * parse is the scan's cost, not the heap's: a hot JSON path should
@@ -294,7 +253,7 @@ object Knn {
 
   /** Surface query: x=lon, y=lat; one shared notched-triangle
     * polygon ((-120,-60) (0,60) (120,-60) (0,0), integer vertices)
-    * filters the corpus BELOW the query join ([[topKFiltered]]'s
+    * filters the corpus BELOW the top-k aggregate ([[topKFiltered]]'s
     * pre-scan contract — the polygon is collection-scoped here, so
     * the membership bit is computable at scan time), cosine ranking
     * among the survivors.
@@ -319,8 +278,8 @@ object Knn {
     * last unticked line, doc/filter.md's array-index sentence
     * (Milvus' array composite index; Qdrant's MatchAny over a list
     * field): kNN gated on MEMBERSHIP in an array-typed payload
-    * column. `array_contains(tags, v)` evaluates BELOW the query
-    * cross join (the [[topKFiltered]] pre-scan contract), so
+    * column. `array_contains(tags, v)` evaluates BELOW the top-k
+    * aggregate (the [[topKFiltered]] pre-scan contract), so
     * non-member rows never reach the distance kernel — KnnSpec pins
     * that plan shape. Tags are synthesized deterministically from
     * the id by exact modular arithmetic (id%7, id%11, id%13 — the
@@ -350,7 +309,7 @@ object Knn {
     * driver data's props carries `k` on every row, so presence must
     * be synthesized, same discipline as the modular tag arrays) and
     * a tag list whose LENGTH varies by id. The predicate — field IS
-    * NULL OR tags = [] — sits below the query join like the whole
+    * NULL OR tags = [] — sits below the top-k aggregate like the whole
     * scalar filter family (topKFiltered pre-scan contract; KnnSpec
     * pins it). At 100 TB presence is a pushable IsNull scan filter:
     * parquet null-count stats skip whole row groups where every row
@@ -377,7 +336,7 @@ object Knn {
     * on a datetime payload field: `{"key": "ts", "range": {"gte": …,
     * "lt": …}}`). The payload timestamp joins in from the events
     * table by id (the JSON-filter pattern); the half-open window is
-    * two ordinary timestamp comparisons below the query join, so
+    * two ordinary timestamp comparisons below the top-k aggregate, so
     * out-of-window rows never reach the distance kernel. Both
     * engines compare the same parquet micros against the same UTC
     * literals — no timezone arithmetic (session tz pinned UTC). At
@@ -403,7 +362,7 @@ object Knn {
     * condition: gate on the NUMBER of values an array payload field
     * holds, e.g. "at least two tags"). The tag list's length varies
     * by id (slice of the modular tag array), and the predicate is
-    * one `size(tags) >= 2` below the query join. At 100 TB the
+    * one `size(tags) >= 2` below the top-k aggregate. At 100 TB the
     * cardinality is a typed column materialized at ingest (the
     * n_chars pattern), making this a pushable integer range scan.
     */
@@ -426,7 +385,7 @@ object Knn {
     * single-space-tokenized corpus, exact adjacency over whole
     * tokens is equivalent to substring containment of the
     * space-delimited phrase in the space-padded text — one codegen
-    * `contains`, no explode, evaluated below the query join. NULL
+    * `contains`, no explode, evaluated below the top-k aggregate. NULL
     * text never matches (three-valued contains on both engines). At
     * 100 TB the phrase filter is served by the positional postings
     * index (the text_phrase_search machinery) as a candidate
@@ -466,7 +425,7 @@ object Knn {
     *      corners, but the re-check is what makes the rewrite safe
     *      by construction rather than by tokenization argument);
     *   3. the verified id set semi-joins the vector corpus below the
-    *      query join — the existing topK path, unchanged.
+    *      top-k aggregate — the existing topK path, unchanged.
     *
     * At 100 TB step 1 reads a persisted positional index partition
     * (term-bucketed like the BM25 postings) and the corpus text is
@@ -512,7 +471,7 @@ object Knn {
     * vector, the outer query RESCORES those candidates by another —
     * the universal serving pattern behind matryoshka/two-tower
     * retrieval and cheap-metric-then-exact reranking): stage 1 is
-    * the standard broadcast + fused-kernel + bounded-heap top-50 on
+    * [[topK]]'s exact per-query-heap top-50 on
     * the title vector; stage 2 joins ONLY the Q×50 shortlist back to
     * the corpus for the body-vector cosine and keeps the top 10.
     * At 100 TB the stage-2 join is shortlist-sized (kilobytes
@@ -548,35 +507,16 @@ object Knn {
     * runs as per-element double expressions over the request rows
     * (request-sized — the interpreted-lambda rule only bars HOFs on
     * corpus-sized rows), left-to-right identical to the mirror's
-    * list_transform. Search is the standard broadcast + fused-kernel
-    * + bounded-heap FLAT anatomy with the per-request exclusion as
-    * one codegen predicate.
+    * list_transform. Search is [[topK]]'s exact cosine engine with
+    * the three example ids as each request's exclusion list (a NULL
+    * example id excludes every row, as `id != NULL` does).
     *
     * @param requests (qid, qvec: double[], ex1, ex2, ex3)
     */
   def recommend(data: DataFrame, requests: DataFrame,
-                k: Int): DataFrame = {
-    val q = broadcast(requests.select(col("qid"), col("qvec"),
-      sqrt(VectorDistance.dot(col("qvec"), col("qvec"))).as("_qn"),
-      col("ex1"), col("ex2"), col("ex3")))
-    val d = data.select(col("id"), col("vec"),
-      sqrt(VectorDistance.dot(col("vec"), col("vec"))).as("_n"))
-    val denom = col("_n") * col("_qn")
-    val score = when(denom === 0.0, lit(null).cast("double"))
-      .otherwise(VectorDistance.dot(col("vec"), col("qvec")) / denom)
-    val agg = TopKAgg.topK(k)
-    d.crossJoin(q)
-      .where(col("id") =!= col("ex1") && col("id") =!= col("ex2") &&
-        col("id") =!= col("ex3"))
-      .select(col("qid"), (-score).as("key"), col("id"))
-      .where(col("key").isNotNull)
-      .groupBy("qid")
-      .agg(agg(col("key"), col("id")).as("top"))
-      .select(col("qid"), posexplode(col("top.items")))
-      .select(col("qid"), (col("pos") + 1).as("rk"),
-        col("col.id").as("nn_id"), round(-col("col.key"), 4).as("score"))
-      .orderBy("qid", "rk")
-  }
+                k: Int): DataFrame =
+    rank(data, requests, k, Metric.Cosine,
+      Seq(col("ex1"), col("ex2"), col("ex3")))
 
   /** RECOMMEND, BEST_SCORE STRATEGY (r13 — Qdrant's second
     * recommendation strategy beside the average-vector one
@@ -943,12 +883,12 @@ object Knn {
     * dynamic fan would posexplode sub-vectors and pre-max — the same
     * plan with one extra map-side combine; never a HOF lambda, the
     * repo's interpreted-evaluation pitfall). Corpus norms compute
-    * ONCE per row (the [[topK]] prenorm discipline — identical float
+    * ONCE per row (the pre-normed cosine form — identical float
     * order as the fused kernel, so legs stay bit-equal to
     * list_cosine_similarity); a NULL leg (zero-norm) coalesces to the
     * −2 sentinel on BOTH engines so max() semantics cannot drift, and
-    * an all-null pair drops before the heap. Same broadcast + bounded
-    * TopKAgg anatomy as FLAT search: one map-only corpus pass, Q×k
+    * an all-null pair drops before the heap. Broadcast + bounded
+    * TopKAgg anatomy ([[Ann.topKPerQuery]]): one map-only corpus pass, Q×k
     * shuffle.
     *
     * @param queries (qid, q1, q2)
@@ -971,24 +911,17 @@ object Knn {
       when(denom === 0.0 || raw.isNull, lit(-2.0))
         .otherwise(least(lit(1.0), greatest(lit(-1.0), raw)))
     }
-    val agg = TopKAgg.topK(k)
-    d.crossJoin(q)
+    Ann.topKPerQuery(d.crossJoin(q)
       .select(col("qid"),
         (-greatest(leg("q1", "_qn1"), leg("q2", "_qn2"))).as("key"),
         col("id"))
-      .where(col("key") < 1.5) // both-leg-null sentinel, cos ≥ −1
-      .groupBy("qid")
-      .agg(agg(col("key"), col("id")).as("top"))
-      .select(col("qid"), posexplode(col("top.items")))
-      .select(col("qid"), (col("pos") + 1).as("rk"),
-        col("col.id").as("nn_id"), round(-col("col.key"), 4).as("score"))
-      .orderBy("qid", "rk")
+      .where(col("key") < 1.5), k) // both-leg-null sentinel, cos ≥ −1
   }
 
   /** Radius (range) search — FAISS `range_search` analog: every
     * neighbor within a threshold (L2: distance ≤ t; IP/cosine:
-    * similarity ≥ t). Same broadcast + fused-kernel scan as [[topK]],
-    * but the reducer is a plain filter — no heap, no per-query state,
+    * similarity ≥ t). Queries broadcast into one fused-kernel scan,
+    * and the reducer is a plain filter — no heap, no per-query state,
     * output size data-dependent. The filter runs inside the scan's
     * codegen stage, so the only exchange is the deterministic output
     * sort; at 100 TB this is a full map-only pass, embarrassingly
@@ -1109,8 +1042,8 @@ object Knn {
     * the exponent (exact, no rounding) and the (1+c)/2 shift rounds
     * once identically on both engines, so the boosted score is
     * bit-deterministic where an exp(−λ·age) would be a libm call
-    * with no contract. Same broadcast + fused-kernel + bounded-heap
-    * anatomy as [[topK]]; the raw cosine of each winner is
+    * with no contract. Broadcast + fused-kernel + bounded TopKAgg heap
+    * per qid (the key reads each row's age bucket); the raw cosine of each winner is
     * re-derived from the exact boosted key by the inverse shift —
     * zero extra scans.
     */

@@ -83,9 +83,9 @@ object Pq {
     * (per-query lookup tables built driver-side — m lookups + adds
     * per scanned row instead of m·dsub multiply-adds), exact float
     * rerank to k. Queries are collected to build the LUTs — the same
-    * driver-sized contract as the broadcast itself (FAISS builds the
-    * per-query tables the same way before its scan). Output shape
-    * matches Knn.topK.
+    * driver-sized contract as [[Knn.topK]]'s collected query set (FAISS
+    * builds the per-query tables the same way before its scan). Output
+    * shape, `(qid, rk, nn_id, score)`, is Knn.topK's.
     */
   def pqSearchWith(emb: DataFrame, queries: DataFrame, k: Int,
                    rerank: Int, cb: Array[Double], m: Int = M,

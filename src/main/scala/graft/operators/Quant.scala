@@ -34,8 +34,8 @@ object Quant {
   }
 
   /** Quantized scan → shortlist of `rerank·k` per query (code-space
-    * L2 heap) → exact float L2 rerank to k. Output shape matches
-    * [[Knn.topK]] with Metric.L2.
+    * L2 heap) → exact float L2 rerank to k. Output shape, `(qid, rk,
+    * nn_id, score)`, is [[Knn.topK]]'s with Metric.L2.
     */
   def sq8Search(emb: DataFrame, queries: DataFrame, k: Int,
                 rerank: Int = 4): DataFrame = {

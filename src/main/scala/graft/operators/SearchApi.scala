@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
@@ -13,11 +13,12 @@ import org.apache.spark.sql.types.StructType
   * fieldValue, op: "="|"!="}}` (http_server.cc searchHandler,
   * test/filter_upsert/search_*.json), i.e. the metric AND the scalar
   * filter are DATA, different per request. The per-query operators
-  * (Knn.topKFiltered &c.) cover the one-request case where the
-  * filter compiles into the scan; here a heterogeneous batch runs as
-  * a single plan with each request's filter evaluated per corpus row
-  * — the relational analog of the reference evaluating its roaring
-  * bitmap per request.
+  * (Knn.topK, Knn.topKFiltered &c.) run on the same engine and answer
+  * tail ([[RequestTopK]]) for a query set sharing one metric, with
+  * a filter that compiles into the scan; here a heterogeneous batch
+  * runs as a single plan with each request's filter evaluated per
+  * corpus row — the relational analog of the reference evaluating its
+  * roaring bitmap per request.
   *
   * Scale: the exact batch is collected to the driver under a stated
   * bound ([[SearchApi.MaxBatchRequests]]) and the corpus streams
@@ -31,9 +32,9 @@ import org.apache.spark.sql.types.StructType
   */
 object SearchApi {
 
-  /** Row bound on a request batch: `searchRequests` collects its
-    * batch to the driver, where the requests become constants of the
-    * corpus-side aggregate (and ride along with every scan task). A
+  /** Row bound on a request batch or a [[Knn]] query set: each is
+    * collected to the driver, where the requests become constants of
+    * the corpus-side aggregate (and ride along with every scan task). A
     * larger batch fails loudly instead of growing the driver and task
     * footprint without limit; split it into several calls.
     */
@@ -84,20 +85,8 @@ object SearchApi {
       kMax => require(maxK >= kMax,
         s"maxK=$maxK is smaller than the batch's largest request k=$kMax")
     }
-    val agg = RequestTopK.forBatch(batch.toSeq, reqs.schema("qid").dataType,
-      reqs.schema("fval").dataType, maxK)
-    // a batch where no request can score plans no scan at all (limit 0
-    // folds to an empty relation)
-    (if (agg.requests.isEmpty) data.limit(0) else data)
-      .agg(GraftColumnBridge.column(agg.toAggregateExpression()).as("top"))
-      .select(explode(col("top")).as("c"))
-      .where(col("c.rk") <= col("c.k"))
-      .select(col("c.qid").as("qid"), col("c.rk").as("rk"),
-        col("c.nn_id").as("nn_id"),
-        round(when(col("c.metric") === "L2" || col("c.metric") === "L1",
-          col("c.key"))
-          .otherwise(-col("c.key")), 4).as("score"))
-      .orderBy("qid", "rk")
+    RequestTopK.answer(data, RequestTopK.forBatch(batch.toSeq,
+      reqs.schema("qid").dataType, reqs.schema("fval").dataType, maxK))
   }
 
   /** Per-request INDEX ROUTING — the reference's request payload

@@ -39,16 +39,15 @@ class KnnSpec extends SparkSuite {
       s"label filter not pushed:\n$plan")
   }
 
-  test("JSON-payload filter evaluates below the query join, before " +
-    "the distance kernel") {
-    // r13 (VERDICT r12 #3): the get_json_object predicate must sit on
-    // the corpus side of the cross join — non-matching payload rows
-    // never reach vec_l2. The executed plan prints parents first, so
-    // the kernel projection (above the join) must appear BEFORE the
-    // JSON filter (below it) in the dump.
+  test("JSON-payload filter evaluates below the fused top-k aggregate") {
+    // r13 (VERDICT r12 #3): the get_json_object predicate must filter
+    // the corpus before it is scored — non-matching payload rows never
+    // reach the distance kernel inside the fused top-k aggregate. The
+    // executed plan prints parents first, so the aggregate must appear
+    // BEFORE the JSON filter (below it) in the dump.
     val df = Knn.knnFilteredJsonQuery(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
-    val kernelAt = plan.indexOf("vec_l2")
+    val kernelAt = plan.indexOf("request_topk")
     val jsonAt = plan.indexOf("get_json_object")
     assert(kernelAt >= 0 && jsonAt >= 0,
       s"missing kernel or JSON filter in plan:\n$plan")
@@ -66,15 +65,14 @@ class KnnSpec extends SparkSuite {
       "a neighbor with payload k >= 50 leaked through the JSON filter")
   }
 
-  test("array-payload membership filter evaluates below the query " +
-    "join, before the distance kernel") {
-    // r14 (VERDICT r13 #2): array_contains must sit on the corpus
-    // side of the cross join — non-member rows never reach vec_l2.
-    // Executed plans print parents first, so the kernel (above the
-    // join) must appear BEFORE the membership predicate (below it).
+  test("array-payload membership filter evaluates below the fused top-k") {
+    // r14 (VERDICT r13 #2): array_contains must filter the corpus
+    // before it is scored — non-member rows never reach the fused top-k
+    // aggregate. Executed plans print parents first, so the aggregate
+    // must appear BEFORE the membership predicate (below it).
     val df = Knn.knnFilteredArrayQuery(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
-    val kernelAt = plan.indexOf("vec_l2")
+    val kernelAt = plan.indexOf("request_topk")
     val arrAt = plan.indexOf("array_contains")
     assert(kernelAt >= 0 && arrAt >= 0,
       s"missing kernel or membership filter in plan:\n$plan")
@@ -89,19 +87,17 @@ class KnnSpec extends SparkSuite {
     }, "a non-member neighbor leaked through the array filter")
   }
 
-  test("is_null/is_empty presence filter evaluates below the query " +
-    "join and bites") {
+  test("is_null/is_empty presence filter evaluates below the fused top-k") {
     // r15 (VERDICT r14 #5): the presence predicate (pk IS NULL OR
-    // size(tags) = 0) must sit on the corpus side of the cross join.
-    // r16 (advice): pinned STRUCTURALLY — an IsNull predicate (as a
-    // FilterExec condition or a pre-join semi-lookup's join
-    // condition) must live inside a join child's subtree, with the
-    // distance kernel outside that subtree — instead of comparing
-    // indexOf positions of 'vec_l2' and 'isnull' in the plan dump,
-    // which any unrelated isnull occurrence (null-safe cast,
-    // shuffle-key check) or plan-format change could flip spuriously.
-    // (isnotnull guards are IsNotNull nodes, a different class, so
-    // they cannot satisfy the check.)
+    // size(tags) = 0) must filter the corpus before it is scored.
+    // r16 (advice): pinned STRUCTURALLY — an IsNull predicate must live
+    // inside the child subtree of the node that scores (the fused
+    // top-k aggregate), with no scoring inside that subtree — instead
+    // of comparing indexOf positions of the kernel and 'isnull' in the
+    // plan dump, which any unrelated isnull occurrence (null-safe
+    // cast, shuffle-key check) or plan-format change could flip
+    // spuriously. (isnotnull guards are IsNotNull nodes, a different
+    // class, so they cannot satisfy the check.)
     import org.apache.spark.sql.catalyst.expressions.IsNull
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -114,16 +110,14 @@ class KnnSpec extends SparkSuite {
     }
     def hasIsNull(p: SparkPlan): Boolean = walk(p).exists(
       _.expressions.exists(_.exists(_.isInstanceOf[IsNull])))
-    def hasKernel(p: SparkPlan): Boolean = walk(p).exists(
-      _.expressions.exists(_.exists(
-        _.isInstanceOf[graft.functions.VecL2])))
-    assert(hasKernel(executed), s"missing distance kernel in plan:\n$executed")
-    val joins = walk(executed).filter(_.children.size >= 2)
-    assert(joins.nonEmpty, s"no join in plan:\n$executed")
-    assert(joins.exists(_.children.exists(c =>
+    def scores(p: SparkPlan): Boolean = p.expressions.exists(_.exists(
+      _.isInstanceOf[graft.operators.RequestTopK]))
+    def hasKernel(p: SparkPlan): Boolean = walk(p).exists(scores)
+    assert(hasKernel(executed), s"missing fused top-k in plan:\n$executed")
+    assert(walk(executed).filter(scores).exists(_.children.exists(c =>
         hasIsNull(c) && !hasKernel(c))),
-      "presence predicate is not evaluated pre-join on the corpus " +
-        s"side (or the kernel leaked below the join):\n$executed")
+      "presence predicate is not evaluated on the corpus below the " +
+        s"top-k aggregate (or scoring leaked below it):\n$executed")
     // bites: every neighbor is in the masked-NULL id class or has an
     // empty sliced tag list
     val rows = df.collect()

@@ -45,7 +45,26 @@ class PlanSpec extends SparkSuite {
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val p = planOf(graft.operators.Knn.topK(emb, q, 5,
       graft.operators.Knn.Metric.L2))
-    assert(p.contains("vec_l2"), s"native kernel missing:\n${p.take(2000)}")
+    assert(p.contains("request_topk"), s"fused top-k missing:\n${p.take(2000)}")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct") &&
+      !p.contains("zip_with"), s"Q×N pair stage in:\n${p.take(2000)}")
+  }
+
+  test("registry: exact kNN queries rank on the fused per-query top-k, " +
+    "only the frozen anchor keeps the Q×N join") {
+    val migrated = Seq("vdb_knn_flat_ip", "vdb_knn_flat_l1", "vdb_knn_flat_linf",
+      "vdb_knn_cosine", "vdb_batch_knn", "sim_brute_topk", "doc_semantic_search",
+      "vdb_recommend", "vdb_recommend_lookup", "knn_classify", "knn_regression") ++
+      SparkEntry.queries.keys.filter(_.startsWith("vdb_knn_filtered_")).toSeq.sorted
+    assert(migrated.size > 20)
+    for (name <- migrated) {
+      val p = planOf(SparkEntry.queries(name)(spark, sf))
+      assert(p.contains("request_topk") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$name does not rank on the fused top-k:\n${p.take(3000)}")
+    }
+    val anchor = planOf(SparkEntry.queries("vdb_knn_flat_l2")(spark, sf))
+    assert(anchor.contains("BroadcastNestedLoopJoin") && !anchor.contains("request_topk"),
+      s"the frozen drift anchor's plan moved:\n${anchor.take(3000)}")
   }
 
   test("ivf assignment is a pure projection — no Exchange, no Aggregate") {
