@@ -4,10 +4,13 @@ import java.util.concurrent.ConcurrentHashMap
 
 /** The engine's one memo, for deterministic BUILD BYPRODUCTS of a
   * session: checkpointed frames (the kNN graph, the dedup cluster
-  * fixpoint, the verified-pair set, near-miss pools) and driver-held
-  * trained constants (IVF centroids, PQ codebooks, PCA moments,
-  * quantizer ranges, the OPQ permutation, BPE merges). An operator
-  * that consumes one reuses what another query already built.
+  * fixpoint, the verified-pair set, near-miss pools), the descent
+  * stores (the corpus bucketed by id with its graph edges, a
+  * checkpointed RDD per dir, per (dir, graphK) and per persisted
+  * hierarchy) and driver-held trained constants (IVF centroids, PQ
+  * codebooks, PCA moments, quantizer ranges, the OPQ permutation, BPE
+  * merges). An operator that consumes one reuses what another query
+  * already built.
   *
   * THE REUSE RULE: a value may be memoized here only when it is a
   * deterministic function of its key (the source directory and the
@@ -30,7 +33,8 @@ import java.util.concurrent.ConcurrentHashMap
   * applicationId are unreachable garbage (a finished session's plans)
   * and are purged. A directory whose parquet is rewritten inside one
   * JVM keeps its memoized byproducts until `clear()` (IndexCache
-  * likewise validates a directory once per JVM).
+  * likewise validates a directory once per JVM), except those keyed
+  * by a fingerprint of their files ([[getOrComputeVersion]]).
   */
 object ByproductCache {
   private final class Entry(build: => Any) {
@@ -58,6 +62,19 @@ object ByproductCache {
     * reuse is the point.
     */
   def clear(): Unit = cache.clear()
+
+  /** [[getOrCompute]] for a byproduct of files that can be rewritten
+    * inside one JVM: the key is `family` plus the files' `version` (a
+    * fingerprint the caller takes), and any entry of `family` at
+    * another version is dropped first. A rewrite is thus never served
+    * stale, and old versions do not pile up: a dropped value is freed
+    * once no running caller holds it.
+    */
+  def getOrComputeVersion[T](appId: String, family: String, version: String)(f: => T): T = {
+    val key = s"$family|$version"
+    cache.keySet.removeIf(k => k._1 == appId && k._2 != key && k._2.startsWith(s"$family|"))
+    getOrCompute(appId, key)(f)
+  }
 
   def getOrCompute[T](appId: String, key: String)(f: => T): T = {
     val it = cache.keySet.iterator

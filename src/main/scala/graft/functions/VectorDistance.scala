@@ -58,6 +58,21 @@ private[graft] object PairNumerics {
     acc
   }
 
+  /** Cosine of x and y: dot, ‖x‖² and ‖y‖² in one left-to-right loop,
+    * then `dot / (sqrt(‖x‖²) · sqrt(‖y‖²))`; null when that product is
+    * zero. `VecCosine` and the descent store both score through this.
+    */
+  def cosine(x: Array[Double], y: Array[Double], n: Int): java.lang.Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val a = x(i); val b = y(i)
+      dot += a * b; na += a * a; nb += b * b; i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else dot / denom
+  }
+
   /** max|xᵢ−yᵢ|; a NaN difference never replaces the running max. */
   def linf(x: Array[Double], y: Array[Double], n: Int): Double = {
     var acc = 0.0
@@ -307,18 +322,10 @@ case class VecCosine(left: Expression, right: Expression)
 
   override def nullSafeEval(av: Any, bv: Any): Any = {
     val (a, b) = (av.asInstanceOf[ArrayData], bv.asInstanceOf[ArrayData])
-    val n = a.numElements()
-    if (n != b.numElements()) null
+    if (a.numElements() != b.numElements()) null
     else {
-      val (xs, ys) = widened(a, b)
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val x = xs(i); val y = ys(i)
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      if (denom == 0.0) null else dot / denom
+      val (x, y) = widened(a, b)
+      PairNumerics.cosine(x, y, x.length)
     }
   }
 

@@ -680,8 +680,9 @@ object Ann {
     * returns exactly what a direct `ann_ivf` call would. The probe is
     * request-sized, so it runs as the descent's IVF-cell entry: the
     * batch is collected (no job for a `LocalRelation`), the members of
-    * each query's probed cells are scored in ONE narrow job over the
-    * plain corpus scan, and the rank-k cut runs on the driver
+    * each query's probed cells are scored in ONE job over the corpus's
+    * [[DescentStore]], filtered on the stored cell, and the rank-k cut
+    * runs on the driver
     * ([[Descent.pooled]]: a repeated qid pools its requests in one heap,
     * as the relational `groupBy(qid)` did). The answer is a
     * `LocalRelation`; a NULL qid returns nothing.
@@ -690,7 +691,8 @@ object Ann {
     */
   def ivfSearchCached(s: SparkSession, dir: String, queries: DataFrame,
                       k: Int, nprobe: Int = 2): DataFrame = {
-    val (d, scored) = nswStart(s, dir, queries, Nil, new DescentStats, nprobe)
+    val (d, scored) = nswStart(s, dir, corpusStore(s, dir), queries, Nil,
+      new DescentStats, nprobe)
     d.pooled(scored, k)
   }
 
@@ -1678,8 +1680,9 @@ object Ann {
     * after at most `rounds` hops the top-k of the final beam is the
     * answer. The walk's state is Q×beam ids per round — request-sized,
     * never corpus-sized — so [[Descent]] holds it on the driver and
-    * runs each round as two narrow jobs (neighbour lookup, scoring of
-    * the new pairs). Entry points come from a COARSE-TO-FINE DESCENT
+    * runs each round as ONE job over the [[DescentStore]] that scores
+    * the new pairs and returns their ids' edges with no query plan.
+    * Entry points come from a COARSE-TO-FINE DESCENT
     * through the cached IVF centroids (hnswlib's upper layers,
     * hnswlib_index.cc:21-24, serve exactly this role: route to a good
     * neighborhood before the fine-grained walk), so search needs no
@@ -1691,10 +1694,10 @@ object Ann {
     nswWalk(s, dir, queries, beam, rounds, graphK, new DescentStats).ranked(k)
 
   /** Counters a [[Descent]] fills in: the rounds its base loop ran, the
-    * pairs its scoring jobs returned, and the most rows one of its jobs
-    * returned to the driver (what [[MaxDescentRows]] bounds). A pair is
-    * scored at most once, so `pairsScored` ≤ entry pairs + visited
-    * pairs.
+    * pairs its jobs scored, and the most rows (scored pairs) one of its
+    * jobs returned to the driver (what [[MaxDescentRows]] bounds). A
+    * pair is scored at most once, so `pairsScored` ≤ entry pairs +
+    * visited pairs.
     */
   private[graft] final class DescentStats {
     @volatile var roundsRun: Int = 0
@@ -1703,41 +1706,61 @@ object Ann {
   }
 
   /** Row bound on a descent's request batch: the batch is collected to
-    * the driver, where its vectors become plan literals of every
-    * scoring job. A larger batch fails loudly; split it into several
-    * calls.
+    * the driver, and its vectors are sent to the executors once. A
+    * larger batch fails loudly; split it into several calls.
     */
   val MaxDescentQueries = 4096
 
-  /** Row bound on any one collect of a descent (an entry set, a round's
-    * neighbour lookup or scoring). At [[MaxDescentQueries]] queries a
-    * round holds about Q·beam·degree ≈ 1M pairs and the IVF entry set
+  /** Row bound on any one collect of a descent (an entry set or a
+    * round's scored pairs). At [[MaxDescentQueries]] queries a round
+    * holds about Q·beam·degree ≈ 1M pairs and the IVF entry set
     * Q·2·stride ≈ 1.6M, so only a graph with runaway hub degree or a
     * degenerate cell gets near it.
     */
   val MaxDescentRows = 1 << 22
 
-  /** The plain corpus scan scoring jobs read (no hash spread: a
-    * request-sized id lookup gains nothing from it).
+  /** The [[DescentStore]] of `dir`'s corpus, with no edges: each row
+    * of the plain corpus scan with its position in that scan (so a
+    * duplicate id resolves as the scan orders it), its [[assignTo]]
+    * cell under the cached centroids and its hierarchy level. Memoized
+    * per dir; the IVF leg reads it alone and the graph stores share its
+    * buckets.
     */
-  private def corpusOf(s: SparkSession, dir: String): DataFrame =
-    Tables.table(s, dir, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+  private def corpusStore(s: SparkSession, dir: String): DescentStore =
+    graft.ByproductCache.getOrCompute(s.sparkContext.applicationId, s"descentstore|$dir") {
+      DescentStore.build(assignTo(Tables.table(s, dir, "embeddings")
+          .select(col("vec_id").as("id"), col("embedding").as("vec"),
+            monotonically_increasing_id().as("pos")), cachedCentroids(s, dir))
+        .withColumn("lvl", hnswLevel(col("id"))))
+    }
+
+  /** `dir`'s corpus store with the symmetric edges of the in-memory
+    * hierarchy: [[nswEdges]] as layer 0, [[hnswLayerEdges]] as 1-4.
+    * Memoized per (dir, graphK).
+    */
+  private def graphStore(s: SparkSession, dir: String, graphK: Int): DescentStore =
+    graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
+      s"descentgraph|$dir|$graphK") {
+      corpusStore(s, dir).withEdges((0 until DescentStore.Layers).map { l =>
+        (if (l == 0) nswEdges(s, dir, graphK) else hnswLayerEdges(s, dir, l, graphK))
+          .select(lit(l).as("layer"), col("src"), col("dst"))
+      }.reduce(_ union _))
+    }
 
   /** Collect the batch (qid, qvec, cells, `extra`…) with each query's
     * `nprobe` nearest IVF cells, and score the members of those cells
-    * in one job. Returns the descent and the scored entry rows
-    * (query index, id, s).
+    * in one job over `store`. Returns the descent and the scored entry
+    * pairs.
     */
-  private def nswStart(s: SparkSession, dir: String, queries: DataFrame,
-                       extra: Seq[org.apache.spark.sql.Column],
+  private def nswStart(s: SparkSession, dir: String, store: DescentStore,
+                       queries: DataFrame, extra: Seq[org.apache.spark.sql.Column],
                        stats: DescentStats, nprobe: Int = 2)
-      : (Descent, Array[org.apache.spark.sql.Row]) = {
+      : (Descent, Array[DescentStore.Hit]) = {
     val cents = cachedCentroids(s, dir)
-    val d = new Descent(corpusOf(s, dir), queries.select(Seq(col("qid"),
+    val d = new Descent(store, queries.select(Seq(col("qid"),
       col("qvec"), centroidTopM(col("qvec"), cents, nprobe).getField("cell")) ++
       extra: _*), stats)
-    (d, d.scoreCells(d.rows(_).getSeq[Long](2), cents))
+    (d, d.scoreCells(d.rows(_).getSeq[Long](2)))
   }
 
   /** Beam ENTRY SET: per query, the members of its `nprobe` nearest
@@ -1749,7 +1772,8 @@ object Ann {
   private[graft] def nswEntry(s: SparkSession, dir: String,
                               queries: DataFrame,
                               nprobe: Int = 2): DataFrame = {
-    val (d, scored) = nswStart(s, dir, queries, Nil, new DescentStats, nprobe)
+    val (d, scored) = nswStart(s, dir, corpusStore(s, dir), queries, Nil,
+      new DescentStats, nprobe)
     val entry = d.idsByQuery(scored)
     d.frame(Seq(StructField("id", LongType, nullable = false)))(
       entry(_).iterator.map(Seq(_)))
@@ -1762,11 +1786,11 @@ object Ann {
                       beam: Int, rounds: Int, graphK: Int,
                       stats: DescentStats,
                       budget: Option[org.apache.spark.sql.Column] = None): Descent = {
-    val (d, scored) = nswStart(s, dir, queries, budget.toSeq, stats)
+    val (d, scored) = nswStart(s, dir, graphStore(s, dir, graphK), queries,
+      budget.toSeq, stats)
     val entry = d.idsByQuery(scored)
     d.enter(entry(_), beam)
-    d.descend(nswEdges(s, dir, graphK), beam, rounds,
-      if (budget.isEmpty) _ => rounds else d.rows(_).getInt(3))
+    d.descend(beam, rounds, if (budget.isEmpty) _ => rounds else d.rows(_).getInt(3))
     d
   }
 
@@ -1933,15 +1957,8 @@ object Ann {
       val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
       val g = scored.withColumn("rk", row_number().over(byQ))
         .where(col("rk") <= k).select(col("qid").as("src"), col("id").as("dst"))
-      val sym = g.union(g.select(col("dst").as("src"), col("src").as("dst")))
+      g.union(g.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().localCheckpoint(true)
-      // an empty layer memoizes as a LocalRelation: the descent's
-      // neighbour lookup then resolves on the driver with no job at
-      // all (the sparsest top layers are empty at every small SF)
-      if (sym.isEmpty)
-        s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          sym.schema)
-      else sym
     }
 
   /** Coarse-to-fine descent + base beam: enter at THE single highest
@@ -1954,49 +1971,25 @@ object Ann {
     * expansions. An edge-less layer (the sparsest top layers of a
     * small corpus) finds no neighbours and scores nothing, which is
     * the identity step the SQL mirror's blocks reduce to. Shared by
-    * the in-memory and persisted-index variants: same descent, corpus
-    * and edges supplied by the caller.
-    *
-    * @param ent the enterpoint, None for an empty corpus
+    * the in-memory and persisted-index variants: same descent over the
+    * caller's store, which holds the enterpoint.
     */
-  private def hnswWalk(corpus: DataFrame, queries: DataFrame,
-                       ent: Option[Long],
-                       layerEdges: Int => DataFrame, edges0: DataFrame,
+  private def hnswWalk(store: DescentStore, queries: DataFrame,
                        beamU: Int, beam: Int, rounds: Int,
                        stats: DescentStats): Descent = {
-    val d = new Descent(corpus, queries.select("qid", "qvec"), stats)
-    d.enter(_ => ent.toSeq, beamU)
-    for (l <- 4 to 1 by -1) d.hop(layerEdges(l), d.rows.indices, beamU)
-    d.descend(edges0, beam, rounds)
+    val d = new Descent(store, queries.select("qid", "qvec"), stats)
+    d.enter(_ => store.entry.toSeq, beamU)
+    for (l <- 4 to 1 by -1) d.hop(l, d.rows.indices, beamU)
+    d.descend(beam, rounds)
     d
   }
-
-  /** The enterpoint (max level, then min id — hnswlib's
-    * enterpoint_node_): a deterministic function of the node-id set,
-    * found by one pass over `nodes`.
-    */
-  private def hnswEnterpoint(nodes: DataFrame): DataFrame =
-    nodes.select(col("id"), hnswLevel(col("id")).as("lvl"))
-      .orderBy(col("lvl").desc, col("id").asc).limit(1).select("id")
 
   private[operators] def hnswTraverse(s: SparkSession, dir: String,
                                       queries: DataFrame, beamU: Int,
                                       beam: Int, rounds: Int, graphK: Int,
                                       stats: DescentStats = new DescentStats)
-      : Descent = {
-    val e = corpusOf(s, dir)
-    // the in-memory node set is fixed for the session, so its
-    // enterpoint is index metadata (what hnswlib keeps in its index
-    // header): found once per dir and memoized as the id itself. The
-    // persisted variant does NOT memoize: maintenance
-    // (hnswUpsert/Delete) mutates its node set mid-session.
-    val ent = graft.ByproductCache.getOrCompute(
-      s.sparkContext.applicationId, s"hnswent|mem|$dir") {
-      hnswEnterpoint(e).collect().headOption.map(_.getLong(0))
-    }
-    hnswWalk(e, queries, ent, l => hnswLayerEdges(s, dir, l, graphK),
-      nswEdges(s, dir, graphK), beamU, beam, rounds, stats)
-  }
+      : Descent =
+    hnswWalk(graphStore(s, dir, graphK), queries, beamU, beam, rounds, stats)
 
   def hnswSearch(s: SparkSession, dir: String, queries: DataFrame,
                  k: Int = 10, beamU: Int = 8, beam: Int = 16,
@@ -2254,11 +2247,11 @@ object Ann {
   }
 
   /** Search the PERSISTED hierarchy: same descent as [[hnswSearch]],
-    * edges read partition-pruned from the (layer, cell) layout and
-    * symmetrized on read. Equal to the in-memory path by
-    * construction (same centroids, same layer membership, same edge
-    * rule) — AnnSpec pins the equality, so the persisted structure
-    * shares ann_hnsw's oracle.
+    * over a [[DescentStore]] of the index's nodes with the stored
+    * layers' edges, symmetrized ([[indexedStore]]). Equal to the
+    * in-memory path by construction (same centroids, same layer
+    * membership, same edge rule) — AnnSpec pins the equality, so the
+    * persisted structure shares ann_hnsw's oracle.
     */
   def hnswSearchIndexed(s: SparkSession, indexPath: String, hnswPath: String,
                         queries: DataFrame, k: Int = 10, beamU: Int = 8,
@@ -2269,25 +2262,48 @@ object Ann {
   private[operators] def hnswWalkIndexed(s: SparkSession, indexPath: String,
                                          hnswPath: String, queries: DataFrame,
                                          beamU: Int, beam: Int, rounds: Int,
-                                         stats: DescentStats): Descent = {
-    val e = graphNodes(s, indexPath).select(col("id"), col("vec"))
-    val all = hnswRead(s, hnswPath)
-    val root = new org.apache.hadoop.fs.Path(hnswPath)
-    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-    // both directions of each stored edge; an absent layer directory
-    // is an edge-less layer, an empty LocalRelation that the lookup
-    // reads with no job. The descent dedups each expansion itself.
-    def sym(layer: Int): DataFrame =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"layer=$layer")))
-        s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("src", LongType), StructField("dst", LongType))))
+                                         stats: DescentStats): Descent =
+    hnswWalk(indexedStore(s, indexPath, hnswPath), queries, beamU, beam, rounds, stats)
+
+  /** The store of a persisted index and hierarchy: [[graphNodes]] with
+    * both directions of each stored edge, and the enterpoint. Memoized
+    * per (indexPath, hnswPath) at a listing fingerprint of both
+    * directories ([[listing]]), so the first read after any
+    * `hnswBuild`, `hnswUpsert`, `hnswDelete` or `ivfIndexUpsert` write
+    * rebuilds it, and the stale one is dropped.
+    */
+  private def indexedStore(s: SparkSession, indexPath: String,
+                           hnswPath: String): DescentStore =
+    graft.ByproductCache.getOrComputeVersion(s.sparkContext.applicationId,
+      s"descentstore|index|$indexPath|$hnswPath", listing(s, indexPath, hnswPath)) {
+      val g = hnswRead(s, hnswPath)
+        .select(col("layer"), col("qid").as("src"), col("nn_id").as("dst"))
+      DescentStore.build(graphNodes(s, indexPath).select(col("id"), col("vec"),
+          col("cell"), monotonically_increasing_id().as("pos"), hnswLevel(col("id")).as("lvl")))
+        .withEdges(g.union(g.select(col("layer"), col("dst").as("src"), col("src").as("dst"))))
+    }
+
+  /** A driver-side fingerprint of the data files under `dirs`: the MD5
+    * of every file's path, length and modification time (hidden files,
+    * `_`- or `.`-prefixed, left out). A write to either directory
+    * changes it; no job runs.
+    */
+  private def listing(s: SparkSession, dirs: String*): String = {
+    val conf = s.sessionState.newHadoopConf()
+    val files = dirs.flatMap { d =>
+      val root = new org.apache.hadoop.fs.Path(d)
+      val fs = root.getFileSystem(conf)
+      if (!fs.exists(root)) Nil
       else {
-        val g = all.where(col("layer") === layer)
-          .select(col("qid").as("src"), col("nn_id").as("dst"))
-        g.union(g.select(col("dst").as("src"), col("src").as("dst")))
+        val it = fs.listFiles(root, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+          .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").toSeq
       }
-    hnswWalk(e, queries, hnswEnterpoint(e).collect().headOption.map(_.getLong(0)),
-      sym, sym(0), beamU, beam, rounds, stats)
+    }
+    val md = java.security.MessageDigest.getInstance("MD5")
+    files.sorted.foreach(f => md.update(f.getBytes("UTF-8")))
+    md.digest().map("%02x".format(_)).mkString
   }
 
   /** Persisted-hierarchy twin of [[hnswQuery]]: index + hierarchy

@@ -1,13 +1,12 @@
 package graft.operators
 
-import scala.collection.{immutable, mutable}
+import scala.collection.mutable
 
 import graft.Cut
-import graft.functions.VectorDistance
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, InSet, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import graft.functions.PairNumerics
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,17 +14,15 @@ import org.apache.spark.sql.types._
 /** GRAPH DESCENT WITH ITS STATE ON THE DRIVER. A beam walk's per-query
   * state (frontier, visited set, scores) is request-sized, so it lives
   * in driver memory, as hnswlib keeps its candidate queues in process
-  * (`searchKnn`, hnswlib_index.cc:28-46). Spark runs only the reads
-  * that touch graph- or corpus-sized data, two narrow jobs per round:
-  *   - (a) neighbour lookup: `edges.where(src ∈ frontier ids)`,
-  *     collected;
-  *   - (b) scoring: the corpus scanned with `id ∈ new ids` pushed into
-  *     the scan, each row exploded to the queries that asked for it
-  *     ([[Fanout]]) and scored by `VectorDistance.cosine` against that
-  *     query's vector, a plan literal of the caller's type.
+  * (`searchKnn`, hnswlib_index.cc:28-46). Spark runs only the reads of
+  * corpus-sized data: ONE job per beam round over the [[DescentStore]],
+  * on the buckets that own the round's new ids, with no query plan. It
+  * returns each new pair's score and each new id's edges, so the next
+  * hop expands its frontier from the driver's edge cache with no lookup
+  * job. The query vectors go to the executors once per search.
   * Dedup of each expansion, the beam cut, the visited set, the
   * per-query fixpoint stop and the round budgets are driver code over
-  * those results. Every score comes from the same Spark kernel and the
+  * those results. Every score is `VecCosine`'s, bit for bit, and the
   * cut orders exactly as `row_number() over (partition by qid order by
   * s desc, id)`, so the walk is the relational loop's, bit for bit.
   * Scores are deterministic, so no pair is scored twice:
@@ -35,61 +32,48 @@ import org.apache.spark.sql.types._
   * qid; a repeated qid runs as separate requests. Every collect is
   * bounded: the batch by [[Ann.MaxDescentQueries]], each job's rows by
   * [[Ann.MaxDescentRows]].
-  *
-  * @param corpus (id: bigint, vec) rows to score; read per round, so
-  *               pass the plain scan (a hash spread only adds an
-  *               exchange to a request-sized id lookup)
   */
-private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
+private[operators] final class Descent(store: DescentStore, reqs: DataFrame,
                                        stats: Ann.DescentStats) {
   import Descent._
 
   val rows: Array[Row] = Cut.request(reqs.where(col("qid").isNotNull),
     Ann.MaxDescentQueries, "Ann.MaxDescentQueries", "descent query batch")
   private val all = rows.indices
-  private val qvecs: Column = GraftColumnBridge.column(Literal.create(
-    rows.map(_.get(1)).toSeq, ArrayType(reqs.schema("qvec").dataType)))
+  /** The query vectors widened to double (null for a NULL qvec), sent
+    * to the executors once, with the first job.
+    */
+  private lazy val qvecs: Broadcast[Array[Array[Double]]] = {
+    val t = reqs.schema("qvec").dataType
+    require(t match { case ArrayType(FloatType | DoubleType, _) => true; case _ => false },
+      s"descent qvec must be array<float|double>, got ${t.sql}")
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(t)
+    val isFloat = PairNumerics.isFloatArray(t)
+    reqs.sparkSession.sparkContext.broadcast(rows.map(r => toCatalyst(r.get(1)) match {
+      case a: ArrayData => PairNumerics.widen(a, isFloat)
+      case _ => null
+    }))
+  }
   /** Every pair scored so far; None is a NULL score or an id the
     * corpus lacks — such an id is visited but never enters a beam.
     */
   private val scores = Array.fill(rows.length)(mutable.HashMap.empty[Long, Option[Double]])
   private val visited = Array.fill(rows.length)(mutable.LinkedHashSet.empty[Long])
   private val frontier = Array.fill(rows.length)(Array.empty[Long])
+  /** Each scored id's edges by layer, as its first hit brought them. */
+  private val edges = mutable.LongMap.empty[Array[Array[Long]]]
 
-  private def held(got: Array[Row]): Array[Row] = {
-    stats.peakRows = math.max(stats.peakRows, got.length)
-    got
-  }
-
-  /** `c ∈ ids` as an `InSet` over a `HashSet`, which the generated code
-    * reads as a reference of one class: an `In` of up to 10 literals
-    * (below Spark's InSet conversion threshold) is inlined, and a small
-    * Scala set's class (`Set1` … `Set4`) is named in the source, either
-    * way one new compiled class per distinct set.
+  /** Record one job's hits in the order given: a later hit of a pair
+    * overwrites an earlier one.
     */
-  private def among(c: String, ids: Seq[Long]): Column =
-    GraftColumnBridge.column(InSet(GraftColumnBridge.expression(col(c)),
-      immutable.HashSet.from[Any](ids)))
-
-  /** Job (b): score the rows of `keyed` (id, vec, `key`) once for each
-    * (key, query) pair in `wanted`; none when it is empty.
-    */
-  private def scoreJob(keyed: DataFrame, key: String,
-                       wanted: Seq[(Long, Int)]): Array[Row] = {
-    if (wanted.isEmpty) return Array.empty
-    val (keys, qs) = wanted.groupMap(_._1)(_._2).toSeq.unzip
-    val got = held(Cut.request(keyed.where(among(key, keys))
-        .select(col("id"), col("vec"), explode(GraftColumnBridge.column(
-          Fanout(GraftColumnBridge.expression(col(key).cast("long")), keys, qs))).as("qi"))
-        .select(col("qi"), col("id"),
-          VectorDistance.cosine(col("vec"), qvecs(col("qi"))).as("s")),
-      Ann.MaxDescentRows, "Ann.MaxDescentRows", "descent round"))
-    got.foreach { r =>
-      scores(r.getInt(0))(r.getLong(1)) =
-        if (r.isNullAt(2)) None else Some(r.getDouble(2))
+  private def record(hits: Array[DescentStore.Hit]): Array[DescentStore.Hit] = {
+    stats.peakRows = math.max(stats.peakRows, hits.length)
+    stats.pairsScored += hits.length
+    hits.foreach { h =>
+      scores(h.q)(h.id) = Option(h.s).map(_.doubleValue)
+      if (h.edges != null) edges(h.id) = h.edges
     }
-    stats.pairsScored += got.length
-    got
+    hits
   }
 
   /** Score every pair (q, id ∈ want(q)) of the queries `qs` that is
@@ -97,7 +81,7 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
     */
   private def score(want: Int => Iterable[Long], qs: Seq[Int]): Unit = {
     val fresh = for (q <- qs; id <- want(q).toSeq if !scores(q).contains(id)) yield id -> q
-    scoreJob(corpus, "id", fresh)
+    if (fresh.nonEmpty) record(store.byId(fresh.groupMap(_._1)(_._2), qvecs))
     fresh.foreach { case (id, q) => scores(q).getOrElseUpdate(id, None) }
   }
 
@@ -107,18 +91,19 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
       .sorted(beamOrder).take(width).map(_._1)
 
   /** IVF-cell entry: score every member of each query's probed cells
-    * in one job over the cell-assigned corpus. Returns the scored rows
-    * (query index, id, s), s NULL where the kernel gives none, in the
-    * order the job returned them.
+    * in one job over the store's cells. Returns the scored pairs in
+    * scan order, each row's queries in batch order.
     */
-  def scoreCells(cells: Int => Seq[Long],
-                 cents: Array[(Long, Array[Float])]): Array[Row] =
-    scoreJob(Ann.assignTo(corpus, cents), "cell", for (q <- all; c <- cells(q)) yield c -> q)
+  def scoreCells(cells: Int => Seq[Long]): Array[DescentStore.Hit] = {
+    val want = (for (q <- all; c <- cells(q)) yield c -> q).groupMap(_._1)(_._2)
+    if (want.isEmpty) Array.empty
+    else record(store.byCell(want, qvecs).sortBy(h => (h.pos, h.q)))
+  }
 
-  /** Each query's ids among scored rows (query index, id, s). */
-  def idsByQuery(scored: Array[Row]): Array[Seq[Long]] = {
+  /** Each query's ids among scored pairs. */
+  def idsByQuery(scored: Array[DescentStore.Hit]): Array[Seq[Long]] = {
     val ids = Array.fill(rows.length)(mutable.ArrayBuffer.empty[Long])
-    scored.foreach(r => ids(r.getInt(0)) += r.getLong(1))
+    scored.foreach(h => ids(h.q) += h.id)
     ids.map(_.toSeq)
   }
 
@@ -128,21 +113,16 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
     all.foreach { q => frontier(q) = cut(q, ids(q), width); visited(q) ++= frontier(q) }
   }
 
-  /** One beam round for the queries `qs` over `edges` (src, dst):
-    * expand each frontier by one hop (job a), score the new pairs
-    * (job b), cut to `width`. An edge-less layer finds no neighbours,
-    * scores nothing and re-cuts the frontier to itself. Returns the
-    * queries whose beam did not change.
+  /** One beam round for the queries `qs` over the store's edges of
+    * `layer`: expand each frontier by one hop from the edge cache, score
+    * the new pairs (one job), cut to `width`. An edge-less layer finds
+    * no neighbours, scores nothing and re-cuts the frontier to itself.
+    * Returns the queries whose beam did not change.
     */
-  def hop(edges: DataFrame, qs: Seq[Int], width: Int): Seq[Int] = {
-    val from = qs.flatMap(frontier(_)).distinct
-    val adj = if (from.isEmpty) Map.empty[Long, Seq[Long]]
-      else held(Cut.request(edges.where(among("src", from)).select("src", "dst"),
-        Ann.MaxDescentRows, "Ann.MaxDescentRows", "descent round"))
-        .toSeq.groupMap(_.getLong(0))(_.getLong(1))
+  def hop(layer: Int, qs: Seq[Int], width: Int): Seq[Int] = {
+    def out(id: Long): Iterator[Long] = edges.get(id).iterator.flatMap(_(layer))
     val expand = qs.map { q =>
-      q -> (frontier(q).iterator ++ frontier(q).iterator.flatMap(adj.getOrElse(_, Nil)))
-        .to(mutable.LinkedHashSet)
+      q -> (frontier(q).iterator ++ frontier(q).iterator.flatMap(out)).to(mutable.LinkedHashSet)
     }.toMap
     expand.foreach { case (q, e) => visited(q) ++= e }
     score(expand, qs)
@@ -164,13 +144,13 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
     * rounds it ran (an empty batch runs one, as the relational loop
     * did).
     */
-  def descend(edges: DataFrame, width: Int, rounds: Int,
+  def descend(width: Int, rounds: Int,
               budget: Int => Int = _ => Int.MaxValue): Unit = {
     var live: Seq[Int] = all
     var r = 0
     while (r < rounds && (r == 0 || live.exists(budget(_) > r))) {
       r += 1
-      val fixed = hop(edges, live.filter(budget(_) >= r), width).toSet
+      val fixed = hop(0, live.filter(budget(_) >= r), width).toSet
       live = live.filterNot(fixed)
     }
     stats.roundsRun = r
@@ -183,7 +163,7 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
       items: Int => Iterator[Seq[Any]]): DataFrame = {
     val out = new java.util.ArrayList[Row]()
     for (q <- order; it <- items(q)) out.add(Row.fromSeq(rows(q).get(0) +: it))
-    corpus.sparkSession.createDataFrame(out,
+    reqs.sparkSession.createDataFrame(out,
       StructType(reqs.schema("qid") +: fields))
   }
 
@@ -216,19 +196,18 @@ private[operators] final class Descent(corpus: DataFrame, reqs: DataFrame,
     }.select(Seq(col("qid"), col("rk"), col("nn_id"), round(col("s"), 4).as("score")) ++
       tail.map(t => col(t._1.name)): _*)
 
-  /** The rank-k cut of scored rows (query index, id, s) POOLED PER QID,
-    * as a `groupBy(qid)` with [[TopKAgg]] ranks them: one [[TopKHeap]]
-    * per qid keyed (−s, id), fed in row order, so ties, duplicate ids
+  /** The rank-k cut of scored pairs POOLED PER QID, as a
+    * `groupBy(qid)` with [[TopKAgg]] ranks them: one [[TopKHeap]] per
+    * qid keyed (−s, id), fed in pair order, so ties, duplicate ids
     * and repeated-qid requests rank as that aggregate ranks them. NULL
     * scores drop. Returns (qid, rk, nn_id, score 4dp) in (qid, rk)
     * order; nn_id and score are declared nullable, as the aggregate's
     * output declares them.
     */
-  def pooled(scored: Array[Row], k: Int): DataFrame = {
+  def pooled(scored: Array[DescentStore.Hit], k: Int): DataFrame = {
     val heaps = mutable.HashMap.empty[Any, TopKHeap]
-    for (r <- scored if !r.isNullAt(2))
-      heaps.getOrElseUpdate(rows(r.getInt(0)).get(0), new TopKHeap(k))
-        .insert(-r.getDouble(2), r.getLong(1))
+    for (h <- scored if h.s != null)
+      heaps.getOrElseUpdate(rows(h.q).get(0), new TopKHeap(k)).insert(-h.s, h.id)
     frame(Seq(StructField("rk", IntegerType, nullable = false),
         StructField("nn_id", LongType, nullable = true),
         StructField("s", DoubleType, nullable = true)),
@@ -259,31 +238,4 @@ private[operators] object Descent {
     val c = SQLOrderingUtil.compareDoubles(b._2, a._2)
     if (c != 0) c else java.lang.Long.compare(a._1, b._1)
   }
-}
-
-/** The queries that asked for a corpus row, by the row's key: key
-  * `keys(i)` maps to the query indices `targets(i)`, any other key to
-  * the empty array. The table rides in the plan as
-  * [[graft.functions.CentroidTopM]]'s centroids do and is hashed once
-  * per task.
-  */
-private[operators] case class Fanout(child: Expression, keys: Seq[Long],
-                                     targets: Seq[Seq[Int]])
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
-  override def prettyName: String = "fanout"
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-
-  @transient private lazy val index: Map[Long, ArrayData] =
-    keys.iterator.zip(targets.iterator.map(t => ArrayData.toArrayData(t.toArray))).toMap
-  @transient private lazy val none: ArrayData = ArrayData.toArrayData(Array.emptyIntArray)
-
-  override def eval(input: InternalRow): Any = {
-    val k = child.eval(input)
-    if (k == null) none else index.getOrElse(k.asInstanceOf[Long], none)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -113,8 +113,8 @@ object SearchApi {
     * The approximate legs run all their jobs while built, concurrently
     * (`Par.seq`; HNSW and HNSW_HIER share one build of the kNN graph,
     * [[graft.ByproductCache]]): for 8 requests over warm memos, IVF
-    * one scoring job, HNSW 7 and HNSW_HIER 11 (entry scoring, two
-    * narrow jobs per beam round) in the traced ann_search benchmark.
+    * one scoring job, HNSW at most 4 and HNSW_HIER at most 8 (entry
+    * scoring, then one job per beam round over the descent store).
     * Each returns a `LocalRelation`; the per-request `rk ≤ k` cut and
     * the (qid, rk) order are driver code, so an approximate-only
     * answer is one `LocalRelation` whose action runs no job. Only FLAT

@@ -18,6 +18,20 @@ class CutSpec extends SparkSuite {
     intercept[IllegalArgumentException](Cut.request(local, 1, "T.Max"))
   }
 
+  test("Cut.job runs one job, collects up to the bound and names it above") {
+    val rdd = spark.sparkContext.parallelize(0 until 40, 4)
+    def run(maxRows: Int, parts: Seq[Int] = 0 until 4) =
+      Cut.job(rdd, parts, maxRows, "T.Max", "probe")((p, it) => it.map(p -> _))
+    val (got, jobs, _) = JobWatch.observe(spark)(run(40))
+    assert(jobs == 1, s"ran $jobs jobs")
+    assert(got.map(_._2).sorted.toSeq == (0 until 40))
+    assert(got.forall { case (p, x) => x / 10 == p }, "partition index")
+    assert(run(10, Seq(2)).map(_._2).toSeq == (20 until 30))
+    val e = intercept[IllegalArgumentException](run(39))
+    assert(e.getMessage.contains("probe exceeds T.Max=39 rows; split it into smaller calls"),
+      e.getMessage)
+  }
+
   test("a descent batch above MaxDescentQueries fails loudly, naming it") {
     val q = spark.range(Ann.MaxDescentQueries + 1).select(col("id").as("qid"),
       array_repeat(lit(0.1f), 64).as("qvec"))

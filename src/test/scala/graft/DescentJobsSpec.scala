@@ -4,9 +4,9 @@ import graft.operators.Ann
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-/** Job budget of the driver-side graph descent: at most two jobs per
-  * beam round (neighbour lookup, scoring), a scoring plan without an
-  * exchange, and pinned totals for 8-query batches.
+/** Job budget of the driver-side graph descent: one job per beam
+  * round, every job a single stage (no shuffle dependency), and pinned
+  * totals for 8-query batches.
   */
 class DescentJobsSpec extends SparkSuite {
 
@@ -30,33 +30,44 @@ class DescentJobsSpec extends SparkSuite {
     Ann.hnswSearch(spark, sf, batch).collect()
   }
 
-  test("two jobs per beam round; the scoring plan has no exchange") {
+  test("one job per beam round; every descent job is a single stage") {
     warm()
-    def run(rounds: Int) = JobWatch.observe(spark) {
+    def run(rounds: Int) = JobWatch.stages(spark) {
       val stats = new Ann.DescentStats
       Ann.nswTraverse(spark, sf, batch, beam = 16, rounds = rounds,
         graphK = 8, stats = stats)
       stats.roundsRun
     }
-    val (r3, jobs3, plans) = run(3)
+    val (r3, jobs3, _) = run(3)
     val (r1, jobs1, _) = run(1)
     assert(r3 == 3 && r1 == 1, s"fixture converged early: ran $r3 of 3 rounds")
-    assert(jobs3 - jobs1 <= 4, s"3 rounds ran $jobs3 jobs, 1 round $jobs1")
-    assert(plans.nonEmpty)
-    plans.foreach(p => assert(!p.contains("Exchange"), s"descent plan shuffles:\n$p"))
+    assert(jobs3.size - jobs1.size <= 2, s"3 rounds ran ${jobs3.size} jobs, 1 round ${jobs1.size}")
+    assert(jobs3.size >= 4, s"entry + 3 rounds ran only ${jobs3.size} jobs")
+    assert(jobs3.forall(_ == 1), s"a descent job has a shuffle dependency: stages $jobs3")
   }
 
   /** Build + action jobs of an 8-query search, memos warm. The
     * relational loops ran 46 (nswSearch: 42 build + 4 action) and 66
-    * (hnswSearch: 62 + 4) on this fixture; the driver-side descent
-    * runs 8 and 12, all in the build (the answer is a LocalRelation).
+    * (hnswSearch: 62 + 4) on this fixture; the per-round DataFrames of
+    * the driver-side descent ran 8 and 12. Over the descent store they
+    * run 4 (the entry job, one per round) and 6 (the enterpoint's job,
+    * one per upper layer that finds new pairs, one per base round), and
+    * the persisted hierarchy runs as many as the in-memory one: its
+    * enterpoint comes with the store, not from a per-call job. Every
+    * answer is a LocalRelation, so the action runs none.
     */
-  test("8-query nswSearch and hnswSearch run at most half the jobs of the " +
-    "relational loops") {
+  test("8-query nswSearch, hnswSearch and hnswSearchIndexed job counts") {
     warm()
+    Ann.hnswIndexedQuery(spark, sf).collect()
+    val idx = IndexCache.dirFor(sf, "ivfidx").toString
+    val hp = Ann.hnswIndexedPath(spark, sf)
+    Ann.hnswSearchIndexed(spark, idx, hp, batch).collect()
     val (_, nsw, _) = JobWatch.observe(spark)(Ann.nswSearch(spark, sf, batch).collect())
     val (_, hnsw, _) = JobWatch.observe(spark)(Ann.hnswSearch(spark, sf, batch).collect())
-    assert(nsw <= 46 / 2, s"nswSearch ran $nsw jobs")
-    assert(hnsw <= 66 / 2, s"hnswSearch ran $hnsw jobs")
+    val (_, indexed, _) = JobWatch.observe(spark)(
+      Ann.hnswSearchIndexed(spark, idx, hp, batch).collect())
+    assert(nsw <= 4, s"nswSearch ran $nsw jobs")
+    assert(hnsw <= 6, s"hnswSearch ran $hnsw jobs")
+    assert(indexed <= 6, s"hnswSearchIndexed ran $indexed jobs")
   }
 }

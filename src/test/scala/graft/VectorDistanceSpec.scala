@@ -111,4 +111,46 @@ class VectorDistanceSpec extends SparkSuite {
       .select(VectorDistance.l2($"x", $"y")).head().getDouble(0)
     assert(interpreted == codegen)
   }
+
+  test("cosine: interpreted, generated and PairNumerics agree bit for bit") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    val r = new scala.util.Random(7)
+    def vec(n: Int) = Array.fill(n)(r.nextGaussian().toFloat)
+    val pairs: Seq[(Array[Float], Array[Float])] =
+      Seq.fill(20)((vec(64), vec(64))) ++ Seq(
+        (vec(64), Array.fill(64)(0f)),                        // zero norm
+        (Array.fill(8)(0f), Array.fill(8)(0f)),
+        (vec(64).updated(5, Float.NaN), vec(64)),             // NaN component
+        (vec(8), vec(8).updated(0, Float.PositiveInfinity)),
+        (vec(64), vec(3)),                                     // dimension mismatch
+        (Array.emptyFloatArray, Array.emptyFloatArray))
+    def data(v: Array[Float], asFloat: Boolean): ArrayData =
+      if (asFloat) ArrayData.toArrayData(v) else ArrayData.toArrayData(v.map(_.toDouble))
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case other => other
+    }
+    var nulls = 0
+    for (lf <- Seq(true, false); rf <- Seq(true, false)) {
+      def t(f: Boolean) = ArrayType(if (f) FloatType else DoubleType)
+      val e = graft.functions.VecCosine(BoundReference(0, t(lf), nullable = true),
+        BoundReference(1, t(rf), nullable = true))
+      val gen = GenerateUnsafeProjection.generate(Seq(e))
+      for ((x, y) <- pairs) {
+        val row = InternalRow(data(x, lf), data(y, rf))
+        val interpreted = e.eval(row)
+        val generated = { val o = gen(row); if (o.isNullAt(0)) null else o.getDouble(0) }
+        val direct = if (x.length != y.length) null else graft.functions.PairNumerics.cosine(
+          x.map(_.toDouble), y.map(_.toDouble), x.length)
+        assert(bits(interpreted) == bits(generated), s"($lf, $rf) ${x.toSeq} ${y.toSeq}")
+        assert(bits(interpreted) == bits(direct), s"($lf, $rf) ${x.toSeq} ${y.toSeq}")
+        if (interpreted == null) nulls += 1
+      }
+    }
+    assert(nulls == 4 * 4, "zero-norm and mismatched pairs must score NULL")
+  }
 }
