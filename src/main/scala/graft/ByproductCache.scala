@@ -2,15 +2,18 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 /** The engine's one memo, for deterministic BUILD BYPRODUCTS of a
   * session: checkpointed frames (the kNN graph, the dedup cluster
   * fixpoint, the verified-pair set, near-miss pools), the descent
   * stores (the corpus bucketed by id with its graph edges, a
-  * checkpointed RDD per dir, per (dir, graphK) and per persisted
-  * hierarchy) and driver-held trained constants (IVF centroids, PQ
-  * codebooks, PCA moments, quantizer ranges, the OPQ permutation, BPE
-  * merges). An operator that consumes one reuses what another query
-  * already built.
+  * checkpointed RDD per dir, two per (dir, graphK): the base graph,
+  * then the hierarchy, and one per persisted hierarchy) and
+  * driver-held trained constants (IVF centroids, PQ codebooks, PCA
+  * moments, quantizer ranges, the OPQ permutation, BPE merges). An
+  * operator that consumes one reuses what another query already
+  * built.
   *
   * THE REUSE RULE: a value may be memoized here only when it is a
   * deterministic function of its key (the source directory and the
@@ -34,11 +37,17 @@ import java.util.concurrent.ConcurrentHashMap
   * and are purged. A directory whose parquet is rewritten inside one
   * JVM keeps its memoized byproducts until `clear()` (IndexCache
   * likewise validates a directory once per JVM), except those keyed
-  * by a fingerprint of their files ([[getOrComputeVersion]]).
+  * by a fingerprint of their files ([[withVersion]]).
   */
 object ByproductCache {
   private final class Entry(build: => Any) {
     lazy val value: Any = build
+    // a versioned entry's running callers, whether a newer version
+    // replaced it, and whether its build finished; guarded by the
+    // object's lock
+    var users = 0
+    var retired = false
+    var built = false
   }
 
   private val cache = new ConcurrentHashMap[(String, String), Entry]()
@@ -64,24 +73,49 @@ object ByproductCache {
   def clear(): Unit = cache.clear()
 
   /** [[getOrCompute]] for a byproduct of files that can be rewritten
-    * inside one JVM: the key is `family` plus the files' `version` (a
-    * fingerprint the caller takes), and any entry of `family` at
-    * another version is dropped first. A rewrite is thus never served
-    * stale, and old versions do not pile up: a dropped value is freed
-    * once no running caller holds it.
+    * inside one JVM, held for the span of `use`: the key is `family`
+    * plus the files' `version` (a fingerprint the caller takes), and
+    * any entry of `family` at another version is dropped first. A
+    * rewrite is thus never served stale. A dropped value is passed to
+    * `release` once its last running caller returns (at once if it has
+    * none), so old versions neither pile up in executor storage nor
+    * vanish under a caller still reading them.
     */
-  def getOrComputeVersion[T](appId: String, family: String, version: String)(f: => T): T = {
-    val key = s"$family|$version"
-    cache.keySet.removeIf(k => k._1 == appId && k._2 != key && k._2.startsWith(s"$family|"))
-    getOrCompute(appId, key)(f)
+  def withVersion[T, R](appId: String, family: String, version: String)(
+      build: => T)(release: T => Unit)(use: T => R): R = {
+    purge(appId)
+    val k = (appId, s"$family|$version")
+    val (e, free) = synchronized {
+      val old = cache.entrySet.asScala.filter { x =>
+        x.getKey._1 == appId && x.getKey != k && x.getKey._2.startsWith(s"$family|")
+      }.toList
+      old.foreach { x => cache.remove(x.getKey); x.getValue.retired = true }
+      val e = cache.computeIfAbsent(k, _ => new Entry(build))
+      e.users += 1
+      (e, old.map(_.getValue).filter(o => o.users == 0 && o.built))
+    }
+    free.foreach(o => release(o.value.asInstanceOf[T]))
+    try {
+      val v = try e.value.asInstanceOf[T]
+        catch { case t: Throwable => cache.remove(k, e); throw t }
+      synchronized { e.built = true }
+      use(v)
+    } finally {
+      val last = synchronized { e.users -= 1; e.retired && e.users == 0 && e.built }
+      if (last) release(e.value.asInstanceOf[T])
+    }
   }
 
   def getOrCompute[T](appId: String, key: String)(f: => T): T = {
-    val it = cache.keySet.iterator
-    while (it.hasNext) if (it.next()._1 != appId) it.remove()
+    purge(appId)
     val k = (appId, key)
     val e = cache.computeIfAbsent(k, _ => new Entry(f))
     try e.value.asInstanceOf[T]
     catch { case t: Throwable => cache.remove(k, e); throw t }
+  }
+
+  private def purge(appId: String): Unit = {
+    val it = cache.keySet.iterator
+    while (it.hasNext) if (it.next()._1 != appId) it.remove()
   }
 }

@@ -1734,16 +1734,25 @@ object Ann {
         .withColumn("lvl", hnswLevel(col("id"))))
     }
 
-  /** `dir`'s corpus store with the symmetric edges of the in-memory
-    * hierarchy: [[nswEdges]] as layer 0, [[hnswLayerEdges]] as 1-4.
-    * Memoized per (dir, graphK).
+  /** `dir`'s corpus store with the symmetric base graph [[nswEdges]]
+    * as layer 0, what the NSW walks read. Memoized per (dir, graphK).
     */
-  private def graphStore(s: SparkSession, dir: String, graphK: Int): DescentStore =
+  private def nswStore(s: SparkSession, dir: String, graphK: Int): DescentStore =
     graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
       s"descentgraph|$dir|$graphK") {
-      corpusStore(s, dir).withEdges((0 until DescentStore.Layers).map { l =>
-        (if (l == 0) nswEdges(s, dir, graphK) else hnswLayerEdges(s, dir, l, graphK))
-          .select(lit(l).as("layer"), col("src"), col("dst"))
+      corpusStore(s, dir).withEdges(
+        nswEdges(s, dir, graphK).select(lit(0).as("layer"), col("src"), col("dst")))
+    }
+
+  /** [[nswStore]] with the in-memory hierarchy's upper layers
+    * ([[hnswLayerEdges]] as 1-4) added, so only hierarchy callers
+    * build them. Memoized per (dir, graphK).
+    */
+  private def hnswStore(s: SparkSession, dir: String, graphK: Int): DescentStore =
+    graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
+      s"descenthier|$dir|$graphK") {
+      nswStore(s, dir, graphK).withEdges((1 until DescentStore.Layers).map { l =>
+        hnswLayerEdges(s, dir, l, graphK).select(lit(l).as("layer"), col("src"), col("dst"))
       }.reduce(_ union _))
     }
 
@@ -1786,7 +1795,7 @@ object Ann {
                       beam: Int, rounds: Int, graphK: Int,
                       stats: DescentStats,
                       budget: Option[org.apache.spark.sql.Column] = None): Descent = {
-    val (d, scored) = nswStart(s, dir, graphStore(s, dir, graphK), queries,
+    val (d, scored) = nswStart(s, dir, nswStore(s, dir, graphK), queries,
       budget.toSeq, stats)
     val entry = d.idsByQuery(scored)
     d.enter(entry(_), beam)
@@ -1989,7 +1998,7 @@ object Ann {
                                       beam: Int, rounds: Int, graphK: Int,
                                       stats: DescentStats = new DescentStats)
       : Descent =
-    hnswWalk(graphStore(s, dir, graphK), queries, beamU, beam, rounds, stats)
+    hnswWalk(hnswStore(s, dir, graphK), queries, beamU, beam, rounds, stats)
 
   def hnswSearch(s: SparkSession, dir: String, queries: DataFrame,
                  k: Int = 10, beamU: Int = 8, beam: Int = 16,
@@ -2263,25 +2272,26 @@ object Ann {
                                          hnswPath: String, queries: DataFrame,
                                          beamU: Int, beam: Int, rounds: Int,
                                          stats: DescentStats): Descent =
-    hnswWalk(indexedStore(s, indexPath, hnswPath), queries, beamU, beam, rounds, stats)
+    graft.ByproductCache.withVersion(s.sparkContext.applicationId,
+      s"descentstore|index|$indexPath|$hnswPath", listing(s, indexPath, hnswPath))(
+      indexedStore(s, indexPath, hnswPath))(_.release())(
+      hnswWalk(_, queries, beamU, beam, rounds, stats))
 
   /** The store of a persisted index and hierarchy: [[graphNodes]] with
-    * both directions of each stored edge, and the enterpoint. Memoized
-    * per (indexPath, hnswPath) at a listing fingerprint of both
+    * both directions of each stored edge, and the enterpoint. Held per
+    * (indexPath, hnswPath) at a listing fingerprint of both
     * directories ([[listing]]), so the first read after any
     * `hnswBuild`, `hnswUpsert`, `hnswDelete` or `ivfIndexUpsert` write
-    * rebuilds it, and the stale one is dropped.
+    * rebuilds it, and the stale one is released once no walk reads it.
     */
   private def indexedStore(s: SparkSession, indexPath: String,
-                           hnswPath: String): DescentStore =
-    graft.ByproductCache.getOrComputeVersion(s.sparkContext.applicationId,
-      s"descentstore|index|$indexPath|$hnswPath", listing(s, indexPath, hnswPath)) {
-      val g = hnswRead(s, hnswPath)
-        .select(col("layer"), col("qid").as("src"), col("nn_id").as("dst"))
-      DescentStore.build(graphNodes(s, indexPath).select(col("id"), col("vec"),
-          col("cell"), monotonically_increasing_id().as("pos"), hnswLevel(col("id")).as("lvl")))
-        .withEdges(g.union(g.select(col("layer"), col("dst").as("src"), col("src").as("dst"))))
-    }
+                           hnswPath: String): DescentStore = {
+    val g = hnswRead(s, hnswPath)
+      .select(col("layer"), col("qid").as("src"), col("nn_id").as("dst"))
+    DescentStore.build(graphNodes(s, indexPath).select(col("id"), col("vec"),
+        col("cell"), monotonically_increasing_id().as("pos"), hnswLevel(col("id")).as("lvl")))
+      .withEdges(g.union(g.select(col("layer"), col("dst").as("src"), col("src").as("dst"))))
+  }
 
   /** A driver-side fingerprint of the data files under `dirs`: the MD5
     * of every file's path, length and modification time (hidden files,

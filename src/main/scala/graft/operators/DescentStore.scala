@@ -17,9 +17,11 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * (hnswlib_index.cc:28-46). The buckets are an RDD hash-partitioned by
   * id (partitioner kept), local-checkpointed (memory and disk, lineage
   * cut, so a read runs one stage) and materialized when built. Each
-  * bucket indexes its rows by id and by IVF cell, so a round's work is
-  * the size of its ids, not of the bucket, and it touches only the
-  * buckets that own them (REPOSE's partition-local expansion).
+  * bucket indexes its rows by id and by IVF cell, and a round touches
+  * only the buckets that own its ids (REPOSE's partition-local
+  * expansion). While a bucket is held in memory a round's work in it
+  * is the size of its ids; a bucket spilled to disk is one record, so
+  * each round that touches it reads the whole bucket back.
   *
   * A read is ONE `Cut.job` with no query plan ([[byId]], [[byCell]]).
   * It returns one [[Hit]] per scored (query, row) pair, and on an id's
@@ -41,20 +43,33 @@ private[operators] final class DescentStore private (
 
   private lazy val parts: RDD[(Bucket, Edges)] = edges match {
     case Some(e) => nodes.zipPartitions(e)((b, a) => Iterator(b.next() -> a.next()))
-    case None => nodes.map(_ -> mutable.LongMap.empty[Array[Array[Long]]])
+    case None => nodes.map(_ -> noEdges)
   }
 
   /** This store's buckets with the symmetric edges (layer, src, dst)
-    * of `layers`, bucketed by src under the same partitioner.
+    * of `layers` added to the ones it holds, bucketed by src under the
+    * same partitioner. The held edge arrays are shared, not copied.
     */
   def withEdges(layers: DataFrame): DescentStore = {
-    val e = layers.queryExecution.toRdd
+    val fresh = layers.queryExecution.toRdd
       .flatMap(r => if (r.anyNull) None else Some(r.getLong(1) -> (r.getInt(0), r.getLong(2))))
       .partitionBy(partitioner)
-      .mapPartitions(it => Iterator(edgesOf(it)), preservesPartitioning = true)
-      .localCheckpoint()
+    val e = (edges match {
+      case Some(held) => fresh.zipPartitions(held, preservesPartitioning = true)(
+        (it, h) => Iterator(edgesOf(it, h.next())))
+      case None => fresh.mapPartitions(it => Iterator(edgesOf(it, noEdges)),
+        preservesPartitioning = true)
+    }).localCheckpoint()
     e.count()
     new DescentStore(nodes, Some(e), entry)
+  }
+
+  /** Drop this store's buckets and edges from executor storage. Only
+    * for a store no caller reads any more, and none was derived from.
+    */
+  def release(): Unit = {
+    nodes.unpersist(blocking = false)
+    edges.foreach(_.unpersist(blocking = false))
   }
 
   /** Score, for each id of `want`, its row last in scan order against
@@ -179,11 +194,23 @@ private[operators] object DescentStore {
   /** One bucket's edges: each src id's sorted, distinct dsts by layer. */
   type Edges = mutable.LongMap[Array[Array[Long]]]
 
-  private def edgesOf(it: Iterator[(Long, (Int, Long))]): Edges = {
+  private val noEdges: Edges = mutable.LongMap.empty
+
+  /** `held` with the edges of `it` added to each src's layers. */
+  private def edgesOf(it: Iterator[(Long, (Int, Long))], held: Edges): Edges = {
     val by = mutable.LongMap.empty[Array[mutable.SortedSet[Long]]]
     for ((src, (layer, dst)) <- it)
       by.getOrElseUpdate(src, Array.fill(Layers)(mutable.SortedSet.empty[Long]))(layer) += dst
-    by.map { case (k, v) => k -> v.map(_.toArray) }
+    val out = held.clone()
+    for ((src, sets) <- by) {
+      val h = held.getOrElse(src, null)
+      out(src) = Array.tabulate(Layers) { l =>
+        if (h == null) sets(l).toArray
+        else if (sets(l).isEmpty) h(l)
+        else (sets(l) ++= h(l)).toArray
+      }
+    }
+    out
   }
 
   /** Scores one bucket's rows, widening a float vector into one buffer. */

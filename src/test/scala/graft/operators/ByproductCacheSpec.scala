@@ -100,6 +100,36 @@ class ByproductCacheSpec extends SparkSuite {
     assert(ByproductCache.getOrCompute(appId, key)("again") == "built")
   }
 
+  test("withVersion builds each version once and releases a replaced one " +
+    "once its last caller returns") {
+    val fam = fresh("version")
+    val builds = new AtomicInteger
+    val released = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def at(v: String)(use: String => Unit): Unit =
+      ByproductCache.withVersion(appId, fam, v)(
+        { builds.incrementAndGet(); s"value-$v" })(released.add(_): Unit)(use)
+    def gone = released.toArray.toSeq
+    val inside = new CountDownLatch(1)
+    val leave = new CountDownLatch(1)
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val reader = pool.submit(call(at("1") { _ =>
+        inside.countDown(); leave.await(30, TimeUnit.SECONDS)
+      }))
+      assert(inside.await(30, TimeUnit.SECONDS))
+      at("2")(v => assert(v == "value-2"))
+      at("2")(v => assert(v == "value-2"))
+      assert(builds.get == 2)
+      assert(gone.isEmpty, "released a version a caller still reads")
+      leave.countDown()
+      reader.get(30, TimeUnit.SECONDS)
+      assert(gone == Seq("value-1"))
+      at("3")(_ => ())
+      assert(gone == Seq("value-1", "value-2"), "a replaced idle version was kept")
+      assert(!ByproductCache.cached(appId, s"$fam|2") && ByproductCache.cached(appId, s"$fam|3"))
+    } finally { leave.countDown(); pool.shutdownNow() }
+  }
+
   test("clear() drops trained constants with the frames") {
     val a = Ann.cachedCentroids(spark, sf)
     assert(Ann.cachedCentroids(spark, sf) eq a)
