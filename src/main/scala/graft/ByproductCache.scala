@@ -24,8 +24,8 @@ import scala.jdk.CollectionConverters._
   * [[Entry]]; the build runs in the entry's `lazy val`, outside every
   * map lock. Racing callers of one key wait for that single build,
   * callers of other keys never block on it, and a build may read
-  * other keys (nesting: opqPerm → moments, nswEdges → knnGraph →
-  * centroids) — which a build inside one map's `computeIfAbsent`
+  * other keys (nesting: opqPerm → moments, hnswStore → nswStore →
+  * corpusStore → centroids) — which a build inside one map's `computeIfAbsent`
   * could not (Java 17 throws "Recursive update"). A build that throws
   * is dropped, so the next call builds again. One condition: a build
   * must not wait on another thread (e.g. a `Par.seq` leg) that asks

@@ -13,7 +13,7 @@ package graft
   * its leg's DataFrame, consumed in the caller's original order), only
   * the wall-clock of the eager build shrinks.
   *
-  * Legs that share a memoized byproduct (the kNN graph, the IVF
+  * Legs that share a memoized byproduct (the graph store, the IVF
   * centroids) share ONE build: [[graft.ByproductCache]] builds each
   * key once, and a leg asking for a key another leg is building waits
   * for that build. A memo build must therefore never wait on a leg

@@ -256,12 +256,13 @@ object Ann {
     * (one cell = one file, not one cell = width shards). Cell size
     * is bounded ~200 by the seeding, so the per-task write is flat
     * and the added exchange carries what the write was already
-    * spilling through the committer.
+    * spilling through the committer. Graph layers pass `keys` (layer,
+    * cell): one file per (layer, cell) partition.
     */
-  private[operators] def writeCellPartitioned(df: DataFrame,
-                                              path: String): Unit =
-    df.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+  private[operators] def writeCellPartitioned(df: DataFrame, path: String,
+                                              keys: Seq[String] = Seq("cell")): Unit =
+    df.repartition(keys.map(col): _*)
+      .write.mode("overwrite").partitionBy(keys: _*).parquet(path)
 
   // -------------------------------------------- planner statistics
 
@@ -698,52 +699,48 @@ object Ann {
 
   /** CORPUS-WIDE kNN GRAPH — every vector's k nearest neighbors
     * (self excluded), the structure near-dup mining, hard-negative
-    * selection, and graph-based label propagation all start from.
-    * This is the all-to-all ANN pattern at 100 TB shape: candidates
-    * are BLOCKED BY IVF CELL (each node only scores against its
-    * nprobe probed cells' members — never N²), the per-node heap
-    * keeps the shuffle at N·k, and cell cardinality grows with the
-    * corpus so per-cell work stays bounded. Same cached centroids as
-    * `ann_ivf`, so graph edges agree with individual index queries.
+    * selection, and graph-based label propagation all start from:
+    * layer 0 of [[hnswLayerEdges]], so its edges are the ones the
+    * descents walk. This is the all-to-all ANN pattern at 100 TB
+    * shape: candidates are BLOCKED BY IVF CELL ([[kNNEdges]]).
     *
-    * Memoized per (applicationId, dir, k, nprobe): the graph is a
-    * deterministic byproduct consumed by five registry operators
-    * (the graph itself, mutual pairs, embed clusters, ann_nsw, the
-    * routed API's HNSW leg) — checkpoint-backed, so caching the
-    * reference spares each consumer the build.
+    * Memoized per (applicationId, dir, k): the graph is a
+    * deterministic byproduct consumed by the registry's k = 5
+    * operators (the graph itself, mutual pairs, embed clusters and
+    * the graph analytics over them) — checkpoint-backed, so caching
+    * the reference spares each consumer the build. The descents do
+    * not read it: their stores take layer 0 at k = 8 straight from
+    * [[hnswLayerEdges]].
     */
-  def knnGraph(s: SparkSession, dir: String, k: Int = 5,
-               nprobe: Int = 2): DataFrame =
+  def knnGraph(s: SparkSession, dir: String, k: Int = 5): DataFrame =
     graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
-      s"knngraph|$dir|$k|$nprobe") {
-      knnGraphUncached(s, dir, k, nprobe).localCheckpoint(true)
+      s"knngraph|$dir|$k") {
+      hnswLayerEdges(s, dir, 0, k).localCheckpoint(true)
     }
 
-  /** The symmetric base-graph edges (src, dst) every NSW and in-memory
-    * HNSW descent walks: [[knnGraph]] plus its reverse, distinct,
-    * memoized per (dir, graphK).
+  /** THE kNN-EDGE RULE, the one place a graph edge is decided: each of
+    * `nodes`' k nearest `members` by exact cosine (self excluded),
+    * among the members of its `nprobe` nearest cells under `cents`, on
+    * the per-node (−s, id) heap of [[topKPerQuery]] (a NaN score ranks
+    * last). Candidates are BLOCKED BY IVF CELL — each node scores only
+    * its probed cells' members, never N² — and the per-node heap keeps
+    * the shuffle at N·k. In-memory graphs pass the corpus with its
+    * cells under the cached centroids ([[hnswLayerEdges]]), persisted
+    * ones the index's nodes and stored centroids ([[storedLayer]]).
+    * Edges come out one direction; [[DescentStore.withEdges]] adds the
+    * reverse.
+    *
+    * @param nodes   (id, vec) whose edges to compute
+    * @param members (id, vec, cell) the candidate neighbours
+    * @return (qid, rk, nn_id, score)
     */
-  private[graft] def nswEdges(s: SparkSession, dir: String,
-                              graphK: Int): DataFrame =
-    graft.ByproductCache.getOrCompute(
-      s.sparkContext.applicationId, s"nswedges|$dir|$graphK") {
-      val g = knnGraph(s, dir, graphK)
-        .select(col("qid").as("src"), col("nn_id").as("dst"))
-      g.union(g.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint(true)
-    }
-
-  private def knnGraphUncached(s: SparkSession, dir: String, k: Int,
-                               nprobe: Int): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = cachedCentroids(s, dir)
-    val assigned = assignTo(e, cents)
-    val probes = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-        explode(centroidTopM(col("embedding"), cents, nprobe)).as("p"))
+  private def kNNEdges(nodes: DataFrame, members: DataFrame,
+                       cents: Array[(Long, Array[Float])], nprobe: Int,
+                       k: Int): DataFrame = {
+    val probes = nodes.select(col("id").as("qid"), col("vec").as("qvec"),
+        explode(centroidTopM(col("vec"), cents, nprobe)).as("p"))
       .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-    val scored = assigned.join(probes, "cell")
+    val scored = members.select("id", "vec", "cell").join(probes, "cell")
       .where(col("id") =!= col("qid"))
       .select(col("qid"),
         (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
@@ -1418,79 +1415,67 @@ object Ann {
     s.read.parquet(indexPath)
       .select(col("id"), col("vec"), col("cell").cast("long").as("cell"))
 
-  /** kNN edges for `nodes` against the CURRENT index: probe cells
-    * from the stored centroids (partition-pruned member read), exact
-    * cosine, per-node top-k heap — [[knnGraph]]'s plan over the
-    * persisted layout.
-    */
-  private def graphEdgesFor(s: SparkSession, indexPath: String,
-                            nodes: DataFrame, k: Int,
-                            nprobe: Int): DataFrame = {
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(indexPath)).select(col("cell"), col("cvec")))
-    val probes = nodes.select(col("id").as("qid"), col("vec").as("qvec"),
-        explode(centroidTopM(col("vec"), cents, nprobe)).as("p"))
-      .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-    val scored = graphNodes(s, indexPath).join(probes, "cell")
-      .where(col("id") =!= col("qid"))
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    topKPerQuery(scored, k)
-  }
-
-  /** Persist the kNN graph of an IVF index, PARTITIONED BY EACH
-    * NODE'S OWN CELL — the layout that makes maintenance churn-LOCAL:
-    * a node's edges change only when a cell it probes is touched, and
-    * the nodes probing a cell are (by construction of the probe
-    * ranking) concentrated in that cell and its neighbors, so the
-    * affected rows cluster in few partitions. A qid-hash layout would
-    * scatter any affected set across every partition.
+  /** Persist the kNN graph of an IVF index: the persisted hierarchy
+    * ([[hnswBuild]]) restricted to layer 0, at k = 5. It is
+    * PARTITIONED BY (layer, EACH NODE'S OWN CELL) — the layout that
+    * makes maintenance churn-LOCAL: a node's edges change only when a
+    * cell it probes is touched, and the nodes probing a cell are (by
+    * construction of the probe ranking) concentrated in that cell and
+    * its neighbors, so the affected rows cluster in few partitions. A
+    * qid-hash layout would scatter any affected set across every
+    * partition.
     */
   def knnGraphBuild(s: SparkSession, indexPath: String, graphPath: String,
-                    k: Int = 5, nprobe: Int = 2): Unit = {
-    val nodes = graphNodes(s, indexPath)
-    writeCellPartitioned(graphEdgesFor(s, indexPath, nodes, k, nprobe)
-      .join(nodes.select(col("id").as("qid"), col("cell")), "qid"), graphPath)
-  }
+                    k: Int = 5): Unit =
+    buildLayers(s, indexPath, graphPath, Seq(0), k)
 
   def knnGraphRead(s: SparkSession, graphPath: String): DataFrame =
     s.read.parquet(graphPath).select("qid", "rk", "nn_id", "score")
 
-  /** INCREMENTAL GRAPH MAINTENANCE under vector upserts — provably
-    * equal to a full rebuild. A node's candidate set is exactly the
-    * membership of its (centroid-fixed, hence immutable) probe
-    * cells, so an upsert batch can change a node's edge list only if
-    * (a) the node itself was upserted, or (b) one of its probe cells
-    * is TOUCHED — gained or lost a member (the moved id's old and
-    * new cells). The affected set is therefore {upserted ids} ∪
-    * {nodes probing a touched cell}; every other node's candidates —
-    * and so its top-k — are untouched. Recompute edges for the
-    * affected nodes only (partition-pruned member reads), then
-    * dynamic-partition-overwrite only the partitions holding an
-    * affected node's rows (new cell + old cell of moved nodes),
-    * carrying unaffected co-partitioned rows; partitions the
-    * replacement emptied are deleted (the publishTouchedCells
-    * discipline). Work scales with churn locality (touched cells ×
-    * their probers), never with graph size.
-    *
-    * CRASH WINDOW, CLOSED BY AN INTENT MARKER: the index upsert and
-    * the graph publish are separate steps, and a crash between them
-    * leaves the graph stale against the updated index — re-running
-    * the same batch would NOT repair it by itself, because the moved
-    * ids' old cells are no longer observable from the index, so
-    * their probers would be missed. The pre-upsert `oldCells` are
-    * therefore recorded DURABLY (graphPath + "_intent") before the
-    * index is touched and deleted only after the graph publish
-    * completes. A surviving marker means a prior attempt died inside
-    * the window: its recorded cells are merged into this run's
-    * touched set, restoring exactly the probe-cell visibility the
-    * index lost — replay becomes a complete repair, and a marker
-    * surviving a COMPLETED publish only adds already-clean cells to
-    * the affected set (idempotent extra work). [[knnGraphBuild]]
-    * remains a valid (if maximal) recovery, no longer the only one.
+  /** Upsert `updates` (id, vec) into the index and repair the kNN graph
+    * ([[maintainLayers]] over layer 0).
     */
+  def knnGraphUpsert(s: SparkSession, indexPath: String, graphPath: String,
+                     updates: DataFrame, k: Int = 5): Unit =
+    maintainLayers(s, indexPath, graphPath, updates, Seq(0), k, delete = false)
+
+  /** Delete `ids` (id) from the index and the kNN graph
+    * ([[maintainLayers]] over layer 0).
+    */
+  def knnGraphDelete(s: SparkSession, indexPath: String, graphPath: String,
+                     ids: DataFrame, k: Int = 5): Unit =
+    maintainLayers(s, indexPath, graphPath, ids, Seq(0), k, delete = true)
+
+  /** The stored centroids of a persisted IVF index. */
+  private def storedCentroids(s: SparkSession,
+                              indexPath: String): Array[(Long, Array[Float])] =
+    collectCentroids(s.read.parquet(centroidsPath(indexPath)))
+
+  /** Layer `l`'s [[kNNEdges]] of `nodes` (id, vec, cell — layer
+    * members) among the layer's members of `all` (the index's
+    * [[graphNodes]]), each row with its node's cell: the stored layout
+    * (layer, qid, rk, nn_id, score, cell).
+    */
+  private def storedLayer(nodes: DataFrame, all: DataFrame,
+                          cents: Array[(Long, Array[Float])], l: Int,
+                          k: Int): DataFrame =
+    kNNEdges(nodes, inLayer(all, l), cents, hnswNprobe(l, cents.length), k)
+      .join(nodes.select(col("id").as("qid"), col("cell")), "qid")
+      .select(lit(l).as("layer"), col("qid"), col("rk"), col("nn_id"),
+        col("score"), col("cell"))
+
+  /** Write `layers` of an IVF index's graph at `path`, partitioned by
+    * (layer, cell) through [[writeCellPartitioned]]'s repartition, so
+    * each partition is one file.
+    */
+  private def buildLayers(s: SparkSession, indexPath: String, path: String,
+                          layers: Seq[Int], k: Int): Unit = {
+    val all = graphNodes(s, indexPath)
+    val cents = storedCentroids(s, indexPath)
+    writeCellPartitioned(layers.map(l => storedLayer(inLayer(all, l), all, cents, l, k))
+      .reduce(_ unionByName _), path, Seq("layer", "cell"))
+  }
+
   /** Read a surviving intent marker: (recorded cells, recorded ids).
     * The ids column is the r9-advice completion of the protocol:
     * cells alone cannot reconstruct a crashed batch's affected set —
@@ -1530,152 +1515,140 @@ object Ann {
       .coalesce(1).write.mode("overwrite").parquet(intentPath.toString)
   }
 
-  def knnGraphUpsert(s: SparkSession, indexPath: String, graphPath: String,
-                     updates: DataFrame, k: Int = 5,
-                     nprobe: Int = 2): Unit = {
+  /** INCREMENTAL GRAPH MAINTENANCE under vector upserts and deletes,
+    * for every layer of `layers` under ONE intent marker — provably
+    * equal to a full rebuild ([[buildLayers]]). A layer-l node's
+    * candidate set is exactly the layer-l membership of its
+    * (centroid-fixed, hence immutable) probe cells, and level
+    * membership is a pure function of id, so a batch can change a
+    * node's edge list only if (a) the node itself was upserted or
+    * deleted, or (b) one of its probe cells at that layer's width is
+    * TOUCHED — gained or lost a member (a written id's old and new
+    * cells). The affected set per layer is therefore {batch ids} ∪
+    * {layer nodes probing a touched cell}; every other node's
+    * candidates — and so its top-k — are untouched. Recompute edges
+    * for the live affected nodes only, drop the rows of dead ones
+    * (a lost neighbour is replaced from the cell's survivors), then
+    * dynamic-partition-overwrite only the (layer, cell) partitions
+    * holding an affected node's rows (new cell + old cell of moved
+    * nodes), carrying unaffected co-partitioned rows; partitions the
+    * replacement emptied are deleted ([[publishLayers]]). Work scales
+    * with churn locality (touched cells × their probers), never with
+    * graph size. Upsert and delete differ only in the index write
+    * ([[ivfIndexUpsert]] or [[ivfIndexDelete]]) and in a delete of ids
+    * the index lacks, which has nothing to repair.
+    *
+    * CRASH WINDOW, CLOSED BY AN INTENT MARKER: the index write and the
+    * graph publish are separate steps, and a crash between them
+    * leaves the graph stale against the updated index — re-running
+    * the same batch would NOT repair it by itself, because the moved
+    * or deleted ids' old cells are no longer observable from the
+    * index, so their probers would be missed. The pre-write cells and
+    * the batch ids are therefore recorded DURABLY (path + "_intent")
+    * before the index is touched and deleted only after the publish
+    * completes. A surviving marker means a prior attempt died inside
+    * the window: its recorded cells and ids are merged into this
+    * run's repair scope, restoring exactly the probe-cell visibility
+    * the index lost — replay becomes a complete repair, and a marker
+    * surviving a COMPLETED publish only adds already-clean cells to
+    * the affected set (idempotent extra work). A rebuild remains a
+    * valid (if maximal) recovery, no longer the only one.
+    *
+    * @param batch (id, vec) to upsert, or (id) to delete
+    */
+  private def maintainLayers(s: SparkSession, indexPath: String, path: String,
+                             batch: DataFrame, layers: Seq[Int], k: Int,
+                             delete: Boolean): Unit = {
     import s.implicits._
-    val intentPath = new org.apache.hadoop.fs.Path(graphPath + "_intent")
+    val intentPath = new org.apache.hadoop.fs.Path(path + "_intent")
     val fs = intentPath.getFileSystem(s.sessionState.newHadoopConf())
-    // a surviving marker = a prior run crashed after its index upsert
-    // but before its graph publish; its cells are invisible in the
-    // index now and its ids' edges are suspect — carry BOTH into this
-    // run's repair scope
+    // a surviving marker = a prior run crashed after its index write
+    // but before its publish; its cells are invisible in the index now
+    // and its ids' edges are suspect — carry BOTH into this run's
+    // repair scope
     val (pendingCells, pendingIds) = readIntent(s, fs, intentPath)
-    val batchIds = updates.select("id").distinct().as[Long].collect()
+    val batchIds = batch.select("id").distinct().as[Long].collect()
     val allIds = (batchIds ++ pendingIds).distinct
     val ids = broadcast(allIds.toSeq.toDF("id"))
-    val oldCells = (s.read.parquet(indexPath).join(ids, "id")
+    def cellsOfIds(): Array[Long] = s.read.parquet(indexPath).join(ids, "id")
       .select(col("cell").cast("long").as("cell")).distinct()
-      .collect().map(_.getLong(0)) ++ pendingCells).distinct
+      .collect().map(_.getLong(0))
+    val oldCells = (cellsOfIds() ++ pendingCells).distinct
+    if (delete && oldCells.isEmpty) return
     // record intent BEFORE the index changes (torn marker without
     // _SUCCESS reads as absent — and then the index is still
     // untouched, so a plain re-run recomputes everything correctly)
     writeIntent(s, intentPath, oldCells, allIds)
-    ivfIndexUpsert(s, indexPath, updates)
-    val newCells = s.read.parquet(indexPath).join(ids, "id")
-      .select(col("cell").cast("long").as("cell")).distinct()
-      .collect().map(_.getLong(0))
-    val touched = (oldCells ++ newCells).distinct
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(indexPath)).select(col("cell"), col("cvec")))
-    val nodes = graphNodes(s, indexPath)
-    // probe sets are a cheap per-row projection over literal
-    // centroids — no shuffle; the isin filter keeps only probers of
-    // touched cells
-    val probers = nodes.select(col("id"),
-        explode(centroidTopM(col("vec"), cents, nprobe)).as("p"))
-      .where(col("p.cell").isin(touched.toIndexedSeq: _*))
-      .select("id").distinct()
-    val affectedIds = probers.unionByName(ids.select("id")).distinct()
-      .localCheckpoint(true)
-    val affected = nodes.join(broadcast(affectedIds), Seq("id"), "left_semi")
-    val recomputed = graphEdgesFor(s, indexPath, affected, k, nprobe)
-      .join(nodes.select(col("id").as("qid"), col("cell")), "qid")
-      .select(col("qid"), col("rk"), col("nn_id"), col("score"),
-        col("cell").cast("long").as("cell"))
-    // partitions to rewrite: cells now holding an affected node +
-    // old cells of moved nodes (whose stale rows must drop)
-    val affCells = (affected.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)) ++ oldCells).distinct
-    val keep = s.read.parquet(graphPath)
-      .where(col("cell").isin(affCells.toIndexedSeq: _*))
-      .join(broadcast(affectedIds.select(col("id").as("qid"))),
-        Seq("qid"), "left_anti")
-      .select(col("qid"), col("rk"), col("nn_id"), col("score"),
-        col("cell").cast("long").as("cell"))
+    // the index write applies ONLY to this batch's ids — marker ids
+    // from a crashed upsert are live nodes to re-resolve, not deletes
+    if (delete) ivfIndexDelete(s, indexPath, broadcast(batch.select("id").distinct()))
+    else ivfIndexUpsert(s, indexPath, batch)
+    val touched = (oldCells ++ cellsOfIds()).distinct
+    val cents = storedCentroids(s, indexPath)
+    val all = graphNodes(s, indexPath)
+    val perLayer = layers.map { l =>
+      val lnodes = inLayer(all, l)
+      // probe sets are a cheap per-row projection over literal
+      // centroids — no shuffle; the isin filter keeps only probers of
+      // touched cells
+      val probers = lnodes.select(col("id"),
+          explode(centroidTopM(col("vec"), cents, hnswNprobe(l, cents.length))).as("p"))
+        .where(col("p.cell").isin(touched.toIndexedSeq: _*))
+        .select("id").distinct()
+      // every batch/marker id enters directly (NOT via an lnodes
+      // semi-join): a dead id has no lnodes row but its stale graph
+      // rows must still drop through the keep anti-join below
+      val affectedIds = probers.unionByName(ids.select("id"))
+        .distinct().localCheckpoint(true)
+      val affected = lnodes.join(broadcast(affectedIds), Seq("id"), "left_semi")
+      // partitions to rewrite: cells now holding an affected node +
+      // old cells of moved or deleted nodes (whose stale rows must drop)
+      val affCells = (affected.select(col("cell")).distinct()
+        .collect().map(_.getLong(0)) ++ oldCells).distinct
+      val keep = s.read.parquet(path)
+        .where(col("layer") === l && col("cell").isin(affCells.toIndexedSeq: _*))
+        .join(broadcast(affectedIds.select(col("id").as("qid"))),
+          Seq("qid"), "left_anti")
+        .select(lit(l).as("layer"), col("qid"), col("rk"), col("nn_id"),
+          col("score"), col("cell").cast("long").as("cell"))
+      (keep.unionByName(storedLayer(affected, all, cents, l, k)),
+        affCells.map(c => (l, c)))
+    }
     // same self-overwrite discipline as publishTouchedCells: the
     // replacement reads files the dynamic overwrite deletes
-    val replacement = keep.unionByName(recomputed).localCheckpoint(true)
-    // writer-scoped overwrite mode (the AggTable r10-advice fix):
-    // a session-global flip races with concurrent writers
-    replacement.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(graphPath)
-    // a cell every node moved out of would keep stale rows: dynamic
-    // overwrite only replaces partitions present in the written data
-    val written = replacement.select("cell").distinct().collect()
-      .map(_.getLong(0)).toSet
-    affCells.filterNot(written).foreach { c =>
-      val dir = new org.apache.hadoop.fs.Path(graphPath, s"cell=$c")
-      fs.delete(dir, true)
-    }
+    publishLayers(s, path, perLayer.map(_._1).reduce(_ unionByName _)
+      .localCheckpoint(true), perLayer.flatMap(_._2), fs)
     // publish complete — retire the marker (crash before this line
-    // re-runs the repair with the recorded cells, idempotently)
+    // re-runs the repair with the recorded cells and ids, idempotently)
     fs.delete(intentPath, true)
   }
 
-  /** DELETE ids from index AND graph — [[knnGraphUpsert]]'s twin for
-    * tombstones, with the same intent-marker crash protocol: the
-    * deleted ids' cells are recorded durably before
-    * [[ivfIndexDelete]] runs (afterwards they are unobservable from
-    * the index), the cells' remaining probers get their edges
-    * recomputed (a lost neighbor must be replaced from the cell's
-    * survivors), and the deleted nodes' own rows drop. Work scales
-    * with touched cells × their probers — churn locality, never
-    * graph size.
+  /** Dynamic-partition-overwrite publish + emptied-partition GC for
+    * the (layer, cell) layout.
     */
-  def knnGraphDelete(s: SparkSession, indexPath: String, graphPath: String,
-                     ids: DataFrame, k: Int = 5,
-                     nprobe: Int = 2): Unit = {
-    import s.implicits._
-    val delIds = broadcast(ids.select("id").distinct())
-    val intentPath = new org.apache.hadoop.fs.Path(graphPath + "_intent")
-    val fs = intentPath.getFileSystem(s.sessionState.newHadoopConf())
-    val (pendingCells, pendingIds) = readIntent(s, fs, intentPath)
-    val batchIds = ids.select("id").distinct().as[Long].collect()
-    val allIds = (batchIds ++ pendingIds).distinct
-    val allIdsDf = broadcast(allIds.toSeq.toDF("id"))
-    val oldCells = (s.read.parquet(indexPath).join(allIdsDf, "id")
-      .select(col("cell").cast("long").as("cell")).distinct()
-      .collect().map(_.getLong(0)) ++ pendingCells).distinct
-    if (oldCells.isEmpty) return
-    writeIntent(s, intentPath, oldCells, allIds)
-    // the index delete applies ONLY to this batch's ids — marker ids
-    // from a crashed UPSERT are live nodes to re-resolve, not deletes
-    ivfIndexDelete(s, indexPath, delIds)
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(indexPath)).select(col("cell"), col("cvec")))
-    val nodes = graphNodes(s, indexPath)
-    val probers = nodes.select(col("id"),
-        explode(centroidTopM(col("vec"), cents, nprobe)).as("p"))
-      .where(col("p.cell").isin(oldCells.toIndexedSeq: _*))
-      .select("id").distinct()
-    // suspect set = probers of touched cells ∪ every batch/marker id:
-    // live members recompute, dead members' rows drop (the anti-join)
-    val gone = probers.unionByName(allIdsDf.select("id"))
-      .distinct().localCheckpoint(true)
-    val affected = nodes.join(broadcast(gone), Seq("id"), "left_semi")
-    val recomputed = graphEdgesFor(s, indexPath, affected, k, nprobe)
-      .join(nodes.select(col("id").as("qid"), col("cell")), "qid")
-      .select(col("qid"), col("rk"), col("nn_id"), col("score"),
-        col("cell").cast("long").as("cell"))
-    val affCells = (affected.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)) ++ oldCells).distinct
-    val keep = s.read.parquet(graphPath)
-      .where(col("cell").isin(affCells.toIndexedSeq: _*))
-      .join(broadcast(gone.select(col("id").as("qid"))),
-        Seq("qid"), "left_anti")
-      .select(col("qid"), col("rk"), col("nn_id"), col("score"),
-        col("cell").cast("long").as("cell"))
-    val replacement = keep.unionByName(recomputed).localCheckpoint(true)
+  private def publishLayers(s: SparkSession, path: String,
+                            replacement: DataFrame,
+                            affPairs: Seq[(Int, Long)],
+                            fs: org.apache.hadoop.fs.FileSystem): Unit = {
     // writer-scoped overwrite mode (the AggTable r10-advice fix):
     // a session-global flip races with concurrent writers
     replacement.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(graphPath)
-    val written = replacement.select("cell").distinct().collect()
-      .map(_.getLong(0)).toSet
-    affCells.filterNot(written).foreach { c =>
-      val dir = new org.apache.hadoop.fs.Path(graphPath, s"cell=$c")
-      fs.delete(dir, true)
+      .partitionBy("layer", "cell").parquet(path)
+    // a partition every node moved out of would keep stale rows:
+    // dynamic overwrite only replaces partitions present in the data
+    val written = replacement.select("layer", "cell").distinct().collect()
+      .map(r => (r.getInt(0), r.getLong(1))).toSet
+    affPairs.distinct.filterNot(written).foreach { case (l, c) =>
+      fs.delete(new org.apache.hadoop.fs.Path(path, s"layer=$l/cell=$c"), true)
     }
-    fs.delete(intentPath, true)
   }
 
   /** GRAPH-BASED ANN (NSW beam search) — the relational analog of the
     * reference's hnswlib search loop (hnswlib_index.cc:46 searchKnn):
-    * greedy best-first expansion over the symmetrized [[knnGraph]]
-    * ([[nswEdges]]). Each round expands every query's beam by one hop,
+    * greedy best-first expansion over the base graph (layer 0 of
+    * [[hnswLayerEdges]], held symmetric by [[nswStore]]). Each round
+    * expands every query's beam by one hop,
     * unions the beam in and keeps the `beam` best by exact cosine;
     * after at most `rounds` hops the top-k of the final beam is the
     * answer. The walk's state is Q×beam ids per round — request-sized,
@@ -1734,25 +1707,26 @@ object Ann {
         .withColumn("lvl", hnswLevel(col("id"))))
     }
 
-  /** `dir`'s corpus store with the symmetric base graph [[nswEdges]]
-    * as layer 0, what the NSW walks read. Memoized per (dir, graphK).
+  /** `dir`'s corpus store with the base graph (layer 0 of
+    * [[hnswLayerEdges]]) as its layer-0 edges, what the NSW walks and
+    * every routed graph leg read. Memoized per (dir, graphK).
     */
   private def nswStore(s: SparkSession, dir: String, graphK: Int): DescentStore =
     graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
       s"descentgraph|$dir|$graphK") {
-      corpusStore(s, dir).withEdges(
-        nswEdges(s, dir, graphK).select(lit(0).as("layer"), col("src"), col("dst")))
+      corpusStore(s, dir).withEdges(hnswLayerEdges(s, dir, 0, graphK)
+        .select(lit(0).as("layer"), col("qid"), col("nn_id")))
     }
 
-  /** [[nswStore]] with the in-memory hierarchy's upper layers
-    * ([[hnswLayerEdges]] as 1-4) added, so only hierarchy callers
-    * build them. Memoized per (dir, graphK).
+  /** [[nswStore]] with the in-memory hierarchy's upper layers 1-4
+    * ([[hnswLayerEdges]]) added, so only hierarchy callers build them.
+    * Memoized per (dir, graphK).
     */
   private def hnswStore(s: SparkSession, dir: String, graphK: Int): DescentStore =
     graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
       s"descenthier|$dir|$graphK") {
       nswStore(s, dir, graphK).withEdges((1 until DescentStore.Layers).map { l =>
-        hnswLayerEdges(s, dir, l, graphK).select(lit(l).as("layer"), col("src"), col("dst"))
+        hnswLayerEdges(s, dir, l, graphK).select(lit(l).as("layer"), col("qid"), col("nn_id"))
       }.reduce(_ union _))
     }
 
@@ -1877,18 +1851,26 @@ object Ann {
   def nswSearchFiltered(s: SparkSession, dir: String, queries: DataFrame,
                         filter: org.apache.spark.sql.Column, k: Int = 5,
                         beam: Int = 16, rounds: Int = 3,
-                        graphK: Int = 8): DataFrame = {
+                        graphK: Int = 8): DataFrame =
+    filteredTop(s, dir, nswTraverse(s, dir, queries, beam, rounds, graphK)._2,
+      filter, k)
+
+  /** The filtered searches' tail: the members of a walk's scored
+    * visited set (qid, id, s) that pass `filter`, rank-k per query by
+    * (s desc, id).
+    */
+  private def filteredTop(s: SparkSession, dir: String, visited: DataFrame,
+                          filter: org.apache.spark.sql.Column, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    val (_, visitedScored) = nswTraverse(s, dir, queries, beam, rounds, graphK)
     val allowed = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("label")).where(filter)
     // semi-join, no forced broadcast: the visited side is
     // query-sized but `allowed` is corpus-sized (label-filtered) —
     // AQE picks the build side
-    visitedScored
+    visited
       .join(allowed.select("id"), Seq("id"), "left_semi")
-      .withColumn("rk", row_number().over(byQ))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("qid").orderBy(col("s").desc, col("id"))))
       .where(col("rk") <= k)
       .select(col("qid"), col("rk"), col("id").as("nn_id"),
         round(col("s"), 4).as("score"))
@@ -1932,43 +1914,27 @@ object Ann {
       .when(h % 64 === 0, 2).when(h % 8 === 0, 1).otherwise(0)
   }
 
-  /** kNN edges AMONG the members of one layer, blocked by the same
-    * cached IVF cells the other ANN paths train. The probe width is
-    * DENSITY-COMPENSATED: layer `l` keeps 1-in-8^l of the corpus, so
-    * probing `2·8^l` nearest cells keeps the per-node candidate count
-    * ≈ 2·stride at EVERY layer and every corpus size — upper layers
-    * stay as connected at 100 TB as at sf0.01, and per-node build
-    * cost is constant per layer while layer sizes shrink 8×, so the
-    * whole hierarchy builds for ≈ N/7 extra edge computations on top
-    * of the base graph. Symmetrized like the base [[knnGraph]] edges.
+  /** Layer `layer` of `dir`'s in-memory graph: the [[kNNEdges]] of
+    * the corpus rows at that level or above among themselves, under
+    * the cached centroids, probing [[hnswNprobe]] cells. Layer 0 is
+    * the base graph ([[knnGraph]]). One direction, not memoized: the
+    * descent stores hold the edges.
+    *
+    * @return (qid, rk, nn_id, score)
     */
   private[graft] def hnswLayerEdges(s: SparkSession, dir: String, layer: Int,
-                                    k: Int = 8): DataFrame =
-    graft.ByproductCache.getOrCompute(s.sparkContext.applicationId,
-      s"hnswedges|$dir|$layer|$k") {
-      import org.apache.spark.sql.expressions.Window
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val cents = cachedCentroids(s, dir)
-      val nprobeL = math.min(2 * math.pow(8, layer).toInt, cents.length)
-      val nodes = e.where(hnswLevel(col("id")) >= layer)
-      val probes = nodes.select(col("id").as("qid"), col("vec").as("qv"),
-          explode(centroidTopM(col("vec"), cents, nprobeL)).as("p"))
-        .select(col("qid"), col("qv"), col("p.cell").as("cell"))
-      val members = assignTo(e, cents)
-        .where(hnswLevel(col("id")) >= layer)
-        .select(col("cell"), col("id"), col("vec"))
-      val scored = probes.join(members, "cell")
-        .where(col("id") =!= col("qid"))
-        .select(col("qid"), col("id"),
-          VectorDistance.cosine(col("vec"), col("qv")).as("s"))
-        .where(col("s").isNotNull)
-      val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-      val g = scored.withColumn("rk", row_number().over(byQ))
-        .where(col("rk") <= k).select(col("qid").as("src"), col("id").as("dst"))
-      g.union(g.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint(true)
-    }
+                                    k: Int = 8): DataFrame = {
+    val cents = cachedCentroids(s, dir)
+    val nodes = inLayer(Tables.embeddings(s, dir)
+      .select(col("vec_id").as("id"), col("embedding").as("vec")), layer)
+    kNNEdges(nodes, assignTo(nodes, cents), cents, hnswNprobe(layer, cents.length), k)
+  }
+
+  /** The rows of `df` (id, …) in hierarchy layer `layer`: every level
+    * is ≥ 0, so layer 0 keeps them all.
+    */
+  private def inLayer(df: DataFrame, layer: Int): DataFrame =
+    if (layer == 0) df else df.where(hnswLevel(col("id")) >= layer)
 
   /** Coarse-to-fine descent + base beam: enter at THE single highest
     * node (max level, then min id — hnswlib's enterpoint), walk one
@@ -2013,21 +1979,9 @@ object Ann {
   def hnswSearchFiltered(s: SparkSession, dir: String, queries: DataFrame,
                          filter: org.apache.spark.sql.Column, k: Int = 5,
                          beamU: Int = 8, beam: Int = 16, rounds: Int = 3,
-                         graphK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byQ = Window.partitionBy("qid").orderBy(col("s").desc, col("id"))
-    val visitedScored = hnswTraverse(s, dir, queries, beamU, beam, rounds,
-      graphK).visitedFrame(scoredOnly = true)
-    val allowed = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("id"), col("label")).where(filter)
-    visitedScored
-      .join(allowed.select("id"), Seq("id"), "left_semi")
-      .withColumn("rk", row_number().over(byQ))
-      .where(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("id").as("nn_id"),
-        round(col("s"), 4).as("score"))
-      .orderBy("qid", "rk")
-  }
+                         graphK: Int = 8): DataFrame =
+    filteredTop(s, dir, hnswTraverse(s, dir, queries, beamU, beam, rounds,
+      graphK).visitedFrame(scoredOnly = true), filter, k)
 
   def hnswQuery(s: SparkSession, dir: String): DataFrame =
     hnswSearch(s, dir, Tables.embeddings(s, dir).where(col("vec_id") < 5)
@@ -2041,223 +1995,56 @@ object Ann {
 
   // ---------------------------------------- persisted hierarchy
 
-  /** Density-compensated probe width for a layer (see
-    * [[hnswLayerEdges]]): 2·8^layer cells keeps per-node candidates
-    * ≈ 2·stride at every layer. Layer 0 is the base graph's
-    * nprobe=2.
+  /** Density-compensated probe width for a layer: layer `l` keeps
+    * 1-in-8^l of the corpus, so probing `2·8^l` nearest cells keeps
+    * the per-node candidate count ≈ 2·stride at EVERY layer and every
+    * corpus size — upper layers stay as connected at 100 TB as at
+    * sf0.01, and per-node build cost is constant per layer while layer
+    * sizes shrink 8×, so the whole hierarchy builds for ≈ N/7 extra
+    * edge computations on top of the base graph. Layer 0 is the base
+    * graph's nprobe = 2.
     */
   private def hnswNprobe(layer: Int, ncells: Int): Int =
     math.min(2 * math.pow(8, layer).toInt, ncells)
 
-  /** Layer-l kNN edges for `nodes` against the CURRENT persisted
-    * index — [[graphEdgesFor]] generalized with the layer's member
-    * restriction and probe width. Layer 0 degenerates to exactly
-    * [[graphEdgesFor]]'s base edges.
-    */
-  private def graphEdgesLayer(s: SparkSession, indexPath: String,
-                              nodes: DataFrame, layer: Int,
-                              k: Int): DataFrame = {
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(indexPath)).select(col("cell"), col("cvec")))
-    val np = hnswNprobe(layer, cents.length)
-    val probes = nodes.select(col("id").as("qid"), col("vec").as("qvec"),
-        explode(centroidTopM(col("vec"), cents, np)).as("p"))
-      .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-    val scored = graphNodes(s, indexPath)
-      .where(hnswLevel(col("id")) >= layer)
-      .join(probes, "cell")
-      .where(col("id") =!= col("qid"))
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    topKPerQuery(scored, k)
-  }
-
   /** PERSIST THE WHOLE HIERARCHY — layers 0..4 of an IVF index as
     * one parquet table PARTITIONED BY (layer, cell). Layer 0 (probe
     * width 2) IS the base kNN graph, so this table is the complete
-    * search structure: a descent reads each layer partition-pruned,
-    * and maintenance is churn-local exactly as [[knnGraphBuild]]'s
-    * layout argument says — a touched cell's rows cluster in 5
-    * partitions (one per layer), not across the table. Levels are a
-    * pure function of id ([[hnswLevel]]), so an upsert can never
-    * move a node between layers — only its cell and edges change.
+    * search structure, and maintenance is churn-local exactly as
+    * [[knnGraphBuild]]'s layout argument says — a touched cell's rows
+    * cluster in 5 partitions (one per layer), not across the table.
+    * Levels are a pure function of id ([[hnswLevel]]), so an upsert
+    * can never move a node between layers — only its cell and edges
+    * change.
     */
   def hnswBuild(s: SparkSession, indexPath: String, hnswPath: String,
-                k: Int = 8): Unit = {
-    val nodes = graphNodes(s, indexPath)
-    val cellOf = nodes.select(col("id").as("qid"), col("cell"))
-    val layers = (0 to 4).map { l =>
-      graphEdgesLayer(s, indexPath,
-          nodes.where(hnswLevel(col("id")) >= l), l, k)
-        .join(cellOf, "qid")
-        .select(lit(l).as("layer"), col("qid"), col("rk"), col("nn_id"),
-          col("score"), col("cell").cast("long").as("cell"))
-    }.reduce(_ unionByName _)
-    layers.write.mode("overwrite")
-      .partitionBy("layer", "cell").parquet(hnswPath)
-  }
+                k: Int = 8): Unit =
+    buildLayers(s, indexPath, hnswPath, 0 until DescentStore.Layers, k)
 
   def hnswRead(s: SparkSession, hnswPath: String): DataFrame =
     s.read.parquet(hnswPath)
       .select(col("layer").cast("int").as("layer"), col("qid"),
         col("rk"), col("nn_id"), col("score"))
 
-  /** INCREMENTAL HIERARCHY MAINTENANCE — [[knnGraphUpsert]]'s
-    * protocol applied to every layer under ONE intent marker: record
-    * the batch's pre-upsert cells durably, upsert the index once,
-    * then per layer recompute the affected nodes (the layer's
-    * upserted members ∪ the layer nodes probing a touched cell at
-    * that layer's width) and dynamic-overwrite only the (layer,
-    * cell) partitions holding an affected row. Equal to a fresh
-    * [[hnswBuild]] by the same argument as the base graph — a
-    * layer-l node's candidate set is exactly the layer-l membership
-    * of its probe cells, and level membership is immutable — with
-    * the same crash-window repair (a surviving marker's cells AND
-    * ids merge into the next run's repair scope, so a crashed
-    * batch's moved nodes re-resolve even when their new probe sets
-    * miss every recorded cell).
+  /** Upsert `updates` (id, vec) into the index and repair every layer
+    * of the hierarchy ([[maintainLayers]]).
     */
   def hnswUpsert(s: SparkSession, indexPath: String, hnswPath: String,
-                 updates: DataFrame, k: Int = 8): Unit = {
-    import s.implicits._
-    val intentPath = new org.apache.hadoop.fs.Path(hnswPath + "_intent")
-    val fs = intentPath.getFileSystem(s.sessionState.newHadoopConf())
-    // marker carries cells AND ids (readIntent scaladoc): a crashed
-    // batch's node whose new probe set misses its old cell is only
-    // reachable through the recorded ids
-    val (pendingCells, pendingIds) = readIntent(s, fs, intentPath)
-    val batchIds = updates.select("id").distinct().as[Long].collect()
-    val allIds = (batchIds ++ pendingIds).distinct
-    val ids = broadcast(allIds.toSeq.toDF("id"))
-    val oldCells = (s.read.parquet(indexPath).join(ids, "id")
-      .select(col("cell").cast("long").as("cell")).distinct()
-      .collect().map(_.getLong(0)) ++ pendingCells).distinct
-    writeIntent(s, intentPath, oldCells, allIds)
-    ivfIndexUpsert(s, indexPath, updates)
-    val newCells = s.read.parquet(indexPath).join(ids, "id")
-      .select(col("cell").cast("long").as("cell")).distinct()
-      .collect().map(_.getLong(0))
-    val touched = (oldCells ++ newCells).distinct
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(indexPath)).select(col("cell"), col("cvec")))
-    val nodes = graphNodes(s, indexPath)
-    val perLayer = (0 to 4).map { l =>
-      val lnodes = nodes.where(hnswLevel(col("id")) >= l)
-      val np = hnswNprobe(l, cents.length)
-      val probers = lnodes.select(col("id"),
-          explode(centroidTopM(col("vec"), cents, np)).as("p"))
-        .where(col("p.cell").isin(touched.toIndexedSeq: _*))
-        .select("id").distinct()
-      // every batch/marker id enters directly (NOT via an lnodes
-      // semi-join): a dead marker id has no lnodes row but its stale
-      // graph rows must still drop through the keep anti-join below
-      val affectedIds = probers
-        .unionByName(ids.select("id"))
-        .distinct().localCheckpoint(true)
-      val affected = lnodes.join(broadcast(affectedIds), Seq("id"), "left_semi")
-      val recomputed = graphEdgesLayer(s, indexPath, affected, l, k)
-        .join(nodes.select(col("id").as("qid"), col("cell")), "qid")
-        .select(lit(l).as("layer"), col("qid"), col("rk"), col("nn_id"),
-          col("score"), col("cell").cast("long").as("cell"))
-      val affCells = (affected.select(col("cell")).distinct()
-        .collect().map(_.getLong(0)) ++ oldCells).distinct
-      val keep = s.read.parquet(hnswPath)
-        .where(col("layer") === l &&
-          col("cell").isin(affCells.toIndexedSeq: _*))
-        .join(broadcast(affectedIds.select(col("id").as("qid"))),
-          Seq("qid"), "left_anti")
-        .select(lit(l).as("layer"), col("qid"), col("rk"), col("nn_id"),
-          col("score"), col("cell").cast("long").as("cell"))
-      (keep.unionByName(recomputed), affCells.map(c => (l, c)))
-    }
-    val replacement = perLayer.map(_._1).reduce(_ unionByName _)
-      .localCheckpoint(true)
-    val affPairs = perLayer.flatMap(_._2)
-    publishHnsw(s, hnswPath, replacement, affPairs, fs)
-    fs.delete(intentPath, true)
-  }
+                 updates: DataFrame, k: Int = 8): Unit =
+    maintainLayers(s, indexPath, hnswPath, updates, 0 until DescentStore.Layers, k,
+      delete = false)
 
-  /** Tombstone twin ([[knnGraphDelete]] per layer, one marker). */
-  def hnswDelete(s: SparkSession, indexPath: String, hnswPath: String,
-                 ids: DataFrame, k: Int = 8): Unit = {
-    import s.implicits._
-    val delIds = broadcast(ids.select("id").distinct())
-    val intentPath = new org.apache.hadoop.fs.Path(hnswPath + "_intent")
-    val fs = intentPath.getFileSystem(s.sessionState.newHadoopConf())
-    val (pendingCells, pendingIds) = readIntent(s, fs, intentPath)
-    val batchIds = ids.select("id").distinct().as[Long].collect()
-    val allIds = (batchIds ++ pendingIds).distinct
-    val allIdsDf = broadcast(allIds.toSeq.toDF("id"))
-    val oldCells = (s.read.parquet(indexPath).join(allIdsDf, "id")
-      .select(col("cell").cast("long").as("cell")).distinct()
-      .collect().map(_.getLong(0)) ++ pendingCells).distinct
-    if (oldCells.isEmpty) return
-    writeIntent(s, intentPath, oldCells, allIds)
-    // index delete applies ONLY to this batch's ids (marker ids from
-    // a crashed upsert are live nodes to re-resolve)
-    ivfIndexDelete(s, indexPath, delIds)
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(indexPath)).select(col("cell"), col("cvec")))
-    val nodes = graphNodes(s, indexPath)
-    val perLayer = (0 to 4).map { l =>
-      val lnodes = nodes.where(hnswLevel(col("id")) >= l)
-      val np = hnswNprobe(l, cents.length)
-      val probers = lnodes.select(col("id"),
-          explode(centroidTopM(col("vec"), cents, np)).as("p"))
-        .where(col("p.cell").isin(oldCells.toIndexedSeq: _*))
-        .select("id").distinct()
-      // suspect set = probers ∪ every batch/marker id: live members
-      // recompute (lnodes semi), dead members' rows drop (anti below)
-      val gone = probers.unionByName(allIdsDf.select("id"))
-        .distinct().localCheckpoint(true)
-      val affected = lnodes.join(broadcast(gone), Seq("id"), "left_semi")
-      val recomputed = graphEdgesLayer(s, indexPath, affected, l, k)
-        .join(nodes.select(col("id").as("qid"), col("cell")), "qid")
-        .select(lit(l).as("layer"), col("qid"), col("rk"), col("nn_id"),
-          col("score"), col("cell").cast("long").as("cell"))
-      val affCells = (affected.select(col("cell")).distinct()
-        .collect().map(_.getLong(0)) ++ oldCells).distinct
-      val keep = s.read.parquet(hnswPath)
-        .where(col("layer") === l &&
-          col("cell").isin(affCells.toIndexedSeq: _*))
-        .join(broadcast(gone.select(col("id").as("qid"))),
-          Seq("qid"), "left_anti")
-        .select(lit(l).as("layer"), col("qid"), col("rk"), col("nn_id"),
-          col("score"), col("cell").cast("long").as("cell"))
-      (keep.unionByName(recomputed), affCells.map(c => (l, c)))
-    }
-    val replacement = perLayer.map(_._1).reduce(_ unionByName _)
-      .localCheckpoint(true)
-    publishHnsw(s, hnswPath, replacement, perLayer.flatMap(_._2), fs)
-    fs.delete(intentPath, true)
-  }
-
-  /** Dynamic-partition-overwrite publish + emptied-partition GC for
-    * the (layer, cell) layout — the [[knnGraphUpsert]] publish
-    * discipline lifted to two partition columns.
+  /** Delete `ids` (id) from the index and every layer of the hierarchy
+    * ([[maintainLayers]]).
     */
-  private def publishHnsw(s: SparkSession, hnswPath: String,
-                          replacement: DataFrame,
-                          affPairs: Seq[(Int, Long)],
-                          fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    // writer-scoped overwrite mode (the AggTable r10-advice fix):
-    // a session-global flip races with concurrent writers
-    replacement.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("layer", "cell").parquet(hnswPath)
-    val written = replacement.select("layer", "cell").distinct().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSet
-    affPairs.distinct.filterNot(written).foreach { case (l, c) =>
-      val dir = new org.apache.hadoop.fs.Path(hnswPath, s"layer=$l/cell=$c")
-      fs.delete(dir, true)
-    }
-  }
+  def hnswDelete(s: SparkSession, indexPath: String, hnswPath: String,
+                 ids: DataFrame, k: Int = 8): Unit =
+    maintainLayers(s, indexPath, hnswPath, ids, 0 until DescentStore.Layers, k,
+      delete = true)
 
   /** Search the PERSISTED hierarchy: same descent as [[hnswSearch]],
     * over a [[DescentStore]] of the index's nodes with the stored
-    * layers' edges, symmetrized ([[indexedStore]]). Equal to the
+    * layers' edges ([[indexedStore]]). Equal to the
     * in-memory path by construction (same centroids, same layer
     * membership, same edge rule) — AnnSpec pins the equality, so the
     * persisted structure shares ann_hnsw's oracle.
@@ -2278,20 +2065,17 @@ object Ann {
       hnswWalk(_, queries, beamU, beam, rounds, stats))
 
   /** The store of a persisted index and hierarchy: [[graphNodes]] with
-    * both directions of each stored edge, and the enterpoint. Held per
+    * the stored edges, and the enterpoint. Held per
     * (indexPath, hnswPath) at a listing fingerprint of both
     * directories ([[listing]]), so the first read after any
     * `hnswBuild`, `hnswUpsert`, `hnswDelete` or `ivfIndexUpsert` write
     * rebuilds it, and the stale one is released once no walk reads it.
     */
   private def indexedStore(s: SparkSession, indexPath: String,
-                           hnswPath: String): DescentStore = {
-    val g = hnswRead(s, hnswPath)
-      .select(col("layer"), col("qid").as("src"), col("nn_id").as("dst"))
+                           hnswPath: String): DescentStore =
     DescentStore.build(graphNodes(s, indexPath).select(col("id"), col("vec"),
         col("cell"), monotonically_increasing_id().as("pos"), hnswLevel(col("id")).as("lvl")))
-      .withEdges(g.union(g.select(col("layer"), col("dst").as("src"), col("src").as("dst"))))
-  }
+      .withEdges(hnswRead(s, hnswPath).select("layer", "qid", "nn_id"))
 
   /** A driver-side fingerprint of the data files under `dirs`: the MD5
     * of every file's path, length and modification time (hidden files,

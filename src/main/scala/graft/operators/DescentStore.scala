@@ -46,13 +46,21 @@ private[operators] final class DescentStore private (
     case None => nodes.map(_ -> noEdges)
   }
 
-  /** This store's buckets with the symmetric edges (layer, src, dst)
-    * of `layers` added to the ones it holds, bucketed by src under the
-    * same partitioner. The held edge arrays are shared, not copied.
+  /** This store's buckets with the edges (layer, src, dst) of
+    * `layers` added, in both directions, to the ones it holds, bucketed
+    * by src under the same partitioner: the one place graph edges are
+    * made symmetric. A repeated edge is held once. The held edge arrays
+    * are shared, not copied.
     */
   def withEdges(layers: DataFrame): DescentStore = {
     val fresh = layers.queryExecution.toRdd
-      .flatMap(r => if (r.anyNull) None else Some(r.getLong(1) -> (r.getInt(0), r.getLong(2))))
+      .flatMap { r =>
+        if (r.anyNull) Nil
+        else {
+          val (l, a, b) = (r.getInt(0), r.getLong(1), r.getLong(2))
+          Seq(a -> (l, b), b -> (l, a))
+        }
+      }
       .partitionBy(partitioner)
     val e = (edges match {
       case Some(held) => fresh.zipPartitions(held, preservesPartitioning = true)(

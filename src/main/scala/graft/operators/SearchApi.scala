@@ -103,7 +103,7 @@ object SearchApi {
     * ROUTE ON THE DRIVER, BUILD ONLY THE LEGS THE BATCH USES: the batch
     * is collected once (no job for a `LocalRelation`) and split into
     * `LocalRelation` sub-batches; a leg with no requests is never built
-    * (an all-FLAT batch builds no kNN graph, an all-approximate batch
+    * (an all-FLAT batch builds no graph store, an all-approximate batch
     * scans no whole corpus; SearchApiSpec pins both). `k ≤ maxK` is
     * checked over the WHOLE batch, since a leg's k = maxK heap would
     * silently truncate a larger k. A NULL index_type reaches no leg
@@ -111,8 +111,8 @@ object SearchApi {
     * schema); a NULL k or qid returns nothing.
     *
     * The approximate legs run all their jobs while built, concurrently
-    * (`Par.seq`; HNSW and HNSW_HIER share one build of the kNN graph,
-    * [[graft.ByproductCache]]): for 8 requests over warm memos, IVF
+    * (`Par.seq`; HNSW and HNSW_HIER share one build of the graph
+    * store, `nswStore`, in [[graft.ByproductCache]]): for 8 requests over warm memos, IVF
     * one scoring job, HNSW at most 4 and HNSW_HIER at most 8 (entry
     * scoring, then one job per beam round over the descent store).
     * Each returns a `LocalRelation`; the per-request `rk ≤ k` cut and

@@ -8,7 +8,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** The kNN GRAPH maintained LIVE — fourth of the maintained-structure
   * family (13h vector index, 13k postings, 13m table layout): the
   * WAL's upsert stream keeps both the persisted IVF index AND its
-  * kNN graph current via [[Ann.knnGraphUpsert]], whose affected-set
+  * kNN graph current via [[Ann.knnGraphUpsert]] (the hierarchy's
+  * maintenance routine over layer 0), whose affected-set
   * recomputation is provably equal to a rebuild (see its doc).
   * Exactly-once needs THREE facts here, not the siblings' two:
   * batches arrive in log order; the cell-wise dynamic partition

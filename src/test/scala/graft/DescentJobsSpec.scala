@@ -25,9 +25,29 @@ class DescentJobsSpec extends SparkSuite {
       StructField("qvec", ArrayType(FloatType)))))
   }
 
+  /** Jobs the first searches ran on this fixture, every build included:
+    * nswSearch 25; hnswSearch 22 or 23 from run to run. With a
+    * checkpoint per upper layer put back, hnswSearch ran 24.
+    */
+  private val NswFirstJobs = 25
+  private val HnswFirstJobs = 23
+
   private def warm(): Unit = {
     Ann.nswSearch(spark, sf, batch).collect()
     Ann.hnswSearch(spark, sf, batch).collect()
+  }
+
+  /** Jobs of the first nswSearch and the first hnswSearch on a cleared
+    * memo: every build they trigger (centroids, corpus store, graph
+    * layers, their stores) runs here. A checkpoint or a memo put back
+    * between the edge builder and the store adds jobs.
+    */
+  test("first nswSearch and hnswSearch build jobs on a cleared memo") {
+    ByproductCache.clear()
+    val (_, nsw, _) = JobWatch.observe(spark)(Ann.nswSearch(spark, sf, batch).collect())
+    val (_, hnsw, _) = JobWatch.observe(spark)(Ann.hnswSearch(spark, sf, batch).collect())
+    assert(nsw <= NswFirstJobs, s"first nswSearch ran $nsw jobs")
+    assert(hnsw <= HnswFirstJobs, s"first hnswSearch after it ran $hnsw jobs")
   }
 
   test("one job per beam round; every descent job is a single stage") {

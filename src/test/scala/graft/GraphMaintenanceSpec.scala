@@ -35,7 +35,7 @@ class GraphMaintenanceSpec extends SparkSuite {
       // whole graph is legitimately affected)
       Ann.ivfBuildIndex(spark, emb, idx, stride = 10)
       Ann.knnGraphBuild(spark, idx, gp)
-      val fileOf = new java.io.File(gp).listFiles()
+      val fileOf = new java.io.File(gp, "layer=0").listFiles()
         .filter(_.getName.startsWith("cell="))
         .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
 
@@ -54,7 +54,7 @@ class GraphMaintenanceSpec extends SparkSuite {
       assert(graphSet(gp).nonEmpty)
 
       // locality: at least one bucket kept its original files
-      val after = new java.io.File(gp).listFiles()
+      val after = new java.io.File(gp, "layer=0").listFiles()
         .filter(_.getName.startsWith("cell="))
         .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
       val untouched = fileOf.filter { case (b, fs) => after.get(b).contains(fs) }
@@ -197,7 +197,7 @@ class GraphMaintenanceSpec extends SparkSuite {
     try {
       Ann.ivfBuildIndex(spark, emb, idx, stride = 10)
       Ann.knnGraphBuild(spark, idx, gp)
-      val fileOf = new java.io.File(gp).listFiles()
+      val fileOf = new java.io.File(gp, "layer=0").listFiles()
         .filter(_.getName.startsWith("cell="))
         .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
       val gone = Seq(0L, 7L, 13L, 14L).toDF("id")
@@ -216,7 +216,7 @@ class GraphMaintenanceSpec extends SparkSuite {
       assert(flat.forall { case (q, _, n, _) =>
         !goneSet(q) && !goneSet(n) })
       // locality: at least one cell partition kept its original files
-      val after = new java.io.File(gp).listFiles()
+      val after = new java.io.File(gp, "layer=0").listFiles()
         .filter(_.getName.startsWith("cell="))
         .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
       assert(fileOf.exists { case (b, fs) => after.get(b).contains(fs) },

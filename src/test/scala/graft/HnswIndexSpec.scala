@@ -30,6 +30,47 @@ class HnswIndexSpec extends SparkSuite {
       "persisted-hierarchy search drifted from the in-memory descent")
   }
 
+  test("persisted ≡ in-memory hierarchy search over a corpus with a " +
+    "NaN-component row in the upper layers") {
+    val root = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "hnswnan")
+    val dir = root.toString
+    val idx = root.resolve("idx").toString
+    val hp = root.resolve("hier").toString
+    // NaN bits compare equal, so a NaN score in both answers matches
+    def answer(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3))))
+    try {
+      val src = spark.read.parquet(s"$sf/embeddings.parquet")
+      // every cosine against this row is NaN: a layer that ranks NaN
+      // first links it to each of its probers, one that ranks it last
+      // to none
+      val nanId = src.where(col("vec_id") >= 5 &&
+          Ann.hnswLevel(col("vec_id")) >= 1)
+        .agg(min("vec_id")).head().getLong(0)
+      src.withColumn("embedding", when(col("vec_id") === nanId,
+          transform(col("embedding"), (x, i) =>
+            when(i === 0, lit(Float.NaN)).otherwise(x)))
+          .otherwise(col("embedding")))
+        .write.parquet(root.resolve("embeddings.parquet").toString)
+      val e = Tables.embeddings(spark, dir)
+      Ann.ivfBuildIndex(spark,
+        e.select(col("vec_id").as("id"), col("embedding").as("vec")), idx)
+      Ann.hnswBuild(spark, idx, hp)
+      // every row a query: the NaN row reaches both paths' beams, and
+      // where the layers link it in decides which rows it displaces
+      val q = e.select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      val mem = answer(Ann.hnswSearch(spark, dir, q))
+      assert(mem.nonEmpty)
+      assert(mem == answer(Ann.hnswSearchIndexed(spark, idx, hp, q)),
+        "a NaN score ranks differently in the in-memory and persisted layers")
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(root.toFile).deleteRecursively()
+    }
+  }
+
   test("hierarchy upsert equals a full rebuild; only affected " +
     "(layer, cell) partitions rewrite") {
     import spark.implicits._

@@ -177,12 +177,10 @@ class SearchApiSpec extends SparkSuite {
       val appId = spark.sparkContext.applicationId
       val flatOut = SearchApi.searchRouted(spark, dirS, d, reqs("FLAT"), 10)
       assert(flatOut.count() > 0)
-      // the expensive NSW dependency was never touched: no kNN graph
-      // (nor symmetrized edge table) materialized for this dir
-      assert(!ByproductCache.cached(appId, s"knngraph|$dirS|8|2"),
-        "all-FLAT batch materialized the kNN graph")
-      assert(!ByproductCache.cached(appId, s"nswedges|$dirS|8"),
-        "all-FLAT batch built the NSW edge table")
+      // the expensive NSW dependency was never touched: no graph
+      // store (corpus + kNN-graph edges) built for this dir
+      assert(!ByproductCache.cached(appId, s"descentgraph|$dirS|8"),
+        "all-FLAT batch built the graph store")
       // and the plan carries no checkpoint-RDD scan (the graph leg's
       // signature operator)
       assert(!flatOut.queryExecution.executedPlan.toString
@@ -202,7 +200,8 @@ class SearchApiSpec extends SparkSuite {
         .filter(_._2 <= 5).toSet
       assert(hnswOut == direct && hnswOut.nonEmpty,
         "all-HNSW batch is not exactly the graph leg")
-      assert(ByproductCache.cached(appId, s"knngraph|$dirS|8|2"))
+      assert(ByproductCache.cached(appId, s"descentgraph|$dirS|8"),
+        "all-HNSW batch built no graph store")
     } finally {
       import scala.reflect.io.Directory
       new Directory(tmp.toFile).deleteRecursively()

@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The persisted hierarchy's [[DescentStore]] is never served stale: in
-  * one JVM, a search after `hnswUpsert`, `hnswDelete` or a direct
+/** [[DescentStore.withEdges]] holds every edge in both directions, and
+  * the persisted hierarchy's store is never served stale: in one JVM, a search after `hnswUpsert`, `hnswDelete` or a direct
   * `ivfIndexUpsert` answers as a search over the rewritten files does.
   * Each write moves or drops an id the previous answer ranked first, so
   * a stale store would answer differently.
@@ -33,6 +33,54 @@ class DescentStoreSpec extends SparkSuite {
 
   private def firsts(a: Seq[(Long, Int, Long, Double)]): Set[Long] =
     a.filter(_._2 == 1).map(_._3).toSet
+
+  /** Each id's held edges by layer, read through one store job. */
+  private def held(store: DescentStore, ids: Seq[Long]): Map[Long, Seq[Seq[Long]]] = {
+    val q = spark.sparkContext.broadcast(Array(Array(1.0, 0.0)))
+    store.byId(ids.map(_ -> Seq(0)).toMap, q).map { h =>
+      h.id -> (if (h.edges == null) Seq.fill(DescentStore.Layers)(Seq.empty[Long])
+        else h.edges.toSeq.map(_.toSeq))
+    }.toMap
+  }
+
+  /** Both directions of each (layer, src, dst), sorted and distinct. */
+  private def symmetric(edges: Seq[(Int, Long, Long)], ids: Seq[Long]): Map[Long, Seq[Seq[Long]]] = {
+    val both = edges.flatMap { case (l, a, b) => Seq((a, l, b), (b, l, a)) }
+    ids.map(i => i -> Seq.tabulate(DescentStore.Layers)(l =>
+      both.collect { case (`i`, `l`, d) => d }.distinct.sorted)).toMap
+  }
+
+  private def nodes(ids: Seq[Long], vec: Long => Seq[Float]): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (i, i, vec(i), 0L, 0)).toDF("id", "pos", "vec", "cell", "lvl")
+  }
+
+  test("withEdges given one direction of each edge, with duplicates, holds " +
+    "every id's sorted, distinct neighbours in both directions") {
+    import spark.implicits._
+    val ids = (1L to 6L).toSeq
+    // (1,2) twice and (2,1) once; layer 1 holds (2,6) both ways
+    val given = Seq((0, 1L, 2L), (0, 1L, 2L), (0, 2L, 1L), (0, 1L, 5L),
+      (0, 3L, 1L), (0, 4L, 6L), (1, 2L, 6L), (1, 6L, 2L))
+    val store = DescentStore.build(nodes(ids, i => Seq(1f, i.toFloat)))
+      .withEdges(given.toDF("layer", "src", "dst"))
+    assert(held(store, ids) == symmetric(given, ids))
+    assert(held(store, ids)(1L).head == Seq(2L, 3L, 5L))
+
+    // the edge builder's layer-1 edges come out one direction; the
+    // store holds them symmetric
+    val layer1 = Ann.hnswLayerEdges(spark, sf, 1).collect()
+      .map(r => (1, r.getLong(0), r.getLong(2))).toSeq
+    assert(layer1.exists { case (_, a, b) => !layer1.contains((1, b, a)) },
+      "fixture: the layer-1 edges are already symmetric")
+    val all = emb.collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    val corpus = all.keys.toSeq.sorted
+    val built = DescentStore.build(nodes(corpus, all)).withEdges(
+      Ann.hnswLayerEdges(spark, sf, 1).select(lit(1).as("layer"), col("qid"), col("nn_id")))
+    val h = held(built, corpus)
+    assert(h == symmetric(layer1, corpus))
+    assert(h.forall { case (a, ls) => ls(1).forall(b => h(b)(1).contains(a)) })
+  }
 
   test("a persisted search after hnswUpsert, hnswDelete and ivfIndexUpsert " +
     "reads the rewritten index") {

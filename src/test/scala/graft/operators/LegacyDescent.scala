@@ -34,6 +34,14 @@ object LegacyDescent {
       .where(col("s").isNotNull)
   }
 
+  /** Both directions of each (qid, nn_id) edge, distinct: the
+    * adjacency the descent store holds.
+    */
+  private def sym(g: DataFrame): DataFrame = {
+    val e = g.select(col("qid").as("src"), col("nn_id").as("dst"))
+    e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
+
   private def spreadCorpus(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -80,13 +88,13 @@ object LegacyDescent {
     val scoreIds = scorer(spreadCorpus(s, dir), queries)
     val frontier0 = topBeam(scoreIds(entry(s, dir, queries)), beam).localCheckpoint(true)
     baseBeamLoop(frontier0, frontier0.select("qid", "id"),
-      Ann.nswEdges(s, dir, graphK), scoreIds, beam, rounds)
+      sym(Ann.knnGraph(s, dir, graphK)).localCheckpoint(true), scoreIds, beam, rounds)
   }
 
   /** Frontier carries `rq`; rounds run is always `maxRounds`. */
   def nswEf(s: SparkSession, dir: String, reqs: DataFrame, beam: Int,
             maxRounds: Int, graphK: Int): Walk = {
-    val edges = Ann.nswEdges(s, dir, graphK)
+    val edges = sym(Ann.knnGraph(s, dir, graphK)).localCheckpoint(true)
     val scoreIds = scorer(spreadCorpus(s, dir), reqs)
     val budgets = reqs.select(col("qid"),
         least(lit(maxRounds), greatest(lit(1),
@@ -138,7 +146,8 @@ object LegacyDescent {
   def hnsw(s: SparkSession, dir: String, queries: DataFrame, beamU: Int = 8,
            beam: Int = 16, rounds: Int = 3, graphK: Int = 8): Walk =
     hnswEdges(spreadCorpus(s, dir), queries,
-      l => Ann.hnswLayerEdges(s, dir, l, graphK), Ann.nswEdges(s, dir, graphK),
+      l => sym(Ann.hnswLayerEdges(s, dir, l, graphK)),
+      sym(Ann.knnGraph(s, dir, graphK)).localCheckpoint(true),
       beamU, beam, rounds)
 
   def hnswIndexed(s: SparkSession, indexPath: String, hnswPath: String,
@@ -146,12 +155,8 @@ object LegacyDescent {
                   rounds: Int = 3): Walk = {
     val e = s.read.parquet(indexPath).select(col("id"), col("vec"))
     val all = Ann.hnswRead(s, hnswPath)
-    def sym(layer: Int): DataFrame = {
-      val g = all.where(col("layer") === layer)
-        .select(col("qid").as("src"), col("nn_id").as("dst"))
-      g.union(g.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    }
-    hnswEdges(e, queries, sym, sym(0).localCheckpoint(true), beamU, beam, rounds)
+    def layer(l: Int): DataFrame = sym(all.where(col("layer") === l))
+    hnswEdges(e, queries, layer, layer(0).localCheckpoint(true), beamU, beam, rounds)
   }
 
   /** The search tail every descent shared: rank-k of the frontier. */
