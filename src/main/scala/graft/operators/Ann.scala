@@ -51,19 +51,28 @@ object Ann {
   def kmeansCentroids(emb: DataFrame, stride: Long = 200,
                       iters: Int = 2): DataFrame = {
     var cents = ivfCentroids(emb, stride)
-    for (_ <- 1 to iters) {
-      val assigned = ivfAssign(emb, cents)
-      cents = assigned
-        .select(col("cell"), posexplode(col("vec")).as(Seq("dim", "x")))
-        .groupBy("cell", "dim")
-        .agg(round(avg(col("x")), 6).as("m"))
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-        .select(col("cell"),
-          expr("transform(dm, p -> cast(p.m AS float))").as("cvec"))
-    }
+    for (_ <- 1 to iters) cents = cellMeans(ivfAssign(emb, cents))
     cents
   }
+
+  /** Per-cell per-dimension mean of (cell, vec) rows — the Lloyd mean
+    * and the label centroids of [[Classify.labelCentroids]]. A row
+    * with a non-finite component is left out: its squared norm through
+    * the dot kernel is NaN or +∞, and Spark orders NaN above +∞, so
+    * `< +∞` keeps exactly the finite rows. Averaged in, one such row
+    * makes its cell's centroid NaN in that dimension, every distance
+    * to it NaN, and the cell stops attracting vectors. Mirrored by
+    * OracleCtes.ivfMeanCte.
+    */
+  private[operators] def cellMeans(rows: DataFrame): DataFrame =
+    rows.where(VectorDistance.dot(col("vec"), col("vec")) < Double.PositiveInfinity)
+      .select(col("cell"), posexplode(col("vec")).as(Seq("dim", "x")))
+      .groupBy("cell", "dim")
+      .agg(round(avg(col("x")), 6).as("m"))
+      .groupBy("cell")
+      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
+      .select(col("cell"),
+        expr("transform(dm, p -> cast(p.m AS float))").as("cvec"))
 
   /** Centroids as driver-side literals — the k-row object FAISS and
     * MLlib's k-means hold between Lloyd iterations. Sorted by cell so
@@ -164,17 +173,72 @@ object Ann {
     else df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Shared exact-rerank tail: per-query bounded top-k over scored
-    * candidates via the partial-aggregating heap.
+    * candidates via the partial-aggregating heap, lowest key first.
+    * The key carries the metric's sign: −similarity under cosine
+    * (reported back as the similarity), the distance itself under L2.
     */
-  private[operators] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
+  private[operators] def topKPerQuery(scored: DataFrame, k: Int,
+                                      metric: Knn.Metric.Value = Knn.Metric.Cosine): DataFrame = {
     val agg = TopKAgg.topK(k)
+    val key = col("col.key")
     scored.groupBy("qid")
       .agg(agg(col("key"), col("id")).as("top"))
       .select(col("qid"), posexplode(col("top.items")))
-      .select(col("qid"), (col("pos") + 1).as("rk"),
-        col("col.id").as("nn_id"), round(-col("col.key"), 4).as("score"))
+      .select(col("qid"), (col("pos") + 1).as("rk"), col("col.id").as("nn_id"),
+        round(if (metric == Knn.Metric.L2) key else -key, 4).as("score"))
       .orderBy("qid", "rk")
   }
+
+  /** THE shortlist → exact-rerank tail of every compressed search, flat
+    * and IVF: the best `rerank`·k ids per query by the code-space `key`
+    * of `scored` (qid, key, id), each joined to its float vector in
+    * `vecs` (id, vec) — only the shortlist's vectors are read — and to
+    * its query in `queries` (qid, qvec), scored by the exact metric
+    * (cosine or L2) and cut to k per query ([[topKPerQuery]]).
+    */
+  private[operators] def shortlistRerank(scored: DataFrame, rerank: Int,
+                                         vecs: DataFrame, queries: DataFrame, k: Int,
+                                         metric: Knn.Metric.Value): DataFrame = {
+    val exact =
+      if (metric == Knn.Metric.L2) VectorDistance.l2(col("vec"), col("qvec"))
+      else -VectorDistance.cosine(col("vec"), col("qvec"))
+    val agg = TopKAgg.topK(k * rerank)
+    val shortlist = scored.groupBy("qid")
+      .agg(agg(col("key"), col("id")).as("top"))
+      .select(col("qid"), explode(col("top.items")).as("c"))
+      .select(col("qid"), col("c.id").as("id"))
+    topKPerQuery(shortlist.join(vecs.select("id", "vec"), "id")
+      .join(broadcast(queries.select("qid", "qvec")), "qid")
+      .select(col("qid"), exact.as("key"), col("id"))
+      .where(col("key").isNotNull), k, metric)
+  }
+
+  /** Each query's `nprobe` nearest cells under `cents`, one row per
+    * (query, probed cell), carrying `carry` (the search's per-query
+    * columns): the one probe projection of every IVF search, in memory
+    * and persisted — sort the k (cd, cell) structs, slice the nprobe
+    * best; no crossJoin, no window shuffle.
+    *
+    * @param queries (qid, qvec, …)
+    * @return (qid, carry…, cell)
+    */
+  private[operators] def probeCells(queries: DataFrame, cents: Array[(Long, Array[Float])],
+                         nprobe: Int, carry: org.apache.spark.sql.Column*): DataFrame =
+    queries.select(col("qid") +: carry :+
+        explode(centroidTopM(col("qvec"), cents, nprobe)).as("p"): _*)
+      .select(col("*"), col("p.cell").as("cell")).drop("p")
+
+  /** (qid, key, id) for every pair of a probe and a member of its cell,
+    * `key` −cosine(vec, qvec) unless a code-space key is given. NULL
+    * keys (zero-norm / dim-mismatch) drop before the heap —
+    * ScoredId.key is a primitive Double.
+    */
+  private[operators] def scoreCells(members: DataFrame, probes: DataFrame,
+                         key: org.apache.spark.sql.Column =
+                           -VectorDistance.cosine(col("vec"), col("qvec"))): DataFrame =
+    members.join(probes, "cell")
+      .select(col("qid"), key.as("key"), col("id"))
+      .where(col("key").isNotNull)
 
   /** IVF search: per query, rank cells by centroid distance, keep the
     * `nprobe` nearest, and run the exact TopK kernel only against
@@ -193,28 +257,14 @@ object Ann {
     */
   private def ivfSearchWith(emb: DataFrame, queries: DataFrame, k: Int,
                             nprobe: Int,
-                            cents: Array[(Long, Array[Float])]): DataFrame = {
-    val assigned = assignTo(emb, cents)
-    // probe cells per query by the same literal-centroid projection:
-    // sort the k (cd, cell) structs, slice the nprobe best — no
-    // crossJoin, no window shuffle
-    val probes = queries.select(col("qid"), col("qvec"),
-      explode(centroidTopM(col("qvec"), cents, nprobe)).as("p"))
-      .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-    // equi-join on cell co-locates each query with its probed cells;
-    // NULL scores (zero-norm / dim-mismatch) drop before the heap —
-    // ScoredId.key is a primitive Double
-    val scored = assigned.join(probes, "cell")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    topKPerQuery(scored, k)
-  }
+                            cents: Array[(Long, Array[Float])]): DataFrame =
+    // equi-join on cell co-locates each query with its probed cells
+    topKPerQuery(scoreCells(assignTo(emb, cents),
+      probeCells(queries, cents, nprobe, col("qvec"))), k)
 
   // ------------------------------------------------- persisted IVF index
 
-  private[operators] def centroidsPath(indexPath: String): String =
+  private def centroidsPath(indexPath: String): String =
     indexPath + "_centroids"
 
   /** Persist the IVF index: the assigned corpus written as parquet
@@ -228,17 +278,31 @@ object Ann {
     */
   def ivfBuildIndex(s: SparkSession, emb: DataFrame, path: String,
                     stride: Long = 200): Unit = {
-    import s.implicits._
-    val cents = collectCentroids(kmeansCentroids(emb, stride))
-    // centroids FIRST, index second: existence checks key on the
-    // index's _SUCCESS (written last), so a crash between the two
-    // writes can never publish an index whose centroids are missing
-    cents.toSeq.toDF("cell", "cvec")
-      .write.mode("overwrite").parquet(centroidsPath(path))
     // planner-stats sidecar rides the build (the build is already a
     // full-corpus job; ANALYZE piggybacks for free)
     writePlanStats(s, emb, path)
-    writeCellPartitioned(assignTo(emb, cents), path)
+    ivfBuild(s, emb, path, stride)((assigned, _) => assigned)
+  }
+
+  /** THE persisted-IVF build, shared by every index family: train the
+    * centroids (stride-seeded [[kmeansCentroids]]), write the
+    * `_centroids` sidecar, then write the assigned corpus
+    * cell-partitioned ([[writeCellPartitioned]]) with the family's
+    * derived columns, which `derive` adds given the assigned rows and
+    * the centroids. A family writes its own sidecars before calling
+    * this, or inside `derive`: every sidecar lands before the index's
+    * `_SUCCESS`, written last. That marker is the publish — existence
+    * checks key on it — so a crash between the writes can never
+    * publish an index whose sidecars are missing.
+    */
+  private[operators] def ivfBuild(s: SparkSession, emb: DataFrame, path: String,
+                                  stride: Long)(
+      derive: (DataFrame, Array[(Long, Array[Float])]) => DataFrame): Unit = {
+    import s.implicits._
+    val cents = collectCentroids(kmeansCentroids(emb, stride))
+    cents.toSeq.toDF("cell", "cvec")
+      .write.mode("overwrite").parquet(centroidsPath(path))
+    writeCellPartitioned(derive(assignTo(emb, cents), cents), path)
   }
 
   /** The one bulk cell-partitioned index write. `partitionBy("cell")`
@@ -307,16 +371,7 @@ object Ann {
   def ivfSearchIndexed(s: SparkSession, path: String, queries: DataFrame,
                        k: Int, nprobe: Int = 2,
                        filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(path)).select(col("cell"), col("cvec")))
-    val probes = queries.select(col("qid"), col("qvec"),
-      explode(centroidTopM(col("qvec"), cents, nprobe)).as("p"))
-      .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-    // the probed cell set — a tiny job over the QUERY set only —
-    // becomes the pruning predicate on the corpus scan. Driver-side
-    // bound: ≤ queries × nprobe cell ids (requests are broadcast-
-    // sized by contract), independent of corpus size
-    val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
+    val (probes, pruned) = ivfProbe(s, path, queries, nprobe, col("qvec"))
     // the reference pre-filters its approximate search with roaring
     // bitmaps (filter_index.cc:62 under hnswlib_index.cc search);
     // here a metadata predicate COMPOSES with partition pruning — the
@@ -324,15 +379,52 @@ object Ann {
     // PushedFilters, strictly less IO than a post-filter. Recall
     // caveat is the reference's too: k is filled from PROBED cells
     // only, so a highly selective filter may return < k rows.
-    val pruned = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-    val idx = filter.map(pruned.where).getOrElse(pruned)
-    val scored = idx.join(probes, "cell")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    topKPerQuery(scored, k)
+    topKPerQuery(scoreCells(filter.map(pruned.where).getOrElse(pruned), probes), k)
+  }
+
+  /** THE probe of a persisted IVF index, shared by every search over
+    * one: the stored centroids ([[storedCentroids]]), each query's
+    * `nprobe` nearest cells carrying `carry` ([[probeCells]]), and the
+    * index scan pruned to the probed cells ([[probedScan]]).
+    *
+    * @return (probes (qid, carry…, cell), the cell-pruned index scan)
+    */
+  private[operators] def ivfProbe(s: SparkSession, path: String, queries: DataFrame,
+                                  nprobe: Int, carry: org.apache.spark.sql.Column*)
+      : (DataFrame, DataFrame) = {
+    val cents = storedCentroids(s, path)
+    val probes = probeCells(queries, cents, nprobe, carry: _*)
+    (probes, probedScan(s, path, probes, cents.length))
+  }
+
+  /** The index at `path` scanned in the cells of `probes` only: the
+    * probed cell set — a tiny job over the QUERY set only, collected
+    * once — becomes a literal partition filter on the corpus scan. Its
+    * bound is the stored cell count `ncells`, independent of corpus
+    * and batch size.
+    */
+  private[operators] def probedScan(s: SparkSession, path: String, probes: DataFrame,
+                                    ncells: Int): DataFrame = {
+    val cells = graft.Cut.request(probes.select("cell").distinct(), ncells,
+      "the stored cell count", "probed cell set").map(_.getLong(0))
+    s.read.parquet(path).where(col("cell").isin(cells.toIndexedSeq: _*))
+  }
+
+  /** A compressed persisted-IVF search, the anatomy of every code
+    * family: [[ivfProbe]] carrying the family's per-query `carry`
+    * columns; scan 1 reads (id, codes, cell) of the probed cells only —
+    * `key` never touches `vec`, so the float vectors stay out of its
+    * ReadSchema — and shortlists by `key` (lower is nearer); scan 2
+    * reads `vec` of the same cells for the exact rerank
+    * ([[shortlistRerank]]).
+    */
+  private[operators] def ivfCodeSearch(s: SparkSession, path: String,
+                                       queries: DataFrame, k: Int, nprobe: Int,
+                                       rerank: Int, metric: Knn.Metric.Value,
+                                       key: org.apache.spark.sql.Column,
+                                       carry: org.apache.spark.sql.Column*): DataFrame = {
+    val (probes, idx) = ivfProbe(s, path, queries, nprobe, carry: _*)
+    shortlistRerank(scoreCells(idx, probes, key), rerank, idx, queries, k, metric)
   }
 
   // ------------------------------------------------- persisted IVF+MRL
@@ -345,21 +437,17 @@ object Ann {
     * are built for). Same compounding as the SQ8/PQ/BQ index rungs,
     * by column layout instead of codes.
     *
-    * MAINTENANCE SCOPE: the generic [[ivfIndexUpsert]]/[[ivfCompact]]
-    * rewrite touched cells as (id, vec, cell) — they would drop this
-    * layout's derived `pre` column. Refreshing an MRL index is a
-    * rebuild (cheap: `pre` is a slice, no training), or an upsert
-    * variant that recomputes the slice for rewritten cells.
+    * MAINTENANCE SCOPE: [[ivfIndexUpsert]], [[ivfIndexDelete]],
+    * [[ivfIndexRepair]] and [[ivfCompact]] keep every column of the
+    * cells they rewrite, so survivors keep `pre`. An upserted row
+    * arrives with NULL `pre` (the generic upsert does not know the
+    * prefix width), so the prefix shortlist skips it until the index
+    * is rebuilt — cheap here: `pre` is a slice, no training.
     */
   def ivfMrlBuildIndex(s: SparkSession, emb: DataFrame, path: String,
-                       stride: Long = 200, prefixDims: Int = 16): Unit = {
-    import s.implicits._
-    val cents = collectCentroids(kmeansCentroids(emb, stride))
-    cents.toSeq.toDF("cell", "cvec")
-      .write.mode("overwrite").parquet(centroidsPath(path))
-    writeCellPartitioned(assignTo(emb, cents)
-      .withColumn("pre", slice(col("vec"), 1, prefixDims)), path)
-  }
+                       stride: Long = 200, prefixDims: Int = 16): Unit =
+    ivfBuild(s, emb, path, stride)((assigned, _) =>
+      assigned.withColumn("pre", slice(col("vec"), 1, prefixDims)))
 
   /** Probe-pruned prefix search: scan 1 reads (id, pre) for probed
     * cells only (ReadSchema excludes the full vectors), cosine over
@@ -369,35 +457,10 @@ object Ann {
     */
   def ivfMrlSearch(s: SparkSession, path: String, queries: DataFrame,
                    k: Int, nprobe: Int = 2, rerank: Int = 4,
-                   prefixDims: Int = 16): DataFrame = {
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(path)).select(col("cell"), col("cvec")))
-    val probes = queries.select(col("qid"),
-      explode(centroidTopM(col("qvec"), cents, nprobe)).as("p"),
+                   prefixDims: Int = 16): DataFrame =
+    ivfCodeSearch(s, path, queries, k, nprobe, rerank, Knn.Metric.Cosine,
+      -VectorDistance.cosine(col("pre"), col("qpre")),
       slice(col("qvec"), 1, prefixDims).as("qpre"))
-      .select(col("qid"), col("qpre"), col("p.cell").as("cell"))
-    val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    val pres = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "pre", "cell")
-    val scored = pres.join(probes, "cell")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("pre"), col("qpre"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    val vecs = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "vec")
-    val rescored = shortlist
-      .join(vecs, "id")
-      .join(broadcast(queries.select("qid", "qvec")), "qid")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    topKPerQuery(rescored, k)
-  }
 
   def ivfMrlQuery(s: SparkSession, dir: String): DataFrame = {
     val path = graft.IndexCache.dirFor(dir, "ivfmrl").toString
@@ -597,18 +660,9 @@ object Ann {
 
   private def spillSearchWith(e: DataFrame, q: DataFrame, k: Int,
                               cents: Array[(Long, Array[Float])],
-                              tau: Double): DataFrame = {
-    val probes = q.select(col("qid"), col("qvec"),
-      explode(centroidTopM(col("qvec"), cents, 1))
-        .as("p"))
-      .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-    val scored = spillAssign(e, cents, tau).join(probes, "cell")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    topKPerQuery(scored, k)
-  }
+                              tau: Double): DataFrame =
+    topKPerQuery(scoreCells(spillAssign(e, cents, tau),
+      probeCells(q, cents, 1, col("qvec"))), k)
 
   /** THE SOAR TRADE QUANTIFIED — recall@10 AND scan cost for FOUR
     * layouts over the same centroids: plain IVF at nprobe=1, plain
@@ -653,10 +707,7 @@ object Ann {
       .agg(count(lit(1)).as("cn"))
     def spillSizes(tau: Double) = spillAssign(e, cents, tau)
       .groupBy("cell").agg(count(lit(1)).as("cn"))
-    def probesOf(np: Int) = q.select(col("qid"),
-      explode(centroidTopM(col("qvec"), cents, np))
-        .as("p"))
-      .select(col("qid"), col("p.cell").as("cell"))
+    def probesOf(np: Int) = probeCells(q, cents, np)
     val scanned = Seq(
       ("ivf_p1", probesOf(1).join(cellSizes, "cell")),
       ("ivf_p2", probesOf(2).join(cellSizes, "cell")),
@@ -736,18 +787,11 @@ object Ann {
     */
   private def kNNEdges(nodes: DataFrame, members: DataFrame,
                        cents: Array[(Long, Array[Float])], nprobe: Int,
-                       k: Int): DataFrame = {
-    val probes = nodes.select(col("id").as("qid"), col("vec").as("qvec"),
-        explode(centroidTopM(col("vec"), cents, nprobe)).as("p"))
-      .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-    val scored = members.select("id", "vec", "cell").join(probes, "cell")
-      .where(col("id") =!= col("qid"))
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    topKPerQuery(scored, k)
-  }
+                       k: Int): DataFrame =
+    topKPerQuery(scoreCells(members.select("id", "vec", "cell"),
+      probeCells(nodes.select(col("id").as("qid"), col("vec").as("qvec")),
+        cents, nprobe, col("qvec")))
+      .where(col("id") =!= col("qid")), k)
 
   /** Per-request PROBE EFFORT on the IVF index — nprobe as REQUEST
     * DATA, the IVF twin of [[nswSearchEf]]'s ef budget (FAISS exposes
@@ -1219,11 +1263,16 @@ object Ann {
     * keeps every term — teleport and edge contribution alike — a
     * Long (1020 = 0.85·1200 is divisible by every degree 1..5;
     * 180 = 0.15·1200). Integer sums are order-independent, so the
-    * DuckDB mirror matches bit-for-bit; the ONLY float op is the
-    * final division by N·1200^T (exact doubles at these magnitudes),
-    * rounded to 6dp. Overflow headroom: Σ_v S_t(v) = N·1200^t, so
-    * individual scores stay far below 2^63 for T ≤ 4 at any
-    * realistic N (hence the require).
+    * DuckDB mirror matches bit-for-bit. The final S_T / (N·1200^T) is
+    * rounded to 6dp half-up EXACTLY, in DECIMAL(38,0):
+    * q = (2·S_T·10⁶ + D) div 2D with D = N·1200^T, and the one float op
+    * is q / 10⁶ (q < 2⁵³, so that is the double nearest the rounded
+    * decimal on both engines). Rounding the double quotient instead
+    * let the engines' own 6dp rules split at a .xxxxxx5 boundary (2 of
+    * 2,000 rows at sf0.1). Overflow headroom: Σ_v S_t(v) ≤ N·1200^t,
+    * so individual scores stay far below 2^63 for T ≤ 4 at any
+    * realistic N (hence the require), and the numerator stays below
+    * 4.2·10¹⁸·N, under 10³⁸ for every N < 2.4·10¹⁹ — any Long N.
     *
     * Scale shape: per iteration ONE key-partitioned join of the N·k
     * edge table (memoized + checkpointed by [[knnGraph]]) against
@@ -1258,11 +1307,10 @@ object Ann {
         .localCheckpoint(true)
       scaleT *= 1200L
     }
-    // N and 1200^T are both exactly representable; their product is
-    // one deterministic double, like the final per-row division
-    val denom = n.toDouble * scaleT.toDouble
+    val denom = BigInt(n) * BigInt(scaleT)
     state.select(col("id").as("vec_id"),
-        round(col("s").cast("double") / lit(denom), 6).as("centrality"))
+        (expr(s"(CAST(s AS DECIMAL(38,0)) * 2000000 + $denom) div ${denom * 2}")
+          .cast("double") / 1000000.0).as("centrality"))
       .orderBy("vec_id")
   }
 
@@ -1446,8 +1494,10 @@ object Ann {
                      ids: DataFrame, k: Int = 5): Unit =
     maintainLayers(s, indexPath, graphPath, ids, Seq(0), k, delete = true)
 
-  /** The stored centroids of a persisted IVF index. */
-  private def storedCentroids(s: SparkSession,
+  /** The stored centroids of a persisted IVF index: the one reader of
+    * the `_centroids` sidecar that [[ivfBuild]] writes.
+    */
+  private[operators] def storedCentroids(s: SparkSession,
                               indexPath: String): Array[(Long, Array[Float])] =
     collectCentroids(s.read.parquet(centroidsPath(indexPath)))
 
@@ -1614,7 +1664,7 @@ object Ann {
       (keep.unionByName(storedLayer(affected, all, cents, l, k)),
         affCells.map(c => (l, c)))
     }
-    // same self-overwrite discipline as publishTouchedCells: the
+    // same self-overwrite discipline as rewriteCells: the
     // replacement reads files the dynamic overwrite deletes
     publishLayers(s, path, perLayer.map(_._1).reduce(_ unionByName _)
       .localCheckpoint(true), perLayer.flatMap(_._2), fs)
@@ -2265,16 +2315,10 @@ object Ann {
                        stride: Long = 200): Unit = {
     import s.implicits._
     val (mins, maxs) = Quant.trainMinMax(emb)
-    val cents = collectCentroids(kmeansCentroids(emb, stride))
-    // sidecars first; the index's _SUCCESS (written last) is the
-    // publish marker
     mins.indices.map(i => (i, mins(i), maxs(i))).toDF("dim", "mn", "mx")
       .write.mode("overwrite").parquet(quantPath(path))
-    cents.toSeq.toDF("cell", "cvec")
-      .write.mode("overwrite").parquet(centroidsPath(path))
-    writeCellPartitioned(assignTo(emb, cents)
-      .withColumn("code",
-        graft.functions.Quantize.encode(col("vec"), mins, maxs)), path)
+    ivfBuild(s, emb, path, stride)((assigned, _) => assigned
+      .withColumn("code", graft.functions.Quantize.encode(col("vec"), mins, maxs)))
   }
 
   /** Probe-pruned quantized search: partition-filtered scan of
@@ -2290,40 +2334,12 @@ object Ann {
       .orderBy("dim").collect()
     val mins = qp.map(_.getDouble(1))
     val maxs = qp.map(_.getDouble(2))
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(path)).select(col("cell"), col("cvec")))
-    val probes = queries.select(col("qid"),
-      explode(centroidTopM(col("qvec"), cents, nprobe)).as("p"),
-      graft.functions.Quantize.encode(col("qvec"), mins, maxs).as("qcode"))
-      .select(col("qid"), col("qcode"), col("p.cell").as("cell"))
-    val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    // scan 1: codes only (vec pruned away), partition-filtered;
-    // shortlist ranks by code-space COSINE — the same metric the
+    // the shortlist ranks by code-space COSINE — the same metric the
     // exact rerank uses (an L2 shortlist would cut small-norm but
     // direction-aligned vectors that cosine ranks near)
-    val codes = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "code", "cell")
-    val scored = codes.join(probes, "cell")
-      .select(col("qid"),
-        (-graft.functions.Quantize.cosine(col("code"), col("qcode"),
-          mins, maxs)).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    // scan 2: float vectors, still partition-filtered, joined to the
-    // shortlist only
-    val vecs = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "vec")
-    val rescored = shortlist
-      .join(vecs, "id")
-      .join(broadcast(queries.select("qid", "qvec")), "qid")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    topKPerQuery(rescored, k)
+    ivfCodeSearch(s, path, queries, k, nprobe, rerank, Knn.Metric.Cosine,
+      -graft.functions.Quantize.cosine(col("code"), col("qcode"), mins, maxs),
+      graft.functions.Quantize.encode(col("qvec"), mins, maxs).as("qcode"))
   }
 
   def ivfSq8Query(s: SparkSession, dir: String): DataFrame = {
@@ -2355,15 +2371,10 @@ object Ann {
                       stride: Long = 200): Unit = {
     import s.implicits._
     val mus = BinQuant.trainMeans(emb)
-    val cents = collectCentroids(kmeansCentroids(emb, stride))
-    // sidecars first; the index's _SUCCESS (written last) publishes
     mus.indices.map(i => (i, mus(i))).toDF("dim", "mu")
       .write.mode("overwrite").parquet(bqMeansPath(path))
-    cents.toSeq.toDF("cell", "cvec")
-      .write.mode("overwrite").parquet(centroidsPath(path))
-    writeCellPartitioned(assignTo(emb, cents)
-      .withColumn("code",
-        graft.functions.BinaryQuant.pack(col("vec"), mus)), path)
+    ivfBuild(s, emb, path, stride)((assigned, _) => assigned
+      .withColumn("code", graft.functions.BinaryQuant.pack(col("vec"), mus)))
   }
 
   /** Probe-pruned binary search: partition-filtered (id, code) scan
@@ -2377,34 +2388,9 @@ object Ann {
                   k: Int, nprobe: Int = 2, rerank: Int = 4): DataFrame = {
     val mus = s.read.parquet(bqMeansPath(path))
       .orderBy("dim").collect().map(_.getDouble(1))
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(path)).select(col("cell"), col("cvec")))
-    val probes = queries.select(col("qid"),
-      explode(centroidTopM(col("qvec"), cents, nprobe)).as("p"),
+    ivfCodeSearch(s, path, queries, k, nprobe, rerank, Knn.Metric.Cosine,
+      graft.functions.BinaryQuant.hamming(col("code"), col("qcode")).cast("double"),
       graft.functions.BinaryQuant.pack(col("qvec"), mus).as("qcode"))
-      .select(col("qid"), col("qcode"), col("p.cell").as("cell"))
-    val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    val codes = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "code", "cell")
-    val scored = codes.join(probes, "cell")
-      .select(col("qid"),
-        graft.functions.BinaryQuant.hamming(col("code"), col("qcode"))
-          .cast("double").as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    val vecs = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "vec")
-    val rescored = shortlist
-      .join(vecs, "id")
-      .join(broadcast(queries.select("qid", "qvec")), "qid")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    topKPerQuery(rescored, k)
   }
 
   def ivfBqQuery(s: SparkSession, dir: String): DataFrame = {
@@ -2427,27 +2413,32 @@ object Ann {
     * index already has, never silently re-train them.
     */
   def assignUnderStored(s: SparkSession, indexPath: String,
-                        rows: DataFrame): DataFrame = {
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(indexPath))
-        .select(col("cell"), col("cvec")))
-    assignTo(rows, cents)
-  }
+                        rows: DataFrame): DataFrame =
+    assignTo(rows, storedCentroids(s, indexPath))
 
   /** LWW-upsert into a persisted IVF index WITHOUT a full rebuild —
     * the reference's `upsert` (remove-old + insert-new,
     * vector_database.cc:53) against the table-shaped index: only
     * cells that currently hold an updated id or receive a new
-    * assignment are rewritten, through dynamic partition overwrite.
-    * At 1000 cells and a 0.1% daily churn, that is rewriting a
-    * handful of partitions instead of re-clustering 100 TB. Uses the
-    * STORED centroids (an upsert must not silently re-train the
-    * quantizer); periodic re-clustering is a separate full rebuild.
+    * assignment are rewritten ([[rewriteCells]]). At 1000 cells and a
+    * 0.1% daily churn, that is rewriting a handful of partitions
+    * instead of re-clustering 100 TB. Uses the STORED centroids (an
+    * upsert must not silently re-train the quantizer); periodic
+    * re-clustering is a separate full rebuild. Arrivals carry (id,
+    * vec, cell) and read NULL in every other column of the index —
+    * metadata such as `label`, and a code family's derived column,
+    * which [[Pq.ivfPqUpsert]] fills for its own index.
     */
   def ivfIndexUpsert(s: SparkSession, path: String,
-                     updates: DataFrame): Unit = {
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(path)).select(col("cell"), col("cvec")))
+                     updates: DataFrame): Unit =
+    upsertCells(s, path, updates)(identity)
+
+  /** [[ivfIndexUpsert]] with the family's derived columns added to the
+    * arrivals by `derive`.
+    */
+  private[operators] def upsertCells(s: SparkSession, path: String,
+                                     updates: DataFrame)(
+      derive: DataFrame => DataFrame): Unit = {
     // LWW WITHIN the batch too: duplicate ids in one updates frame
     // collapse before assignment — by greatest `version` when the
     // batch carries one (the WAL's tiebreak), else to a single
@@ -2458,54 +2449,53 @@ object Ann {
         updates.groupBy("id")
           .agg(max_by(col("vec"), col("version")).as("vec"))
       else updates.dropDuplicates("id")
-    val assigned = assignTo(onePerId.select("id", "vec"), cents)
-    val idx = s.read.parquet(path)
-    val updatedIds = broadcast(assigned.select("id"))
+    val arrivals = derive(assignTo(onePerId.select("id", "vec"), storedCentroids(s, path)))
+    val ids = broadcast(arrivals.select("id"))
     // cells holding an old version of an updated id — a column-pruned
-    // (id, cell) scan, no vectors read
-    val touched = idx.join(updatedIds, "id")
-      .select(col("cell").cast("long")).distinct()
-      .unionByName(assigned.select(col("cell")).distinct())
-      .distinct().collect().map(_.getLong(0))
-    val survivors = idx
-      .where(col("cell").isin(touched.toIndexedSeq: _*))
-      .join(updatedIds, Seq("id"), "left_anti")
-      .select(col("id"), col("vec"), col("cell").cast("long").as("cell"))
-    val replacement = survivors.unionByName(assigned)
-    publishTouchedCells(s, path, touched, replacement)
+    // (id, cell) scan, no vectors read — and the arrivals' cells
+    val touched = cellsOf(s.read.parquet(path).join(ids, "id")
+      .select(col("cell").cast("long")).unionByName(arrivals.select("cell")))
+    rewriteCells(s, path, touched, Some(arrivals))(_.join(ids, Seq("id"), "left_anti"))
   }
 
   /** DELETE ids from a persisted IVF index without a rebuild — the
     * tombstone surface the reference never grew (no delete endpoint
     * in http_server.cc; FaissIndex::remove_vectors exists only as
     * upsert's remove-old step). Only the cells that HOLD a deleted id
-    * are rewritten (dynamic partition overwrite); cells the deletion
-    * empties are removed entirely. The touched set comes from a
-    * column-pruned (id, cell) scan — no vectors read — and the
-    * rewrite is bounded by churn locality, never index size.
-    * Centroids are untouched (deletion must not silently re-train
-    * the quantizer any more than upsert may).
+    * are rewritten ([[rewriteCells]]); cells the deletion empties are
+    * removed entirely. The touched set comes from a column-pruned
+    * (id, cell) scan — no vectors read — and the rewrite is bounded by
+    * churn locality, never index size. Centroids are untouched
+    * (deletion must not silently re-train the quantizer any more than
+    * upsert may).
     */
   def ivfIndexDelete(s: SparkSession, path: String,
                      ids: DataFrame): Unit = {
     val delIds = broadcast(ids.select("id").distinct())
-    val idx = s.read.parquet(path)
-    val touched = idx.join(delIds, "id")
-      .select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return  // nothing referenced the index
-    val survivors = idx
-      .where(col("cell").isin(touched.toIndexedSeq: _*))
-      .join(delIds, Seq("id"), "left_anti")
-      .select(col("id"), col("vec"), col("cell").cast("long").as("cell"))
-    publishTouchedCells(s, path, touched, survivors)
+    val touched = cellsOf(s.read.parquet(path).join(delIds, "id"))
+    // empty: nothing referenced the index
+    if (touched.nonEmpty)
+      rewriteCells(s, path, touched)(_.join(delIds, Seq("id"), "left_anti"))
   }
 
-  /** Publish tail shared by [[ivfIndexUpsert]] and [[ivfIndexRepair]]:
-    * dynamic-partition-overwrite the replacement rows, then delete
-    * touched cells the replacement emptied (dynamic overwrite only
-    * replaces partitions PRESENT in the written data, so an emptied
-    * cell's stale files would otherwise survive).
+  /** The distinct cells of `rows` on the driver: at most one per
+    * partition of the index, which holds one per stored centroid.
+    */
+  private def cellsOf(rows: DataFrame): Array[Long] =
+    rows.select(col("cell").cast("long")).distinct().collect().map(_.getLong(0))
+
+  /** THE touched-cell rewrite of a persisted IVF index, shared by
+    * upsert, delete, repair and compaction (and so by every persisted
+    * graph write, whose index step is an upsert or a delete). The rows
+    * of the `touched` cells pass through `keep` with EVERY column of
+    * the index's schema — survivors keep their metadata (`label`, …)
+    * and the family's derived columns (`pre`, `code`); `arrivals` join
+    * by name and read NULL in any column they do not carry. The
+    * replacement is then published by [[TablePublish.publishTouched]]:
+    * dynamic partition overwrite, then deletion of the touched cells
+    * the replacement emptied (dynamic overwrite only replaces
+    * partitions PRESENT in the written data, so an emptied cell's
+    * stale files would otherwise survive).
     *
     * CRASH WINDOW (documented contract): the overwrite and the
     * empty-cell deletion are separate filesystem steps. A crash
@@ -2516,40 +2506,40 @@ object Ann {
     * is the recovery story (the reference replays its WAL from the
     * last snapshot on the same reasoning — persistence.cc recovery).
     */
-  private[operators] def publishTouchedCells(s: SparkSession, path: String,
-                                  touched: Array[Long],
-                                  replacementRows: DataFrame): Unit =
-    TablePublish.publishTouched(s, path, "cell", touched, replacementRows)
+  private def rewriteCells(s: SparkSession, path: String, touched: Array[Long],
+                           arrivals: Option[DataFrame] = None)(
+      keep: DataFrame => DataFrame): Unit = {
+    val rows = keep(s.read.parquet(path).where(col("cell").isin(touched.toIndexedSeq: _*)))
+      .withColumn("cell", col("cell").cast("long"))
+    TablePublish.publishTouched(s, path, "cell", touched,
+      arrivals.fold(rows)(rows.unionByName(_, allowMissingColumns = true)))
+  }
 
   /** Repair an index left inconsistent by a crash inside
-    * [[publishTouchedCells]]'s window: any id present in more than
-    * one cell keeps only its most recently WRITTEN copy (the
-    * overwrite's files postdate the stale cell's — discriminated by
-    * `_metadata.file_modification_time`, no content comparison), and
-    * cells emptied by discarding stale copies are deleted. Idempotent:
-    * a repaired index has no duplicate ids, so a second run touches
-    * nothing; a crash inside repair itself is recovered by re-running
-    * repair.
+    * [[rewriteCells]]'s window: any id present in more than one cell
+    * keeps only its most recently WRITTEN copy, every column of it
+    * (the overwrite's files postdate the stale cell's — discriminated
+    * by `_metadata.file_modification_time`, no content comparison),
+    * and cells emptied by discarding stale copies are deleted.
+    * Idempotent: a repaired index has no duplicate ids, so a second
+    * run touches nothing; a crash inside repair itself is recovered by
+    * re-running repair.
     */
   def ivfIndexRepair(s: SparkSession, path: String): Unit = {
     val idx = s.read.parquet(path)
-      .select(col("id"), col("vec"), col("cell").cast("long").as("cell"),
-        col("_metadata.file_modification_time").as("mt"))
     // duplicate ids via a column-pruned (id, cell) pass
     val dupIds = idx.groupBy("id")
       .agg(count(lit(1)).as("n")).where(col("n") > 1).select("id")
-    val touched = idx.join(broadcast(dupIds), "id")
-      .select("cell").distinct().collect().map(_.getLong(0))
-    if (touched.nonEmpty) {
-      val inTouched = idx.where(col("cell").isin(touched.toIndexedSeq: _*))
-      // per dup id keep max-mtime copy; ids unique in the index pass
-      // through the same aggregate unchanged (their single row is its
-      // own max) — one groupBy over only the touched cells' rows
-      val replacement = inTouched
-        .groupBy("id")
-        .agg(max_by(struct(col("vec"), col("cell")), col("mt")).as("r"))
-        .select(col("id"), col("r.vec").as("vec"), col("r.cell").as("cell"))
-      publishTouchedCells(s, path, touched, replacement)
+    val touched = cellsOf(idx.join(broadcast(dupIds), "id"))
+    // per dup id keep the max-mtime copy; ids unique in the index pass
+    // through the same aggregate unchanged (their single row is its
+    // own max) — one groupBy over only the touched cells' rows
+    if (touched.nonEmpty) rewriteCells(s, path, touched) { rows =>
+      val rest = rows.columns.filter(_ != "id")
+      rows.groupBy("id")
+        .agg(max_by(struct(rest.map(col): _*),
+          col("_metadata.file_modification_time")).as("r"))
+        .select(col("id") +: rest.map(c => col("r." + c).as(c)): _*)
     }
   }
 
@@ -2557,11 +2547,11 @@ object Ann {
     * files to the cells it touches (dynamic overwrite writes one file
     * per task per cell), so a churn-heavy index accumulates small
     * files and probe scans pay per-file open/footer costs. Cells
-    * holding more than `maxFilesPerCell` data files are rewritten —
-    * content-identical, repartitioned by cell so each compacted cell
-    * lands in exactly one task = one file. Untouched cells keep their
-    * files; same crash window + repair story as
-    * [[publishTouchedCells]].
+    * holding more than `maxFilesPerCell` data files are rewritten
+    * through [[rewriteCells]] — content-identical, every column kept,
+    * repartitioned by cell so each compacted cell lands in exactly one
+    * task = one file. Untouched cells keep their files; same crash
+    * window + repair story.
     */
   def ivfCompact(s: SparkSession, path: String,
                  maxFilesPerCell: Int = 1): Unit = {
@@ -2579,13 +2569,8 @@ object Ann {
       }
       .map(_.getPath.getName.stripPrefix("cell=").toLong)
       .toArray
-    if (fragmented.nonEmpty) {
-      val rows = s.read.parquet(path)
-        .where(col("cell").isin(fragmented.toIndexedSeq: _*))
-        .select(col("id"), col("vec"), col("cell").cast("long").as("cell"))
-        .repartition(col("cell"))
-      publishTouchedCells(s, path, fragmented, rows)
-    }
+    if (fragmented.nonEmpty)
+      rewriteCells(s, path, fragmented)(_.repartition(col("cell")))
   }
 
   /** Per-cell index statistics as a relational plan — the
@@ -2608,7 +2593,7 @@ object Ann {
 
   /** Periodic re-clustering: retrain centroids on the CURRENT corpus
     * and build a fresh index at `newPath`, reading the rows out of
-    * the old index. Upserts never retrain (the quantizer must stay
+    * the old index with every column but the cell. Upserts never retrain (the quantizer must stay
     * fixed between rebuilds — drifted data degrades recall, it never
     * corrupts results), so this is the maintenance op that restores
     * cell balance after sustained churn. Builds BESIDE the old index
@@ -2620,8 +2605,7 @@ object Ann {
   def ivfRecluster(s: SparkSession, path: String, newPath: String,
                    stride: Long = 200): Unit = {
     require(newPath != path, "recluster builds beside the old index")
-    ivfBuildIndex(s, s.read.parquet(path).select("id", "vec"),
-      newPath, stride)
+    ivfBuildIndex(s, s.read.parquet(path).drop("cell"), newPath, stride)
   }
 
   // ------------------------------------------------------ index manifest
@@ -2803,15 +2787,8 @@ object Ann {
   def ivfRangeSearchIndexed(s: SparkSession, path: String,
                             queries: DataFrame, threshold: Double,
                             nprobe: Int = 2): DataFrame = {
-    val cents = collectCentroids(
-      s.read.parquet(centroidsPath(path)).select(col("cell"), col("cvec")))
-    val probes = queries.select(col("qid"), col("qvec"),
-      explode(centroidTopM(col("qvec"), cents, nprobe)).as("p"))
-      .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-    val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .join(broadcast(probes), "cell")
+    val (probes, pruned) = ivfProbe(s, path, queries, nprobe, col("qvec"))
+    pruned.join(broadcast(probes), "cell")
       .select(col("qid"), col("id").as("nn_id"),
         VectorDistance.cosine(col("vec"), col("qvec")).as("s"))
       .where(col("s").isNotNull && col("s") >= threshold)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.{BinaryQuant, VectorDistance}
+import graft.functions.BinaryQuant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,17 +65,7 @@ object BinQuant {
           .cast("double").as("key"),
         col("id"))
       .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    // exact rerank touches only the shortlist's float vectors;
-    // similarity ranks descending → negate for the lower-is-better heap
-    val rescored = shortlist
-      .join(emb, "id")
-      .join(broadcast(queries), "qid")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    Ann.topKPerQuery(rescored, k)
+    Ann.shortlistRerank(scored, rerank, emb, queries, k, Knn.Metric.Cosine)
   }
 
   def bqQuery(s: SparkSession, dir: String): DataFrame = {

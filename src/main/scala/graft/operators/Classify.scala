@@ -84,21 +84,12 @@ object Classify {
       .orderBy("qid")
   }
 
-  /** Per-label centroids: the label analog of one Lloyd mean round —
-    * per-(label, dim) mean via posexplode (fully distributed, no
-    * vector on the driver), 6dp-rounded and float-round-tripped so
-    * the centroids are independent of float-sum order (the
-    * [[Ann.kmeansCentroids]] determinism discipline, verbatim).
+  /** Per-label centroids: one Lloyd mean round ([[Ann.cellMeans]])
+    * with the label as the cell, so they are 6dp-rounded, float-round-
+    * tripped and skip non-finite rows exactly as the IVF centroids do.
     */
   def labelCentroids(emb: DataFrame): DataFrame =
-    emb.select(col("label").cast("long").as("cell"),
-        posexplode(col("vec")).as(Seq("dim", "x")))
-      .groupBy("cell", "dim")
-      .agg(round(avg(col("x")), 6).as("m"))
-      .groupBy("cell")
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-      .select(col("cell"),
-        expr("transform(dm, p -> cast(p.m AS float))").as("cvec"))
+    Ann.cellMeans(emb.select(col("label").cast("long").as("cell"), col("vec")))
 
   /** Nearest-centroid assignment + confusion matrix: every vector
     * assigned to its nearest label centroid (cosine, the shared

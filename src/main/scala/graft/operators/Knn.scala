@@ -1104,16 +1104,8 @@ object Knn {
         (-VectorDistance.cosine(col("pre"), col("qpre"))).as("key"),
         col("id"))
       .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    val rescored = shortlist
-      .join(data, "id")
-      .join(broadcast(queries.select("qid", "qvec")), "qid")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    // shared finishing tail — the IVF twin (Ann.ivfMrlSearch) uses
-    // the same one, so tie-break/rounding discipline cannot drift
-    Ann.topKPerQuery(rescored, k)
+    // shared rerank tail — the IVF twin (Ann.ivfMrlSearch) uses the
+    // same one, so tie-break/rounding discipline cannot drift
+    Ann.shortlistRerank(scored, rerank, data, queries, k, Metric.Cosine)
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.{PqCodec, VectorDistance}
+import graft.functions.PqCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -104,21 +104,7 @@ object Pq {
         PqCodec.l2Lut(col("code"), col("lut"), m, ksub).as("key"),
         col("id"))
       .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    // exact rerank touches only the shortlist's float vectors
-    val rescored = shortlist
-      .join(emb, "id")
-      .join(qb, "qid")
-      .select(col("qid"),
-        VectorDistance.l2(col("vec"), col("qvec")).as("key"), col("id"))
-      .where(col("key").isNotNull)
-    val fin = TopKAgg.topK(k)
-    rescored.groupBy("qid")
-      .agg(fin(col("key"), col("id")).as("top"))
-      .select(col("qid"), posexplode(col("top.items")))
-      .select(col("qid"), (col("pos") + 1).as("rk"),
-        col("col.id").as("nn_id"), round(col("col.key"), 4).as("score"))
-      .orderBy("qid", "rk")
+    Ann.shortlistRerank(scored, rerank, emb, qb, k, Knn.Metric.L2)
   }
 
   def pqSearch(emb: DataFrame, queries: DataFrame, k: Int,
@@ -146,6 +132,15 @@ object Pq {
 
   private def pqPath(indexPath: String): String = indexPath + "_pq"
 
+  private def writeCodebook(s: SparkSession, cb: Array[Double], path: String): Unit = {
+    import s.implicits._
+    cb.zipWithIndex.map { case (w, i) => (i, w) }.toSeq.toDF("idx", "w")
+      .write.mode("overwrite").parquet(pqPath(path))
+  }
+
+  private def storedCodebook(s: SparkSession, path: String): Array[Double] =
+    s.read.parquet(pqPath(path)).orderBy("idx").collect().map(_.getDouble(1))
+
   /** The FAISS IVFPQ layout as a table (by_residual=false variant —
     * PQ trained on raw vectors, not cell residuals: one global
     * codebook, which is what keeps the DuckDB mirror and the
@@ -158,18 +153,14 @@ object Pq {
     */
   def ivfPqBuildIndex(s: SparkSession, emb: DataFrame, path: String,
                       stride: Long = 200, pqStride: Long = 25): Unit = {
-    import s.implicits._
     val cb = trainCodebook(emb, stride = pqStride)
-    val cents = Ann.collectCentroids(Ann.kmeansCentroids(emb, stride))
-    // sidecars first; the index's _SUCCESS (written last) publishes
-    cb.zipWithIndex.map { case (w, i) => (i, w) }.toSeq.toDF("idx", "w")
-      .write.mode("overwrite").parquet(pqPath(path))
-    cents.toSeq.toDF("cell", "cvec")
-      .write.mode("overwrite").parquet(Ann.centroidsPath(path))
-    Ann.writeCellPartitioned(Ann.assignTo(emb, cents)
-      .withColumn("code", PqCodec.encode(col("vec"), cb, M, DSUB, KSUB)),
-      path)
+    writeCodebook(s, cb, path)
+    Ann.ivfBuild(s, emb, path, stride)((assigned, _) => encoded(assigned, cb))
   }
+
+  /** `rows` with their `code` under the codebook `cb`. */
+  private def encoded(rows: DataFrame, cb: Array[Double]): DataFrame =
+    rows.withColumn("code", PqCodec.encode(col("vec"), cb, M, DSUB, KSUB))
 
   /** Probe-pruned PQ search: partition-filtered scan of (id, code)
     * only → ADC cosine shortlist (same metric as the exact rerank,
@@ -185,99 +176,34 @@ object Pq {
     */
   def ivfPqSearch(s: SparkSession, path: String, queries: DataFrame,
                   k: Int, nprobe: Int = 2, rerank: Int = 4): DataFrame = {
-    val cb = s.read.parquet(pqPath(path))
-      .orderBy("idx").collect().map(_.getDouble(1))
-    val cents = Ann.collectCentroids(
-      s.read.parquet(Ann.centroidsPath(path)).select(col("cell"), col("cvec")))
-    val probes = queries.select(col("qid"), col("qvec"),
-      explode(Ann.centroidTopM(col("qvec"), cents, nprobe)).as("p"))
-      .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-    val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    val codes = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "code", "cell")
-    val scored = codes.join(probes, "cell")
-      .select(col("qid"),
-        (-PqCodec.cosineAdc(col("code"), col("qvec"), cb, M, DSUB, KSUB))
-          .as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    val vecs = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "vec")
-    val rescored = shortlist
-      .join(vecs, "id")
-      .join(broadcast(queries.select("qid", "qvec")), "qid")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    Ann.topKPerQuery(rescored, k)
+    val cb = storedCodebook(s, path)
+    Ann.ivfCodeSearch(s, path, queries, k, nprobe, rerank, Knn.Metric.Cosine,
+      -PqCodec.cosineAdc(col("code"), col("qvec"), cb, M, DSUB, KSUB), col("qvec"))
   }
 
   /** INCREMENTAL PQ-INDEX MAINTENANCE — the compressed index joins
-    * the maintained-structure family: encode the batch under the
-    * FROZEN codebook and centroids (maintenance must not silently
-    * retrain the quantizer — FAISS's add-to-trained-index
-    * contract), LWW-collapse within the batch, and rewrite only the
-    * touched cells carrying the co-partitioned (id, vec, code)
-    * survivors. Equivalence contract (PqSpec): the maintained index
-    * equals assign+encode of the LWW-merged corpus under the
-    * ORIGINAL codebook — not a fresh build, which would retrain on
-    * the new corpus and legitimately differ.
+    * the maintained-structure family: [[Ann.ivfIndexUpsert]]'s
+    * touched-cell rewrite, with each arrival encoded under the FROZEN
+    * codebook and centroids (maintenance must not silently retrain the
+    * quantizer — FAISS's add-to-trained-index contract). Equivalence
+    * contract (PqSpec): the maintained index equals assign+encode of
+    * the LWW-merged corpus under the ORIGINAL codebook — not a fresh
+    * build, which would retrain on the new corpus and legitimately
+    * differ.
     */
   def ivfPqUpsert(s: SparkSession, path: String,
                   updates: DataFrame): Unit = {
-    val cb = s.read.parquet(pqPath(path))
-      .orderBy("idx").collect().map(_.getDouble(1))
-    val cents = Ann.collectCentroids(
-      s.read.parquet(Ann.centroidsPath(path)).select(col("cell"), col("cvec")))
-    val onePerId =
-      if (updates.columns.contains("version"))
-        updates.groupBy("id")
-          .agg(max_by(col("vec"), col("version")).as("vec"))
-      else updates.dropDuplicates("id")
-    val assigned = Ann.assignTo(onePerId.select("id", "vec"), cents)
-      .withColumn("code", PqCodec.encode(col("vec"), cb, M, DSUB, KSUB))
-      .select(col("id"), col("vec"), col("code"),
-        col("cell").cast("long").as("cell"))
-    val idx = s.read.parquet(path)
-    val updatedIds = broadcast(assigned.select("id"))
-    val touched = idx.join(updatedIds, "id")
-      .select(col("cell").cast("long")).distinct()
-      .unionByName(assigned.select(col("cell")).distinct())
-      .distinct().collect().map(_.getLong(0))
-    val survivors = idx
-      .where(col("cell").isin(touched.toIndexedSeq: _*))
-      .join(updatedIds, Seq("id"), "left_anti")
-      .select(col("id"), col("vec"), col("code"),
-        col("cell").cast("long").as("cell"))
-    Ann.publishTouchedCells(s, path, touched,
-      survivors.unionByName(assigned))
+    val cb = storedCodebook(s, path)
+    Ann.upsertCells(s, path, updates)(encoded(_, cb))
   }
 
-  /** Tombstone twin: drop deleted ids from their cells, codes ride
-    * along untouched; emptied cells are removed.
+  /** Tombstone twin: [[Ann.ivfIndexDelete]] — codes ride along with
+    * the survivors' other columns; emptied cells are removed.
     */
-  def ivfPqDelete(s: SparkSession, path: String, ids: DataFrame): Unit = {
-    val delIds = broadcast(ids.select("id").distinct())
-    val idx = s.read.parquet(path)
-    val touched = idx.join(delIds, "id")
-      .select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val survivors = idx
-      .where(col("cell").isin(touched.toIndexedSeq: _*))
-      .join(delIds, Seq("id"), "left_anti")
-      .select(col("id"), col("vec"), col("code"),
-        col("cell").cast("long").as("cell"))
-    Ann.publishTouchedCells(s, path, touched, survivors)
-  }
+  def ivfPqDelete(s: SparkSession, path: String, ids: DataFrame): Unit =
+    Ann.ivfIndexDelete(s, path, ids)
 
   // --------------------------------------------- residual IVF + PQ
-
-  private def resPath(indexPath: String): String = indexPath + "_res"
 
   /** FAISS's DEFAULT IVFPQ geometry (by_residual=true — the form
     * `ann_ivf_pq` deliberately skipped): PQ trained on CELL RESIDUALS
@@ -301,22 +227,17 @@ object Pq {
   def ivfPqResBuildIndex(s: SparkSession, emb: DataFrame, path: String,
                          stride: Long = 200, pqStride: Long = 25): Unit = {
     import s.implicits._
-    val cents = Ann.collectCentroids(Ann.kmeansCentroids(emb, stride))
-    val centDf = broadcast(cents.toSeq.toDF("cell", "cvec"))
-    val assigned = Ann.assignTo(emb, cents)
-    val resid = assigned.join(centDf, "cell")
-      .select(col("id"), expr("zip_with(vec, cvec, (x, y) -> " +
-        "CAST(CAST(x AS DOUBLE) - CAST(y AS DOUBLE) AS FLOAT))").as("vec"))
-      .localCheckpoint(true)
-    val cb = trainCodebook(resid, stride = pqStride)
-    cb.zipWithIndex.map { case (w, i) => (i, w) }.toSeq.toDF("idx", "w")
-      .write.mode("overwrite").parquet(pqPath(path))
-    cents.toSeq.toDF("cell", "cvec")
-      .write.mode("overwrite").parquet(Ann.centroidsPath(path))
-    Ann.writeCellPartitioned(
+    Ann.ivfBuild(s, emb, path, stride) { (assigned, cents) =>
+      val resid = assigned.join(broadcast(cents.toSeq.toDF("cell", "cvec")), "cell")
+        .select(col("id"), expr("zip_with(vec, cvec, (x, y) -> " +
+          "CAST(CAST(x AS DOUBLE) - CAST(y AS DOUBLE) AS FLOAT))").as("vec"))
+        .localCheckpoint(true)
+      val cb = trainCodebook(resid, stride = pqStride)
+      writeCodebook(s, cb, path)
       assigned.join(resid.select(col("id"), col("vec").as("res")), "id")
         .withColumn("code", PqCodec.encode(col("res"), cb, M, DSUB, KSUB))
-        .select(col("id"), col("vec"), col("code"), col("cell")), path)
+        .select(col("id"), col("vec"), col("code"), col("cell"))
+    }
   }
 
   /** Probe-pruned residual-PQ search: per (query, probed cell) the
@@ -328,47 +249,21 @@ object Pq {
   def ivfPqResSearch(s: SparkSession, path: String, queries: DataFrame,
                      k: Int, nprobe: Int = 2, rerank: Int = 4): DataFrame = {
     import s.implicits._
-    val cb = s.read.parquet(pqPath(path))
-      .orderBy("idx").collect().map(_.getDouble(1))
-    val cents = Ann.collectCentroids(
-      s.read.parquet(Ann.centroidsPath(path)).select(col("cell"), col("cvec")))
-    val centDf = broadcast(cents.toSeq.toDF("cell", "cvec"))
-    val probes = queries.select(col("qid"), col("qvec"),
-        explode(Ann.centroidTopM(col("qvec"), cents, nprobe)).as("p"))
-      .select(col("qid"), col("qvec"), col("p.cell").as("cell"))
-      .join(centDf, "cell")
+    val cb = storedCodebook(s, path)
+    val cents = Ann.storedCentroids(s, path)
+    // the query residuals, checkpointed: the interpreted zip_with runs
+    // once per (query, probed cell), and the probed cell set is read
+    // off the checkpoint
+    val probes = Ann.probeCells(queries, cents, nprobe, col("qvec"))
+      .join(broadcast(cents.toSeq.toDF("cell", "cvec")), "cell")
       .select(col("qid"), col("cell"),
         expr("zip_with(qvec, cvec, (x, y) -> " +
           "CAST(x AS DOUBLE) - CAST(y AS DOUBLE))").as("qres"))
       .localCheckpoint(true)
-    val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    val codes = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "code", "cell")
-    val scored = codes.join(broadcast(probes), "cell")
-      .select(col("qid"),
-        PqCodec.l2Adc(col("code"), col("qres"), cb, M, DSUB, KSUB)
-          .as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    val vecs = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "vec")
-    val rescored = shortlist
-      .join(vecs, "id")
-      .join(broadcast(queries.select("qid", "qvec")), "qid")
-      .select(col("qid"),
-        VectorDistance.l2(col("vec"), col("qvec")).as("key"), col("id"))
-      .where(col("key").isNotNull)
-    // L2 keys rank ascending as-is (topKPerQuery negates for cosine)
-    val fin = TopKAgg.topK(k)
-    rescored.groupBy("qid")
-      .agg(fin(col("key"), col("id")).as("top"))
-      .select(col("qid"), posexplode(col("top.items")))
-      .select(col("qid"), (col("pos") + 1).as("rk"),
-        col("col.id").as("nn_id"), round(col("col.key"), 4).as("score"))
-      .orderBy("qid", "rk")
+    val idx = Ann.probedScan(s, path, probes, cents.length)
+    Ann.shortlistRerank(Ann.scoreCells(idx, broadcast(probes),
+        PqCodec.l2Adc(col("code"), col("qres"), cb, M, DSUB, KSUB)),
+      rerank, idx, queries, k, Knn.Metric.L2)
   }
 
   // ------------------------------------------------------- IVF + OPQ
@@ -458,17 +353,12 @@ object Pq {
     val cb = trainCodebook(
       emb.select(col("id"), rotate(col("vec"), perm).as("vec")),
       stride = pqStride)
-    val cents = Ann.collectCentroids(Ann.kmeansCentroids(emb, stride))
-    cb.zipWithIndex.map { case (w, i) => (i, w) }.toSeq.toDF("idx", "w")
-      .write.mode("overwrite").parquet(pqPath(path))
+    writeCodebook(s, cb, path)
     perm.zipWithIndex.map { case (dim, slot) => (slot, dim) }.toSeq
       .toDF("slot", "dim")
       .write.mode("overwrite").parquet(opqPermPath(path))
-    cents.toSeq.toDF("cell", "cvec")
-      .write.mode("overwrite").parquet(Ann.centroidsPath(path))
-    Ann.writeCellPartitioned(Ann.assignTo(emb, cents)
-      .withColumn("code",
-        PqCodec.encode(rotate(col("vec"), perm), cb, M, DSUB, KSUB)), path)
+    Ann.ivfBuild(s, emb, path, stride)((assigned, _) => assigned.withColumn("code",
+      PqCodec.encode(rotate(col("vec"), perm), cb, M, DSUB, KSUB)))
   }
 
   /** ivfPqSearch's plan with the query rotated into code space for
@@ -478,38 +368,12 @@ object Pq {
     */
   def ivfOpqSearch(s: SparkSession, path: String, queries: DataFrame,
                    k: Int, nprobe: Int = 2, rerank: Int = 4): DataFrame = {
-    val cb = s.read.parquet(pqPath(path))
-      .orderBy("idx").collect().map(_.getDouble(1))
+    val cb = storedCodebook(s, path)
     val perm = s.read.parquet(opqPermPath(path))
       .orderBy("slot").collect().map(_.getInt(1))
-    val cents = Ann.collectCentroids(
-      s.read.parquet(Ann.centroidsPath(path)).select(col("cell"), col("cvec")))
-    val probes = queries.select(col("qid"), col("qvec"),
-        explode(Ann.centroidTopM(col("qvec"), cents, nprobe)).as("p"))
-      .select(col("qid"), col("qvec"),
-        rotate(col("qvec"), perm).as("rqvec"), col("p.cell").as("cell"))
-    val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    val codes = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "code", "cell")
-    val scored = codes.join(probes, "cell")
-      .select(col("qid"),
-        (-PqCodec.cosineAdc(col("code"), col("rqvec"), cb, M, DSUB, KSUB))
-          .as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    val vecs = s.read.parquet(path)
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .select("id", "vec")
-    val rescored = shortlist
-      .join(vecs, "id")
-      .join(broadcast(queries.select("qid", "qvec")), "qid")
-      .select(col("qid"),
-        (-VectorDistance.cosine(col("vec"), col("qvec"))).as("key"),
-        col("id"))
-      .where(col("key").isNotNull)
-    Ann.topKPerQuery(rescored, k)
+    Ann.ivfCodeSearch(s, path, queries, k, nprobe, rerank, Knn.Metric.Cosine,
+      -PqCodec.cosineAdc(col("code"), col("rqvec"), cb, M, DSUB, KSUB),
+      rotate(col("qvec"), perm).as("rqvec"))
   }
 
   /** OPQ-vs-PQ ON THE SEARCH AXIS (r13 — completes the recall-report

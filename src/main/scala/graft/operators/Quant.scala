@@ -49,21 +49,7 @@ object Quant {
         Quantize.l2(col("code"), col("qcode"), mins, maxs).as("key"),
         col("id"))
       .where(col("key").isNotNull)
-    val shortlist = TopKAgg.shortlist(scored, k * rerank)
-    // exact rerank touches only the shortlist's float vectors
-    val rescored = shortlist
-      .join(emb, "id")
-      .join(broadcast(queries), "qid")
-      .select(col("qid"),
-        VectorDistance.l2(col("vec"), col("qvec")).as("key"), col("id"))
-      .where(col("key").isNotNull)
-    val fin = TopKAgg.topK(k)
-    rescored.groupBy("qid")
-      .agg(fin(col("key"), col("id")).as("top"))
-      .select(col("qid"), posexplode(col("top.items")))
-      .select(col("qid"), (col("pos") + 1).as("rk"),
-        col("col.id").as("nn_id"), round(col("col.key"), 4).as("score"))
-      .orderBy("qid", "rk")
+    Ann.shortlistRerank(scored, rerank, emb, queries, k, Knn.Metric.L2)
   }
 
   def sq8Query(s: SparkSession, dir: String): DataFrame = {

@@ -490,7 +490,7 @@ object Search {
 
   /** Dynamic-partition-overwrite of the touched buckets, replacement
     * checkpointed first because it reads the files the overwrite
-    * deletes (the [[Ann]] publishTouchedCells discipline; bounded by
+    * deletes (the [[TablePublish]] discipline; bounded by
     * the touched buckets' contents). Inserts never empty a bucket, so
     * no emptied-partition deletion step is needed here.
     */

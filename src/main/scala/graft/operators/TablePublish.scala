@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * resurrect deleted rows.
   *
   * CRASH WINDOW (same contract as the IVF form this generalizes,
-  * operators/Ann.scala publishTouchedCells): the overwrite and the
+  * operators/Ann.scala rewriteCells): the overwrite and the
   * empty-partition deletion are separate filesystem steps; a crash
   * between them leaves stale rows visible until the structure's
   * repair op runs. Every caller documents its repair story.

@@ -130,19 +130,4 @@ object TopKAgg {
     */
   def topK(k: Int): UserDefinedFunction =
     udaf(new TopKAgg(k), Encoders.product[ScoredId])
-
-  /** Per-query candidate shortlist: reduce scored (qid, key, id) rows
-    * to the best `n` ids per query — the first stage of every
-    * shortlist-then-exact-rerank search (shared by the flat-SQ8 and
-    * IVF+SQ8 paths so they cannot drift).
-    */
-  def shortlist(scored: org.apache.spark.sql.DataFrame,
-                n: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val agg = topK(n)
-    scored.groupBy("qid")
-      .agg(agg(col("key"), col("id")).as("top"))
-      .select(col("qid"), explode(col("top.items")).as("c"))
-      .select(col("qid"), col("c.id").as("id"))
-  }
 }

@@ -382,15 +382,18 @@ private[graft] object OracleCtes {
       s"row_number() OVER (PARTITION BY e.id ORDER BY ${ivfCd("e.v", "c.cv")}, c.cell) AS rn " +
       s"FROM e CROSS JOIN $cents c) WHERE rn = 1)"
 
-  /** One Lloyd mean round (Ann.kmeansCentroids): per-(cell, dim) mean
+  /** One Lloyd mean round (Ann.cellMeans): per-(cell, dim) mean
     * rounded to 6dp and cast through FLOAT — the float round-trip is
     * what the Spark side stores, so the next round's doubles agree.
+    * Rows with a non-finite component (non-finite squared norm) are
+    * left out, as on the Spark side.
     */
   def ivfMeanCte(c: String, a: String): String =
     s"$c AS (SELECT cell, list(m ORDER BY dim) AS cv FROM (" +
       s"SELECT cell, dim, CAST(CAST(round(avg(x), 6) AS FLOAT) AS DOUBLE) AS m " +
       s"FROM (SELECT t.cell, i.i AS dim, t.v[i.i] AS x FROM $a t CROSS JOIN " +
-      s"(SELECT unnest(range(1, 65)) AS i) i) GROUP BY cell, dim) GROUP BY cell)"
+      s"(SELECT unnest(range(1, 65)) AS i) i " +
+      s"WHERE isfinite(list_inner_product(t.v, t.v))) GROUP BY cell, dim) GROUP BY cell)"
 
   /** Shared IVF chain (stride=200, 2 Lloyd iters, nprobe=2): final
     * assignment `af`, probe set `pr` (2 nearest cells per query).

@@ -36,12 +36,9 @@ private[graft] object OracleGraph {
          |FROM m""".stripMargin,
     // PageRank centrality over the kNN graph: 3 unrolled
     // integer-exact power iterations (S_{t+1} = 180·1200^t +
-    // Σ S_t·(1020//deg)), one float division at the end — the
-    // integer scaling is what makes the iteration oracle-matchable
-    // PageRank centrality over the kNN graph: 3 unrolled
-    // integer-exact power iterations (S_{t+1} = 180·1200^t +
-    // Σ S_t·(1020//deg)), one float division at the end — the
-    // integer scaling is what makes the iteration oracle-matchable
+    // Σ S_t·(1020//deg)), then S_3/(N·1200³) rounded to 6dp half-up
+    // exactly in HUGEINT and one float division by 10⁶ — the integer
+    // scaling is what makes the iteration oracle-matchable
     "graph_centrality" ->
       s"""WITH $ivfGraphCtes,
          |g AS (SELECT qid, id FROM gr WHERE rk <= 5),
@@ -65,9 +62,10 @@ private[graft] object OracleGraph {
          |st3 AS (SELECT nd.id, 259200000 + COALESCE(ct3.c, 0) AS s
          |       FROM nd LEFT JOIN ct3 USING (id))
          |SELECT st3.id AS vec_id,
-         |       round(CAST(st3.s AS DOUBLE)
-         |             / (CAST(nn.n AS DOUBLE) * 1728000000), 6)
-         |         AS centrality
+         |       CAST((CAST(st3.s AS HUGEINT) * 2000000
+         |             + CAST(nn.n AS HUGEINT) * 1728000000)
+         |            // (CAST(nn.n AS HUGEINT) * 3456000000) AS DOUBLE)
+         |         / 1000000 AS centrality
          |FROM st3, nn ORDER BY vec_id""".stripMargin,
     // components of the mutual-kNN graph (embedding-space dedup
     // clusters): the same recursive closure the minhash clusters use

@@ -86,47 +86,80 @@ class AnnSpec extends SparkSuite {
       s"no tenant partition pruning: $pf")
   }
 
+  private def labeled = Tables.embeddings(spark, sf)
+    .select(col("vec_id").as("id"), col("embedding").as("vec"), col("label"))
+
+  /** A rebuild under an index's FROZEN centroids: `corpus` assigned
+    * with them and written cell-partitioned at `rb`, centroids beside.
+    */
+  private def frozenRebuild(corpus: org.apache.spark.sql.DataFrame,
+                            path: String, rb: String): Unit = {
+    val cents = spark.read.parquet(path + "_centroids")
+    Ann.ivfAssign(corpus, cents).write.partitionBy("cell").parquet(rb)
+    cents.write.parquet(rb + "_centroids")
+  }
+
   test("index upsert rewrites only touched cells yet equals a rebuild") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get("target"), "ivfup")
-    val path = root.resolve("idx").toString
-    try {
-      Ann.ivfBuildIndex(spark, emb, path)
-      val before = new java.io.File(path).listFiles()
-        .filter(_.getName.startsWith("cell=")).map(_.getName).toSet
-      // updates: move two existing ids onto other docs' vectors (cell
-      // changes likely) and add two brand-new ids
-      val donors = emb.where(col("id").isin(200L, 201L))
-        .collect().map(_.getSeq[Float](1).toArray)
-      val updates = Seq((0L, donors(0)), (1L, donors(1)),
-        (90001L, donors(0)), (90002L, donors(1))).toDF("id", "vec")
-      Ann.ivfIndexUpsert(spark, path, updates)
+    // the second input carries a metadata column: every maintenance
+    // step must keep it, arrivals reading NULL
+    for (corpus <- Seq(emb, labeled)) {
+      val root = java.nio.file.Files
+        .createTempDirectory(java.nio.file.Paths.get("target"), "ivfup")
+      val path = root.resolve("idx").toString
+      try {
+        Ann.ivfBuildIndex(spark, corpus, path)
+        val before = new java.io.File(path).listFiles()
+          .filter(_.getName.startsWith("cell=")).map(_.getName).toSet
+        // updates: move two existing ids onto other docs' vectors (cell
+        // changes likely) and add two brand-new ids
+        val donors = emb.where(col("id").isin(200L, 201L))
+          .collect().map(_.getSeq[Float](1).toArray)
+        val updates = Seq((0L, donors(0)), (1L, donors(1)),
+          (90001L, donors(0)), (90002L, donors(1))).toDF("id", "vec")
+        Ann.ivfIndexUpsert(spark, path, updates)
 
-      // post-upsert index ≡ assigning the LWW-merged corpus with the
-      // SAME stored centroids
-      val got = spark.read.parquet(path)
-        .select(col("id"), col("cell").cast("long").as("cell"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val mergedCorpus = emb.join(updates.select("id"), Seq("id"), "left_anti")
-        .unionByName(updates)
-      val cents = spark.read.parquet(path + "_centroids")
-      val want = Ann.ivfAssign(mergedCorpus, cents)
-        .select("id", "cell")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == want)
-      // cells exist before and after; only a subset was rewritten
-      val after = new java.io.File(path).listFiles()
-        .filter(_.getName.startsWith("cell=")).map(_.getName).toSet
-      assert(after.nonEmpty && before.nonEmpty)
-      // untouched cells keep their original files (same names)
-      val touchedCells = got.filter(t =>
-        Set(0L, 1L, 90001L, 90002L).contains(t._1)).map(t => s"cell=${t._2}")
-      assert((before -- touchedCells).subsetOf(after),
-        "an untouched cell directory disappeared")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(root.toFile).deleteRecursively()
+        // post-upsert index ≡ assigning the LWW-merged corpus with the
+        // SAME stored centroids, every column included
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.select(corpus.columns.filter(_ != "vec").map(col) :+
+              col("cell").cast("long"): _*)
+            .collect().map(_.toSeq).toSet
+        val got = spark.read.parquet(path)
+          .select(col("id"), col("cell").cast("long").as("cell"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val mergedCorpus = corpus.join(updates.select("id"), Seq("id"), "left_anti")
+          .unionByName(updates, allowMissingColumns = true)
+        val cents = spark.read.parquet(path + "_centroids")
+        assert(rows(spark.read.parquet(path)) == rows(Ann.ivfAssign(mergedCorpus, cents)))
+        // cells exist before and after; only a subset was rewritten
+        val after = new java.io.File(path).listFiles()
+          .filter(_.getName.startsWith("cell=")).map(_.getName).toSet
+        assert(after.nonEmpty && before.nonEmpty)
+        // untouched cells keep their original files (same names)
+        val touchedCells = got.filter(t =>
+          Set(0L, 1L, 90001L, 90002L).contains(t._1)).map(t => s"cell=${t._2}")
+        assert((before -- touchedCells).subsetOf(after),
+          "an untouched cell directory disappeared")
+
+        if (corpus.columns.contains("label")) {
+          // delete the arrivals again, recover a crashed rewrite's stale
+          // copy, and compare a filtered search with a rebuild's
+          Ann.ivfIndexDelete(spark, path, Seq(90001L, 90002L).toDF("id"))
+          IndexFixtures.plantStaleCopy(spark, path, 5L, root.resolve("stale").toString)
+          Ann.ivfIndexRepair(spark, path)
+          val remaining = mergedCorpus.where(col("id") < 90001L)
+          assert(rows(spark.read.parquet(path)) == rows(Ann.ivfAssign(remaining, cents)))
+          val rb = root.resolve("rebuild").toString
+          frozenRebuild(remaining, path, rb)
+          def filtered(p: String) = Ann.ivfSearchIndexed(spark, p, qs, 10,
+            filter = Some(col("label").between(2, 6))).collect().toSeq
+          assert(filtered(path) == filtered(rb) && filtered(rb).nonEmpty)
+        }
+      } finally {
+        import scala.reflect.io.Directory
+        new Directory(root.toFile).deleteRecursively()
+      }
     }
   }
 
@@ -166,24 +199,8 @@ class AnnSpec extends SparkSuite {
         .select(col("id"), col("cell").cast("long").as("cell"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       // simulate the crash window: id 0's row duplicated into another
-      // cell with an OLDER file mtime (the stale, should-have-been-
-      // deleted copy predates the overwrite's files)
-      val cells = consistent.map(_._2)
-      val homeCell = consistent.find(_._1 == 0L).get._2
-      val staleCell = (cells - homeCell).head
-      val staleDir = java.nio.file.Paths.get(path, s"cell=$staleCell")
-      val staleRow = spark.read.parquet(path)
-        .where(col("cell") === homeCell && col("id") === 0L)
-        .select("id", "vec")
-      val tmp = root.resolve("stale").toString
-      staleRow.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val target = staleDir.resolve("zz-stale.parquet")
-      java.nio.file.Files.move(part.toPath, target)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 3600 * 1000))
+      // cell with an OLDER file mtime
+      IndexFixtures.plantStaleCopy(spark, path, 0L, root.resolve("stale").toString)
       val dupCount = spark.read.parquet(path)
         .where(col("id") === 0L).count()
       assert(dupCount == 2, "fixture did not create a duplicate")
@@ -208,51 +225,60 @@ class AnnSpec extends SparkSuite {
 
   test("compaction collapses fragmented cells without changing results") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get("target"), "ivfcmp")
-    val path = root.resolve("idx").toString
-    try {
-      Ann.ivfBuildIndex(spark, emb, path)
-      // fragment: an upsert appends at least one new file per touched
-      // cell on top of the build's task-parallel files
-      val donors = emb.where(col("id").isin(200L, 201L))
-        .collect().map(_.getSeq[Float](1).toArray)
-      Ann.ivfIndexUpsert(spark, path,
-        Seq((0L, donors(0)), (1L, donors(1))).toDF("id", "vec"))
-      def filesPerCell: Map[String, Int] =
-        new java.io.File(path).listFiles()
-          .filter(_.getName.startsWith("cell=")).map(d =>
-            d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+    // the second input carries a metadata column and searches on it:
+    // compaction must keep every column
+    for ((corpus, filter) <- Seq((emb, None),
+        (labeled, Some(col("label").between(2, 6))))) {
+      val root = java.nio.file.Files
+        .createTempDirectory(java.nio.file.Paths.get("target"), "ivfcmp")
+      val path = root.resolve("idx").toString
+      try {
+        Ann.ivfBuildIndex(spark, corpus, path)
+        // fragment: an upsert appends at least one new file per touched
+        // cell on top of the build's task-parallel files
+        val donors = emb.where(col("id").isin(200L, 201L))
+          .collect().map(_.getSeq[Float](1).toArray)
+        Ann.ivfIndexUpsert(spark, path,
+          Seq((0L, donors(0)), (1L, donors(1))).toDF("id", "vec"))
+        def filesPerCell: Map[String, Int] =
+          new java.io.File(path).listFiles()
+            .filter(_.getName.startsWith("cell=")).map(d =>
+              d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+            .toMap
+        assert(filesPerCell.values.exists(_ > 1),
+          "fixture produced no fragmentation to compact")
+        // the relational stats report agrees with the filesystem view
+        // and accounts for every row
+        def stats: Map[Long, (Long, Long)] = Ann.ivfIndexStats(spark, path)
+          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
           .toMap
-      assert(filesPerCell.values.exists(_ > 1),
-        "fixture produced no fragmentation to compact")
-      // the relational stats report agrees with the filesystem view
-      // and accounts for every row
-      def stats: Map[Long, (Long, Long)] = Ann.ivfIndexStats(spark, path)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-      val fragStats = stats
-      assert(fragStats.values.map(_._1).sum == emb.count())
-      fragStats.foreach { case (cell, (_, nFiles)) =>
-        assert(nFiles == filesPerCell(s"cell=$cell"),
-          s"stats disagree with fs for cell $cell")
-      }
-      val q = Tables.embeddings(spark, sf).where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val before = Ann.ivfSearchIndexed(spark, path, q, 10).collect().toSeq
+        val fragStats = stats
+        assert(fragStats.values.map(_._1).sum == emb.count())
+        fragStats.foreach { case (cell, (_, nFiles)) =>
+          assert(nFiles == filesPerCell(s"cell=$cell"),
+            s"stats disagree with fs for cell $cell")
+        }
+        val q = Tables.embeddings(spark, sf).where(col("vec_id") < 5)
+          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+        def content = spark.read.parquet(path).collect().map(_.toSeq).toSet
+        val (before, rowsBefore) =
+          (Ann.ivfSearchIndexed(spark, path, q, 10, filter = filter).collect().toSeq, content)
 
-      Ann.ivfCompact(spark, path)
-      assert(filesPerCell.values.forall(_ <= 1),
-        s"cells still fragmented: $filesPerCell")
-      val compactStats = stats
-      assert(compactStats.values.forall(_._2 == 1L),
-        s"stats still report fragmentation: $compactStats")
-      assert(compactStats.values.map(_._1).sum == emb.count())
-      val after = Ann.ivfSearchIndexed(spark, path, q, 10).collect().toSeq
-      assert(after == before && after.nonEmpty)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(root.toFile).deleteRecursively()
+        Ann.ivfCompact(spark, path)
+        assert(filesPerCell.values.forall(_ <= 1),
+          s"cells still fragmented: $filesPerCell")
+        val compactStats = stats
+        assert(compactStats.values.forall(_._2 == 1L),
+          s"stats still report fragmentation: $compactStats")
+        assert(compactStats.values.map(_._1).sum == emb.count())
+        assert(content == rowsBefore, "compaction changed the index's rows")
+        val after = Ann.ivfSearchIndexed(spark, path, q, 10, filter = filter)
+          .collect().toSeq
+        assert(after == before && after.nonEmpty)
+      } finally {
+        import scala.reflect.io.Directory
+        new Directory(root.toFile).deleteRecursively()
+      }
     }
   }
 

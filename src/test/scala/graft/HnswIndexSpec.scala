@@ -57,6 +57,12 @@ class HnswIndexSpec extends SparkSuite {
       val e = Tables.embeddings(spark, dir)
       Ann.ivfBuildIndex(spark,
         e.select(col("vec_id").as("id"), col("embedding").as("vec")), idx)
+      // the NaN row is left out of the Lloyd means: no stored centroid
+      // turns NaN and stops attracting vectors
+      val cvecs = spark.read.parquet(idx + "_centroids").collect()
+        .map(_.getSeq[Float](1))
+      assert(cvecs.nonEmpty && cvecs.forall(_.forall(x => !x.isNaN && !x.isInfinite)),
+        "a non-finite row poisoned a trained centroid")
       Ann.hnswBuild(spark, idx, hp)
       // every row a query: the NaN row reaches both paths' beams, and
       // where the layers link it in decides which rows it displaces

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.PqCodec
 import graft.operators.{Ann, Knn, Pq}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 class PqSpec extends SparkSuite {
@@ -134,15 +135,21 @@ class PqSpec extends SparkSuite {
     val recall = got.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.5, s"ivf+pq recall collapsed: $recall")
     // the shortlist scan reads codes, never the float vectors, and
-    // the index scan is partition-pruned to the probed cells
-    val plan = Pq.ivfPqQuery(spark, sf).queryExecution.executedPlan.toString
-    val reads = plan.linesIterator.filter(_.contains("ReadSchema")).toSeq
-    assert(reads.exists(l => l.contains("code") && !l.contains("vec")),
-      s"probe scan decodes float vectors:\n${reads.mkString("\n")}")
-    assert(plan.linesIterator.exists(l =>
-      l.contains("PartitionFilters") && l.contains("cell") &&
-        !l.contains("PartitionFilters: []")),
-      "index scan not partition-pruned")
+    // the index scan is partition-pruned to the probed cells — for
+    // every PQ family: plain, OPQ and residual
+    val faults = Seq[(String, (SparkSession, String) => DataFrame)](
+        ("pq", Pq.ivfPqQuery), ("opq", Pq.ivfOpqQuery), ("pq_res", Pq.ivfPqResQuery))
+      .flatMap { case (family, query) =>
+        val plan = query(spark, sf).queryExecution.executedPlan.toString
+        val reads = plan.linesIterator.filter(_.contains("ReadSchema")).toSeq
+        val pruned = plan.linesIterator.exists(l =>
+          l.contains("PartitionFilters") && l.contains("cell") &&
+            !l.contains("PartitionFilters: []"))
+        (if (reads.exists(l => l.contains("code") && !l.contains("vec"))) Nil
+         else Seq(s"$family probe scan decodes float vectors:\n${reads.mkString("\n")}")) ++
+          (if (pruned) Nil else Seq(s"$family index scan not partition-pruned"))
+      }
+    assert(faults.isEmpty, faults.mkString("\n"))
     assert(Pq.ivfPqQuery(spark, sf).collect().toSeq == rows.toSeq)
   }
 
@@ -215,6 +222,13 @@ class PqSpec extends SparkSuite {
         .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
       assert(before.exists { case (b, fs) => after.get(b).contains(fs) },
         "every cell partition was rewritten — locality lost")
+
+      // compacting the fragmented cells keeps every row's code and
+      // every search answer
+      val answer = Pq.ivfPqSearch(spark, path, qs, 10).collect().toSeq
+      Ann.ivfCompact(spark, path)
+      assert(pqIndexSet(path) == expected, "compaction dropped or changed codes")
+      assert(Pq.ivfPqSearch(spark, path, qs, 10).collect().toSeq == answer)
     } finally {
       import scala.reflect.io.Directory
       new Directory(root.toFile).deleteRecursively()
@@ -237,6 +251,13 @@ class PqSpec extends SparkSuite {
       // idempotent redelivery
       Pq.ivfPqDelete(spark, path, dels)
       assert(pqIndexSet(path) == now)
+      // repairing a crashed rewrite's stale copy keeps every code and
+      // every search answer
+      val answer = Pq.ivfPqSearch(spark, path, qs, 10).collect().toSeq
+      IndexFixtures.plantStaleCopy(spark, path, 5L, root.resolve("stale").toString)
+      Ann.ivfIndexRepair(spark, path)
+      assert(pqIndexSet(path) == now, "repair dropped or changed codes")
+      assert(Pq.ivfPqSearch(spark, path, qs, 10).collect().toSeq == answer)
     } finally {
       import scala.reflect.io.Directory
       new Directory(root.toFile).deleteRecursively()
