@@ -1582,7 +1582,7 @@ object Ann {
     * dynamic-partition-overwrite only the (layer, cell) partitions
     * holding an affected node's rows (new cell + old cell of moved
     * nodes), carrying unaffected co-partitioned rows; partitions the
-    * replacement emptied are deleted ([[publishLayers]]). Work scales
+    * replacement emptied are deleted ([[TablePublish.publish]]). Work scales
     * with churn locality (touched cells × their probers), never with
     * graph size. Upsert and delete differ only in the index write
     * ([[ivfIndexUpsert]] or [[ivfIndexDelete]]) and in a delete of ids
@@ -1619,10 +1619,10 @@ object Ann {
     val (pendingCells, pendingIds) = readIntent(s, fs, intentPath)
     val batchIds = batch.select("id").distinct().as[Long].collect()
     val allIds = (batchIds ++ pendingIds).distinct
-    val ids = broadcast(allIds.toSeq.toDF("id"))
-    def cellsOfIds(): Array[Long] = s.read.parquet(indexPath).join(ids, "id")
-      .select(col("cell").cast("long").as("cell")).distinct()
-      .collect().map(_.getLong(0))
+    val ids = allIds.toSeq.toDF("id")
+    val cents = storedCentroids(s, indexPath)
+    def cellsOfIds(): Array[Long] = cellsOf(s.read.parquet(indexPath).join(broadcast(ids), "id"),
+      cents.length)
     val oldCells = (cellsOfIds() ++ pendingCells).distinct
     if (delete && oldCells.isEmpty) return
     // record intent BEFORE the index changes (torn marker without
@@ -1631,10 +1631,9 @@ object Ann {
     writeIntent(s, intentPath, oldCells, allIds)
     // the index write applies ONLY to this batch's ids — marker ids
     // from a crashed upsert are live nodes to re-resolve, not deletes
-    if (delete) ivfIndexDelete(s, indexPath, broadcast(batch.select("id").distinct()))
+    if (delete) deleteCells(s, indexPath, batch, cents.length)
     else ivfIndexUpsert(s, indexPath, batch)
     val touched = (oldCells ++ cellsOfIds()).distinct
-    val cents = storedCentroids(s, indexPath)
     val all = graphNodes(s, indexPath)
     val perLayer = layers.map { l =>
       val lnodes = inLayer(all, l)
@@ -1648,13 +1647,12 @@ object Ann {
       // every batch/marker id enters directly (NOT via an lnodes
       // semi-join): a dead id has no lnodes row but its stale graph
       // rows must still drop through the keep anti-join below
-      val affectedIds = probers.unionByName(ids.select("id"))
+      val affectedIds = probers.unionByName(ids)
         .distinct().localCheckpoint(true)
       val affected = lnodes.join(broadcast(affectedIds), Seq("id"), "left_semi")
       // partitions to rewrite: cells now holding an affected node +
       // old cells of moved or deleted nodes (whose stale rows must drop)
-      val affCells = (affected.select(col("cell")).distinct()
-        .collect().map(_.getLong(0)) ++ oldCells).distinct
+      val affCells = (cellsOf(affected, cents.length) ++ oldCells).distinct
       val keep = s.read.parquet(path)
         .where(col("layer") === l && col("cell").isin(affCells.toIndexedSeq: _*))
         .join(broadcast(affectedIds.select(col("id").as("qid"))),
@@ -1662,36 +1660,13 @@ object Ann {
         .select(lit(l).as("layer"), col("qid"), col("rk"), col("nn_id"),
           col("score"), col("cell").cast("long").as("cell"))
       (keep.unionByName(storedLayer(affected, all, cents, l, k)),
-        affCells.map(c => (l, c)))
+        affCells.map(c => Seq(l, c)))
     }
-    // same self-overwrite discipline as rewriteCells: the
-    // replacement reads files the dynamic overwrite deletes
-    publishLayers(s, path, perLayer.map(_._1).reduce(_ unionByName _)
-      .localCheckpoint(true), perLayer.flatMap(_._2), fs)
+    TablePublish.publish(s, path, Seq("layer", "cell"), perLayer.flatMap(_._2),
+      perLayer.map(_._1).reduce(_ unionByName _))
     // publish complete — retire the marker (crash before this line
     // re-runs the repair with the recorded cells and ids, idempotently)
     fs.delete(intentPath, true)
-  }
-
-  /** Dynamic-partition-overwrite publish + emptied-partition GC for
-    * the (layer, cell) layout.
-    */
-  private def publishLayers(s: SparkSession, path: String,
-                            replacement: DataFrame,
-                            affPairs: Seq[(Int, Long)],
-                            fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    // writer-scoped overwrite mode (the AggTable r10-advice fix):
-    // a session-global flip races with concurrent writers
-    replacement.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("layer", "cell").parquet(path)
-    // a partition every node moved out of would keep stale rows:
-    // dynamic overwrite only replaces partitions present in the data
-    val written = replacement.select("layer", "cell").distinct().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSet
-    affPairs.distinct.filterNot(written).foreach { case (l, c) =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, s"layer=$l/cell=$c"), true)
-    }
   }
 
   /** GRAPH-BASED ANN (NSW beam search) — the relational analog of the
@@ -2420,13 +2395,13 @@ object Ann {
     * the reference's `upsert` (remove-old + insert-new,
     * vector_database.cc:53) against the table-shaped index: only
     * cells that currently hold an updated id or receive a new
-    * assignment are rewritten ([[rewriteCells]]). At 1000 cells and a
-    * 0.1% daily churn, that is rewriting a handful of partitions
-    * instead of re-clustering 100 TB. Uses the STORED centroids (an
-    * upsert must not silently re-train the quantizer); periodic
-    * re-clustering is a separate full rebuild. Arrivals carry (id,
-    * vec, cell) and read NULL in every other column of the index —
-    * metadata such as `label`, and a code family's derived column,
+    * assignment are rewritten ([[TablePublish.rewrite]]). At 1000
+    * cells and a 0.1% daily churn, that is rewriting a handful of
+    * partitions instead of re-clustering 100 TB. Uses the STORED
+    * centroids (an upsert must not silently re-train the quantizer);
+    * periodic re-clustering is a separate full rebuild. Arrivals carry
+    * (id, vec, cell) and read NULL in every other column of the index
+    * — metadata such as `label`, and a code family's derived column,
     * which [[Pq.ivfPqUpsert]] fills for its own index.
     */
   def ivfIndexUpsert(s: SparkSession, path: String,
@@ -2449,92 +2424,76 @@ object Ann {
         updates.groupBy("id")
           .agg(max_by(col("vec"), col("version")).as("vec"))
       else updates.dropDuplicates("id")
-    val arrivals = derive(assignTo(onePerId.select("id", "vec"), storedCentroids(s, path)))
+    val cents = storedCentroids(s, path)
+    val arrivals = derive(assignTo(onePerId.select("id", "vec"), cents))
     val ids = broadcast(arrivals.select("id"))
     // cells holding an old version of an updated id — a column-pruned
     // (id, cell) scan, no vectors read — and the arrivals' cells
     val touched = cellsOf(s.read.parquet(path).join(ids, "id")
-      .select(col("cell").cast("long")).unionByName(arrivals.select("cell")))
-    rewriteCells(s, path, touched, Some(arrivals))(_.join(ids, Seq("id"), "left_anti"))
+      .select(col("cell").cast("long")).unionByName(arrivals.select("cell")), cents.length)
+    TablePublish.rewrite(s, path, "cell", touched, Some(arrivals))(
+      _.join(ids, Seq("id"), "left_anti"))
   }
 
   /** DELETE ids from a persisted IVF index without a rebuild — the
     * tombstone surface the reference never grew (no delete endpoint
     * in http_server.cc; FaissIndex::remove_vectors exists only as
     * upsert's remove-old step). Only the cells that HOLD a deleted id
-    * are rewritten ([[rewriteCells]]); cells the deletion empties are
-    * removed entirely. The touched set comes from a column-pruned
-    * (id, cell) scan — no vectors read — and the rewrite is bounded by
-    * churn locality, never index size. Centroids are untouched
-    * (deletion must not silently re-train the quantizer any more than
-    * upsert may).
+    * are rewritten ([[TablePublish.rewrite]]); cells the deletion
+    * empties are removed entirely. The touched set comes from a
+    * column-pruned (id, cell) scan — no vectors read — and the rewrite
+    * is bounded by churn locality, never index size. Centroids are
+    * untouched (deletion must not silently re-train the quantizer any
+    * more than upsert may).
     */
   def ivfIndexDelete(s: SparkSession, path: String,
-                     ids: DataFrame): Unit = {
+                     ids: DataFrame): Unit =
+    deleteCells(s, path, ids, storedCentroids(s, path).length)
+
+  /** [[ivfIndexDelete]] for a caller that holds the stored cell count. */
+  private def deleteCells(s: SparkSession, path: String, ids: DataFrame,
+                          ncells: Int): Unit = {
     val delIds = broadcast(ids.select("id").distinct())
-    val touched = cellsOf(s.read.parquet(path).join(delIds, "id"))
+    val touched = cellsOf(s.read.parquet(path).join(delIds, "id"), ncells)
     // empty: nothing referenced the index
     if (touched.nonEmpty)
-      rewriteCells(s, path, touched)(_.join(delIds, Seq("id"), "left_anti"))
+      TablePublish.rewrite(s, path, "cell", touched)(_.join(delIds, Seq("id"), "left_anti"))
   }
 
-  /** The distinct cells of `rows` on the driver: at most one per
-    * partition of the index, which holds one per stored centroid.
+  /** The distinct cells of `rows` on the driver, bounded by the index's
+    * stored cell count `ncells`: at most one per partition of the
+    * index, which holds one per stored centroid.
     */
-  private def cellsOf(rows: DataFrame): Array[Long] =
-    rows.select(col("cell").cast("long")).distinct().collect().map(_.getLong(0))
+  private def cellsOf(rows: DataFrame, ncells: Int): Array[Long] =
+    graft.Cut.request(rows.select(col("cell").cast("long")).distinct(), ncells,
+      "the stored cell count", "touched cell set").map(_.getLong(0))
 
-  /** THE touched-cell rewrite of a persisted IVF index, shared by
-    * upsert, delete, repair and compaction (and so by every persisted
-    * graph write, whose index step is an upsert or a delete). The rows
-    * of the `touched` cells pass through `keep` with EVERY column of
-    * the index's schema — survivors keep their metadata (`label`, …)
-    * and the family's derived columns (`pre`, `code`); `arrivals` join
-    * by name and read NULL in any column they do not carry. The
-    * replacement is then published by [[TablePublish.publishTouched]]:
-    * dynamic partition overwrite, then deletion of the touched cells
-    * the replacement emptied (dynamic overwrite only replaces
-    * partitions PRESENT in the written data, so an emptied cell's
-    * stale files would otherwise survive).
-    *
-    * CRASH WINDOW (documented contract): the overwrite and the
-    * empty-cell deletion are separate filesystem steps. A crash
-    * between them leaves a moved-away id present in both its old
-    * (stale, emptied-but-undeleted) cell and its new cell. Readers
-    * then see duplicate ids until [[ivfIndexRepair]] runs; repair is
-    * idempotent, so "run repair after any interrupted maintenance op"
-    * is the recovery story (the reference replays its WAL from the
-    * last snapshot on the same reasoning — persistence.cc recovery).
-    */
-  private def rewriteCells(s: SparkSession, path: String, touched: Array[Long],
-                           arrivals: Option[DataFrame] = None)(
-      keep: DataFrame => DataFrame): Unit = {
-    val rows = keep(s.read.parquet(path).where(col("cell").isin(touched.toIndexedSeq: _*)))
-      .withColumn("cell", col("cell").cast("long"))
-    TablePublish.publishTouched(s, path, "cell", touched,
-      arrivals.fold(rows)(rows.unionByName(_, allowMissingColumns = true)))
-  }
-
-  /** Repair an index left inconsistent by a crash inside
-    * [[rewriteCells]]'s window: any id present in more than one cell
-    * keeps only its most recently WRITTEN copy, every column of it
-    * (the overwrite's files postdate the stale cell's — discriminated
-    * by `_metadata.file_modification_time`, no content comparison),
-    * and cells emptied by discarding stale copies are deleted.
-    * Idempotent: a repaired index has no duplicate ids, so a second
-    * run touches nothing; a crash inside repair itself is recovered by
-    * re-running repair.
+  /** Repair an index left inconsistent by a crash inside a
+    * [[TablePublish.publish]] window: any id present in more than one
+    * cell keeps only its most recently WRITTEN copy, every column of
+    * it (the overwrite's files postdate the stale cell's —
+    * discriminated by `_metadata.file_modification_time`, no content
+    * comparison), and cells emptied by discarding stale copies are
+    * deleted. Such a crash leaves a moved-away id present in both its
+    * old (stale, emptied-but-undeleted) cell and its new cell, and
+    * readers see duplicate ids until this runs — so "run repair after
+    * any interrupted maintenance op" is the recovery story (the
+    * reference replays its WAL from the last snapshot on the same
+    * reasoning — persistence.cc recovery). Idempotent: a repaired
+    * index has no duplicate ids, so a second run touches nothing; a
+    * crash inside repair itself is recovered by re-running repair.
     */
   def ivfIndexRepair(s: SparkSession, path: String): Unit = {
     val idx = s.read.parquet(path)
     // duplicate ids via a column-pruned (id, cell) pass
     val dupIds = idx.groupBy("id")
       .agg(count(lit(1)).as("n")).where(col("n") > 1).select("id")
-    val touched = cellsOf(idx.join(broadcast(dupIds), "id"))
+    val touched = cellsOf(idx.join(broadcast(dupIds), "id"),
+      storedCentroids(s, path).length)
     // per dup id keep the max-mtime copy; ids unique in the index pass
     // through the same aggregate unchanged (their single row is its
     // own max) — one groupBy over only the touched cells' rows
-    if (touched.nonEmpty) rewriteCells(s, path, touched) { rows =>
+    if (touched.nonEmpty) TablePublish.rewrite(s, path, "cell", touched) { rows =>
       val rest = rows.columns.filter(_ != "id")
       rows.groupBy("id")
         .agg(max_by(struct(rest.map(col): _*),
@@ -2548,30 +2507,15 @@ object Ann {
     * per task per cell), so a churn-heavy index accumulates small
     * files and probe scans pay per-file open/footer costs. Cells
     * holding more than `maxFilesPerCell` data files are rewritten
-    * through [[rewriteCells]] — content-identical, every column kept,
-    * repartitioned by cell so each compacted cell lands in exactly one
-    * task = one file. Untouched cells keep their files; same crash
-    * window + repair story.
+    * through [[TablePublish.compact]] — content-identical, every
+    * column kept, one file per compacted cell. Untouched cells keep
+    * their files; same crash window + repair story. The driver-side
+    * listing is O(cells + files): fine at the thousands of coarse
+    * cells an IVF index holds (ncells ~ √corpus is the usual sizing).
     */
   def ivfCompact(s: SparkSession, path: String,
-                 maxFilesPerCell: Int = 1): Unit = {
-    // driver-side listing is O(cells + files): fine at the thousands
-    // of coarse cells an IVF index holds (ncells ~ √corpus is the
-    // usual sizing); a billions-of-files layout would move this to a
-    // distributed listing job, same rewrite logic
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-    val fragmented = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .filter { st =>
-        fs.listStatus(st.getPath)
-          .count(f => f.getPath.getName.endsWith(".parquet")) > maxFilesPerCell
-      }
-      .map(_.getPath.getName.stripPrefix("cell=").toLong)
-      .toArray
-    if (fragmented.nonEmpty)
-      rewriteCells(s, path, fragmented)(_.repartition(col("cell")))
-  }
+                 maxFilesPerCell: Int = 1): Unit =
+    TablePublish.compact(s, path, "cell", maxFilesPerCell)
 
   /** Per-cell index statistics as a relational plan — the
     * observability surface that drives maintenance: `n_rows` shows

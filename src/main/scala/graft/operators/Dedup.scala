@@ -419,34 +419,33 @@ object Dedup {
     val rows = winnowFingerprints(batch)
       .withColumn("bk", winBucket(col("doc_id")))
       .localCheckpoint(true)
-    val touched = rows.select(col("bk").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val survivors = s.read.parquet(path)
-      .where(col("bk").isin(touched.toIndexedSeq: _*))
-      .join(broadcast(rows.select("doc_id").distinct()),
-        Seq("doc_id"), "left_anti")
-      .select("doc_id", "fp", "bk")
-    TablePublish.publishTouched(s, path, "bk", touched,
-      survivors.unionByName(rows.select("doc_id", "fp", "bk")))
+    replaceDocs(s, path, rows, WinIndexBuckets, "Dedup.WinIndexBuckets", Some(rows))
   }
 
   /** Delete maintenance: drop the ids' fingerprint rows from their
     * buckets only.
     */
   def winnowIndexDelete(s: SparkSession, path: String,
-                        ids: DataFrame): Unit = {
-    val del = ids.select(col("doc_id")).distinct()
-      .withColumn("bk", winBucket(col("doc_id")))
-      .localCheckpoint(true)
-    val touched = del.select(col("bk").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val survivors = s.read.parquet(path)
-      .where(col("bk").isin(touched.toIndexedSeq: _*))
-      .join(broadcast(del.select("doc_id")), Seq("doc_id"), "left_anti")
-      .select("doc_id", "fp", "bk")
-    TablePublish.publishTouched(s, path, "bk", touched, survivors)
+                        ids: DataFrame): Unit =
+    replaceDocs(s, path, ids.select(col("doc_id")).distinct()
+      .withColumn("bk", winBucket(col("doc_id"))).localCheckpoint(true),
+      WinIndexBuckets, "Dedup.WinIndexBuckets", None)
+
+  /** THE row-replacement rewrite of a doc-hash-bucketed index (the
+    * signature and winnowing indexes): the buckets of `keys`'
+    * (doc_id, bk) rows lose every row of those doc_ids and gain
+    * `arrivals` ([[TablePublish.rewrite]]). Redelivering the same
+    * batch replaces its own rows, so it is a no-op. The touched bucket
+    * set is bounded by the index's bucket count `nbuckets`.
+    */
+  private def replaceDocs(s: SparkSession, path: String, keys: DataFrame,
+                          nbuckets: Int, bound: String,
+                          arrivals: Option[DataFrame]): Unit = {
+    val touched = graft.Cut.request(keys.select(col("bk").cast("long")).distinct(),
+      nbuckets, bound, "touched bucket set").map(_.getLong(0))
+    if (touched.nonEmpty)
+      TablePublish.rewrite(s, path, "bk", touched.toSeq, arrivals)(
+        _.join(broadcast(keys.select("doc_id").distinct()), Seq("doc_id"), "left_anti"))
   }
 
   /** Incremental winnowing lookup: a new batch against the PERSISTED
@@ -570,7 +569,7 @@ object Dedup {
     * batch replaces its own rows, so redelivery is a no-op — the
     * exactly-once-from-idempotence discipline every foreachBatch
     * loop here leans on. Crash window + repair story =
-    * [[TablePublish.publishTouched]]; re-running the interrupted op
+    * [[TablePublish.publish]]; re-running the interrupted op
     * finishes the job (replacement is deterministic).
     */
   def signatureIndexUpsert(s: SparkSession, path: String,
@@ -578,17 +577,7 @@ object Dedup {
     val rows = minhashBandsFromRows(shingleRows(batch))
       .withColumn("bk", sigBucket(col("doc_id")))
       .localCheckpoint(true)
-    val touched = rows.select(col("bk").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val survivors = s.read.parquet(path)
-      .where(col("bk").isin(touched.toIndexedSeq: _*))
-      .join(broadcast(rows.select("doc_id").distinct()),
-        Seq("doc_id"), "left_anti")
-      .select("doc_id", "c", "band", "band_key", "bk")
-    TablePublish.publishTouched(s, path, "bk", touched,
-      survivors.unionByName(
-        rows.select("doc_id", "c", "band", "band_key", "bk")))
+    replaceDocs(s, path, rows, SigIndexBuckets, "Dedup.SigIndexBuckets", Some(rows))
   }
 
   /** Tombstone maintenance: drop the ids' band rows from their
@@ -596,19 +585,10 @@ object Dedup {
     * emptied buckets are removed by the shared publish).
     */
   def signatureIndexDelete(s: SparkSession, path: String,
-                           ids: DataFrame): Unit = {
-    val del = ids.select(col("doc_id")).distinct()
-      .withColumn("bk", sigBucket(col("doc_id")))
-      .localCheckpoint(true)
-    val touched = del.select(col("bk").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val survivors = s.read.parquet(path)
-      .where(col("bk").isin(touched.toIndexedSeq: _*))
-      .join(broadcast(del.select("doc_id")), Seq("doc_id"), "left_anti")
-      .select("doc_id", "c", "band", "band_key", "bk")
-    TablePublish.publishTouched(s, path, "bk", touched, survivors)
-  }
+                           ids: DataFrame): Unit =
+    replaceDocs(s, path, ids.select(col("doc_id")).distinct()
+      .withColumn("bk", sigBucket(col("doc_id"))).localCheckpoint(true),
+      SigIndexBuckets, "Dedup.SigIndexBuckets", None)
 
   /** In-memory definitional twin (bands recomputed both sides) —
     * kept as the spec anchor for the indexed path.

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Md5Prefix60
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -316,7 +316,7 @@ object Search {
     * segment/tombstone design, deliberately out of scope for the
     * in-place layout.
     *
-    * CRASH WINDOW (same contract as the IVF publish): postings,
+    * CRASH WINDOW (the [[TablePublish]] contract): postings,
     * dictionary, and stats are three writes; a crash between them
     * leaves sidecars stale — and note that RE-RUNNING the insert
     * cannot heal them (the redelivered rows are already present, so
@@ -329,16 +329,14 @@ object Search {
     // batch-sized checkpoint: feeds the bucket set, the postings
     // merge, and the stats delta
     val newPost = postingsOf(newDocs).localCheckpoint(true)
-    val buckets = newPost.select("bucket").distinct()
-      .collect().map(_.getInt(0))
+    val buckets = bucketsOf(newPost)
     // empty batch = no-op (guards the direct API; the streaming loop
     // also skips empty micro-batches) — proceeding would NPE on the
     // null sum(dl) and rewrite zero buckets for nothing
     if (buckets.isEmpty) return
-    val bs = buckets.toIndexedSeq
     val batchIds = newPost.select("doc_id").distinct()
     val oldTouched = s.read.parquet(path)
-      .where(col("bucket").isin(bs: _*))
+      .where(col("bucket").isin(buckets.toIndexedSeq: _*))
     // RETRY IDEMPOTENCE (what lets a streaming foreachBatch re-deliver
     // this batch safely): old rows belonging to a batch doc_id are
     // replaced, not duplicated — an identical re-inserted doc's terms
@@ -347,22 +345,11 @@ object Search {
     // leave stale postings in buckets its new terms don't touch;
     // replacement of changed documents is the segment/tombstone design
     // (out of scope, documented above).
-    val survivors = oldTouched.join(batchIds, Seq("doc_id"), "left_anti")
     // the replaced rows' corpus contribution, measured BEFORE the
     // overwrite deletes their files (eager collect)
-    val droppedRow = oldTouched.join(batchIds, Seq("doc_id"), "left_semi")
-      .select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).cast("double"), coalesce(sum("dl"), lit(0.0)))
-      .collect().head
-    val cols = Seq("term", "doc_id", "dl", "tf", "bucket").map(col)
-    val merged = publishTouchedBuckets(s, path,
-      survivors.select(cols: _*).unionByName(newPost.select(cols: _*)))
-    // dictionary: touched buckets recounted from the merged postings
-    // (a term lives in exactly one bucket, so the recount is complete
-    // for every touched term); merged is already checkpointed
-    publishTouchedBuckets(s, termsPath(path),
-      merged.groupBy("term", "bucket")
-        .agg(count(lit(1)).cast("double").as("dfreq")))
+    val droppedRow = droppedStats(oldTouched, batchIds)
+    publishPostings(s, path, buckets, Some(newPost))(
+      _.join(batchIds, Seq("doc_id"), "left_anti"))
     val old = s.read.parquet(statsPath(path))
       .select("n_docs", "sum_dl").collect().head
     val batch = newPost.select("doc_id", "dl").distinct()
@@ -384,40 +371,19 @@ object Search {
     * Only touched buckets rewrite; a term whose last posting dies
     * drops out of the dictionary recount automatically (its bucket
     * partition is replaced wholesale); buckets emptied entirely are
-    * removed — the one way a delete differs from an insert's publish.
-    * Stats shrink by the dropped docs' exact contribution, measured
-    * before the overwrite deletes their files.
+    * removed from both by the shared publish. Stats shrink by the
+    * dropped docs' exact contribution, measured before the overwrite
+    * deletes their files.
     */
   def bm25IndexDelete(s: SparkSession, path: String,
                       docIds: DataFrame): Unit = {
     import s.implicits._
     val ids = broadcast(docIds.select("doc_id").distinct())
-    val buckets = s.read.parquet(path).join(ids, "doc_id")
-      .select("bucket").distinct().collect().map(_.getInt(0))
+    val buckets = bucketsOf(s.read.parquet(path).join(ids, "doc_id"))
     if (buckets.isEmpty) return  // no posting mentions these docs
-    val bs = buckets.toIndexedSeq
-    val old = s.read.parquet(path).where(col("bucket").isin(bs: _*))
-    val droppedRow = old.join(ids, Seq("doc_id"), "left_semi")
-      .select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).cast("double"), coalesce(sum("dl"), lit(0.0)))
-      .collect().head
-    val cols = Seq("term", "doc_id", "dl", "tf", "bucket").map(col)
-    val merged = publishTouchedBuckets(s, path,
-      old.join(ids, Seq("doc_id"), "left_anti").select(cols: _*))
-    publishTouchedBuckets(s, termsPath(path),
-      merged.groupBy("term", "bucket")
-        .agg(count(lit(1)).cast("double").as("dfreq")))
-    // buckets the deletion emptied: dynamic overwrite wrote nothing
-    // there, so their stale files (postings AND dictionary) must go
-    val written = merged.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    val hconf = s.sessionState.newHadoopConf()
-    bs.filterNot(written).foreach { b =>
-      Seq(path, termsPath(path)).foreach { p =>
-        val dir = new org.apache.hadoop.fs.Path(p, s"bucket=$b")
-        dir.getFileSystem(hconf).delete(dir, true)
-      }
-    }
+    val droppedRow = droppedStats(
+      s.read.parquet(path).where(col("bucket").isin(buckets.toIndexedSeq: _*)), ids)
+    publishPostings(s, path, buckets)(_.join(ids, Seq("doc_id"), "left_anti"))
     val oldStats = s.read.parquet(statsPath(path))
       .select("n_docs", "sum_dl").collect().head
     val n = oldStats.getDouble(0) - droppedRow.getDouble(0)
@@ -462,47 +428,46 @@ object Search {
     * insert adds a file per touched bucket, so a long-running
     * maintenance loop accretes small files; buckets holding more than
     * `maxFilesPerBucket` parquet files are rewritten
-    * content-identically into one file each (the [[Ann.ivfCompact]]
-    * discipline: driver-side listing is O(buckets + files), bounded
-    * at 64 buckets here). Covers both the postings and the term
+    * content-identically into one file each ([[TablePublish.compact]]:
+    * driver-side listing is O(buckets + files), bounded at 64 buckets
+    * here). Covers both the postings and the term
     * dictionary; the 1-row stats sidecar never fragments.
     */
   def bm25IndexCompact(s: SparkSession, path: String,
                        maxFilesPerBucket: Int = 1): Unit =
-    Seq(path, termsPath(path)).foreach { p =>
-      val root = new org.apache.hadoop.fs.Path(p)
-      val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-      val fragmented = fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("bucket="))
-        .filter { st =>
-          fs.listStatus(st.getPath)
-            .count(f => f.getPath.getName.endsWith(".parquet")) >
-            maxFilesPerBucket
-        }
-        .map(_.getPath.getName.stripPrefix("bucket=").toInt)
-      if (fragmented.nonEmpty)
-        publishTouchedBuckets(s, p,
-          s.read.parquet(p)
-            .where(col("bucket").isin(fragmented.toIndexedSeq: _*))
-            .repartition(col("bucket")))
-    }
+    Seq(path, termsPath(path)).foreach(
+      TablePublish.compact(s, _, "bucket", maxFilesPerBucket))
 
-  /** Dynamic-partition-overwrite of the touched buckets, replacement
-    * checkpointed first because it reads the files the overwrite
-    * deletes (the [[TablePublish]] discipline; bounded by
-    * the touched buckets' contents). Inserts never empty a bucket, so
-    * no emptied-partition deletion step is needed here.
+  /** The distinct term buckets of `rows` on the driver, bounded by
+    * [[Buckets]].
     */
-  private def publishTouchedBuckets(s: SparkSession, path: String,
-                                    replacementRows: DataFrame): DataFrame = {
-    val replacement = replacementRows.localCheckpoint(true)
-    // writer-scoped overwrite mode (the AggTable r10-advice fix):
-    // a session-global flip races with concurrent writers
-    replacement.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path)
-    replacement
+  private def bucketsOf(rows: DataFrame): Array[Int] =
+    graft.Cut.request(rows.select("bucket").distinct(), Buckets.toInt, "Search.Buckets",
+      "touched bucket set").map(_.getInt(0))
+
+  /** (doc count, dl sum) of the rows of `old` belonging to `ids`: their
+    * corpus contribution, measured before the publish deletes their
+    * files.
+    */
+  private def droppedStats(old: DataFrame, ids: DataFrame): Row =
+    old.join(ids, Seq("doc_id"), "left_semi")
+      .select("doc_id", "dl").distinct()
+      .agg(count(lit(1)).cast("double"), coalesce(sum("dl"), lit(0.0)))
+      .collect().head
+
+  /** Rewrite the postings of `buckets` ([[TablePublish.rewrite]]) and
+    * recount the dictionary of those buckets from the published
+    * postings — a term lives in exactly one bucket, so the recount is
+    * complete for every touched term, and a bucket emptied in the
+    * postings is emptied in the dictionary too.
+    */
+  private def publishPostings(s: SparkSession, path: String, buckets: Array[Int],
+                              arrivals: Option[DataFrame] = None)(
+      keep: DataFrame => DataFrame): Unit = {
+    val merged = TablePublish.rewrite(s, path, "bucket", buckets.toSeq, arrivals)(keep)
+    TablePublish.publish(s, termsPath(path), Seq("bucket"), buckets.toSeq.map(Seq(_)),
+      merged.groupBy("term", "bucket")
+        .agg(count(lit(1)).cast("double").as("dfreq")))
   }
 
   /** Query the persisted index. The query's terms are request-sized,
@@ -515,6 +480,17 @@ object Search {
     */
   def bm25SearchIndexed(s: SparkSession, path: String, queries: DataFrame,
                         k: Int): DataFrame = {
+    val (qterms, postings, idf) = indexedRead(s, path, queries)
+    scoreAndRank(postings.select("term", "doc_id", "dl", "tf"), idf, qterms, k)
+  }
+
+  /** The persisted index's read for `queries` (qid, qtext), shared by
+    * both lexical scoring models: the (qid, term) pairs, the postings
+    * and the (term, idf, avgdl) frame, both pruned to the queries'
+    * buckets and terms.
+    */
+  private def indexedRead(s: SparkSession, path: String, queries: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
     val qterms = queries.select(col("qid"),
         explode(split(col("qtext"), " ")).as("term"))
       .distinct()
@@ -534,8 +510,7 @@ object Search {
         log((col("n_docs") - col("dfreq") + 0.5) / (col("dfreq") + 0.5)
           + 1.0).as("idf"),
         col("avgdl"))
-    scoreAndRank(pruned(path).select("term", "doc_id", "dl", "tf"),
-      idf, qterms, k)
+    (qterms, pruned(path), idf)
   }
 
   /** Sparse (tf·idf²) search over the SAME persisted postings index
@@ -549,28 +524,9 @@ object Search {
     * indexed twin makes, and shares its oracle.
     */
   def sparseIndexedQuery(s: SparkSession, dir: String): DataFrame = {
-    val path = indexFor(s, dir)
-    val queries = fixedQueries(s)
-    val qterms = queries.select(col("qid"),
-        explode(split(col("qtext"), " ")).as("term"))
-      .distinct()
-    val termList = qterms.select("term").distinct()
-      .collect().map(_.getString(0)).sorted
-    val bucketList = termList
-      .map(t => math.floorMod(graft.functions.HashUtils
-        .md5Prefix60(t.getBytes("UTF-8")), Buckets).toInt)
-      .distinct.sorted
-    def pruned(p: String): DataFrame = s.read.parquet(p)
-      .where(col("bucket").isin(bucketList.toIndexedSeq: _*) &&
-        col("term").isin(termList.toIndexedSeq: _*))
-    val stats = s.read.parquet(statsPath(path))
-    val idf = pruned(termsPath(path))
-      .crossJoin(broadcast(stats))
-      .select(col("term"),
-        log((col("n_docs") - col("dfreq") + 0.5) / (col("dfreq") + 0.5)
-          + 1.0).as("idf"))
-    val contrib = pruned(path).select("term", "doc_id", "tf")
-      .join(broadcast(idf), Seq("term"))
+    val (qterms, postings, idf) = indexedRead(s, indexFor(s, dir), fixedQueries(s))
+    val contrib = postings.select("term", "doc_id", "tf")
+      .join(broadcast(idf.select("term", "idf")), Seq("term"))
       .join(broadcast(qterms), Seq("term"))
       .select(col("qid"), col("doc_id"),
         (col("tf") * (col("idf") * col("idf"))).as("c"))
@@ -1331,30 +1287,19 @@ object Search {
     * the family (IVF cells, kNN graph, HNSW layers, postings,
     * signature index, z-order layout): a NEW document batch's
     * (dk, t, doc_id) rows land in only the buckets its keys hash
-    * into (dynamic partition overwrite of survivors ∪ batch);
+    * into ([[TablePublish.rewrite]] of survivors ∪ batch);
     * re-inserting the same batch replaces its own rows — redelivery
     * is a no-op — and insert-grown ≡ a rebuild on the union corpus
     * because the rows ARE per-document facts, not aggregates.
     */
   def spellIndexInsert(s: SparkSession, path: String,
                        newDocs: DataFrame): Unit = {
-    import s.implicits._
     val batch = spellRows(newDocs).localCheckpoint(true)
-    val touched = batch.select("bk").distinct().as[Long].collect()
+    val touched = graft.Cut.request(batch.select("bk").distinct(), SpellBuckets,
+      "Search.SpellBuckets", "touched bucket set").map(_.getLong(0))
     if (touched.isEmpty) return
-    val survivors = s.read.parquet(path)
-      .where(col("bk").isin(touched.toIndexedSeq: _*))
-      .join(broadcast(batch.select("doc_id").distinct()),
-        Seq("doc_id"), "left_anti")
-      .select("doc_id", "t", "dk", "bk")
-    // overwrite mode scoped on the WRITER (the AggTable r10-advice
-    // fix): a session-global flip races with concurrent writers
-    survivors
-      .unionByName(batch.select("doc_id", "t", "dk", "bk"))
-      .localCheckpoint(true)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bk").parquet(path)
+    TablePublish.rewrite(s, path, "bk", touched.toSeq, Some(batch))(
+      _.join(broadcast(batch.select("doc_id").distinct()), Seq("doc_id"), "left_anti"))
   }
 
   private def spellIdxPath(s: SparkSession, dir: String): String = {
@@ -1601,13 +1546,14 @@ object Search {
       .withColumn("pfx", substring(col("term"), 1, 2))
       .write.mode("overwrite").partitionBy("pfx").parquet(path)
 
-  /** Corpus-growth insert — touched-pfx-partition replacement (the
-    * postings/spell discipline): survivors = old rows of touched
-    * partitions minus the batch's doc ids, union the batch, dynamic
-    * partition overwrite of ONLY those directories. Overwrite mode
-    * is scoped on the WRITER (not session conf — a session-global
-    * flip races with concurrent writers). Idempotent under
-    * redelivery by construction.
+  /** Corpus-growth insert — touched-pfx-partition replacement
+    * ([[TablePublish.rewrite]], the postings/spell discipline):
+    * survivors = old rows of touched partitions minus the batch's doc
+    * ids, union the batch, overwriting ONLY those directories.
+    * Idempotent under redelivery by construction. The touched prefix
+    * set is a raw collect: 2-character prefixes have no structural
+    * bound (any character pair can start a term), so it is bounded
+    * only by the batch's vocabulary.
     */
   def prefixDictInsert(s: SparkSession, path: String,
                        newDocs: DataFrame): Unit = {
@@ -1618,16 +1564,8 @@ object Search {
     val touched = batch.select("pfx").distinct()
       .collect().map(_.getString(0))
     if (touched.isEmpty) return
-    val survivors = s.read.parquet(path)
-      .where(col("pfx").isin(touched.toIndexedSeq: _*))
-      .join(broadcast(batch.select("doc_id").distinct()),
-        Seq("doc_id"), "left_anti")
-      .select("doc_id", "term", "pfx")
-    survivors.unionByName(batch.select("doc_id", "term", "pfx"))
-      .localCheckpoint(true)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pfx").parquet(path)
+    TablePublish.rewrite(s, path, "pfx", touched.toSeq, Some(batch))(
+      _.join(broadcast(batch.select("doc_id").distinct()), Seq("doc_id"), "left_anti"))
   }
 
   private[graft] def prefixDictFor(s: SparkSession, dir: String): String = {

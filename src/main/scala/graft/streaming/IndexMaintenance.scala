@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Ann
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType}
@@ -25,14 +25,10 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
 object IndexMaintenance {
 
   /** WAL upsert rows WITH their vector payloads — the index needs
-    * the vectors, unlike the scalar-state replay (WalSource.parse).
-    * Same bounded 4-way split and try_* corruption tolerance.
-    */
-  def parseVectors(lines: DataFrame): DataFrame =
-    parseOps(lines).where(col("op") === "upsert")
-
-  /** Like [[parseVectors]] but keeping DELETE records too — a
-    * tombstone carries an id and no vector (`…|delete|{"id":N}`).
+    * the vectors, unlike the scalar-state replay (WalSource.parse) —
+    * and DELETE records, a tombstone carrying an id and no vector
+    * (`…|delete|{"id":N}`). Same bounded 4-way split and try_*
+    * corruption tolerance.
     */
   def parseOps(lines: DataFrame): DataFrame =
     lines
@@ -59,13 +55,23 @@ object IndexMaintenance {
     */
   def attach(lines: DataFrame, indexPath: String,
              checkpoint: String): StreamingQuery =
+    attachWinners(lines, checkpoint)(Ann.ivfIndexUpsert(_, indexPath, _),
+      Ann.ivfIndexDelete(_, indexPath, _))
+
+  /** The WAL maintenance loop shared by the index, graph and hierarchy
+    * streams: each micro-batch collapses to ONE winner per id by
+    * (version, log_id) over upserts AND tombstones, and the winner's
+    * op routes the id to exactly one call — `upsert` with
+    * (id, vec, version), `delete` with (id). An id upserted and then
+    * deleted inside one batch is only deleted. The two sets are
+    * disjoint, so the order of the two calls is immaterial.
+    */
+  private[streaming] def attachWinners(lines: DataFrame, checkpoint: String)(
+      upsert: (SparkSession, DataFrame) => Unit,
+      delete: (SparkSession, DataFrame) => Unit): StreamingQuery =
     lines.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // cross-op LWW per id: one winner by (version, log_id) over
-        // upserts AND tombstones — the winner's op routes the id to
-        // exactly one maintenance call (the sets are disjoint, so
-        // apply order between the two calls is immaterial)
         val winners = parseOps(batch)
           .groupBy("id")
           .agg(max_by(struct(col("vec"), col("version"), col("op")),
@@ -76,10 +82,8 @@ object IndexMaintenance {
         val upserts = winners.where(col("op") === "upsert")
           .select("id", "vec", "version")
         val deletes = winners.where(col("op") === "delete").select("id")
-        if (!upserts.isEmpty)
-          Ann.ivfIndexUpsert(batch.sparkSession, indexPath, upserts)
-        if (!deletes.isEmpty)
-          Ann.ivfIndexDelete(batch.sparkSession, indexPath, deletes)
+        if (!upserts.isEmpty) upsert(batch.sparkSession, upserts)
+        if (!deletes.isEmpty) delete(batch.sparkSession, deletes)
       }
       .start()
 }

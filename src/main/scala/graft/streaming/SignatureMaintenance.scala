@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The dedup SIGNATURE INDEX maintained LIVE — sixth maintained
@@ -32,9 +31,18 @@ object SignatureMaintenance {
   /** Fold one micro-batch of (doc_id, text, version, op) log rows
     * into the index — batch-callable for direct testing.
     */
-  def fold(indexPath: String)(batch: DataFrame, batchId: Long): Unit = {
+  def fold(indexPath: String)(batch: DataFrame, batchId: Long): Unit =
+    foldDocs(batch)(Dedup.signatureIndexUpsert(_, indexPath, _),
+      Dedup.signatureIndexDelete(_, indexPath, _))
+
+  /** The document-log fold shared with [[WinnowMaintenance]]: one
+    * winner per doc_id by version, then `upsert` with the winning
+    * (doc_id, text) rows and `delete` with the tombstoned doc_ids.
+    */
+  private[streaming] def foldDocs(batch: DataFrame)(
+      upsert: (SparkSession, DataFrame) => Unit,
+      delete: (SparkSession, DataFrame) => Unit): Unit = {
     if (batch.isEmpty) return
-    val s = batch.sparkSession
     import org.apache.spark.sql.functions._
     val winner = batch.groupBy("doc_id")
       .agg(max_by(struct(col("text"), col("op")), col("version")).as("w"))
@@ -42,8 +50,8 @@ object SignatureMaintenance {
       .localCheckpoint(true)
     val ups = winner.where(col("op") =!= "delete").select("doc_id", "text")
     val dels = winner.where(col("op") === "delete").select("doc_id")
-    if (!ups.isEmpty) Dedup.signatureIndexUpsert(s, indexPath, ups)
-    if (!dels.isEmpty) Dedup.signatureIndexDelete(s, indexPath, dels)
+    if (!ups.isEmpty) upsert(batch.sparkSession, ups)
+    if (!dels.isEmpty) delete(batch.sparkSession, dels)
   }
 
   /** Attach the maintenance loop to a document-log stream over an

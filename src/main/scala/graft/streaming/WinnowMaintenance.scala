@@ -23,19 +23,9 @@ object WinnowMaintenance {
   /** Fold one micro-batch of (doc_id, text, version, op) log rows
     * into the index — batch-callable for direct testing.
     */
-  def fold(indexPath: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    val s = batch.sparkSession
-    import org.apache.spark.sql.functions._
-    val winner = batch.groupBy("doc_id")
-      .agg(max_by(struct(col("text"), col("op")), col("version")).as("w"))
-      .select(col("doc_id"), col("w.text").as("text"), col("w.op").as("op"))
-      .localCheckpoint(true)
-    val ups = winner.where(col("op") =!= "delete").select("doc_id", "text")
-    val dels = winner.where(col("op") === "delete").select("doc_id")
-    if (!ups.isEmpty) Dedup.winnowIndexUpsert(s, indexPath, ups)
-    if (!dels.isEmpty) Dedup.winnowIndexDelete(s, indexPath, dels)
-  }
+  def fold(indexPath: String)(batch: DataFrame, batchId: Long): Unit =
+    SignatureMaintenance.foldDocs(batch)(Dedup.winnowIndexUpsert(_, indexPath, _),
+      Dedup.winnowIndexDelete(_, indexPath, _))
 
   /** Attach the maintenance loop to a document-log stream over an
     * existing index at `indexPath`.

@@ -463,6 +463,15 @@ class AnnSpec extends SparkSuite {
         "every cell was rewritten — touched-cell pruning lost")
       Ann.ivfIndexDelete(spark, idx, gone)  // idempotent no-op
       assert(spark.read.parquet(idx).count() == after.size)
+      // a delete that empties a cell removes its directory
+      val emptied = after.head._2
+      Ann.ivfIndexDelete(spark, idx, after.filter(_._2 == emptied).map(_._1).toSeq.toDF("id"))
+      assert(!new java.io.File(idx, s"cell=$emptied").exists(),
+        "the emptied cell's directory survived")
+      assert(spark.read.parquet(idx)
+        .select(col("id"), col("cell").cast("long").as("cell"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+        after.filterNot(_._2 == emptied), "emptying a cell changed other cells")
     } finally {
       import scala.reflect.io.Directory
       new Directory(root.toFile).deleteRecursively()

@@ -16,6 +16,9 @@ class GraphMaintenanceSpec extends SparkSuite {
                       vec: Array[Float]): String =
     s"""$logId|$version|upsert|{"id":$id,"vectors":[${vec.mkString(",")}]}"""
 
+  private def delLine(logId: Long, version: Long, id: Long): String =
+    s"""$logId|$version|delete|{"id":$id}"""
+
   private def graphSet(path: String): Set[(Long, Int, Long, Double)] =
     Ann.knnGraphRead(spark, path).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
@@ -231,44 +234,62 @@ class GraphMaintenanceSpec extends SparkSuite {
   }
 
   test("streamed WAL tail maintains index AND graph ≡ rebuild of final corpus") {
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "gstream")
-    val idx = root.resolve("idx").toString
-    val gp = root.resolve("graph").toString
-    val wal = root.resolve("wal")
-    val ckpt = root.resolve("ckpt").toString
-    Files.createDirectories(wal)
-    try {
-      Ann.ivfBuildIndex(spark, emb, idx, stride = 50)
-      Ann.knnGraphBuild(spark, idx, gp)
-      val donors = emb.where(col("id") >= 100 && col("id") < 106)
-        .orderBy("id").collect().map(_.getSeq[Float](1).toArray)
-      val seg1 = Seq(
-        walLine(1000L, 2L, 0L, donors(0)),
-        walLine(1001L, 2L, 3L, donors(1)))
-      // second wave re-upserts id 0 (later wins) and adds a new id
-      val seg2 = Seq(
-        walLine(2000L, 3L, 0L, donors(2)),
-        walLine(2001L, 2L, 90001L, donors(3)))
-      Files.write(wal.resolve("wal_log_1"), WalBinary.frame(seg1))
-      Files.write(wal.resolve("wal_log_2"), WalBinary.frame(seg2))
-      val lines = spark.readStream.format("graft-wal")
-        .option("maxBytesPerTrigger", "1500")
-        .load(wal.toString)
-      val q = GraphMaintenance.attach(lines, idx, gp, ckpt)
-      try q.processAllAvailable() finally q.stop()
+    // second input adds tombstones: id 90002 upserted then deleted
+    // inside the first micro-batch (wal_log_0 fits one trigger's byte
+    // budget), and a delete segment after the upserts
+    Seq(false, true).foreach { tombstones =>
+      val root = Files.createTempDirectory(
+        java.nio.file.Paths.get("target"), "gstream")
+      val idx = root.resolve("idx").toString
+      val gp = root.resolve("graph").toString
+      val wal = root.resolve("wal")
+      val ckpt = root.resolve("ckpt").toString
+      Files.createDirectories(wal)
+      try {
+        Ann.ivfBuildIndex(spark, emb, idx, stride = 50)
+        Ann.knnGraphBuild(spark, idx, gp)
+        val donors = emb.where(col("id") >= 100 && col("id") < 106)
+          .orderBy("id").collect().map(_.getSeq[Float](1).toArray)
+        val seg1 = Seq(
+          walLine(1000L, 2L, 0L, donors(0)),
+          walLine(1001L, 2L, 3L, donors(1)))
+        // second wave re-upserts id 0 (later wins) and adds a new id
+        val seg2 = Seq(
+          walLine(2000L, 3L, 0L, donors(2)),
+          walLine(2001L, 2L, 90001L, donors(3)))
+        Files.write(wal.resolve("wal_log_1"), WalBinary.frame(seg1))
+        Files.write(wal.resolve("wal_log_2"), WalBinary.frame(seg2))
+        if (tombstones) {
+          Files.write(wal.resolve("wal_log_0"), WalBinary.frame(Seq(
+            walLine(900L, 2L, 90002L, donors(4)), delLine(901L, 3L, 90002L))))
+          Files.write(wal.resolve("wal_log_3"), WalBinary.frame(Seq(
+            delLine(3000L, 4L, 3L), delLine(3001L, 2L, 7L))))
+        }
+        val lines = spark.readStream.format("graft-wal")
+          .option("maxBytesPerTrigger", "1500")
+          .load(wal.toString)
+        val q = GraphMaintenance.attach(lines, idx, gp, ckpt)
+        try q.processAllAvailable() finally q.stop()
 
-      val rebuilt = root.resolve("rebuilt").toString
-      Ann.knnGraphBuild(spark, idx, rebuilt)
-      assert(graphSet(gp) == graphSet(rebuilt),
-        "streamed graph maintenance drifted from a rebuild")
-      // the graph covers the new id and the moved ids
-      val nodes = Ann.knnGraphRead(spark, gp).select("qid").distinct()
-        .collect().map(_.getLong(0)).toSet
-      assert(nodes.contains(90001L) && nodes.contains(0L))
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(root.toFile).deleteRecursively()
+        val rebuilt = root.resolve("rebuilt").toString
+        Ann.knnGraphBuild(spark, idx, rebuilt)
+        assert(graphSet(gp) == graphSet(rebuilt),
+          s"streamed graph maintenance drifted from a rebuild (tombstones=$tombstones)")
+        // the graph covers the new id and the moved ids
+        val nodes = Ann.knnGraphRead(spark, gp).select("qid").distinct()
+          .collect().map(_.getLong(0)).toSet
+        assert(nodes.contains(90001L) && nodes.contains(0L))
+        if (tombstones) {
+          val gone = Set(3L, 7L, 90002L)
+          assert(graphSet(gp).forall { case (qid, _, nn, _) => !gone(qid) && !gone(nn) },
+            "a deleted id is still a node or a neighbour")
+          assert(spark.read.parquet(idx).where(col("id").isin(gone.toSeq: _*)).isEmpty,
+            "a deleted id is still in the index")
+        }
+      } finally {
+        import scala.reflect.io.Directory
+        new Directory(root.toFile).deleteRecursively()
+      }
     }
   }
 }

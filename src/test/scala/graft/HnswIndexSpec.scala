@@ -174,43 +174,63 @@ class HnswIndexSpec extends SparkSuite {
     def walLine(logId: Long, version: Long, id: Long,
                 vec: Array[Float]): String =
       s"""$logId|$version|upsert|{"id":$id,"vectors":[${vec.mkString(",")}]}"""
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "hnswstream")
-    val idx = root.resolve("idx").toString
-    val hp = root.resolve("hier").toString
-    val wal = root.resolve("wal")
-    val ckpt = root.resolve("ckpt").toString
-    Files.createDirectories(wal)
-    try {
-      Ann.ivfBuildIndex(spark, emb, idx, stride = 50)
-      Ann.hnswBuild(spark, idx, hp)
-      val donors = emb.where(col("id") >= 100 && col("id") < 106)
-        .orderBy("id").collect().map(_.getSeq[Float](1).toArray)
-      val seg1 = Seq(
-        walLine(1000L, 2L, 0L, donors(0)),
-        walLine(1001L, 2L, 3L, donors(1)))
-      val seg2 = Seq(
-        walLine(2000L, 3L, 0L, donors(2)),
-        walLine(2001L, 2L, 90001L, donors(3)))
-      Files.write(wal.resolve("wal_log_1"), WalBinary.frame(seg1))
-      Files.write(wal.resolve("wal_log_2"), WalBinary.frame(seg2))
-      val lines = spark.readStream.format("graft-wal")
-        .option("maxBytesPerTrigger", "1500")
-        .load(wal.toString)
-      val q = graft.streaming.HnswMaintenance.attach(lines, idx, hp, ckpt)
-      try q.processAllAvailable() finally q.stop()
+    def delLine(logId: Long, version: Long, id: Long): String =
+      s"""$logId|$version|delete|{"id":$id}"""
+    // second input adds tombstones: id 90002 upserted then deleted
+    // inside the first micro-batch (wal_log_0 fits one trigger's byte
+    // budget), and a delete segment after the upserts
+    Seq(false, true).foreach { tombstones =>
+      val root = Files.createTempDirectory(
+        java.nio.file.Paths.get("target"), "hnswstream")
+      val idx = root.resolve("idx").toString
+      val hp = root.resolve("hier").toString
+      val wal = root.resolve("wal")
+      val ckpt = root.resolve("ckpt").toString
+      Files.createDirectories(wal)
+      try {
+        Ann.ivfBuildIndex(spark, emb, idx, stride = 50)
+        Ann.hnswBuild(spark, idx, hp)
+        val donors = emb.where(col("id") >= 100 && col("id") < 106)
+          .orderBy("id").collect().map(_.getSeq[Float](1).toArray)
+        val seg1 = Seq(
+          walLine(1000L, 2L, 0L, donors(0)),
+          walLine(1001L, 2L, 3L, donors(1)))
+        val seg2 = Seq(
+          walLine(2000L, 3L, 0L, donors(2)),
+          walLine(2001L, 2L, 90001L, donors(3)))
+        Files.write(wal.resolve("wal_log_1"), WalBinary.frame(seg1))
+        Files.write(wal.resolve("wal_log_2"), WalBinary.frame(seg2))
+        if (tombstones) {
+          Files.write(wal.resolve("wal_log_0"), WalBinary.frame(Seq(
+            walLine(900L, 2L, 90002L, donors(4)), delLine(901L, 3L, 90002L))))
+          Files.write(wal.resolve("wal_log_3"), WalBinary.frame(Seq(
+            delLine(3000L, 4L, 3L), delLine(3001L, 2L, 7L))))
+        }
+        val lines = spark.readStream.format("graft-wal")
+          .option("maxBytesPerTrigger", "1500")
+          .load(wal.toString)
+        val q = graft.streaming.HnswMaintenance.attach(lines, idx, hp, ckpt)
+        try q.processAllAvailable() finally q.stop()
 
-      val rebuilt = root.resolve("rebuilt").toString
-      Ann.hnswBuild(spark, idx, rebuilt)
-      assert(hierSet(hp) == hierSet(rebuilt),
-        "streamed hierarchy maintenance drifted from a rebuild")
-      val nodes = Ann.hnswRead(spark, hp)
-        .where(col("layer") === 0).select("qid").distinct()
-        .collect().map(_.getLong(0)).toSet
-      assert(nodes.contains(90001L) && nodes.contains(0L))
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(root.toFile).deleteRecursively()
+        val rebuilt = root.resolve("rebuilt").toString
+        Ann.hnswBuild(spark, idx, rebuilt)
+        assert(hierSet(hp) == hierSet(rebuilt),
+          s"streamed hierarchy maintenance drifted from a rebuild (tombstones=$tombstones)")
+        val nodes = Ann.hnswRead(spark, hp)
+          .where(col("layer") === 0).select("qid").distinct()
+          .collect().map(_.getLong(0)).toSet
+        assert(nodes.contains(90001L) && nodes.contains(0L))
+        if (tombstones) {
+          val gone = Set(3L, 7L, 90002L)
+          assert(hierSet(hp).forall { case (_, qid, _, nn, _) => !gone(qid) && !gone(nn) },
+            "a deleted id is still a node or a neighbour")
+          assert(spark.read.parquet(idx).where(col("id").isin(gone.toSeq: _*)).isEmpty,
+            "a deleted id is still in the index")
+        }
+      } finally {
+        import scala.reflect.io.Directory
+        new Directory(root.toFile).deleteRecursively()
+      }
     }
   }
 

@@ -291,38 +291,57 @@ class SearchSpec extends SparkSuite {
 
   test("postings delete: touched-bucket rewrite equals a rebuild " +
     "without the deleted docs; no stale posting survives; idempotent") {
-    val docs = Tables.documents(spark, sf)
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "bm25del")
-    val idx = root.resolve("idx").toString
-    val full = root.resolve("full").toString
-    try {
-      Search.bm25BuildIndex(spark, docs, idx)
-      val gone = docs.where(col("doc_id") % 3 === 0).select("doc_id")
-      Search.bm25IndexDelete(spark, idx, gone)
-      Search.bm25BuildIndex(spark,
-        docs.where(col("doc_id") % 3 =!= 0), full)
-      val q = Search.fixedQueries(spark)
-      val a = Search.bm25SearchIndexed(spark, idx, q, 10).collect().toSeq
-      val b = Search.bm25SearchIndexed(spark, full, q, 10).collect().toSeq
-      assert(a == b && a.nonEmpty,
-        "delete-maintained index must equal a rebuild on the remainder")
-      // no posting of a deleted doc survives anywhere
-      assert(spark.read.parquet(idx)
-        .join(gone, Seq("doc_id"), "left_semi").count() == 0)
-      // redelivery: deleting the same ids again is a no-op
-      Search.bm25IndexDelete(spark, idx, gone)
-      assert(Search.bm25SearchIndexed(spark, idx, q, 10)
-        .collect().toSeq == a, "re-delivered delete changed the index")
-      // deleting ids the index never held is a no-op too
-      import spark.implicits._
-      Search.bm25IndexDelete(spark, idx,
-        Seq(987654321L).toDF("doc_id"))
-      assert(Search.bm25SearchIndexed(spark, idx, q, 10)
-        .collect().toSeq == a)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(root.toFile).deleteRecursively()
+    import spark.implicits._
+    val corpus = Tables.documents(spark, sf).select("doc_id", "text")
+    // second input: one planted doc whose single term hashes into a
+    // bucket no corpus term uses (the index's 64 term buckets), so
+    // deleting it empties that bucket in the postings and dictionary
+    val used = corpus.select(explode(split(col("text"), " "))).distinct()
+      .as[String].collect()
+      .map(t => math.floorMod(graft.functions.HashUtils.md5Prefix60(t.getBytes("UTF-8")), 64L))
+      .toSet
+    val lone = Iterator.from(0).map(i => s"zq$i").find(t => !used(
+      math.floorMod(graft.functions.HashUtils.md5Prefix60(t.getBytes("UTF-8")), 64L))).get
+    Seq(false, true).foreach { planted =>
+      val docs =
+        if (planted) corpus.unionByName(Seq((1000000000L, lone)).toDF("doc_id", "text"))
+        else corpus
+      val root = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get("target"), "bm25del")
+      val idx = root.resolve("idx").toString
+      val full = root.resolve("full").toString
+      try {
+        Search.bm25BuildIndex(spark, docs, idx)
+        val gone = docs.where(col("doc_id") % 3 === 0 || col("doc_id") === 1000000000L)
+          .select("doc_id")
+        Search.bm25IndexDelete(spark, idx, gone)
+        Search.bm25BuildIndex(spark,
+          docs.join(gone, Seq("doc_id"), "left_anti"), full)
+        val q = Search.fixedQueries(spark)
+        val a = Search.bm25SearchIndexed(spark, idx, q, 10).collect().toSeq
+        val b = Search.bm25SearchIndexed(spark, full, q, 10).collect().toSeq
+        assert(a == b && a.nonEmpty,
+          "delete-maintained index must equal a rebuild on the remainder")
+        // no posting of a deleted doc survives anywhere
+        assert(spark.read.parquet(idx)
+          .join(gone, Seq("doc_id"), "left_semi").count() == 0)
+        def dict(p: String) = spark.read.parquet(p + "_terms")
+          .select("term", "dfreq").as[(String, Double)].collect().toSet
+        assert(dict(idx) == dict(full),
+          s"delete-maintained dictionary differs from a rebuild (planted=$planted)")
+        // redelivery: deleting the same ids again is a no-op
+        Search.bm25IndexDelete(spark, idx, gone)
+        assert(Search.bm25SearchIndexed(spark, idx, q, 10)
+          .collect().toSeq == a, "re-delivered delete changed the index")
+        // deleting ids the index never held is a no-op too
+        Search.bm25IndexDelete(spark, idx,
+          Seq(987654321L).toDF("doc_id"))
+        assert(Search.bm25SearchIndexed(spark, idx, q, 10)
+          .collect().toSeq == a)
+      } finally {
+        import scala.reflect.io.Directory
+        new Directory(root.toFile).deleteRecursively()
+      }
     }
   }
 
